@@ -3,7 +3,7 @@ package graft.engine
 import java.nio.file.Path
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.qast.{Ast, Compiler}
 import graft.schema.JsonSchema
@@ -27,27 +27,55 @@ import graft.store.{Catalog, ContentStore}
   * `"VNM"` as a string) — so extraction reads with `inferSchema=false`.
   * Schema *inference* is the separate A1/A2 path below, with the
   * number/string lattice applied on top of Spark's inference.
+  *
+  * Reader schemas are memoized per `(cid, base MIME)` and handed to the
+  * reader (`spark.read.schema`), so a warm extract is one Spark job:
+  * the scan itself, with no header `take(1)` (CSV) or `multiLine`
+  * inference pass (JSON) in front of it. Upload-time inference fills
+  * the memo (JSON: the inferred `StructType` as is, the same read
+  * extraction does; CSV: the inferred header names typed `StringType`,
+  * which is what the string-only extraction read derives — Spark's
+  * `makeSafeHeader` names columns the same with or without
+  * `inferSchema`); a miss (e.g. after a restart, when the catalog
+  * already holds the schema and inference is skipped) reads without a
+  * schema and keeps `df.schema`. The MIME is in the key because the
+  * same bytes may be registered again under another type. An entry
+  * never goes stale — a cid's bytes never change — so there is no
+  * eviction; each entry is smaller than the JSON Schema the catalog
+  * keeps per cid anyway.
   */
 final class Extractor(spark: SparkSession, store: ContentStore,
     catalog: Catalog) {
+
+  /** Reader schema per `(cid, base MIME)` — see the class doc. */
+  private val readerSchemas = scala.collection.concurrent.TrieMap
+    .empty[(String, String), StructType]
 
   /** Load a cid's rows as a DataFrame, per its registered MIME type. */
   def rows(cid: String): Either[ExtractError, DataFrame] =
     catalog.getType(cid) match {
       case None => Left(ExtractError.UnknownCid(cid))
-      case Some(mime) => reader(mime, store.pathOf(cid))
+      case Some(mime) =>
+        val key = (cid, baseMime(mime))
+        reader(mime, store.pathOf(cid), readerSchemas.get(key)).map { df =>
+          readerSchemas.putIfAbsent(key, df.schema)
+          df
+        }
     }
 
-  private def reader(mime: String, path: Path)
-      : Either[ExtractError, DataFrame] = baseMime(mime) match {
-    case "text/csv" =>
-      // stringly rows, first record = header (extract/data.clj:23-27)
-      Right(spark.read.option("header", true).csv(path.toString))
-    case "application/json" =>
-      // reference parses ONE top-level JSON array (extract/data.clj:33);
-      // Spark's default is JSON-lines => multiLine for the array form.
-      Right(spark.read.option("multiLine", true).json(path.toString))
-    case _ => Left(ExtractError.UnsupportedType(mime))
+  private def reader(mime: String, path: Path, known: Option[StructType])
+      : Either[ExtractError, DataFrame] = {
+    val read = known.fold(spark.read)(spark.read.schema)
+    baseMime(mime) match {
+      case "text/csv" =>
+        // stringly rows, first record = header (extract/data.clj:23-27)
+        Right(read.option("header", true).csv(path.toString))
+      case "application/json" =>
+        // reference parses ONE top-level JSON array (extract/data.clj:33);
+        // Spark's default is JSON-lines => multiLine for the array form.
+        Right(read.option("multiLine", true).json(path.toString))
+      case _ => Left(ExtractError.UnsupportedType(mime))
+    }
   }
 
   private def baseMime(mime: String): String =
@@ -121,7 +149,7 @@ final class Extractor(spark: SparkSession, store: ContentStore,
       case None =>
         catalog.getType(cid) match {
           case None => Left(ExtractError.UnknownCid(cid))
-          case Some(mime) => infer(mime, store.pathOf(cid)).map { st =>
+          case Some(mime) => infer(cid, mime).map { st =>
             val json = JsonSchema.forRows(cid, st)
             catalog.setSchema(cid, json)
             json
@@ -129,17 +157,20 @@ final class Extractor(spark: SparkSession, store: ContentStore,
         }
     }
 
-  private def infer(mime: String, path: Path)
+  /** Infer a cid's schema, remembering its reader schema on the way. */
+  private def infer(cid: String, mime: String)
       : Either[ExtractError, StructType] = baseMime(mime) match {
-    case "text/csv" =>
+    case base @ "text/csv" =>
       // Spark's CSV inference samples types; the reference folds its
       // two-element lattice over ALL rows (metadata.clj:36-53). The
       // JsonSchema serializer collapses both to number|string.
-      Right(spark.read.option("header", true).option("inferSchema", true)
-        .csv(path.toString).schema)
-    case "application/json" =>
-      Right(spark.read.option("multiLine", true).json(path.toString).schema)
-    case _ => Left(ExtractError.UnsupportedType(mime))
+      val st = spark.read.option("header", true).option("inferSchema", true)
+        .csv(store.pathOf(cid).toString).schema
+      readerSchemas.putIfAbsent((cid, base),
+        StructType(st.map(_.copy(dataType = StringType))))
+      Right(st)
+    // JSON inference is the extraction read itself (which fills the memo)
+    case _ => rows(cid).map(_.schema)
   }
 }
 

@@ -21,6 +21,12 @@ import org.apache.spark.sql.types._
   * family's composed form used `> 0`), bits summed as disjoint
   * powers — so bucket ids match the composed form bit-for-bit and the
   * DuckDB oracle (which re-derives the planes from md5) is unchanged.
+  *
+  * One divergence, on NULL input only: the composed
+  * `when(...).otherwise(0)` form gave a NULL embedding an all-zero
+  * bucket array (the row survived `posexplode` into bucket 0); this
+  * expression returns NULL, so such a row drops out. Unreachable on the
+  * corpus, whose embeddings are non-null.
   */
 case class Md5LshBuckets(child: Expression, bits: Int)
     extends UnaryExpression {
@@ -111,11 +117,12 @@ object Md5LshBuckets {
   val Dim = 64
   val NumTables = 16
 
-  /** Plane-budget ceiling — matches the scaled form's
-    * `Similarity.ScaledLshMaxBits` (12); the fixed-parameter md5 form
-    * uses the first 4.
+  /** Plane-budget ceiling — the scaled form's
+    * `Similarity.ScaledLshMaxBits`, so the capacity rule can never ask
+    * for more planes than exist; the fixed-parameter md5 form uses the
+    * first 4.
     */
-  val MaxBits = 12
+  val MaxBits: Int = graft.operators.Similarity.ScaledLshMaxBits
 
   /** Deterministic ±1 sign-projection plane (t, b): coefficient d is
     * the parity of the first hex digit of md5("lsh:t:b:d") — THE

@@ -30,9 +30,15 @@ import org.apache.spark.sql.types._
   * corpus-sized groups (a 10¹⁸-micro-unit sum would overflow long
   * where DECIMAL(38,6) keeps going) — those keep the decimal form.
   *
-  * Non-finite input throws (longValueExact) — unreachable on squared
+  * Two inputs throw where the decimal form may not. Non-finite input
+  * (NaN, ±Inf) throws `NumberFormatException` from
+  * `BigDecimal.valueOf`, before any rounding — unreachable on squared
   * distances of finite floats, and the decimal form's ANSI cast
-  * errors there too.
+  * errors there too. Finite input whose micro-units do not fit a long
+  * (|round(x, 6)| · 10⁶ ≥ 2⁶³, i.e. |x| ≳ 9.2e12) throws
+  * `ArithmeticException` from `longValueExact`, where DECIMAL(38,6)
+  * keeps computing — unreachable on the bounded-group ADC path, whose
+  * rows stay ≲ 10³.
   */
 case class Round6Micros(child: Expression) extends UnaryExpression {
 

@@ -656,8 +656,10 @@ object Similarity {
     * mean population at [[ScaledLshTarget]] up to 32·2¹² ≈ 131k
     * vectors per table; above that corpus size the rule saturates
     * (populations grow linearly again) and the IVF family — whose
-    * cell count tracks √N structurally — is the intended index. */
-  val ScaledLshMaxBits = 12
+    * cell count tracks √N structurally — is the intended index.
+    * A constant, so `Md5LshBuckets.MaxBits` reads it without
+    * initializing this object. */
+  final val ScaledLshMaxBits = 12
 
   /** ⌈log₂ m⌉ on exact integers (0 for m ≤ 1) — the engine-neutral
     * capacity rule: both sides compute it from bit LENGTH (`bin` +

@@ -1,7 +1,10 @@
 package graft.engine
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -175,5 +178,110 @@ class LakeSpec extends SparkSpec {
     lake.catalog.insertFile(cid, "text/csv; charset=utf-8")
     assert(lake.catalog.getSchema(cid).nonEmpty)
     assert(lake.catalog.getType(cid).get.startsWith("text/csv"))
+  }
+
+  /** `body`'s result and the Spark jobs it starts on this thread,
+    * counted by job group. Listener events arrive in order, so once a
+    * marker job's start is delivered, every job `body` started has been
+    * counted.
+    */
+  private def jobsRun[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val counted = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet(): Unit
+          case Some(`marker`) => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener never flushed")
+      (out, counted.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def extractedJson(l: Lake, cid: String, qast: String): Seq[String] =
+    l.extract(cid, qast).toOption.get.toJSON.collect().toSeq
+
+  test("extract reader schema: a warm filter extract is ONE Spark job") {
+    val l = new Lake(spark, Files.createTempDirectory("memo-jobs"))
+    val csvCid = l.addFile(csv, "text/csv")
+    val jsonCid = l.addFile(json, "application/json")
+    l.schema(csvCid); l.schema(jsonCid) // upload inference done: memo warm
+    assert(jobsRun(extractedJson(l, csvCid,
+      """["==", [".", ["$"], "country_code"], "DEU"]""")) ==
+      (Seq("""{"country_name":"Germany","country_code":"DEU",""" +
+        """"year":"2019","population":"83092962"}"""), 1))
+    assert(jobsRun(extractedJson(l, jsonCid,
+      """["==", [".", ["$"], "stars"], 9]""")) ==
+      (Seq("""{"name":"graft","stars":9,"tags":["spark"]}"""), 1))
+  }
+
+  test("extract reader schema: the memo key includes the MIME") {
+    // valid as both types: a 2-column CSV (header + one row) and a
+    // 2-element JSON array with fields n, name
+    val bytes = "[{\"name\": \"memo\", \"n\": 1},\n{\"name\": \"key\", \"n\": 2}]\n"
+      .getBytes("UTF-8")
+    val l = new Lake(spark, Files.createTempDirectory("memo-mime"))
+    val cid = l.addFile(bytes, "text/csv")
+    l.schema(cid)
+    val asCsv = l.extract(cid, """["&"]""").toOption.get
+    assert(asCsv.count() == 1 && !asCsv.columns.contains("name"))
+    l.catalog.insertFile(cid, "application/json")
+    val asJson = l.extract(cid, """["==", [".", ["$"], "name"], "key"]""")
+      .toOption.get
+    assert(asJson.columns.toSeq == Seq("n", "name"))
+    assert(asJson.toJSON.collect().toSeq == Seq("""{"n":2,"name":"key"}"""))
+  }
+
+  test("extract reader schema: a fresh Lake fills the memo on its first read") {
+    val root = Files.createTempDirectory("memo-restart")
+    val l1 = new Lake(spark, root)
+    val cid = l1.addFile(csv, "text/csv")
+    l1.schema(cid)
+    val q = """["~", [".", ["$"], "country_name"], "[CG].*"]"""
+    val want = extractedJson(l1, cid, q)
+    assert(want.size == 2)
+    val l2 = new Lake(spark, root)
+    assert(l2.catalog.getSchema(cid).nonEmpty) // so no upload inference
+    assert(jobsRun(extractedJson(l2, cid, q)) == ((want, 2))) // header + scan
+    assert(jobsRun(extractedJson(l2, cid, q)) == ((want, 1))) // memo hit
+  }
+
+  test("extract reader schema: memo reads equal cold reads byte for byte") {
+    val odd = Seq(
+      // duplicate and blank header names (Spark renames both)
+      "id,name,name,,score\n1,a,b,,3.5\n2,c,d,x,4\n3,,e,y,\n" -> "text/csv",
+      "id,only\n" -> "text/csv", // header only: zero rows
+      // mixed int/double values, arrays, a nested object, missing keys
+      """[{"id": 1, "v": 2, "tags": ["a"], "xs": [1, 2.5]},
+        | {"id": 2, "v": 2.5, "tags": [], "xs": [3]},
+        | {"id": 3, "tags": null, "nested": {"k": [1, 2]}}]""".stripMargin ->
+        "application/json",
+      "[]" -> "application/json")
+    val root = Files.createTempDirectory("memo-equal")
+    val warm = new Lake(spark, root)
+    val cids = odd.map { case (body, mime) =>
+      val cid = warm.addFile(body.getBytes("UTF-8"), mime)
+      warm.schema(cid)
+      cid
+    }
+    val cold = new Lake(spark, root)
+    cids.foreach { cid =>
+      val once = extractedJson(cold, cid, """["&"]""") // miss: no schema
+      assert(extractedJson(warm, cid, """["&"]""") == once, cid)
+      assert(extractedJson(cold, cid, """["&"]""") == once, cid)
+    }
+    assert(extractedJson(warm, cids.head, """["&"]""").size == 3)
   }
 }

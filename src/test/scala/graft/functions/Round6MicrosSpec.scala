@@ -52,4 +52,12 @@ class Round6MicrosSpec extends SparkSpec {
     val df = Seq(Option.empty[Double]).toDF("x")
     assert(df.select(round6Micros(col("x"))).head.isNullAt(0))
   }
+
+  test("documented edges: the long ceiling and non-finite input throw") {
+    // just under and just over 2^63 micro-units (|x| ~ 9.22e12)
+    assert(Round6Micros.micros(9.2e12) == 9200000000000000000L)
+    intercept[ArithmeticException](Round6Micros.micros(9.3e12))
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      .foreach(x => intercept[NumberFormatException](Round6Micros.micros(x)))
+  }
 }

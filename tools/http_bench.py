@@ -8,6 +8,10 @@ Measures the same three surfaces BASELINE.md quotes for the reference
   find : POST /find (metadata predicate search)  ref: 5576 req/s
   get  : GET /file/{cid} (content download)      ref: 6238 req/s
 
+and, with no reference number, extract (POST /extract/{cid}, an
+equality predicate over the uploaded CSV), /find frame verbs and
+POST /query/q1_agg.
+
 Usage: python3 tools/http_bench.py [port] [seconds] [threads] [procs]
 
 Each worker keeps one persistent HTTP/1.1 connection (like wrk).
@@ -29,6 +33,8 @@ PROCS = int(sys.argv[4]) if len(sys.argv) > 4 else 8
 
 CSV = b"name,age\nalice,30\nbob,41\ncarol,29\n"
 FIND_Q = b'["&&", [".", ["$"], "topics"], ["bench"]]'
+EXTRACT_Q = b'["==", [".", ["$"], "name"], "bob"]'
+EXTRACT_ROWS = [{"name": "bob", "age": "41"}]  # CSV values stay strings
 
 
 def setup():
@@ -117,6 +123,12 @@ def main():
         body = r.read()
         return r.status == 200 and body == CSV
 
+    def do_extract(c):
+        c.request("POST", "/extract/" + cid, EXTRACT_Q)
+        r = c.getresponse()
+        body = r.read()
+        return r.status == 200 and json.loads(body) == EXTRACT_ROWS
+
     def do_query(c):
         # named analytic query over the server's default sf dir; each
         # request plans + executes a Spark job and streams the JSON
@@ -162,6 +174,7 @@ def main():
         return r.status == 200 and body.startswith(b"[")
 
     results = [run("add", do_add), run("find", do_find), run("get", do_get),
+               run("extract", do_extract),
                run("find_group", do_find_group),
                run("find_top", do_find_top),
                run("find_project", do_find_project), run("query", do_query)]
