@@ -2,7 +2,7 @@ package graft.engine
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.qast.{Ast, Compiler}
@@ -107,9 +107,6 @@ final class Extractor(spark: SparkSession, store: ContentStore,
         frame => frame.checked(df)
           .left.map(e => ExtractError.Malformed(e): ExtractError))
     } yield out
-
-  def extractWith(cid: String, pred: Column): Either[ExtractError, DataFrame] =
-    rows(cid).map(_.filter(pred))
 
   /** Memoized in-flight inferences — the reference's `memoize` of a
     * Clojure future (`extract/metadata.clj:67-76`), done with an atomic

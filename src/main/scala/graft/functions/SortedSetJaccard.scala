@@ -21,10 +21,12 @@ import org.apache.spark.sql.types._
   * IEEE divide (empty∪empty ⇒ 0/0 ⇒ NaN, matching the builtin form's
   * `0.cast(double)/0`).
   *
-  * PRECONDITION (caller-owned, not checked): both arrays are sorted
-  * ascending with non-null elements — the shape `sort_array` over
-  * xxhash64 keys produces. On unsorted input the counts are wrong;
-  * keep the builtin form there.
+  * PRECONDITION: both arrays are sorted ascending with non-null
+  * elements — the shape `sort_array` over xxhash64 keys produces. The
+  * element half is checked at analysis (the input type must be
+  * `array<bigint>` with `containsNull = false`); the order is the
+  * caller's: on unsorted input the counts are wrong, so keep the
+  * builtin form there.
   */
 case class SortedSetJaccard(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -34,14 +36,14 @@ case class SortedSetJaccard(left: Expression, right: Expression)
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
-      case ArrayType(LongType, _) => true
+      case ArrayType(LongType, false) => true
       case _ => false
     }
     if (ok(left) && ok(right))
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sorted_set_jaccard expects array<bigint>, got " +
+        s"sorted_set_jaccard expects array<bigint> without nulls, got " +
           s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
   }
 

@@ -93,10 +93,6 @@ object QastQueries {
       .orderBy(col("n_nationkey"))
   }
 
-  /** Unwrap a compiled group query or fail loudly. */
-  def qastGroup(json: String): Compiler.GroupQuery =
-    Compiler.groupFromJson(json).fold(e => throw e, identity)
-
   /** Graded `qast_group`: the beyond-reference GROUP extension —
     * `["group", pred, [key...], agg...]` compiled to `filter →
     * groupBy → agg` (SURVEY §2.1 note: the reference QAST is
@@ -112,7 +108,7 @@ object QastQueries {
     * IEEE whatever the addition order.
     */
   def groupRollup(s: SparkSession, dir: String): DataFrame =
-    qastGroup(
+    qastFrame(
       """["group",
            ["<", 3, [".", ["$"], "l_quantity"], 26],
            [[".", ["$"], "l_returnflag"], [".", ["$"], "l_linestatus"]],

@@ -107,39 +107,6 @@ object Compiler {
     case _ => Left(QastError("malformed query"))
   }
 
-  /** Compiled form of the top-level `group` verb: filter → groupBy →
-    * agg, each half an ordinary Catalyst expression list. Key/agg
-    * output names are deterministic so callers (and oracles) can
-    * address them: a plain path keeps its LAST segment; anything else
-    * is positional (`k0…`/`a0…`); `["count"]` is `n`; `[fn, path]` is
-    * `fn_<segment>`. [[GroupQuery.apply]] runs the rollup on any frame
-    * with a key-ordered output (deterministic endpoint streaming).
-    */
-  final case class GroupQuery(pred: Column, keyNames: List[String],
-      keys: List[Column], aggs: List[Column]) {
-    def apply(df: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
-      df.filter(pred).groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-        .orderBy(keyNames.map(col): _*)
-
-    /** [[apply]] with the frame-dependent type errors surfaced as
-      * "malformed query": grouping or ordering on an unorderable type
-      * (the `extra` map), summing an array, referencing a missing
-      * field — all AnalysisExceptions the ANALYZER raises, forced
-      * eagerly here by touching the schema. Shape errors are caught at
-      * compile ([[compileGroup]]'s collision check); type errors need
-      * the frame, so the same 400-not-500 rule is applied at the first
-      * moment the frame is known, never when the rollup executes.
-      */
-    def checked(df: org.apache.spark.sql.DataFrame)
-        : Either[QastError, org.apache.spark.sql.DataFrame] =
-      try { val out = apply(df); out.schema; Right(out) }
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          Left(QastError("malformed query"))
-      }
-  }
-
   /** Compile the beyond-reference rollup verb
     * `["group", pred, [key...], agg...]`:
     *
@@ -151,13 +118,17 @@ object Compiler {
     *     count_distinct | sum | min | max | avg.
     *
     * Anything else is "malformed query" — arity is validated at parse
-    * time like every reference operator, shapes here. Returns the
-    * pieces rather than a DataFrame: the engine applies them to
-    * whatever frame the endpoint serves (content extraction or the
-    * metadata snapshot), exactly as predicate compilation is
-    * frame-agnostic.
+    * time like every reference operator, shapes here. Key/agg output
+    * names are deterministic so callers (and oracles) can address
+    * them: a plain path keeps its LAST segment; anything else is
+    * positional (`k0…`/`a0…`); `["count"]` is `n`; `[fn, path]` is
+    * `fn_<segment>`. Returns a frame transform (filter → groupBy → agg,
+    * key-ordered output for deterministic endpoint streaming) that the
+    * engine applies to whatever frame the endpoint serves (content
+    * extraction or the metadata search relation), exactly as predicate
+    * compilation is frame-agnostic.
     */
-  def compileGroup(ast: Ast): Either[QastError, GroupQuery] = ast match {
+  def compileGroup(ast: Ast): Either[QastError, FrameQuery] = ast match {
     case QOp("group", predAst :: QArr(keyAsts) :: aggAsts)
         if keyAsts.nonEmpty && aggAsts.nonEmpty =>
       for {
@@ -180,13 +151,10 @@ object Compiler {
         // when the rollup's orderBy executes
         _ <- if (all.distinct.length == all.length) Right(())
              else Left(QastError("malformed query"))
-      } yield GroupQuery(pred, names, keys, aggs)
+      } yield FrameQuery(_.filter(pred).groupBy(keys: _*)
+        .agg(aggs.head, aggs.tail: _*).orderBy(names.map(col): _*))
     case _ => Left(QastError("malformed query"))
   }
-
-  /** Parse + compile a group query in one step. */
-  def groupFromJson(json: String): Either[QastError, GroupQuery] =
-    Ast.parse(json).flatMap(compileGroup)
 
   /** Is this AST a root frame-level verb (a whole-frame transform
     * rather than a row predicate)? The endpoint dispatch seam shared
@@ -197,10 +165,17 @@ object Compiler {
     case _ => false
   }
 
-  /** A compiled frame-level query: DataFrame → DataFrame, with the
-    * same checked() contract as [[GroupQuery.checked]] (analyzer
-    * rejections — unorderable sort key, missing field — surface as
-    * "malformed query", not an execution 500).
+  /** A compiled frame-level query: DataFrame → DataFrame.
+    *
+    * `checked` is [[apply]] with the frame-dependent type errors
+    * surfaced as "malformed query": grouping or ordering on an
+    * unorderable type (the `extra` map), summing an array, referencing
+    * a missing field — all AnalysisExceptions the ANALYZER raises,
+    * forced eagerly here by touching the schema. Shape errors are
+    * caught at compile ([[compileGroup]]'s collision check); type
+    * errors need the frame, so the same 400-not-500 rule is applied at
+    * the first moment the frame is known, never when the query
+    * executes.
     */
   final case class FrameQuery(build: org.apache.spark.sql.DataFrame =>
       org.apache.spark.sql.DataFrame) {
@@ -248,7 +223,7 @@ object Compiler {
     *     a 100 TB frame reads only the addressed columns.
     */
   def compileFrame(ast: Ast): Either[QastError, FrameQuery] = ast match {
-    case g @ QOp("group", _) => compileGroup(g).map(g => FrameQuery(g.apply))
+    case g @ QOp("group", _) => compileGroup(g)
     case QOp("having", (g @ QOp("group", _)) :: predAst :: Nil) =>
       for { gq <- compileGroup(g); pred <- compile(predAst) }
         yield FrameQuery(df => gq(df).filter(pred))

@@ -54,27 +54,14 @@ object Evaluator {
   def fromJson(json: String): Either[QastError, Row => Any] =
     Ast.parse(json).flatMap(compile)
 
-  /** Filter rows like `df.filter`: keep only where the value is
-    * exactly true.
-    */
-  def filter(rows: Seq[Row], json: String): Either[QastError, Seq[Row]] =
-    fromJson(json).map(f => rows.filter(r => f(r) == true))
-
-  /** The closure-backend twin of `Compiler.compileGroup` — the group
-    * verb over materialized rows (the `/find` metadata snapshot),
-    * QastBackendsSpec pins it row-equal to the Column backend.
-    * Aggregate null semantics match SQL: `count(expr)`/`distinct`/
-    * `sum`/`min`/`max`/`avg` ignore nulls; sum/min/max of an all-null
-    * group is null; `["count"]` counts rows. Grouping normalizes
-    * Long/Double numerically (SQL equality), but emits each key's
-    * first raw value.
-    */
-  def group(rows: Seq[Row], json: String): Either[QastError, Seq[Row]] =
-    frame(rows, json)
-
   /** The closure-backend twin of `Compiler.compileFrame`: any root
-    * frame verb (group / having / top) over materialized rows.
-    * QastBackendsSpec pins it row-equal to the Column backend.
+    * frame verb (group / having / top / project) over materialized rows
+    * (the `/find` metadata snapshot). QastBackendsSpec pins it row-equal
+    * to the Column backend. Aggregate null semantics match SQL:
+    * `count(expr)`/`distinct`/`sum`/`min`/`max`/`avg` ignore nulls;
+    * sum/min/max of an all-null group is null; `["count"]` counts rows.
+    * Grouping normalizes Long/Double numerically (SQL equality), but
+    * emits each key's first raw value.
     */
   def frame(rows: Seq[Row], json: String): Either[QastError, Seq[Row]] =
     Ast.parse(json).flatMap(frameOf).flatMap { f =>

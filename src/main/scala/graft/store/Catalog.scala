@@ -1,11 +1,21 @@
 package graft.store
 
-import java.nio.file.{Files, Path}
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, StandardOpenOption}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.reflect.{ClassTag, classTag}
+import scala.reflect.runtime.universe.TypeTag
+
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.qast.{Compiler, Evaluator}
+import graft.qast.{Ast, Compiler, Evaluator}
 
 /** Metadata catalog — the engine's analog of the reference's PostgreSQL
   * metadata store (`/root/reference/src/comlake/core/db/PostgreSQL.java`),
@@ -14,449 +24,116 @@ import graft.qast.{Compiler, Evaluator}
   *   content (cid, type, extra)            — one row per stored blob
   *   dataset (id, file, description, source, topics, extra, parent)
   *
-  * Storage is **append-only parquet** with last-writer-wins resolution at
-  * read time — the lakehouse-native replacement for the reference's
-  * `INSERT ... ON CONFLICT DO UPDATE` (`PostgreSQL.java:41-44`): every
-  * mutation appends a full row stamped with a monotonic `seq`, and the
-  * read view keeps `max_by(row, seq)` per key. That keeps writes
-  * coordination-free (any number of concurrent ingests just append
-  * files) and makes the mutable-metadata-on-immutable-storage problem
-  * disappear; at warehouse scale the same layout swaps to Delta/Iceberg
-  * MERGE without touching callers. Dataset rows are immutable *versions*
-  * (`POST /update` inserts a child row pointing at its parent,
-  * `PostgreSQL.java:128-154`), so they are append-only by nature already.
+  * Each relation is one [[MetaLog]]: an **append-only log** with
+  * last-writer-wins resolution at read time — the lakehouse-native
+  * replacement for the reference's `INSERT ... ON CONFLICT DO UPDATE`
+  * (`PostgreSQL.java:41-44`). Every mutation appends a full row stamped
+  * with a monotonic `seq`, and the read view keeps the highest-`seq`
+  * row per key (`cid` for content, `id` for dataset). Dataset rows are
+  * immutable *versions* (`POST /update` inserts a child row pointing at
+  * its parent, `PostgreSQL.java:128-154`), so their keys never repeat
+  * and the same resolution leaves them as they are. Any log reaching
+  * 1024 pending WAL rows compacts both logs into parquet.
   *
-  * Point lookups (`getType`, version parents) read the resolved view;
-  * the view is tiny relative to content (metadata : data ratio), so
-  * these are driver-cheap, and `search` stays a fully distributed
-  * join+filter.
+  * Recovery invariant: `seq` is recovered as the max over every durable
+  * row of both logs (WAL lines are synced per append; parquet is the
+  * compacted log), so a restart never reissues a seq that reached a
+  * durable row — dataset ids stay unique and resolution never ties. A
+  * WAL tail after its last newline is an append that never returned
+  * (a crash between the writes of one line); recovery truncates it. An
+  * unparseable complete line still fails the open.
+  *
+  * Point lookups (`getType`, version parents) read a driver index of
+  * the resolved view (metadata is tiny relative to content), and
+  * `search` stays a fully distributed join+filter.
   */
 final class Catalog(spark: SparkSession, root: Path,
     localIndexMaxRowsOverride: Long = -1L) {
-  import spark.implicits._
+  import Catalog.{ContentRow, DatasetRow}
 
   /** Driver-side materialization cap. The point-lookup indexes and the
-    * `searchLocal` snapshot hold the RESOLVED metadata relations on the
-    * driver — reference parity (its Postgres held them the same way)
-    * and the measured hot-path win at metadata scale. At 100× metadata
-    * that becomes a driver OOM, so above this row count the catalog
-    * stops materializing: point lookups become pushed-down distributed
-    * filters over the log and `searchLocal` falls back to the Catalyst
-    * QAST backend (`searchWith`), which only collects MATCHES. Both
-    * backends are semantics-equivalent (QastBackendsSpec), so callers
-    * see identical results either side of the cap. Configurable via
-    * `spark.graft.catalog.localIndexMaxRows` (or the constructor, for
-    * tests).
+    * `searchLocal` snapshot hold the RESOLVED relations on the driver —
+    * reference parity (its Postgres held them the same way) and the
+    * measured hot-path win at metadata scale, but a driver OOM at 100×
+    * metadata. Above this many logged rows point lookups become
+    * pushed-down filters over the view and `searchLocal` runs `search`
+    * (semantics-equivalent, QastBackendsSpec), collecting only its
+    * result. Set by `spark.graft.catalog.localIndexMaxRows` (or the
+    * constructor, for tests).
     */
   private val localIndexMaxRows: Long =
     if (localIndexMaxRowsOverride >= 0L) localIndexMaxRowsOverride
     else spark.conf.getOption("spark.graft.catalog.localIndexMaxRows")
       .map(_.toLong).getOrElse(4L * 1000 * 1000)
 
-  private val contentDir = root.resolve("content")
-  private val datasetDir = root.resolve("dataset")
-  Files.createDirectories(contentDir)
-  Files.createDirectories(datasetDir)
+  private val contents = new MetaLog[String, ContentRow](spark, this, root,
+    "content", "cid", _.cid, _.seq, localIndexMaxRows)
+  private val datasets = new MetaLog[Long, DatasetRow](spark, this, root,
+    "dataset", "id", _.id, _.seq, localIndexMaxRows)
 
-  /** Monotonic sequence for ids and last-writer-wins ordering. Driver-side
-    * like the reference's bigserial; survives restarts. The source of
-    * truth on recovery is max(seq) over everything durable (WAL rows are
-    * fsync'd per append; parquet is the compacted log) — the counter
-    * file is only a fast hint, so it needs no fsync of its own and an
-    * unparseable/partial file (crash mid-write) is tolerated. This
-    * guarantees restarts never reissue a seq that reached any durable
-    * row, so dataset ids stay unique and LWW `max_by(seq)` never ties.
-    */
-  private val counterFile = root.resolve("seq")
+  /** Ids and last-writer-wins order, like the reference's bigserial;
+    * recovered from the logs (see the recovery invariant above). */
   private lazy val seqCounter =
-    new java.util.concurrent.atomic.AtomicLong(recoverSeq())
+    new AtomicLong(math.max(contents.maxSeq, datasets.maxSeq))
 
-  private def recoverSeq(): Long = {
-    val fromFile =
-      try {
-        if (Files.exists(counterFile))
-          new String(Files.readAllBytes(counterFile), "UTF-8").trim.toLong
-        else 0L
-      } catch { case _: Exception => 0L }
-    val fromWal =
-      (pending.valuesIterator.map(_.seq) ++
-        pendingDatasets.valuesIterator.map(_.seq)).foldLeft(0L)(math.max)
-    def parquetMax(dir: Path): Long =
-      if (!hasData(dir)) 0L
-      else spark.read.parquet(dir.toString)
-        .agg(coalesce(max(col("seq")), lit(0L))).head.getLong(0)
-    math.max(math.max(fromFile, fromWal),
-      math.max(parquetMax(contentDir), parquetMax(datasetDir)))
-  }
+  private def nextSeq(): Long = seqCounter.incrementAndGet()
 
-  private def nextSeq(): Long = {
-    val v = seqCounter.incrementAndGet()
-    counterFile.synchronized { // hint write: atomic rename, never partial
-      val tmp = root.resolve("seq.tmp")
-      Files.write(tmp, v.toString.getBytes("UTF-8"))
-      Files.move(tmp, counterFile,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    v
-  }
-
-  import Catalog.{ContentRow, DatasetRow}
-
-  // --- content write-ahead log ---------------------------------------
-  //
-  // Upload registration is the hot path (reference: 357 req/s of
-  // Postgres INSERTs). A one-row Spark parquet append per upload costs
-  // a full job (~70 ms) and a lookup over the re-resolved log costs
-  // another — measured 13 req/s. Instead, content mutations append one
-  // fsync'd JSON line to a WAL and update a driver-side index; the
-  // distributed `content` view unions parquet with the pending WAL
-  // rows, and `flush()` compacts the WAL into parquet with one Spark
-  // job per batch. Durability per request comes from the synced file
-  // append, exactly like the reference's per-request INSERT commit.
-
-  private val walFile = root.resolve("content.wal")
-  private val walMapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  /** Latest pending (not yet compacted) row per cid, insertion-ordered. */
-  private val pending =
-    scala.collection.mutable.LinkedHashMap.empty[String, ContentRow]
-  /** Driver index of the resolved content relation (parquet ∪ WAL);
-    * None until first lookup. ConcurrentHashMap because readers
-    * (lookupContent on the request pool) race writers (appendContent
-    * under the instance lock) — a plain mutable.HashMap can corrupt
-    * during resize; the volatile only publishes the Option.
-    */
-  @volatile private var contentIndex
-      : Option[java.util.concurrent.ConcurrentHashMap[String, ContentRow]] =
-    None
-
-  // recovery: reload pending rows from an existing WAL
-  if (Files.exists(walFile)) {
-    Files.readAllLines(walFile).forEach { line =>
-      if (line.nonEmpty) {
-        val r = walRowFromJson(line)
-        pending.put(r.cid, r)
-      }
-    }
-  }
-
-  private def walRowToJson(r: ContentRow): String = {
-    val node = walMapper.createObjectNode()
-    node.put("cid", r.cid)
-    if (r.`type` == null) node.putNull("type") else node.put("type", r.`type`)
-    val extra = node.putObject("extra")
-    r.extra.foreach { case (k, v) => extra.put(k, v) }
-    node.put("seq", r.seq)
-    walMapper.writeValueAsString(node)
-  }
-
-  private def walRowFromJson(line: String): ContentRow = {
-    val n = walMapper.readTree(line)
-    val extra = scala.collection.mutable.Map.empty[String, String]
-    n.get("extra").properties().forEach(e => extra.put(e.getKey, e.getValue.asText))
-    ContentRow(n.get("cid").asText,
-      if (n.get("type").isNull) null else n.get("type").asText,
-      extra.toMap, n.get("seq").asLong)
-  }
-
-  // dataset rows get the same WAL treatment (they are append-only —
-  // no LWW resolution needed, just union + index)
-  private val datasetWalFile = root.resolve("dataset.wal")
-  private val pendingDatasets =
-    scala.collection.mutable.LinkedHashMap.empty[Long, DatasetRow]
-  @volatile private var datasetIndex
-      : Option[java.util.concurrent.ConcurrentHashMap[Long, DatasetRow]] =
-    None
-
-  if (Files.exists(datasetWalFile)) {
-    Files.readAllLines(datasetWalFile).forEach { line =>
-      if (line.nonEmpty) {
-        val r = datasetRowFromJson(line)
-        pendingDatasets.put(r.id, r)
-      }
-    }
-  }
-
-  private def datasetRowToJson(r: DatasetRow): String = {
-    val node = walMapper.createObjectNode()
-    node.put("id", r.id)
-    node.put("file", r.file)
-    node.put("description", r.description)
-    node.put("source", r.source)
-    val t = node.putArray("topics")
-    r.topics.foreach(t.add)
-    val extra = node.putObject("extra")
-    r.extra.foreach { case (k, v) => extra.put(k, v) }
-    r.parent match {
-      case Some(p) => node.put("parent", p)
-      case None => node.putNull("parent")
-    }
-    node.put("seq", r.seq)
-    walMapper.writeValueAsString(node)
-  }
-
-  private def datasetRowFromJson(line: String): DatasetRow = {
-    val n = walMapper.readTree(line)
-    val topics = scala.collection.mutable.ArrayBuffer.empty[String]
-    n.get("topics").forEach(t => topics += t.asText)
-    val extra = scala.collection.mutable.Map.empty[String, String]
-    n.get("extra").properties().forEach(e => extra.put(e.getKey, e.getValue.asText))
-    DatasetRow(n.get("id").asLong, n.get("file").asText,
-      n.get("description").asText, n.get("source").asText, topics.toSeq,
-      extra.toMap,
-      if (n.get("parent").isNull) None else Some(n.get("parent").asLong),
-      n.get("seq").asLong)
-  }
-
-  private def appendDataset(row: DatasetRow): Unit = synchronized {
-    Files.writeString(datasetWalFile, datasetRowToJson(row) + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND,
-      java.nio.file.StandardOpenOption.SYNC)
-    pendingDatasets.put(row.id, row)
-    datasetIndex.foreach { m =>
-      m.put(row.id, row)
-      // the cap must hold across the process LIFETIME, not just the
-      // first build: a long-running server that ingests past it drops
-      // the driver map and falls through to the distributed paths
-      if (m.size > localIndexMaxRows) {
-        datasetIndexDisabled = true
-        datasetIndex = None
-      }
-    }
-    datasetCache.foreach(_.unpersist())
-    datasetCache = None
-    snapshotCache = None
-    if (pendingDatasets.size >= 1024) flush()
-  }
-
-  private def lookupDataset(id: Long): Option[DatasetRow] =
-    dsIndex match {
-      case Some(m) => Option(m.get(id))
-      case None => // above the cap: pending rows first (no job for the
-        // WAL hot path), then a pushed-down point filter over the log
-        synchronized(pendingDatasets.get(id)).orElse {
-          implicit val enc = org.apache.spark.sql.Encoders.product[DatasetRow]
-          dataset.filter(col("id") === id).as[DatasetRow]
-            .collect().headOption
-        }
+  private def append[K, R <: Product](log: MetaLog[K, R], row: R): Unit =
+    synchronized {
+      log.append(row)
+      snapshotCache = None
+      if (log.pendingRows >= 1024) flush()
     }
 
-  /** Parquet row counts are footer-metadata reads — no data scan. */
-  private def logRows(dir: Path): Long =
-    if (!hasData(dir)) 0L else spark.read.parquet(dir.toString).count()
+  /** Resolved `content` relation: latest full row per cid. */
+  def content: DataFrame = contents.view
 
-  /** Once the log crosses the cap it never shrinks (append-only), so
-    * the disabled decision is memoized — over-cap lookups pay one
-    * filter job, not an extra count.
-    */
-  @volatile private var datasetIndexDisabled = false
-  @volatile private var contentIndexDisabled = false
+  /** Resolved `dataset` relation: every version row. */
+  def dataset: DataFrame = datasets.view
 
-  private def dsIndex
-      : Option[java.util.concurrent.ConcurrentHashMap[Long, DatasetRow]] =
-    if (datasetIndexDisabled) None
-    else datasetIndex.orElse(synchronized {
-      datasetIndex.orElse {
-        if (logRows(datasetDir) > localIndexMaxRows) {
-          datasetIndexDisabled = true
-          None
-        } else {
-          implicit val enc = org.apache.spark.sql.Encoders.product[DatasetRow]
-          val m = new java.util.concurrent.ConcurrentHashMap[Long, DatasetRow]
-          if (hasData(datasetDir)) {
-            spark.read.parquet(datasetDir.toString)
-              .as[DatasetRow].collect().foreach(r => m.put(r.id, r))
-          }
-          pendingDatasets.valuesIterator.foreach(r => m.put(r.id, r))
-          datasetIndex = Some(m)
-          datasetIndex
-        }
-      }
-    })
-
-  private def hasData(dir: Path): Boolean =
-    Files.exists(dir.resolve("_SUCCESS")) || {
-      val s = Files.list(dir)
-      try s.anyMatch(p => p.toString.endsWith(".parquet"))
-      finally s.close()
-    }
-
-  /** Resolved views are cached in memory (metadata is small relative
-    * to content by design — the analog of the reference keeping them
-    * in pooled PostgreSQL, its single biggest measured win,
-    * `eval.tex:85-107`) and invalidated on every append, so repeated
-    * `find`/lookup calls don't re-resolve the log.
-    */
-  @volatile private var contentCache: Option[DataFrame] = None
-  @volatile private var datasetCache: Option[DataFrame] = None
-
-  @volatile private var snapshotCache: Option[Seq[Evaluator.Row]] = None
-
-  private def invalidate(): Unit = synchronized {
-    contentCache.foreach(_.unpersist())
-    datasetCache.foreach(_.unpersist())
-    contentCache = None
-    datasetCache = None
-    snapshotCache = None
-  }
-
-  /** Resolved `content` relation: latest full row per cid, over
-    * parquet ∪ pending WAL rows.
-    */
-  def content: DataFrame = contentCache.getOrElse(synchronized {
-    contentCache.getOrElse {
-      val parquetLog =
-        if (!hasData(contentDir)) spark.emptyDataset[ContentRow].toDF()
-        else spark.read.parquet(contentDir.toString)
-      val walLog = pending.values.toSeq.toDS().toDF()
-      val df = parquetLog.unionByName(walLog)
-        .groupBy("cid")
-        .agg(max_by(struct(col("type"), col("extra"), col("seq")),
-          col("seq")).as("r"))
-        .select(col("cid"), col("r.type").as("type"),
-          col("r.extra").as("extra"), col("r.seq").as("seq"))
-        .cache()
-      contentCache = Some(df)
-      df
-    }
-  })
-
-  /** Compact pending WAL rows into the parquet log (one Spark job per
+  /** Compact pending WAL rows into the parquet logs (one Spark job per
     * batch instead of one per mutation). Logical content is unchanged.
     */
   def flush(): Unit = synchronized {
-    if (pending.nonEmpty) {
-      pending.values.toSeq.toDS().write.mode("append")
-        .parquet(contentDir.toString)
-      pending.clear()
-      Files.deleteIfExists(walFile)
-      contentCache.foreach(_.unpersist())
-      contentCache = None // rebuild from parquet on next read
-    }
-    if (pendingDatasets.nonEmpty) {
-      pendingDatasets.values.toSeq.toDS().write.mode("append")
-        .parquet(datasetDir.toString)
-      pendingDatasets.clear()
-      Files.deleteIfExists(datasetWalFile)
-      datasetCache.foreach(_.unpersist())
-      datasetCache = None
-    }
+    contents.compact()
+    datasets.compact()
   }
-
-  /** Resolved `dataset` relation (rows are immutable versions already):
-    * parquet ∪ pending WAL rows.
-    */
-  def dataset: DataFrame = datasetCache.getOrElse(synchronized {
-    datasetCache.getOrElse {
-      val parquetLog =
-        if (!hasData(datasetDir)) spark.emptyDataset[DatasetRow].toDF()
-        else spark.read.parquet(datasetDir.toString)
-      val df = parquetLog
-        .unionByName(pendingDatasets.values.toSeq.toDS().toDF())
-        .cache()
-      datasetCache = Some(df)
-      df
-    }
-  })
-
-  private def appendContent(row: ContentRow): Unit = synchronized {
-    // durable per-request: synced append of one JSON line
-    Files.writeString(walFile, walRowToJson(row) + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND,
-      java.nio.file.StandardOpenOption.SYNC)
-    pending.put(row.cid, row)
-    contentIndex.foreach { m =>
-      m.put(row.cid, row)
-      // lifetime cap, same as the dataset index (see appendDataset)
-      if (m.size > localIndexMaxRows) {
-        contentIndexDisabled = true
-        contentIndex = None
-      }
-    }
-    contentCache.foreach(_.unpersist())
-    contentCache = None
-    snapshotCache = None
-    if (pending.size >= 1024) flush()
-  }
-
-  /** Resolved driver index (lazy; updated incrementally on writes;
-    * None above the cap — see `localIndexMaxRows`).
-    */
-  private def index
-      : Option[java.util.concurrent.ConcurrentHashMap[String, ContentRow]] =
-    if (contentIndexDisabled) None
-    else contentIndex.orElse(synchronized {
-      contentIndex.orElse {
-        if (logRows(contentDir) > localIndexMaxRows) {
-          contentIndexDisabled = true
-          None
-        } else {
-          implicit val enc = org.apache.spark.sql.Encoders.product[ContentRow]
-          val m = new java.util.concurrent.ConcurrentHashMap[String, ContentRow]
-          if (hasData(contentDir)) {
-            spark.read.parquet(contentDir.toString)
-              .groupBy("cid")
-              .agg(max_by(struct(col("type"), col("extra"), col("seq")),
-                col("seq")).as("r"))
-              .select(col("cid"), col("r.type").as("type"),
-                col("r.extra").as("extra"), col("r.seq").as("seq"))
-              .as[ContentRow].collect().foreach(r => m.put(r.cid, r))
-          }
-          pending.valuesIterator.foreach(r => m.put(r.cid, r))
-          contentIndex = Some(m)
-          contentIndex
-        }
-      }
-    })
 
   /** Upsert-by-cid (reference I3, `PostgreSQL.java:84-94`): sets `type`,
     * preserves any existing extra (e.g. an inferred schema).
     */
   def insertFile(cid: String, mime: String): Unit = {
-    val existing = lookupContent(cid)
-    appendContent(ContentRow(cid, mime,
+    val existing = contents.lookup(cid)
+    append(contents, ContentRow(cid, mime,
       existing.map(_.extra).getOrElse(Map.empty), nextSeq()))
   }
 
   /** Persist an inferred schema under `extra.schema` (reference A3,
     * `PostgreSQL.java:205-212`).
     */
-  def setSchema(cid: String, schemaJson: String): Unit = lookupContent(cid) match {
-    case Some(row) =>
-      appendContent(row.copy(extra = row.extra + ("schema" -> schemaJson),
-        seq = nextSeq()))
-    case None =>
-      appendContent(ContentRow(cid, null, Map("schema" -> schemaJson),
-        nextSeq()))
-  }
+  def setSchema(cid: String, schemaJson: String): Unit =
+    contents.lookup(cid) match {
+      case Some(row) =>
+        append(contents, row.copy(extra = row.extra + ("schema" -> schemaJson),
+          seq = nextSeq()))
+      case None =>
+        append(contents, ContentRow(cid, null, Map("schema" -> schemaJson),
+          nextSeq()))
+    }
 
   /** `SELECT type FROM content WHERE cid=?` (reference L1). */
   def getType(cid: String): Option[String] =
-    lookupContent(cid).flatMap(r => Option(r.`type`))
+    contents.lookup(cid).flatMap(r => Option(r.`type`))
 
   def getSchema(cid: String): Option[String] =
-    lookupContent(cid).flatMap(_.extra.get("schema"))
-
-  private def lookupContent(cid: String): Option[ContentRow] =
-    index match {
-      case Some(m) => Option(m.get(cid)) // pure map access on uploads
-      case None => // above the cap: WAL rows first, then a pushed-down
-        // point filter over the LWW-resolved view
-        synchronized(pending.get(cid)).orElse {
-          implicit val enc = org.apache.spark.sql.Encoders.product[ContentRow]
-          content.filter(col("cid") === cid).as[ContentRow]
-            .collect().headOption
-        }
-    }
+    contents.lookup(cid).flatMap(_.extra.get("schema"))
 
   /** Required dataset fields (`HttpHandler.java:138-142`); anything else
     * in `meta` is open-map `extra`.
     */
   def insertDataset(meta: DatasetMeta): Long = {
     val id = nextSeq()
-    appendDataset(DatasetRow(id, meta.file, meta.description, meta.source,
+    append(datasets, DatasetRow(id, meta.file, meta.description, meta.source,
       meta.topics, meta.extra, meta.parent, id))
     id
   }
@@ -470,11 +147,11 @@ final class Catalog(spark: SparkSession, root: Path,
     */
   def lineage(id: Long): Seq[DatasetRow] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[DatasetRow]
-    var cur = lookupDataset(id)
+    var cur = datasets.lookup(id)
     val seen = scala.collection.mutable.Set.empty[Long] // cycle guard
     while (cur.isDefined && seen.add(cur.get.id)) {
       out += cur.get
-      cur = cur.get.parent.flatMap(lookupDataset)
+      cur = cur.get.parent.flatMap(datasets.lookup)
     }
     out.toSeq
   }
@@ -484,17 +161,16 @@ final class Catalog(spark: SparkSession, root: Path,
     * at its parent, forming the version tree. Returns None if the parent
     * doesn't exist (reference: 400 "failed query").
     */
-  def updateDataset(parentId: Long, overrides: DatasetMeta.Partial): Option[Long] = {
-    lookupDataset(parentId).map { p =>
-        insertDataset(DatasetMeta(
-          file = overrides.file.getOrElse(p.file),
-          description = overrides.description.getOrElse(p.description),
-          source = overrides.source.getOrElse(p.source),
-          topics = overrides.topics.getOrElse(p.topics),
-          extra = p.extra ++ overrides.extra,
-          parent = Some(parentId)))
-      }
-  }
+  def updateDataset(parentId: Long, overrides: DatasetMeta.Partial): Option[Long] =
+    datasets.lookup(parentId).map { p =>
+      insertDataset(DatasetMeta(
+        file = overrides.file.getOrElse(p.file),
+        description = overrides.description.getOrElse(p.description),
+        source = overrides.source.getOrElse(p.source),
+        topics = overrides.topics.getOrElse(p.topics),
+        extra = p.extra ++ overrides.extra,
+        parent = Some(parentId)))
+    }
 
   /** Metadata search (reference S5/S6, `PostgreSQL.java:51-54`):
     * `dataset ⋈ content ON file = cid`, QAST predicate over the joined
@@ -505,18 +181,16 @@ final class Catalog(spark: SparkSession, root: Path,
     * `localIndexMaxRows` cap exists to prevent. The predicate lands
     * in both scans.
     */
-  def search(qastJson: String): Either[graft.qast.Ast.QastError, DataFrame] =
-    graft.qast.Ast.parse(qastJson).flatMap {
-      // beyond-reference frame verbs (group/having/top): the verb's own
-      // predicate filters the PROJECTED search row (where `extra` is
-      // the merged map), so rollups see exactly the row shape `/find`
-      // returns
-      case ast if Compiler.isFrameVerb(ast) =>
-        Compiler.compileFrame(ast)
-          .flatMap(_.checked(
-            searchWith(org.apache.spark.sql.functions.lit(true))))
-      case ast => Compiler.compile(ast).map(searchWith)
-    }
+  def search(qastJson: String): Either[Ast.QastError, DataFrame] =
+    Ast.parse(qastJson).flatMap(searchAst)
+
+  private def searchAst(ast: Ast): Either[Ast.QastError, DataFrame] =
+    // beyond-reference frame verbs (group/having/top): the verb's own
+    // predicate filters the PROJECTED search row (where `extra` is the
+    // merged map), so rollups see exactly the row shape `/find` returns
+    if (Compiler.isFrameVerb(ast))
+      Compiler.compileFrame(ast).flatMap(_.checked(searchWith(lit(true))))
+    else Compiler.compile(ast).map(searchWith)
 
   /** Driver-local metadata search — the closure backend of the QAST
     * "query polymorphism" (reference `qast->fn`): the joined+projected
@@ -526,38 +200,24 @@ final class Catalog(spark: SparkSession, root: Path,
     * invalidated by every catalog write. Row shape equals `search`'s
     * output row (id, file, description, source, topics, type, parent,
     * extra), so both backends see the same fields; equivalence is
-    * cross-checked in QastBackendsSpec.
+    * cross-checked in QastBackendsSpec. Above the cap the full relation
+    * must not live on the driver: the same query runs through `search`
+    * and only its result (matches, |groups| rows, k rows) is collected.
     */
   def searchLocal(qastJson: String)
-      : Either[graft.qast.Ast.QastError, Seq[Evaluator.Row]] =
-    graft.qast.Ast.parse(qastJson).flatMap {
-      case ast if Compiler.isFrameVerb(ast) => snapshot match {
-        case Some(rows) => Evaluator.frame(rows, qastJson)
-        case None =>
-          // distributed frame verb, tiny result collected — a rollup
-          // output is |groups| rows and a top-k is k rows, never the
-          // relation
-          Compiler.compileFrame(ast).flatMap(
-            _.checked(searchWith(org.apache.spark.sql.functions.lit(true)))
-              .map(_.collect().toSeq.map(genericRowToMap)))
-      }
-      case _ => snapshot match {
+      : Either[Ast.QastError, Seq[Evaluator.Row]] =
+    Ast.parse(qastJson).flatMap { ast =>
+      snapshot match {
         case Some(rows) =>
-          Evaluator.fromJson(qastJson)
+          if (Compiler.isFrameVerb(ast)) Evaluator.frame(rows, qastJson)
+          else Evaluator.fromJson(qastJson)
             .map(pred => rows.filter(pred(_) == true))
         case None =>
-          // Above the cap the full relation must not live on the
-          // driver: run the SAME predicate through the Catalyst
-          // backend (the two backends are equivalence-tested in
-          // QastBackendsSpec) so the filter executes distributed and
-          // only MATCHES are collected.
-          Compiler.fromJson(qastJson).map(pred =>
-            searchWith(pred).collect().toSeq.map(searchRowToMap))
+          searchAst(ast).map(_.collect().toSeq.map(genericRowToMap))
       }
     }
 
-  /** Schema-generic Row → Map (rollup outputs vary by query, unlike
-    * the fixed search row shape). */
+  /** Schema-generic Row → Map: search rows and rollup outputs alike. */
   private def genericRowToMap(r: org.apache.spark.sql.Row): Evaluator.Row =
     r.schema.fieldNames.zipWithIndex.map { case (n, i) =>
       n -> (r.get(i) match {
@@ -567,18 +227,7 @@ final class Catalog(spark: SparkSession, root: Path,
       })
     }.toMap
 
-  private def searchRowToMap(r: org.apache.spark.sql.Row): Evaluator.Row =
-    Map[String, Any](
-      "id" -> r.getAs[Long]("id"),
-      "file" -> r.getAs[String]("file"),
-      "description" -> r.getAs[String]("description"),
-      "source" -> r.getAs[String]("source"),
-      "topics" -> r.getAs[Seq[String]]("topics").toList,
-      "type" -> r.getAs[String]("type"),
-      "parent" -> (if (r.isNullAt(r.fieldIndex("parent"))) null
-                   else r.getAs[Long]("parent")),
-      "extra" -> r.getAs[Map[String, String]]("extra"))
-
+  @volatile private var snapshotCache: Option[Seq[Evaluator.Row]] = None
   @volatile private var snapshotDisabled = false
 
   private def snapshot: Option[Seq[Evaluator.Row]] =
@@ -587,13 +236,12 @@ final class Catalog(spark: SparkSession, root: Path,
       snapshotCache.orElse {
         // dataset rows bound the joined search relation's size (the
         // join is on file=cid, one content row per key)
-        if (logRows(datasetDir) + pendingDatasets.size > localIndexMaxRows) {
+        if (datasets.rows > localIndexMaxRows) {
           snapshotDisabled = true
           None
         } else {
-          val rows =
-            searchWith(lit(true)).collect().toSeq.map(searchRowToMap)
-          snapshotCache = Some(rows)
+          snapshotCache =
+            Some(searchWith(lit(true)).collect().toSeq.map(genericRowToMap))
           snapshotCache
         }
       }
@@ -607,11 +255,9 @@ final class Catalog(spark: SparkSession, root: Path,
       map_filter(coalesce(col("extra"), map()),
         (k, _) => !map_contains_key(coalesce(col("content_extra"), map()), k)),
       coalesce(col("content_extra"), map()))
-    // no broadcast hint: at metadata scale both sides fall under the
-    // auto-broadcast threshold (same plan as before); above the
-    // localIndexMaxRows cap a forced broadcast of either side would be
-    // the driver OOM this cap exists to prevent — Catalyst/AQE pick
-    // from actual sizes instead
+    // no broadcast hint: at metadata scale both sides auto-broadcast;
+    // above the cap a forced broadcast would be the driver OOM the cap
+    // exists to prevent — Catalyst/AQE pick from actual sizes instead
     d.join(c, col("file") === col("cid"))
       .withColumn("merged_extra", mergedExtra)
       .filter(pred)
@@ -621,12 +267,179 @@ final class Catalog(spark: SparkSession, root: Path,
   }
 }
 
+/** One append-only metadata relation keyed by `keyCol`: parquet log
+  * `root/<name>/` plus WAL `root/<name>.wal`.
+  *
+  * Registration is the hot path (reference: 357 req/s of Postgres
+  * INSERTs). A one-row Spark parquet append per mutation costs a full
+  * job (~70 ms), so a mutation appends one fsync'd JSON line to the WAL
+  * — durable per request, like the reference's per-request INSERT
+  * commit — and updates the driver index; the view unions parquet with
+  * the pending rows, and `compact` moves them to parquet with one Spark
+  * job per batch. Every mutation takes `lock` (the owning catalog);
+  * lookups below the cap are lock-free map reads.
+  */
+private final class MetaLog[K, R <: Product : TypeTag : ClassTag](
+    spark: SparkSession, lock: AnyRef, root: Path, name: String,
+    keyCol: String, keyOf: R => K, seqOf: R => Long, cap: Long) {
+  private implicit val enc: Encoder[R] = Encoders.product[R]
+  private val dir = root.resolve(name)
+  private val wal = root.resolve(name + ".wal")
+  Files.createDirectories(dir)
+
+  /** Latest pending (not yet compacted) row per key, insertion-ordered. */
+  private val pending = scala.collection.mutable.LinkedHashMap.empty[K, R]
+
+  /** Driver index of the resolved view; None until the first lookup.
+    * ConcurrentHashMap because readers (lookups on the request pool)
+    * race writers (`append` under the lock) — a plain mutable.HashMap
+    * can corrupt during resize; the volatile only publishes the Option.
+    * Once the log crosses the cap it never shrinks (append-only), so
+    * the disabled decision is memoized — over-cap lookups pay one
+    * filter job, not an extra count.
+    */
+  @volatile private var index: Option[ConcurrentHashMap[K, R]] = None
+  @volatile private var indexDisabled = false
+
+  /** The resolved view, cached in memory (metadata is small relative to
+    * content by design — the analog of the reference keeping it in
+    * pooled PostgreSQL, its single biggest measured win,
+    * `eval.tex:85-107`) and dropped on every append and compaction.
+    */
+  @volatile private var cache: Option[DataFrame] = None
+
+  // recovery: reload pending rows; drop a torn tail
+  if (Files.exists(wal)) {
+    val bytes = Files.readAllBytes(wal)
+    val end = bytes.lastIndexOf('\n'.toByte) + 1
+    if (end < bytes.length) {
+      val ch = FileChannel.open(wal, StandardOpenOption.WRITE)
+      try { ch.truncate(end); ch.force(true) } finally ch.close()
+    }
+    val cls = classTag[R].runtimeClass.asInstanceOf[Class[R]]
+    new String(bytes, 0, end, UTF_8).split('\n').filter(_.nonEmpty)
+      .map(MetaLog.codec.readValue(_, cls))
+      .foreach(r => pending.put(keyOf(r), r))
+  }
+
+  def pendingRows: Int = pending.size
+
+  private def hasData: Boolean =
+    Files.exists(dir.resolve("_SUCCESS")) || {
+      val s = Files.list(dir)
+      try s.anyMatch(p => p.toString.endsWith(".parquet"))
+      finally s.close()
+    }
+
+  private def parquet: DataFrame =
+    if (!hasData) spark.emptyDataset[R].toDF()
+    else spark.read.parquet(dir.toString)
+
+  /** Logged rows, superseded versions included. Parquet row counts are
+    * footer-metadata reads — no data scan.
+    */
+  def rows: Long = lock.synchronized(pending.size.toLong) +
+    (if (hasData) parquet.count() else 0L)
+
+  /** Highest `seq` over every durable row. */
+  def maxSeq: Long = lock.synchronized {
+    val compacted = parquet.agg(coalesce(max(col("seq")), lit(0L))).head()
+    pending.valuesIterator.map(seqOf).foldLeft(compacted.getLong(0))(math.max)
+  }
+
+  def append(row: R): Unit = lock.synchronized {
+    Files.writeString(wal, MetaLog.codec.writeValueAsString(row) + "\n",
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND,
+      StandardOpenOption.SYNC)
+    pending.put(keyOf(row), row)
+    index.foreach { m =>
+      m.put(keyOf(row), row)
+      // the cap must hold across the process LIFETIME, not just the
+      // first build: a long-running server that ingests past it drops
+      // the driver map and falls through to the distributed paths
+      if (m.size > cap) {
+        indexDisabled = true
+        index = None
+      }
+    }
+    dropView()
+  }
+
+  def compact(): Unit = lock.synchronized {
+    if (pending.nonEmpty) {
+      spark.createDataset(pending.values.toSeq).write.mode("append")
+        .parquet(dir.toString)
+      pending.clear()
+      Files.deleteIfExists(wal)
+      dropView() // rebuild from parquet on next read
+    }
+  }
+
+  private def dropView(): Unit = {
+    cache.foreach(_.unpersist())
+    cache = None
+  }
+
+  /** Last writer wins: the highest-`seq` row per key of the log. */
+  def view: DataFrame = cache.getOrElse(lock.synchronized {
+    cache.getOrElse {
+      val log =
+        parquet.unionByName(spark.createDataset(pending.values.toSeq).toDF())
+      val cols = log.columns.toSeq
+      val df = log.groupBy(keyCol)
+        .agg(max_by(struct(cols.filter(_ != keyCol).map(col): _*),
+          col("seq")).as("r"))
+        .select(cols.map(c =>
+          if (c == keyCol) col(c) else col("r." + c).as(c)): _*)
+        .cache()
+      cache = Some(df)
+      df
+    }
+  })
+
+  /** The index, built on first use; None above the cap. */
+  private def driverIndex: Option[ConcurrentHashMap[K, R]] =
+    if (indexDisabled) None
+    else index.orElse(lock.synchronized {
+      index.orElse {
+        if (rows > cap) {
+          indexDisabled = true
+          None
+        } else {
+          val m = new ConcurrentHashMap[K, R]
+          view.as[R].collect().foreach(r => m.put(keyOf(r), r))
+          index = Some(m)
+          index
+        }
+      }
+    })
+
+  def lookup(k: K): Option[R] = driverIndex match {
+    case Some(m) => Option(m.get(k)) // pure map access on uploads
+    case None => // above the cap: pending rows first (no job for the
+      // WAL hot path), then a pushed-down point filter over the view
+      lock.synchronized(pending.get(k)).orElse(
+        view.filter(col(keyCol) === k).as[R].collect().headOption)
+  }
+}
+
+private object MetaLog {
+  /** The WAL line codec: one JSON object per row, fields in constructor
+    * order, `null` for a null `type` or an empty `parent`.
+    */
+  val codec: JsonMapper =
+    JsonMapper.builder().addModule(DefaultScalaModule).build()
+}
+
 object Catalog {
   /** Append-log row shapes (top-level so Spark can derive encoders). */
   case class ContentRow(cid: String, `type`: String,
       extra: Map[String, String], seq: Long)
+  /** `contentAs`: without it the WAL codec reads a parent back as a
+    * boxed Integer inside the Option. */
   case class DatasetRow(id: Long, file: String, description: String,
       source: String, topics: Seq[String], extra: Map[String, String],
+      @JsonDeserialize(contentAs = classOf[java.lang.Long])
       parent: Option[Long], seq: Long)
 }
 

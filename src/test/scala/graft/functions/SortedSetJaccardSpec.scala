@@ -78,6 +78,19 @@ class SortedSetJaccardSpec extends SparkSpec {
     assert(df.select(sortedSetJaccard(col("a"), col("b"))).head.isNullAt(0))
   }
 
+  test("arrays that may hold nulls fail analysis with the type message") {
+    import spark.implicits._
+    val df = Seq((Seq[java.lang.Long](1L, null), Seq[java.lang.Long](1L)))
+      .toDF("a", "b")
+    assert(df.schema("a").dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.LongType, containsNull = true))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(sortedSetJaccard(col("a"), col("b"))).schema)
+    assert(e.getMessage.contains(
+      "sorted_set_jaccard expects array<bigint> without nulls"), e.getMessage)
+  }
+
   test("prefix-variant pairs: expression result equals the committed form") {
     // end-to-end shape: the exact frame ngramJaccardPrefix verifies —
     // sorted xxhash64 shingle sets of real documents

@@ -26,7 +26,7 @@ class CompilerSpec extends SparkSpec {
   test("group verb: rollup over a frame; malformed shapes rejected") {
     val df = Seq(("a", 1L, 10.0), ("a", 2L, 30.0), ("b", 3L, 20.0))
       .toDF("k", "id", "v")
-    val got = Compiler.groupFromJson(
+    val got = Compiler.frameFromJson(
       """["group", true, [[".", ["$"], "k"]],
           ["count"], ["sum", [".", ["$"], "id"]],
           ["avg", [".", ["$"], "v"]]]""")
@@ -37,12 +37,12 @@ class CompilerSpec extends SparkSpec {
     // arity is parse-time, like every reference operator
     assert(Ast.parse("""["group", true, [[".", ["$"], "a"]]]""").isLeft)
     // empty key list, unknown aggregate, bare agg array: malformed
-    assert(Compiler.groupFromJson(
+    assert(Compiler.frameFromJson(
       """["group", true, [], ["count"]]""").isLeft)
-    assert(Compiler.groupFromJson(
+    assert(Compiler.frameFromJson(
       """["group", true, [[".", ["$"], "a"]],
           ["median", [".", ["$"], "b"]]]""").isLeft)
-    assert(Compiler.groupFromJson(
+    assert(Compiler.frameFromJson(
       """["group", true, [[".", ["$"], "a"]], "count"]""").isLeft)
     // BELOW the root, "group" is NOT an operator: a data array that
     // happens to start with the word keeps parsing as a literal, so
@@ -59,10 +59,10 @@ class CompilerSpec extends SparkSpec {
     // duplicate OUTPUT names are rejected at compile (not a 500 at
     // execution): same last segment twice, and a key colliding with
     // count's "n"
-    assert(Compiler.groupFromJson(
+    assert(Compiler.frameFromJson(
       """["group", true, [[".", ["$"], "a", "x"], [".", ["$"], "b", "x"]],
           ["count"]]""").isLeft)
-    assert(Compiler.groupFromJson(
+    assert(Compiler.frameFromJson(
       """["group", true, [[".", ["$"], "n"]], ["count"]]""").isLeft)
   }
 

@@ -16,8 +16,9 @@ Usage: python3 tools/http_bench.py [port] [seconds] [threads] [procs]
 
 Each worker keeps one persistent HTTP/1.1 connection (like wrk).
 Workers are spread over `procs` forked processes so the client GIL
-doesn't become the bottleneck. Prints one JSON line per surface and a
-summary line.
+doesn't become the bottleneck. Prints one JSON line per surface (req/s,
+plus p50_ms/p99_ms over every request's round-trip time, failed ones
+included) and a summary line.
 """
 import http.client
 import json
@@ -53,12 +54,14 @@ def setup():
     return cid
 
 
-def worker(fn, stop, counts, errors, idx):
+def worker(fn, stop, counts, errors, lat_ms, idx):
     c = http.client.HTTPConnection("127.0.0.1", PORT)
     n = 0
     try:
         while not stop.is_set():
+            t0 = time.perf_counter()
             ok = fn(c)
+            lat_ms.append((time.perf_counter() - t0) * 1e3)
             if ok:
                 n += 1
             else:
@@ -72,7 +75,9 @@ def proc_main(fn, q):
     stop = threading.Event()
     counts = [0] * THREADS
     errors = [0] * THREADS
-    ts = [threading.Thread(target=worker, args=(fn, stop, counts, errors, i))
+    lat_ms = []  # list.append is atomic under the GIL
+    ts = [threading.Thread(target=worker,
+                           args=(fn, stop, counts, errors, lat_ms, i))
           for i in range(THREADS)]
     for t in ts:
         t.start()
@@ -80,7 +85,15 @@ def proc_main(fn, q):
     stop.set()
     for t in ts:
         t.join()
-    q.put((sum(counts), sum(errors)))
+    q.put((sum(counts), sum(errors), lat_ms))
+
+
+def percentile(sorted_ms, p):
+    """Nearest-rank percentile of an ascending list (None when empty)."""
+    if not sorted_ms:
+        return None
+    k = max(0, -(-len(sorted_ms) * p // 100) - 1)
+    return round(sorted_ms[int(k)], 2)
 
 
 def run(name, fn):
@@ -93,9 +106,11 @@ def run(name, fn):
     for p in ps:
         p.join()
     dt = time.monotonic() - t0
-    total = sum(t for t, _ in totals)
-    errs = sum(e for _, e in totals)
+    total = sum(t for t, _, _ in totals)
+    errs = sum(e for _, e, _ in totals)
+    lat = sorted(x for _, _, ls in totals for x in ls)
     line = {"surface": name, "req_s": round(total / dt, 1),
+            "p50_ms": percentile(lat, 50), "p99_ms": percentile(lat, 99),
             "requests": total, "errors": errs, "secs": round(dt, 2),
             "conns": THREADS * PROCS}
     print(json.dumps(line), flush=True)
