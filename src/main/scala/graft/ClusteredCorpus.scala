@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * cluster MEAN makes a good one — exactly the gap Lloyd's training
   * closes over the sampled-member seed quantizer
   * ([[operators.KMeans.trainedCentroids]] vs
-  * [[operators.Similarity.centroids]]).
+  * [[operators.Ann.centroids]]).
   *
   * Everything is a pure function of (id, cluster): centers and noise
   * draw from per-key-seeded `java.util.Random`, so any engine, any

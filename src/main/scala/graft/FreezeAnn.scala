@@ -146,7 +146,7 @@ object FreezeAnn {
       |
       |  /** (subspace, code, cvec_sub) of the frozen IVF-OPQ residual
       |    * codebook — Lloyd's-trained on the frozen-model rotated
-      |    * residuals R·(v − c(v)) (Opq.ivfOpqResidualCodebookTrained),
+      |    * residuals R·(v − c(v)) (Opq.ivfOpqResidualCodebookFrom),
       |    * the codebook the `ann_ivfopq_frozen_*` graded queries serve.
       |    */
       |  lazy val ivfOpqCodebook: Seq[(Long, Long, Array[Float])] =

@@ -59,7 +59,8 @@ object RecallReport {
     val direct: Map[String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame] = Map(
       "ann_pca_refined_topk" ->
-        ((s, d) => graft.operators.Pca.annPcaRefinedTopK(s, d)))
+        ((s, d) => graft.operators.Ann.search(s, d,
+          graft.operators.AnnSpec.pcaLiveRefined)))
 
     def audit(dir: String, corpus: String): Unit = {
       def pairs(name: String): Map[Long, Set[Long]] =

@@ -46,7 +46,8 @@ object SparkEntry {
     * Every adapted query still hash-matches its DuckDB oracle, which
     * encodes the same adaptation — the oracle pins the semantics.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     // --- relational pack (SURVEY.md §2.3 capabilities) ---
     "q1_agg" -> (Relational.q1Agg _),
     "q3_topk" -> (Relational.q3TopK _),
@@ -203,7 +204,7 @@ object SparkEntry {
     "pca_variance_2d" -> (graft.operators.Pca.variance2d _),
     "pca_project" -> (graft.operators.Pca.project _),
     "pca_variance" -> (graft.operators.Pca.varianceExplained _),
-    // The LIVE-basis PCA bottleneck search (Pca.annPcaRefinedTopK) is
+    // The LIVE-basis PCA bottleneck search (AnnSpec.pcaLiveRefined) is
     // RETIRED from the graded registry (r15): its serving twin
     // `ann_pca_frozen_refined_topk` hash-grades the identical
     // two-stage search end to end under the committed basis, and
@@ -417,14 +418,6 @@ object SparkEntry {
     // --- similarity search ---
     "embed_stats" -> (Similarity.embedStats _),
     "embed_stats_scale" -> (Similarity.embedStatsScale _),
-    "ann_brute_topk" -> (Similarity.bruteTopK _),
-    "ann_blocked_topk" -> (Similarity.bruteTopKBlocked _),
-    // fixed-radius near-neighbor: one corpus scan vs the broadcast
-    // query set; membership decided on the ROUNDED cosine
-    "ann_range_search" -> (Similarity.rangeSearch _),
-    // the broadcast-free radius form: block-id equi-join (queries
-    // replicated per corpus block) — bit-identical output
-    "ann_range_search_blocked" -> (Similarity.rangeSearchBlocked _),
     "ann_lsh_topk" -> (Similarity.lshTopK _),
     // md5-domain graded twin: ±1 sign-projection planes derived from
     // md5 parities (no RNG) make the bucket bits — not just the final
@@ -438,9 +431,6 @@ object SparkEntry {
     // lambda*rel - mu*max-sim-to-picked, selection (not just scores)
     // hash-oracled via unrolled rounds
     "ann_mmr_topk" -> (Similarity.mmrTopK _),
-    "ann_ivf_topk" -> (Similarity.ivfTopK _),
-    // predicate-constrained search: rank among qualifying vectors only
-    "ann_ivf_filtered_topk" -> (Similarity.ivfFilteredTopK _),
     // index health: cell population balance (the retrain trigger)
     "ivf_index_stats" -> (Similarity.ivfIndexStats _),
     "pq_codes" -> (Pq.codes _),
@@ -448,9 +438,6 @@ object SparkEntry {
     // Exploded (vec_id, d, code) scalar rows — array columns break the
     // driver's pandas row sort (r8: unhashable ndarray)
     "sq_codes" -> (Sq.codesRows _),
-    "ann_sq8_topk" -> (Sq.sqTopK _),
-    "ann_ivfsq_topk" -> (Sq.ivfSqTopK _),
-    "ann_pq_adc_topk" -> (Pq.adcTopK _),
     // rows-only: per-subspace Lloyd's output is data-dependent;
     // exact-pinned by PqSpec's sequential replay + Lloyd's
     // distortion-monotonicity pin (see Pq scaladoc)
@@ -459,39 +446,6 @@ object SparkEntry {
     // (merge while best pair covers >= StopFrac of word occurrences);
     // BpeSpec replays the loop + stop rule sequentially
     "bpe_train_converged" -> (Bpe.trainConverged _),
-    // rows-only: ADC over the trained codebooks; recall measured
-    // next to the seed form in PqSpec
-    "ann_pq_trained_topk" -> (Pq.adcTrainedTopK _),
-    "ann_ivfpq_topk" -> (Pq.ivfpqTopK _),
-    "ann_ivfpq_trained_topk" -> (Pq.ivfpqTrainedTopK _),
-    // residual IVF-PQ under the FROZEN trained coarse quantizer: the
-    // trained composition's serving pipeline, hash-oracled end to end
-    "ann_ivfpq_frozen_topk" -> (Pq.ivfpqFrozenTopK _),
-    // two-stage serving shape: ADC shortlist, exact cosine re-rank
-    "ann_ivfpq_refined_topk" -> (Pq.ivfpqRefinedTopK _),
-    // the FAISS OPQ,IVF,PQ composition under the frozen model: coarse
-    // assign on frozen centroids, rotate each residual by the frozen
-    // OPQ rotation, residual-PQ probe — the cell-pruned sibling of the
-    // exhaustive frozen OPQ scan (SCALE_r13: x30.7 at 10x; this one
-    // probes NProbe cells like ann_ivfpq_* at x1.56)
-    "ann_ivfopq_frozen_topk" ->
-      (graft.operators.Opq.ivfOpqFrozenTopK _),
-    // ... and its full production search: pruned rotated-residual ADC
-    // shortlist -> exact-cosine re-rank on original embeddings
-    "ann_ivfopq_frozen_refined_topk" ->
-      (graft.operators.Opq.ivfOpqFrozenRefinedTopK _),
-    // refined two-stage over PLAIN PQ: ADC shortlist -> exact cosine
-    // re-rank — recovers the 32x-compression recall floor for the
-    // uncelled quantizer too
-    "ann_pq_refined_topk" -> (Pq.pqRefinedTopK _),
-    // rows-only: ADC under the learned OPQ rotation (Ge et al., CVPR
-    // 2013) — trained output with no SQL form; OpqSpec pins rotation
-    // orthogonality, the monotone distortion trace vs plain trained
-    // PQ, and measures recall next to the unrotated ADC forms
-    "ann_opq_topk" -> (graft.operators.Opq.adcOpqTopK _),
-    // refined two-stage over OPQ: rotated-space ADC shortlist ->
-    // exact-cosine re-rank (rows-only: the rotation is trainer output)
-    "ann_opq_refined_topk" -> (graft.operators.Opq.adcOpqRefinedTopK _),
     // --- text analysis pack ---
     "text_langid" -> (TextAnalysis.langId _),
     // BM25 ranked retrieval over derived query terms (RAG lexical half)
@@ -640,12 +594,6 @@ object SparkEntry {
     // readable SQL form; exact-pinned by KMeansSpec's sequential
     // replay (see KMeans scaladoc)
     "kmeans_train" -> (KMeans.train _),
-    // rows-only: probes the trainer's data-dependent centroids;
-    // recall measured against bruteTopK in SimilaritySpec
-    "ann_ivf_trained_topk" -> (Similarity.ivfTrainedTopK _),
-    // the FROZEN trained quantizer (committed literal centroids):
-    // hash-grades the trained-serving path the live form can't
-    "ann_ivf_frozen_topk" -> (Similarity.ivfFrozenTopK _),
     // kmeans_train's per-cell readout under the frozen quantizer:
     // count + decimal-exact mean cosine, hash-oracled
     "kmeans_frozen_stats" -> (graft.operators.KMeans.frozenStats _),
@@ -665,17 +613,6 @@ object SparkEntry {
     // the scale-mode profile's sketch graded against ground truth:
     // exact stats + an nd_within_tol boolean the HLL must earn
     "profile_scale_cert" -> (graft.operators.Profile.profileScaleCert _),
-    // FROZEN OPQ (literal rotation + codebook): the rotate->encode->
-    // LUT->ADC pipeline under a shipped model, hash-oracled
-    "ann_opq_frozen_topk" -> (graft.operators.Opq.adcOpqFrozenTopK _),
-    // frozen OPQ + exact re-rank: the full compressed-shortlist ->
-    // refine production search, hash-oracled end to end
-    "ann_opq_frozen_refined_topk" ->
-      (graft.operators.Opq.adcOpqFrozenRefinedTopK _),
-    // PCA-bottleneck search under the frozen committed basis + exact
-    // re-rank: the ann_pca_refined serving twin, hash-oracled
-    "ann_pca_frozen_refined_topk" ->
-      (graft.operators.Pca.annPcaFrozenRefinedTopK _),
     "contamination_check" -> (TextAnalysis.contamination _),
     // --- PII scrubbing + mixture sampling (see Pii/Mix scaladoc) ---
     "pii_scrub" -> (Pii.scrub _),
@@ -748,7 +685,9 @@ object SparkEntry {
           // differently from parquet decimals on the driver side)
           sum(col("value").cast("decimal(12,2)")).cast("double")
             .as("total_value"))
-        .orderBy(col("user_id"))))
+        .orderBy(col("user_id")))) ++
+    // the ANN searches: one AnnSpec pipeline per name (see AnnSpec)
+    graft.operators.Ann.queries
 
   /** DuckDB replay of the frozen IVF-OPQ composition (one builder for
     * the ranked and refined forms — the pipeline through `scored` is
@@ -756,9 +695,9 @@ object SparkEntry {
     * join): frozen literal centroids assign cells, each residual is
     * rotated by the frozen literal matrix (same left-to-right fold
     * order as the Spark expression), the frozen TRAINED residual
-    * codebook quantizes, queries probe [[graft.operators.Opq.IvfOpqNProbe]]
+    * codebook quantizes, queries probe [[graft.operators.Ann.IvfOpqNProbe]]
     * cells, ADC sums 6-decimal-quantized subspace distances as exact
-    * DECIMAL. refined = the [[graft.operators.Opq.IvfOpqShortR]]-deep
+    * DECIMAL. refined = the [[graft.operators.Ann.IvfOpqShortR]]-deep
     * shortlist + exact-cosine re-rank tail on original embeddings.
     */
   private def ivfOpqFrozenSql(refined: Boolean): String = {
@@ -807,7 +746,7 @@ object SparkEntry {
          probes AS (SELECT vec_id AS query_id, cent_id AS cell FROM (
            SELECT vec_id, cent_id, row_number() OVER (PARTITION BY vec_id
              ORDER BY cs DESC, cent_id) AS r FROM sc WHERE vec_id % 100 = 0)
-           WHERE r <= ${graft.operators.Opq.IvfOpqNProbe}),
+           WHERE r <= ${graft.operators.Ann.IvfOpqNProbe}),
          qresid AS (SELECT p.query_id, p.cell,
              list_transform(rr.r, ri ->
                list_reduce(list_transform(list_zip(ri,
@@ -842,7 +781,7 @@ object SparkEntry {
          short AS (SELECT query_id, neighbor_id FROM (
            SELECT query_id, neighbor_id, row_number() OVER (
              PARTITION BY query_id ORDER BY adc_d2, neighbor_id) AS r
-           FROM scored) WHERE r <= ${graft.operators.Opq.IvfOpqShortR}),
+           FROM scored) WHERE r <= ${graft.operators.Ann.IvfOpqShortR}),
          rer AS (SELECT s.query_id, s.neighbor_id,
              list_reduce(list_transform(list_zip(q.embedding, v.embedding),
                x -> CAST(x[1] AS DOUBLE)*CAST(x[2] AS DOUBLE)),(p2,q2)->p2+q2)
@@ -1649,7 +1588,7 @@ object SparkEntry {
          SELECT doc_id, bucket, n_compared FROM adm WHERE admitted
          ORDER BY doc_id""",
     // ann_lsh_topk intentionally omitted: approximate recall contract,
-    // measured against bruteTopK in SimilaritySpec (driver rows-only).
+    // measured against ann_brute_topk in SimilaritySpec (rows-only).
     // Its md5-plane twin below hash-grades the same pipeline shape
     // end to end, bucket bits included.
     "ann_lsh_md5_topk" -> lshMd5Oracle,

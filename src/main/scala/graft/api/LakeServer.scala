@@ -14,7 +14,7 @@ import scala.util.Try
 import graft.SparkEntry
 import graft.engine.{ExtractError, Lake}
 import graft.operators.OperatorCaches
-import graft.store.DatasetMeta
+import graft.store.{ContentStore, DatasetMeta}
 
 /** HTTP adapter exposing the reference's 10-endpoint API over a `Lake`
   * (`/root/reference/doc/api.md`; handlers
@@ -27,6 +27,21 @@ import graft.store.DatasetMeta
   *   POST /cp             → {"cid"}            ("dest is not a directory")
   *   POST /dataset        → {"id"}             ({"missing-metadata":[...]})
   *   POST /update         → {"id"}             ("missing parent")
+  *
+  * Beyond the reference's strings, malformed bodies answer 400 too:
+  *
+  *   - `/cp`: "malformed query" when the body is not a JSON object
+  *     whose `src`, `dest` and `path` are strings; "src not found" for
+  *     a `src` the store does not hold; "invalid path" when `path`
+  *     holds a tab or a line break (a directory manifest stores one
+  *     "name\tcid" per line).
+  *   - `/dataset`, `/update`: "malformed query" for a body that is not
+  *     JSON; "topics must be an array" when `topics` is a string, a
+  *     number or null; `/update`: "malformed parent" when `parent` is
+  *     not an integer (a number or a numeric string).
+  *   - A `{cid}` that is not a CIDv0 (`..`, `.`, non-base58) reads as
+  *     absent: "not a directory" on `/dir`, "content not found" on
+  *     `/file`.
   *   POST /find           → [flat objects]     ("malformed query")
   *   GET  /dir/{cid}      → {name: cid}        ("not a directory")
   *   GET  /file/{cid}     → chunked bytes      ("content not found", 404)
@@ -114,59 +129,82 @@ final class LakeServer(lake: Lake, port: Int,
     }
   }
 
+  /** The request body as JSON, or None when it does not parse. */
+  private def readJson(ex: HttpExchange): Option[JsonNode] =
+    Try(mapper.readTree(ex.getRequestBody)).toOption.flatMap(Option(_))
+
   private def postCp(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(ex.getRequestBody)
-    val (src, dest, path) = (body.get("src").asText,
-      body.get("dest").asText, body.get("path").asText)
-    if (!lake.store.isDir(dest)) sendError(ex, "dest is not a directory")
-    else sendJson(ex, cidJson(lake.cp(src, dest, path)))
+    def text(body: JsonNode, key: String) =
+      Option(body.get(key)).filter(_.isTextual).map(_.asText)
+    readJson(ex).filter(_.isObject)
+      .map(b => (text(b, "src"), text(b, "dest"), text(b, "path"))) match {
+      case Some((Some(src), Some(dest), Some(path))) =>
+        if (!ContentStore.isEntryName(path)) sendError(ex, "invalid path")
+        else if (!lake.store.isDir(dest))
+          sendError(ex, "dest is not a directory")
+        else if (!lake.store.exists(src)) sendError(ex, "src not found")
+        else sendJson(ex, cidJson(lake.cp(src, dest, path)))
+      case _ => sendError(ex, "malformed query")
+    }
   }
+
+  /** `topics` as strings, or None when the node is not an array. */
+  private def topicsOf(node: JsonNode): Option[Seq[String]] =
+    if (node.isArray) Some(node.elements.asScala.map(_.asText).toSeq)
+    else None
 
   private val requiredMeta = Seq("file", "description", "source", "topics")
 
-  private def postDataset(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(ex.getRequestBody)
-    val missing = requiredMeta.filterNot(body.has)
-    if (missing.nonEmpty) {
-      val err = mapper.createObjectNode()
-      val obj = err.putObject("error")
-      val arr = obj.putArray("missing-metadata")
-      missing.foreach(arr.add)
-      send(ex, 400, "application/json", mapper.writeValueAsBytes(err))
-    } else {
-      val extras = body.properties.asScala
-        .filterNot(e => requiredMeta.contains(e.getKey))
-        .map(e => e.getKey -> mapper.writeValueAsString(e.getValue)).toMap
-      val id = lake.addDataset(DatasetMeta(
-        file = body.get("file").asText,
-        description = body.get("description").asText,
-        source = body.get("source").asText,
-        topics = body.get("topics").elements.asScala.map(_.asText).toSeq,
-        extra = extras))
-      sendJson(ex, s"""{"id":"$id"}""")
-    }
+  private def postDataset(ex: HttpExchange): Unit = readJson(ex) match {
+    case None => sendError(ex, "malformed query")
+    case Some(body) =>
+      val missing = requiredMeta.filterNot(body.has)
+      val topics = Option(body.get("topics")).flatMap(topicsOf)
+      if (missing.nonEmpty) {
+        val err = mapper.createObjectNode()
+        val obj = err.putObject("error")
+        val arr = obj.putArray("missing-metadata")
+        missing.foreach(arr.add)
+        send(ex, 400, "application/json", mapper.writeValueAsBytes(err))
+      } else if (topics.isEmpty) sendError(ex, "topics must be an array")
+      else {
+        val extras = body.properties.asScala
+          .filterNot(e => requiredMeta.contains(e.getKey))
+          .map(e => e.getKey -> mapper.writeValueAsString(e.getValue)).toMap
+        val id = lake.addDataset(DatasetMeta(
+          file = body.get("file").asText,
+          description = body.get("description").asText,
+          source = body.get("source").asText,
+          topics = topics.get,
+          extra = extras))
+        sendJson(ex, s"""{"id":"$id"}""")
+      }
   }
 
-  private def postUpdate(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(ex.getRequestBody)
-    if (!body.has("parent")) sendError(ex, "missing parent")
-    else {
-      val parent = body.get("parent").asText.toLong
-      val extras = body.properties.asScala
-        .filterNot(e => (requiredMeta :+ "parent").contains(e.getKey))
-        .map(e => e.getKey -> mapper.writeValueAsString(e.getValue)).toMap
-      val overrides = DatasetMeta.Partial(
-        file = Option(body.get("file")).map(_.asText),
-        description = Option(body.get("description")).map(_.asText),
-        source = Option(body.get("source")).map(_.asText),
-        topics = Option(body.get("topics"))
-          .map(_.elements.asScala.map(_.asText).toSeq),
-        extra = extras)
-      lake.updateDataset(parent, overrides) match {
-        case Some(id) => sendJson(ex, s"""{"id":"$id"}""")
-        case None => sendError(ex, "internal server error", 500)
+  private def postUpdate(ex: HttpExchange): Unit = readJson(ex) match {
+    case None => sendError(ex, "malformed query")
+    case Some(body) =>
+      val topics = Option(body.get("topics")).map(topicsOf)
+      Option(body.get("parent")).map(p => Try(p.asText.toLong).toOption) match {
+        case None => sendError(ex, "missing parent")
+        case Some(None) => sendError(ex, "malformed parent")
+        case Some(Some(_)) if topics.contains(None) =>
+          sendError(ex, "topics must be an array")
+        case Some(Some(parent)) =>
+          val extras = body.properties.asScala
+            .filterNot(e => (requiredMeta :+ "parent").contains(e.getKey))
+            .map(e => e.getKey -> mapper.writeValueAsString(e.getValue)).toMap
+          val overrides = DatasetMeta.Partial(
+            file = Option(body.get("file")).map(_.asText),
+            description = Option(body.get("description")).map(_.asText),
+            source = Option(body.get("source")).map(_.asText),
+            topics = topics.flatten,
+            extra = extras)
+          lake.updateDataset(parent, overrides) match {
+            case Some(id) => sendJson(ex, s"""{"id":"$id"}""")
+            case None => sendError(ex, "internal server error", 500)
+          }
       }
-    }
   }
 
   private def postFind(ex: HttpExchange): Unit = {

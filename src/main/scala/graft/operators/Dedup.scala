@@ -743,7 +743,7 @@ object Dedup {
     * pair join is an EQUI-join on the cell id, cell population stays
     * ~constant because the quantizer's centroid count is
     * scale-proportional (sublinear stride max(37, ⌊√N⌋) seeds — the same
-    * deterministic quantizer as [[Similarity.ivfTopK]], which is what
+    * deterministic quantizer as `ann_ivf_topk`, which is what
     * makes this oracle-able in SQL; swap in
     * [[KMeans.trainedCentroidsScale]] for a trained cluster map),
     * and the keep/drop rule needs no transitive closure — "smallest
@@ -763,7 +763,7 @@ object Dedup {
     // times: the projections differ enough to defeat ReuseExchange).
     // At 100 TB the materialized form is the IVF partition layout
     // itself (Layout.writeIvfPartitioned); in-query, a narrow cache.
-    val a = Similarity.cellAssignments(s, dir)
+    val a = Ann.cellAssignments(s, dir)
       .select(col("vec_id"), col("cell"), col("cv"),
         sqrt(call_function("vec_dot", col("cv"), col("cv"))).as("nrm"))
       .cache()

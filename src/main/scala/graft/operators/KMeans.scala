@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.Tables.load
 
 /** Lloyd's k-means over the embedding corpus — the TRAINING half of
-  * the IVF index whose probe half is [[Similarity.ivfTopK]]: the same
-  * deterministic seed set (Similarity.centroids — sublinear stride) is refined for
-  * [[Rounds]] iterations, after which [[Similarity.cellAssignments]]'s
+  * the IVF index whose probe half is `ann_ivf_topk` ([[AnnSpec]]): the same
+  * deterministic seed set ([[Ann.centroids]] — sublinear stride) is
+  * refined for [[Rounds]] iterations, after which [[Ann.cellAssignments]]'s
   * quantizer would use the trained centroids instead of raw seeds.
   *
   * Per round, entirely declarative (no driver action, unlike the
@@ -19,7 +19,7 @@ import graft.Tables.load
   *      argmax folded by `max_by` at the groupBy grain — map-side
   *      combine means the shuffle carries one (vec_id, cell) row per
   *      vector, never the N×C scored pairs (the
-  *      [[Similarity.cellAssignments]] shape);
+  *      [[Ann.cellAssignments]] shape);
   *   2. update: per-(cell, dim) means via posexplode + two-phase agg,
   *      re-assembled into centroid arrays by a dim-sorted collect.
   *
@@ -62,7 +62,7 @@ object KMeans {
         first(col("embedding")).as("v"))
 
   /** (cent_id, cvec) after [[Rounds]] Lloyd's iterations — the
-    * trained quantizer [[Similarity.ivfTrainedTopK]] probes with.
+    * trained quantizer `ann_ivf_trained_topk` probes with.
     * The result is COLLECTED into a local relation before returning:
     * the quantizer is ~corpus/37 tiny rows while its lineage is the
     * full 3-round corpus-wide training DAG, and every downstream
@@ -99,7 +99,7 @@ object KMeans {
     val rows = OperatorCaches.trainedMemo(s"kmeans|$dir|$orderFree") {
       val corpus = load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      var cents = Similarity.centroids(s, dir) // (cent_id, cvec) seeds
+      var cents = Ann.centroids(s, dir) // (cent_id, cvec) seeds
       for (_ <- 1 to Rounds) {
         val dims = assign(corpus, cents)
           .select(col("cell"), posexplode(col("v")).as(Seq("d", "x")))

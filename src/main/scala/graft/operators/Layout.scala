@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.load
+
 /** Data-layout operators — how 100 TB tables make their own scans
   * cheap. Two orthogonal techniques:
   *
@@ -34,7 +36,7 @@ object Layout {
     s.read.parquet(path)
 
   /** Write the embeddings corpus hive-partitioned by its IVF cell
-    * assignment (Similarity.cellAssignments): the coarse quantizer
+    * assignment ([[Ann.cellAssignments]]): the coarse quantizer
     * becomes the directory structure, so an ANN probe reads only its
     * NProbe cells' directories — partition pruning before any vector
     * I/O. This is `ann_ivf_topk`'s probe in on-disk form: at 100 TB
@@ -42,7 +44,7 @@ object Layout {
     * thereafter scans NProbe/C of the corpus.
     */
   def writeIvfPartitioned(s: SparkSession, dir: String, path: String): Unit =
-    writeIvfWith(Similarity.cellAssignments(s, dir), path)
+    writeIvfWith(Ann.cellAssignments(s, dir), path)
 
   /** The same layout under the TRAINED quantizer
     * ([[KMeans.trainedCentroids]] — Lloyd's-refined seeds): training →
@@ -55,7 +57,7 @@ object Layout {
     */
   def writeIvfTrainedPartitioned(s: SparkSession, dir: String,
       path: String): Unit =
-    writeIvfWith(Similarity.cellAssignmentsTrained(s, dir), path)
+    writeIvfWith(Ann.cellAssignmentsTrained(s, dir), path)
 
   private def writeIvfWith(assigned: DataFrame, path: String): Unit =
     assigned
@@ -67,7 +69,7 @@ object Layout {
   /** The FULL on-disk IVF-PQ index: per-vector residual PQ codes —
     * M bytes, not the 64-float vector — hive-partitioned by IVF cell,
     * with the shared residual codebook persisted as a `.codebook`
-    * sidecar. This is [[Pq.ivfpqTopK]]'s data half made durable: the
+    * sidecar. This is `ann_ivfpq_topk`'s data half made durable: the
     * coarse quantizer is the directory structure (planning-time
     * pruning to NProbe/C of the index) and the leaf files carry ONLY
     * codes, so the probe's I/O shrinks twice — files skipped by cell,
@@ -78,13 +80,12 @@ object Layout {
     */
   def writeIvfPqPartitioned(s: SparkSession, dir: String,
       path: String): Unit =
-    writeIvfPqWith(s, path, Similarity.centroids(s, dir), trained = false,
-      dir)
+    writeIvfPqWith(s, path, Ann.centroids(s, dir), trained = false, dir)
 
   /** The on-disk index under the fully TRAINED quantizer pair —
     * Lloyd's-refined coarse cells ([[KMeans.trainedCentroids]]) and
     * the residual codebook trained on the distribution the codes
-    * actually quantize — i.e. [[Pq.ivfpqTrainedTopK]] made durable.
+    * actually quantize — i.e. `ann_ivfpq_trained_topk` made durable.
     * This is the artifact form of "train once, probe forever": BOTH
     * training loops (coarse k-means and per-subspace residual
     * Lloyd's) run here, at write time, and their outputs persist as
@@ -101,8 +102,15 @@ object Layout {
 
   private def writeIvfPqWith(s: SparkSession, path: String,
       centsSrc: DataFrame, trained: Boolean, dir: String): Unit = {
-    val (codes, rcb) = Pq.residualCodeArraysWith(s, dir, centsSrc, trained)
-    codes.select(col("vec_id"), col("codes"), col("cell").as("part_cell"))
+    // the same quantizer, residuals and tie-breaks as the in-query
+    // search, so a probe over the persisted codes reproduces it
+    val resid = Ann.residuals(Ann.assign(load(s, dir, "embeddings"),
+      centsSrc), centsSrc, "vec_id", "cv", "rv").cache()
+    val rcb =
+      if (trained) Ann.trainedResidualCodebook(s, resid, s"pqrescb|$dir")
+      else Pq.seedCodebook(resid, "vec_id", "rv")
+    Pq.codeArrays(resid, rcb)
+      .select(col("vec_id"), col("codes"), col("cell").as("part_cell"))
       .repartition(col("part_cell"))
       .write.partitionBy("part_cell").mode("overwrite").parquet(path)
     rcb.write.mode("overwrite").parquet(s"$path.codebook")
@@ -151,14 +159,14 @@ object Layout {
     * probe is QUANTIZER-AGNOSTIC — everything quantizer-shaped comes
     * from the sidecars, nothing is re-derived or re-trained — so the
     * same code serves both layouts, bit-identical to the matching
-    * in-query operator ([[Pq.ivfpqTopK]] / [[Pq.ivfpqTrainedTopK]]),
+    * in-query search (`ann_ivfpq_topk` / `ann_ivfpq_trained_topk`),
     * which LayoutSpec pins row for row.
     */
   def ivfPqProbe(s: SparkSession, dir: String, path: String): DataFrame =
-    Pq.adcRank(probeCandidates(s, dir, path))
+    Ann.rank(Ann.byAdc(Pq.adcScores(probeCandidates(s, dir, path))))
 
   /** The on-disk serving form of the two-stage refined search
-    * ([[Pq.ivfpqRefinedTopK]]): the ADC shortlist comes from the
+    * (`ann_ivfpq_refined_topk`): the ADC shortlist comes from the
     * STORED codes (pruned, tombstone-filtered — this scan never
     * touches a raw vector) and only the shortlist's queries×ShortR
     * rows point-read the embeddings table for the exact re-rank.
@@ -168,13 +176,15 @@ object Layout {
     */
   def ivfPqProbeRefined(s: SparkSession, dir: String,
       path: String): DataFrame =
-    Pq.refineRank(s, dir, Pq.adcScoresOf(probeCandidates(s, dir, path)))
+    Ann.refine(s, dir, Ann.byAdc(Pq.adcScores(probeCandidates(s, dir, path))),
+      Ann.ShortR)
 
   private def probeCandidates(s: SparkSession, dir: String,
       path: String): DataFrame = {
     val rcb = s.read.parquet(s"$path.codebook")
     val cents = s.read.parquet(s"$path.centroids")
-    val luts = Pq.residualLutsWith(s, dir, rcb, cents)
+    val luts = Pq.luts(Ann.residuals(Ann.probes(s, dir, cents), cents,
+      "query_id", "qv", "qrv"), "query_id", "qrv", rcb, Seq("cell"))
     val probedCells = luts.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted
     val stored = s.read.parquet(path)
@@ -201,7 +211,7 @@ object Layout {
     scan.join(broadcast(luts), Seq("cell", "subspace", "code"))
   }
 
-  /** The IVF-SQ8 artifact — [[Sq.ivfSqTopK]] made durable, filling
+  /** The IVF-SQ8 artifact — `ann_ivfsq_topk` made durable, filling
     * the last cell of the compression × artifact matrix (IVF-Flat and
     * IVF-PQ already persist): coded rows (vec_id, codes — 64 bytes,
     * 4× under raw float32) hive-partitioned by coarse cell, with the
@@ -213,8 +223,8 @@ object Layout {
     * corpus access.
     */
   def writeIvfSq(s: SparkSession, dir: String, path: String): Unit = {
-    val cents = Similarity.centroids(s, dir)
-    val assigned = Similarity.cellAssignmentsWith(s, dir, cents)
+    val cents = Ann.centroids(s, dir)
+    val assigned = Ann.assign(load(s, dir, "embeddings"), cents)
       .select(col("vec_id"), col("cell").as("part_cell"))
     Sq.codes(s, dir).join(assigned, "vec_id")
       .select(col("vec_id"), col("codes"), col("part_cell"))
@@ -228,12 +238,12 @@ object Layout {
     * the `.centroids` sidecar, prune the scan to the probed cells'
     * directories at planning time, reconstruct midpoints from the
     * `.grid` sidecar, rank exactly — row-identical to the in-query
-    * [[Sq.ivfSqTopK]] (LayoutSpec pins it, plus the files-skipped
+    * `ann_ivfsq_topk` (LayoutSpec pins it, plus the files-skipped
     * pruning and the 4× byte shrinkage over the raw-vector layout).
     */
   def ivfSqProbe(s: SparkSession, dir: String, path: String): DataFrame = {
     val cents = s.read.parquet(s"$path.centroids")
-    val probes = Similarity.queryProbesWith(s, dir, cents)
+    val probes = Ann.probes(s, dir, cents)
     val cells = probes.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted
     val stored = s.read.parquet(path)
@@ -245,7 +255,7 @@ object Layout {
       .select(col("vec_id"), col("part_cell").cast("long").as("cell"))
       .join(dv, "vec_id")
       .select(col("vec_id"), col("cell"), col("dv").as("cv"))
-    Similarity.ivfRankOf(assigned, probes)
+    Ann.rank(Ann.byCos(Ann.probeJoin(assigned, probes)))
   }
 
   /** Mark vectors deleted — the third index-maintenance verb next to

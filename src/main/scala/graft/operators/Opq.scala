@@ -89,10 +89,8 @@ object Opq {
     * is bit-identical — the frozen-rotation oracles encode exactly
     * this fold order.
     */
-  private def rotate(v: Column, rows: Seq[Seq[Double]]): Column =
+  private[operators] def rotate(v: Column, rows: Seq[Seq[Double]]): Column =
     array(rows.map(r => graft.functions.vecDot(typedLit(r), v)): _*)
-
-  private val queryPred: Column = col("vec_id") % 100 === 0
 
   /** Train (or fetch the memoized) OPQ model for a corpus dir. */
   def model(s: SparkSession, dir: String): Model =
@@ -100,7 +98,7 @@ object Opq {
       import s.implicits._
       // training reads emb once per iteration (rotate) plus the gram
       // join — partitioned by vec_id so every pass runs wide and the
-      // gram join reuses the partitioning (see candidatesWith)
+      // gram join reuses the partitioning
       val emb = load(s, dir, "embeddings").repartition(col("vec_id"))
         .select(col("vec_id"), col("embedding")).cache()
       var rot: Seq[Seq[Double]] = identityRows
@@ -171,231 +169,22 @@ object Opq {
       Model(rot, cb, dist.toSeq)
     }
 
-  /** ADC top-k in the learned rotated space — [[Pq.adcTrainedTopK]]
-    * with the OPQ rotation folded into both the corpus codes and the
-    * query LUTs (the serving cost of the rotation is one narrow
-    * matrix-fold per vector; the ranking join/aggregation shapes are
-    * identical). Rows-only; recall and the distortion-vs-plain-PQ pin
-    * live in OpqSpec.
-    */
-  def adcOpqTopK(s: SparkSession, dir: String): DataFrame =
-    Pq.adcRank(opqCandidates(s, dir))
-  // NOTE: like Pq.adcTopK, every OPQ ADC form here is the EXHAUSTIVE
-  // compressed scan — cost Q×N by design, measured superlinear on the
-  // 10× replay (SCALE_r13.json: ×12-31 with queries ∝ corpus). The
-  // rotation composes with IVF pruning unchanged (FAISS OPQ+IVFPQ);
-  // the cell-pruned ivfpq family is the declared 100 TB path.
-
-  /** Two-stage refined OPQ search (`ann_opq_refined_topk`): ADC
-    * shortlist in the learned rotated space, exact-cosine re-rank of
-    * the [[Pq.ShortR]] shortlist against the ORIGINAL embeddings (the
-    * rotation is orthogonal, so cosine in either space is the same
-    * number — re-ranking on raw vectors avoids materializing rotated
-    * copies). Completes the refinement family: plain PQ, OPQ and
-    * IVF-PQ all share one `refineRank` tail. Rows-only (the rotation
-    * is trainer output); OpqSpec pins refined ≥ unrefined recall and
-    * RecallReport carries both corpora.
-    */
-  def adcOpqRefinedTopK(s: SparkSession, dir: String): DataFrame =
-    Pq.refineRank(s, dir, Pq.adcScoresOf(opqCandidates(s, dir)))
-
-  /** The (query LUT × corpus codes) candidate join in the rotated
-    * space — shared by the ranked and refined forms.
-    */
-  private def opqCandidates(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val m = model(s, dir)
-    candidatesWith(s, dir, m.rot,
-      m.codebook.toDF("subspace", "code", "cvec_sub"))
-  }
-
-  /** Graded `ann_opq_frozen_topk`: ADC search under the FROZEN OPQ
-    * model ([[FrozenAnn.rot]] + [[FrozenAnn.codebook]] — the
-    * committed literal output of [[model]] at sf0.01, rotation
-    * rounded to 7 decimals by the freeze contract). The serving
-    * pipeline is identical to [[adcOpqTopK]]; only the model source
-    * differs — which is the production shape (train once, ship the
-    * rotation+codebook, serve any corpus). Literal model ⇒ the whole
-    * rotate → encode → LUT → ADC-rank path hash-oracles in DuckDB;
-    * OpqSpec pins the frozen search against the live-trained one on
-    * the training corpus.
-    */
-  def adcOpqFrozenTopK(s: SparkSession, dir: String): DataFrame =
-    Pq.adcRank(candidatesWith(s, dir, FrozenAnn.rot,
-      FrozenAnn.codebookFrame(s)))
-
-  /** Graded `ann_opq_frozen_refined_topk`: the two-stage refined
-    * search under the frozen model — ADC shortlist in the frozen
-    * rotated space, exact-cosine re-rank on original embeddings
-    * through the same [[Pq.refineRank]] tail every compressed family
-    * shares. With the model literal, the FULL production search
-    * (compressed shortlist → exact refine) hash-oracles; the live
-    * `ann_opq_refined_topk` keeps its recall pins.
-    */
-  def adcOpqFrozenRefinedTopK(s: SparkSession, dir: String): DataFrame =
-    Pq.refineRank(s, dir, Pq.adcScoresOf(candidatesWith(s, dir,
-      FrozenAnn.rot, FrozenAnn.codebookFrame(s))))
-
-  /** Graded `ann_ivfopq_frozen_topk` — the FAISS `OPQ,IVF,PQ` serving
-    * composition under the frozen model: coarse-assign on the frozen
-    * trained IVF centroids ([[FrozenAnn.ivfCentroids]], exactly
-    * [[Pq.ivfpqFrozenTopK]]'s quantizer), ROTATE each residual by the
-    * frozen OPQ rotation ([[FrozenAnn.rot]]), then the residual-PQ
-    * probe over the frozen TRAINED residual codebook
-    * ([[FrozenAnn.ivfOpqCodebook]] — Lloyd's on the rotated-residual
-    * distribution, [[ivfOpqResidualCodebookFrom]]):
-    * nearest-sub-centroid codes, per-(query, probed-cell) LUTs,
-    * DECIMAL-exact ADC, WindowGroupLimit top-k. Rotating the residual
-    * (R·(v − c)) rather than the space keeps the coarse assignment
-    * identical to the graded IVF forms while the codebook quantizes
-    * the decorrelated distribution OPQ optimizes for.
-    *
-    * This is the sublinear sibling the exhaustive frozen OPQ scan
-    * lacked: SCALE_r13.json measured `ann_opq_frozen_topk` at ×30.7
-    * under 10× data (Q×N compressed scan, queries ∝ corpus ⇒
-    * quadratic); SCALE_r14.json measures THIS probe at ×2.62 with a
-    * byte-identical plan. The ADC join is pruned to the query's
-    * [[IvfOpqNProbe]] cells (8 — sized from the measured
-    * cell-membership ceiling, see the constant's doc), the scan reads
-    * codes (never raw vectors), and at 100 TB the cell id is the
-    * partition layout — the rotation costs one narrow 64×64 fold per
-    * vector, inside codegen, no join, no shuffle.
-    *
-    * Hash-oracled end to end: all three trained inputs (centroids,
-    * rotation, residual codebook) are committed literals, everything
-    * downstream is exact arithmetic, so DuckDB replays assign →
-    * rotate → encode → probe → rank bit-for-bit.
-    */
-  def ivfOpqFrozenTopK(s: SparkSession, dir: String): DataFrame =
-    Pq.adcRank(ivfOpqFrozenCandidates(s, dir))
-
-  /** Graded `ann_ivfopq_frozen_refined_topk`: the full production
-    * search — cell-pruned rotated-residual ADC shortlist
-    * ([[ivfOpqFrozenTopK]]'s candidates), exact-cosine re-rank of the
-    * [[IvfOpqShortR]]-deep (40) shortlist against the ORIGINAL
-    * embeddings through the shared [[Pq.refineRank]] tail. This earns
-    * the "compressed shortlist → exact refine" label at scale: stage 1
-    * is the pruned probe (not the exhaustive scan the frozen OPQ
-    * refined form measures at ×15–31), stage 2 touches IvfOpqShortR
-    * rows per query.
-    */
-  def ivfOpqFrozenRefinedTopK(s: SparkSession, dir: String): DataFrame =
-    Pq.refineRank(s, dir, Pq.adcScoresOf(ivfOpqFrozenCandidates(s, dir)),
-      IvfOpqShortR)
-
-  /** Probe depth of the frozen IVF-OPQ family. Deeper than
-    * [[Similarity.NProbe]] deliberately: this composition REPLACES the
-    * exhaustive frozen OPQ scan (SCALE_r13: ×30.7 at 10×), so its
-    * recall must clear that scan's — the NProbe=2 cell set caps recall
-    * at 0.40 on the training corpus (below the exhaustive scan's
-    * 0.44, measured cell-membership ceiling); 8 probes lift the
-    * ceiling to 0.88 and the refined search delivers 0.76 there —
-    * above both the exhaustive frozen scan (0.44) and its refined
-    * form (0.68), measured in OpqSpec. Still a constant: probe cost
-    * stays nprobe/C ≈ 8/√N of the corpus — sublinear at any scale.
-    */
-  val IvfOpqNProbe = 8
-
-  /** Shortlist depth of the refined frozen IVF-OPQ search — deeper
-    * than [[Pq.ShortR]] because the ADC ordering over residuals is
-    * noisier than the cell-membership ceiling (at 20 the exact
-    * re-rank recovered 0.40 of the 0.88 reachable; at 40 it recovers
-    * 0.76). Constant per query: stage 2 stays a broadcast of
-    * q × 40 rows against the embeddings.
-    */
-  val IvfOpqShortR = 40
-
-  /** Every vector's FROZEN-model rotated residual R·(v − c(v)):
-    * (vec_id, cell, rv) — the distribution the frozen IVF-OPQ
-    * codebook quantizes. Shared by the serving candidates and the
-    * codebook trainer ([[ivfOpqResidualCodebookTrained]]); cached for
-    * the same reason `ivfpqCandidates` caches its residual frame:
-    * codebook, corpus codes and LUTs all read it with projections
-    * different enough to defeat ReuseExchange.
-    */
-  private def frozenRotatedResiduals(s: SparkSession,
-      dir: String): DataFrame =
-    rotatedResidualsWith(s, dir, FrozenAnn.ivfCentroidFrame(s),
-      FrozenAnn.rot)
-
-  /** The rotated-residual frame under ANY (coarse quantizer,
-    * rotation) — the seam the freeze-time trainer shares with the
-    * frozen serving path.
-    */
-  private def rotatedResidualsWith(s: SparkSession, dir: String,
-      centsSrc: DataFrame, rot: Seq[Seq[Double]]): DataFrame = {
-    val cents = centsSrc.select(col("cent_id").as("cell"), col("cvec"))
-    Similarity.cellAssignmentsWith(s, dir, centsSrc)
-      .join(broadcast(cents), "cell")
-      .select(col("vec_id"), col("cell"),
-        rotate(zip_with(col("cv"), col("cvec"),
-          (x, y) => x.cast("double") - y.cast("double")), rot).as("rv"))
-      .cache()
-  }
-
-  /** Lloyd's-TRAINED codebook over the frozen-model rotated residuals
-    * — the real IVF-OPQ codebook (trained on the distribution it
-    * quantizes, Ge et al. §4: coarse quantize, rotate, then train PQ
-    * on the rotated residuals). The graded queries serve the frozen
-    * literal ([[FrozenAnn.ivfOpqCodebook]]), never this live trainer.
-    */
-  def ivfOpqResidualCodebookTrained(s: SparkSession,
-      dir: String): DataFrame =
-    ivfOpqResidualCodebookFrom(s, dir, FrozenAnn.ivfCentroidFrame(s),
-      FrozenAnn.rot, memoKey = s"ivfopqcb|$dir")
-
-  /** The trainer against EXPLICIT (centroids, rotation) inputs — what
-    * [[graft.FreezeAnn]] calls with the FRESHLY trained quantizer it
-    * is about to emit, so one regeneration after a trainer change
-    * cannot commit a codebook trained on the previous build's stale
-    * compiled literals (the members above would be one generation
-    * behind during the freeze run).
+  /** Lloyd's-TRAINED codebook over the rotated residuals R·(v − c(v))
+    * of the given (coarse quantizer, rotation) — the real IVF-OPQ
+    * codebook (Ge et al. §4: coarse quantize, rotate, then train PQ on
+    * the rotated residuals). [[graft.FreezeAnn]] calls it with the
+    * FRESHLY trained quantizer it is about to emit, so one regeneration
+    * after a trainer change cannot commit a codebook trained on the
+    * previous build's compiled literals; the graded queries serve the
+    * frozen result ([[FrozenAnn.ivfOpqCodebook]]).
     */
   def ivfOpqResidualCodebookFrom(s: SparkSession, dir: String,
       centsSrc: DataFrame, rot: Seq[Seq[Double]],
-      memoKey: String): DataFrame = {
-    val resid = rotatedResidualsWith(s, dir, centsSrc, rot)
-    Pq.trainedCodebookFrom(s,
-      Pq.slicedFrame(resid, "vec_id", "rv", "vec_id", "sub"),
-      Pq.seedCodebook(resid, "vec_id", "rv"),
-      orderFree = false, memoKey = memoKey)
-  }
-
-  /** The (query LUT × corpus codes) candidate join of the frozen
-    * IVF-OPQ composition — [[Pq]]'s residual `ivfpqCandidates` shape
-    * with the frozen rotation folded into both residual streams and
-    * the frozen TRAINED residual codebook
-    * ([[FrozenAnn.ivfOpqCodebook]]) in place of the seed rule.
-    */
-  private def ivfOpqFrozenCandidates(s: SparkSession,
-      dir: String): DataFrame = {
-    val centsSrc = FrozenAnn.ivfCentroidFrame(s)
-    val cents = centsSrc.select(col("cent_id").as("cell"), col("cvec"))
-    val rcb = FrozenAnn.ivfOpqCodebookFrame(s)
-    val resid = frozenRotatedResiduals(s, dir)
-    val codes = Pq.slicedFrame(resid, "vec_id", "rv", "vec_id", "sub",
-      carry = Seq("cell"))
-      .join(broadcast(rcb), Seq("subspace"))
-      .withColumn("d2", Pq.l2sq(col("sub"), col("cvec_sub")))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(first(col("cell")).as("cell"),
-        max_by(col("code"), struct(-col("d2"), -col("code"))).as("code"))
-    val luts = Pq.slicedFrame(
-      Similarity.queryProbesWith(s, dir, centsSrc, IvfOpqNProbe)
-        .join(broadcast(cents), "cell")
-        .select(col("query_id"), col("cell"),
-          rotate(zip_with(col("qv"), col("cvec"),
-            (x, y) => x.cast("double") - y.cast("double")),
-            FrozenAnn.rot).as("qrv")),
-      "query_id", "qrv", "query_id", "qsub", carry = Seq("cell"))
-      .join(rcb, Seq("subspace"))
-      .select(col("query_id"), col("cell"), col("subspace"), col("code"),
-        // micro-unit LUT distance — see Pq.adcScores (r17)
-        graft.functions.round6Micros(
-          Pq.l2sq(col("qsub"), col("cvec_sub"))).as("d2u"))
-    codes.toDF("neighbor_id", "subspace", "cell", "code")
-      .join(broadcast(luts), Seq("cell", "subspace", "code"))
-  }
+      memoKey: String): DataFrame =
+    Ann.trainedResidualCodebook(s,
+      Ann.residuals(Ann.assign(load(s, dir, "embeddings"), centsSrc),
+        centsSrc, "vec_id", "cv", "rv", Some(rotate(_, rot))).cache(),
+      memoKey)
 
   /** Graded `pq_frozen_stats`: the trained codebook's per-code READOUT
     * under the frozen model — every rotated vector's subvectors
@@ -413,23 +202,26 @@ object Opq {
     * aggregation — codes that win no member drop from the readout
     * (Lloyd's degeneracy surfaces as a missing row, not a null).
     */
-  def pqFrozenStats(s: SparkSession, dir: String): DataFrame = {
-    // repartition before rotation — see candidatesWith
-    val rv = load(s, dir, "embeddings").repartition(col("vec_id"))
-      .select(col("vec_id"), rotate(col("embedding"), FrozenAnn.rot).as("rv"))
-    Pq.slicedFrame(rv, "vec_id", "rv", "vec_id", "sub")
-      .join(broadcast(FrozenAnn.codebookFrame(s)), Seq("subspace"))
-      .withColumn("d2", Pq.l2sq(col("sub"), col("cvec_sub")))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(max_by(struct(col("code"), col("d2")),
-        struct(-col("d2"), -col("code"))).as("b"))
-      .select(col("subspace"), col("b.code").as("code"),
-        col("b.d2").as("d2"))
+  def pqFrozenStats(s: SparkSession, dir: String): DataFrame =
+    frozenNearest(s, dir, "d2")
       .groupBy(col("subspace"), col("code"))
       .agg(count(lit(1)).as("n_assigned"),
         round(sum(round(col("d2"), 6).cast("decimal(38,6)"))
           .cast("double") / count(lit(1)), 6).as("mean_d2"))
       .orderBy(col("subspace"), col("code"))
+
+  /** Every subvector of the frozen-rotated corpus at its nearest frozen
+    * sub-centroid, carrying `payload` — the assignment both frozen
+    * codebook readouts aggregate. The corpus is hashed on vec_id
+    * before the rotation, so the 64×64 fold and the K-way scoring run
+    * wide and the encode groupBy reuses the partitioning.
+    */
+  private def frozenNearest(s: SparkSession, dir: String,
+      payload: String): DataFrame = {
+    val rv = load(s, dir, "embeddings").repartition(col("vec_id"))
+      .select(col("vec_id"), rotate(col("embedding"), FrozenAnn.rot).as("rv"))
+    Pq.nearest(Pq.slicedFrame(rv, "vec_id", "rv", "vec_id", "sub"),
+      FrozenAnn.codebookFrame(s), payload)
   }
 
   /** Pinned per-code stationarity bound for [[pqConvergedCert]] —
@@ -461,17 +253,7 @@ object Opq {
     */
   def pqConvergedCert(s: SparkSession, dir: String): DataFrame = {
     val cb = FrozenAnn.codebookFrame(s)
-    // repartition before rotation — see candidatesWith
-    val rv = load(s, dir, "embeddings").repartition(col("vec_id"))
-      .select(col("vec_id"), rotate(col("embedding"), FrozenAnn.rot).as("rv"))
-    val assigned = Pq.slicedFrame(rv, "vec_id", "rv", "vec_id", "sub")
-      .join(broadcast(cb), Seq("subspace"))
-      .withColumn("d2", Pq.l2sq(col("sub"), col("cvec_sub")))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(max_by(struct(col("code"), col("sub")),
-        struct(-col("d2"), -col("code"))).as("b"))
-      .select(col("subspace"), col("b.code").as("code"),
-        col("b.sub").as("sub"))
+    val assigned = frozenNearest(s, dir, "sub")
     val means = assigned
       .select(col("subspace"), col("code"),
         posexplode(col("sub")).as(Seq("d", "x")))
@@ -489,34 +271,5 @@ object Opq {
           .cast("decimal(38,14)")).cast("double")), 6).as("residual"))
       .withColumn("stationary", col("residual") <= lit(PqStationarityBound))
       .orderBy(col("subspace"), col("code"))
-  }
-
-  /** [[opqCandidates]] under ANY (rotation, codebook) — the seam the
-    * frozen form shares with the live-trained one.
-    */
-  private def candidatesWith(s: SparkSession, dir: String,
-      rot: Seq[Seq[Double]], cb: DataFrame): DataFrame = {
-    // repartition(vec_id) before the rotation (r17, guide §2): the
-    // encode groupBy(vec_id, subspace) needs vec_id clustering anyway,
-    // so the exchange relocates below the 64×64 rotation fold and the
-    // K-way scoring instead of being added — and both parallelize
-    // past the single source split (the r17 profile showed this whole
-    // chain as one task).
-    val rv = load(s, dir, "embeddings").repartition(col("vec_id"))
-      .select(col("vec_id"), rotate(col("embedding"), rot).as("rv"))
-    val luts = Pq.slicedFrame(rv.filter(queryPred), "vec_id", "rv",
-      "query_id", "qsub")
-      .join(cb, Seq("subspace"))
-      .select(col("query_id"), col("subspace"), col("code"),
-        // micro-unit LUT distance — see Pq.adcScores (r17)
-        graft.functions.round6Micros(
-          Pq.l2sq(col("qsub"), col("cvec_sub"))).as("d2u"))
-    val codes = Pq.slicedFrame(rv, "vec_id", "rv", "vec_id", "sub")
-      .join(broadcast(cb), Seq("subspace"))
-      .withColumn("d2", Pq.l2sq(col("sub"), col("cvec_sub")))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(max_by(col("code"), struct(-col("d2"), -col("code"))).as("code"))
-      .toDF("neighbor_id", "subspace", "code")
-    codes.join(broadcast(luts), Seq("subspace", "code"))
   }
 }

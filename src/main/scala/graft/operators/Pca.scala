@@ -180,14 +180,8 @@ object Pca {
     * components — one codegen dot per component against plan-literal
     * vectors, no join, no shuffle.
     */
-  def project(s: SparkSession, dir: String): DataFrame = {
-    val comps = trained(s, dir)._2
-    val e = load(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val pcs = (0 until K).map(c =>
-      round(graft.functions.vecDot(col("v"), lit(comps(c))), 6).as(s"pc$c"))
-    e.select(col("vec_id") +: pcs: _*).orderBy(col("vec_id"))
-  }
+  def project(s: SparkSession, dir: String): DataFrame =
+    projectWith(s, dir, trained(s, dir)._2.toSeq)
 
   /** Graded `pca_frozen_project`: [[project]] under the FROZEN basis
     * ([[graft.operators.FrozenAnn.pcaComponents]] — the committed
@@ -200,8 +194,11 @@ object Pca {
     * identical to the frozen quantizers: a dimensionality-reduction
     * model is fit once and shipped; corpus growth does not refit it.
     */
-  def frozenProject(s: SparkSession, dir: String): DataFrame = {
-    val comps = graft.operators.FrozenAnn.pcaComponents
+  def frozenProject(s: SparkSession, dir: String): DataFrame =
+    projectWith(s, dir, graft.operators.FrozenAnn.pcaComponents)
+
+  private def projectWith(s: SparkSession, dir: String,
+      comps: Seq[Array[Double]]): DataFrame = {
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val pcs = (0 until K).map(c =>
@@ -209,74 +206,16 @@ object Pca {
     e.select(col("vec_id") +: pcs: _*).orderBy(col("vec_id"))
   }
 
-  /** ANN through the PCA bottleneck under the LIVE-trained basis
-    * (retired from the graded registry in r15 — the serving twin
-    * `ann_pca_frozen_refined_topk` hash-grades this exact two-stage
-    * search under the committed basis, and PcaSpec pins this form's
-    * recall against it on the training corpus; RecallReport still
-    * measures both): stage 1 scores queries
-    * against the corpus in the [[K]]-dim PCA space (an 8×64-byte
-    * projection is what a 100 TB scan reads — 8× the IO reduction of
-    * raw vectors, FAISS's PCAMatrix,Flat recipe), stage 2 re-ranks the
-    * shortlist by exact cosine over original vectors through the SAME
-    * [[Pq.refineRank]] tail every compressed family shares (ADC's
-    * ascending-distance contract is met by negating the compressed
-    * cosine). PcaSpec pins refined ≥ unrefined dominance cannot apply
-    * here (there is no unrefined sibling); RecallReport carries the
-    * measured recall next to the PQ/OPQ families on both corpora.
+  /** `v` onto the top-[[K]] rows of `comps`, as one array column — the
+    * PCA transform of [[AnnSpec]] (`ann_pca_frozen_refined_topk` and
+    * its live-basis twin): stage 1 scores in the K-dim space (an
+    * 8×64-byte projection is what a 100 TB scan reads — FAISS's
+    * PCAMatrix,Flat recipe), stage 2 re-ranks exactly.
     */
-  def annPcaRefinedTopK(s: SparkSession, dir: String): DataFrame = {
-    val comps = trained(s, dir)._2.take(K)
-    val e = load(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val proj = e.select(col("vec_id"),
-      array((0 until K).map(c =>
-        graft.functions.vecDot(col("v"), lit(comps(c)))): _*).as("pv"))
-    val q = proj.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("pv").as("qv"))
-    val c = proj.select(col("vec_id").as("neighbor_id"), col("pv").as("cv"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (-(graft.functions.vecDot(col("qv"), col("cv"))
-          / sqrt(graft.functions.vecDot(col("qv"), col("qv")))
-          / sqrt(graft.functions.vecDot(col("cv"), col("cv")))))
-          .as("adc_d2"))
-    Pq.refineRank(s, dir, scored)
-  }
-
-  /** Graded `ann_pca_frozen_refined_topk`: [[annPcaRefinedTopK]]
-    * under the FROZEN committed basis ([[FrozenAnn.pcaComponents]])
-    * instead of the live trainer's — the serving twin that retires
-    * the live form from rows-only standing. Both stages are exact
-    * under literals: stage 1's PCA-space cosine folds the same
-    * committed doubles in the same order in both engines, stage 2's
-    * re-rank is the shared [[Pq.refineRank]] exact-cosine tail — so
-    * the whole two-stage search replays in DuckDB and hash-grades
-    * end to end. PcaSpec pins its recall against the live form's.
-    *
-    * Scale shape: identical to the live form — the corpus is read
-    * once as 8-double projections (8× the IO reduction of raw
-    * vectors), queries broadcast, stage 2 touches ShortR rows per
-    * query, never the corpus.
-    */
-  def annPcaFrozenRefinedTopK(s: SparkSession, dir: String): DataFrame = {
-    val comps = graft.operators.FrozenAnn.pcaComponents.take(K)
-    val e = load(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val proj = e.select(col("vec_id"),
-      array((0 until K).map(c =>
-        graft.functions.vecDot(col("v"), lit(comps(c)))): _*).as("pv"))
-    val q = proj.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("pv").as("qv"))
-    val c = proj.select(col("vec_id").as("neighbor_id"), col("pv").as("cv"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (-(graft.functions.vecDot(col("qv"), col("cv"))
-          / sqrt(graft.functions.vecDot(col("qv"), col("qv")))
-          / sqrt(graft.functions.vecDot(col("cv"), col("cv")))))
-          .as("adc_d2"))
-    Pq.refineRank(s, dir, scored)
-  }
+  private[operators] def projectOnto(v: Column,
+      comps: Seq[Array[Double]]): Column =
+    array((0 until K).map(c =>
+      graft.functions.vecDot(v.cast("array<double>"), lit(comps(c)))): _*)
 
   /** Graded `pca_frozen_variance`: the SPECTRUM readout of the frozen
     * committed basis — per component, the corpus mean and variance of

@@ -8,7 +8,7 @@ import graft.Tables.load
 
 /** Product quantization (Jégou/Douze/Schmid, TPAMI 2011) — the
   * compression half of a production IVF-PQ vector index, complementing
-  * the IVF cell-probing half ([[Similarity.ivfTopK]]): each 64-dim
+  * the IVF cell-probing half (`ann_ivf_topk`, [[AnnSpec]]): each 64-dim
   * vector splits into [[M]] 8-dim subvectors, each subvector is
   * replaced by the id of its nearest sub-centroid from a [[K]]-entry
   * per-subspace codebook, and the whole vector compresses to M codes —
@@ -20,7 +20,7 @@ import graft.Tables.load
   *
   * The codebook here is DETERMINISTIC (the 16 smallest-id vectors with
   * vec_id % 29 == 3, sliced per subspace) — the same seed-quantizer
-  * trade as [[Similarity.centroids]]: a k-means-trained codebook drops
+  * trade as [[Ann.centroids]]: a k-means-trained codebook drops
   * in via [[KMeans]] exactly as it does for IVF, but the seed form
   * makes `pq_codes` expressible in oracle SQL, so the ENCODING — the
   * part with a right answer — is hash-verified, while ADC ranking
@@ -93,7 +93,7 @@ object Pq {
     * (subspace, code, cvec_sub) — the K smallest-id vectors with
     * id % 29 == 3, code = rank − 1, each sliced into M subvectors.
     * M·K rows total; every consumer broadcasts it. [[codebooks]]
-    * seeds from raw embeddings, [[ivfpqTopK]] from cell residuals —
+    * seeds from raw embeddings, `ann_ivfpq_topk` from cell residuals —
     * the same rule, one implementation.
     */
   private[operators] def seedCodebook(src: DataFrame, idCol: String,
@@ -118,7 +118,7 @@ object Pq {
 
   /** k-means-TRAINED per-subspace codebooks — the production form of
     * [[codebooks]], exactly the coarse-quantizer relationship
-    * [[KMeans.trainedCentroids]] has to [[Similarity.centroids]]: the
+    * [[KMeans.trainedCentroids]] has to [[Ann.centroids]]: the
     * seed codebook refines by [[Rounds]] rounds of per-subspace
     * Lloyd's (assign every corpus subvector to its nearest
     * sub-centroid by squared L2, ties to the smallest code; recenter
@@ -157,7 +157,7 @@ object Pq {
 
   /** The Lloyd's loop over ANY subvector frame (`vec_id`, `subspace`,
     * `sub`) and seed codebook — shared by the raw-embedding training
-    * above and [[ivfpqTrainedTopK]]'s residual-codebook training
+    * above and the residual codebooks ([[Ann.trainedResidualCodebook]])
     * (same rounds, same tie-breaks, same two-phase recenters).
     * `memoKey` names the (dir, distribution, mode) this codebook is a
     * deterministic function of: the collected M·K-row result is
@@ -205,16 +205,41 @@ object Pq {
     * per vector, all-integer output.
     */
   def codes(s: SparkSession, dir: String): DataFrame =
-    codesWith(s, dir, codebooks(s, dir))
+    encode(load(s, dir, "embeddings").repartition(col("vec_id")),
+      "embedding", codebooks(s, dir))
       .orderBy(col("vec_id"), col("subspace"))
 
-  private def codesWith(s: SparkSession, dir: String,
-      cb: DataFrame): DataFrame =
-    subvectors(s, dir).join(broadcast(cb), Seq("subspace"))
+  /** The PQ coder: every (vec_id, `vecCol`, carry…) row's subvectors
+    * coded against `cb` — (vec_id, subspace, carry…, code), nearest
+    * sub-centroid by squared L2, ties to the smallest code. Corpus ×
+    * broadcast(M·K codebook rows), the argmin folded by `max_by` at the
+    * (vector, subspace) grain, so the shuffle carries M rows per
+    * vector, never the M×K scored pairs.
+    */
+  private[operators] def encode(vecs: DataFrame, vecCol: String,
+      cb: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+    val aggs = carry.map(c => first(col(c)).as(c)) :+
+      max_by(col("code"), struct(-col("d2"), -col("code"))).as("code")
+    slicedFrame(vecs, "vec_id", vecCol, "vec_id", "sub", carry)
+      .join(broadcast(cb), Seq("subspace"))
       .withColumn("d2", l2sq(col("sub"), col("cvec_sub")))
       .groupBy(col("vec_id"), col("subspace"))
-      .agg(max_by(col("code"), struct(-col("d2"), -col("code")))
-        .as("code"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Each subvector of `subs` (vec_id, subspace, sub) at its nearest
+    * `cb` code, carrying `payload` (`d2` or `sub`): (subspace, code,
+    * payload) — the assignment the codebook readouts aggregate.
+    */
+  private[operators] def nearest(subs: DataFrame, cb: DataFrame,
+      payload: String): DataFrame =
+    subs.join(broadcast(cb), Seq("subspace"))
+      .withColumn("d2", l2sq(col("sub"), col("cvec_sub")))
+      .groupBy(col("vec_id"), col("subspace"))
+      .agg(max_by(struct(col("code"), col(payload)),
+        struct(-col("d2"), -col("code"))).as("b"))
+      .select(col("subspace"), col("b.code").as("code"),
+        col(s"b.$payload").as(payload))
 
   /** Training audit: one row per trained (subspace, code) — members
     * assigned and their mean quantization distortion (the per-code
@@ -228,13 +253,7 @@ object Pq {
     */
   def train(s: SparkSession, dir: String): DataFrame = {
     val cb = trainedCodebooks(s, dir)
-    subvectors(s, dir).join(broadcast(cb), Seq("subspace"))
-      .withColumn("d2", l2sq(col("sub"), col("cvec_sub")))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(max_by(struct(col("code"), col("d2")),
-        struct(-col("d2"), -col("code"))).as("b"))
-      .select(col("subspace"), col("b.code").as("code"),
-        col("b.d2").as("d2"))
+    nearest(subvectors(s, dir), cb, "d2")
       .groupBy(col("subspace"), col("code"))
       .agg(count(lit(1)).as("n_assigned"),
         round(sum(round(col("d2"), 6).cast("decimal(38,6)"))
@@ -247,147 +266,60 @@ object Pq {
       .orderBy(col("subspace"), col("code"))
   }
 
-  val TopK = 5
-  private val queryPred: Column = col("vec_id") % 100 === 0
-
-  /** ADC approximate top-k: every query's exact subvectors score each
-    * codebook entry once (the 8×16 LUT), then neighbors rank by the
-    * SUM of their codes' LUT entries — the raw corpus embeddings are
-    * never touched. Output (query_id, neighbor_id, rank, adc_d2).
-    *
-    * Fully oracled despite being a float ranking: each subspace
-    * distance quantizes to 6 decimals and sums as DECIMAL (the
-    * `embed_stats_scale` trick — exact, associative, order-free), so
-    * the ADC score and therefore the ranking are bit-identical on
-    * both engines with O(1) aggregation state. Recall vs the exact
-    * [[Similarity.bruteTopK]] is additionally measured in PqSpec
-    * (approximation quality is the operator's value, exactness of
-    * the pipeline is the oracle's).
-    *
-    * Declared cost model — EXHAUSTIVE compressed scan (the FAISS
-    * IndexPQ shape): every query ADC-scores every corpus code, so
-    * cost is Q×N; with the query set ∝ corpus (vec_id % 100) the 10×
-    * scale replay measures it superlinear BY DESIGN (SCALE_r13.json:
-    * ×15.8). The compression pays in bytes scanned, not candidates
-    * pruned; [[ivfpqTopK]] is the cell-pruned 100 TB path (measured
-    * ×1.6 on the same replay).
+  /** Per-query ADC lookup tables: every query subvector of
+    * (`idCol`, `vecCol`, carry…) scored against every `cb` entry once —
+    * (query_id, carry…, subspace, code, d2u). The 6-decimal rounding
+    * happens HERE, once per LUT entry (micro-units, functions/
+    * Round6Micros), instead of once per candidate row after the join.
     */
-  def adcTopK(s: SparkSession, dir: String): DataFrame =
-    adcTopKWith(s, dir, codebooks(s, dir))
-
-  /** ADC over the TRAINED codebooks ([[trainedCodebooks]]) — the
-    * ranking the index ships after training, mirroring
-    * [[Similarity.ivfTrainedTopK]]. Rows-only (data-dependent
-    * quantizer); PqSpec measures its recall next to the seed form and
-    * pins the trained codebook's lower distortion. Same EXHAUSTIVE
-    * Q×N cost model as [[adcTopK]], and the same measured consequence:
-    * ×18.7 at 10× data (SCALE_r14.json, over the ×15 linearity bound
-    * by design — queries ∝ corpus makes any exhaustive scan
-    * quadratic); the cell-pruned siblings ([[ivfpqTopK]] family,
-    * [[Opq.ivfOpqFrozenTopK]]) are the 100 TB serving paths.
-    */
-  def adcTrainedTopK(s: SparkSession, dir: String): DataFrame =
-    adcTopKWith(s, dir, trainedCodebooks(s, dir))
-
-  private def adcTopKWith(s: SparkSession, dir: String,
-      cb: DataFrame): DataFrame =
-    adcRank(plainCandidates(s, dir, cb))
-
-  /** The (query_id, neighbor_id, subspace-scored d2) candidate join
-    * behind [[adcTopK]] — plain (non-residual) PQ: whole-corpus codes
-    * meet per-query LUTs on (subspace, code), no cells. Shared by the
-    * ranked form and the refined two-stage form.
-    */
-  private def plainCandidates(s: SparkSession, dir: String,
-      cb: DataFrame): DataFrame = {
-    val luts = slicedFrame(
-      load(s, dir, "embeddings").filter(queryPred),
-      "vec_id", "embedding", "query_id", "qsub")
+  private[operators] def luts(queries: DataFrame, idCol: String,
+      vecCol: String, cb: DataFrame, carry: Seq[String] = Nil): DataFrame =
+    slicedFrame(queries, idCol, vecCol, "query_id", "qsub", carry)
       .join(cb, Seq("subspace"))
-      .select(col("query_id"), col("subspace"), col("code"),
-        // micro-unit LUT distance (r17): 6-decimal rounding happens
-        // HERE, once per (query, subspace, code) LUT entry, instead of
-        // once per candidate row after the join — see Pq.adcScores
-        graft.functions.round6Micros(
-          l2sq(col("qsub"), col("cvec_sub"))).as("d2u"))
-    codesWith(s, dir, cb).toDF("neighbor_id", "subspace", "code")
-      .join(broadcast(luts), Seq("subspace", "code"))
-  }
+      .select((col("query_id") +: carry.map(col)) ++ Seq(col("subspace"),
+        col("code"), graft.functions.round6Micros(
+          l2sq(col("qsub"), col("cvec_sub"))).as("d2u")): _*)
 
-  /** Two-stage refined PLAIN-PQ search (`ann_pq_refined_topk`) — the
-    * [[ivfpqRefinedTopK]] recipe applied to the uncelled quantizer:
-    * stage 1 shortlists [[ShortR]] candidates per query by ADC over
-    * the corpus codes (32× compressed, raw vectors untouched); stage 2
-    * re-ranks just those rows by exact cosine. Plain PQ is the WORST
-    * refinement case — with no coarse quantizer soaking up between-
-    * cell variance, ADC's quantization error is largest here
-    * (seed-PQ recall ~0.2-0.3 on both test corpora) — which is
-    * exactly why the refined sibling matters: the exact re-rank
-    * recovers whatever the shortlist retains, and PqSpec pins
-    * refined ≥ unrefined recall on the clustered corpus. Hash-oracled
-    * (the shortlist is deterministic exact-DECIMAL ADC; the re-rank
-    * is exact cosine).
+  /** Corpus codes (vec_id, subspace, carry…, code) meet the broadcast
+    * LUTs on (carry…, subspace, code): the ranking scan reads codes
+    * only, never the raw vectors.
     */
-  def pqRefinedTopK(s: SparkSession, dir: String): DataFrame =
-    refineRank(s, dir, adcScores(
-      plainCandidates(s, dir, codebooks(s, dir))))
+  private[operators] def adcJoin(codes: DataFrame, luts: DataFrame,
+      carry: Seq[String] = Nil): DataFrame =
+    codes.toDF(("neighbor_id" +: "subspace" +: carry) :+ "code": _*)
+      .join(broadcast(luts), carry ++ Seq("subspace", "code"))
 
-  /** Residual-PQ artifacts for the ON-DISK IVF-PQ layout
-    * ([[Layout.writeIvfPqPartitioned]] seed form,
-    * [[Layout.writeIvfPqTrainedPartitioned]] trained form): per-vector
-    * compact code arrays — (vec_id, cell, codes: array<tinyint>, M
-    * entries in subspace order) — plus the shared residual codebook
-    * they were coded against. Same quantizer, residuals and tie-breaks
-    * as the matching in-query operator ([[ivfpqTopK]] /
-    * [[ivfpqTrainedTopK]]), so a probe over the persisted codes
-    * reproduces it bit-for-bit.
+  /** Asymmetric distance: one (query_id, neighbor_id, adc_d2) per
+    * candidate pair (self-pairs dropped) — the exact long micro-unit sum
+    * of its M subspace LUT entries. Bit-identical to summing the
+    * 6-decimal-rounded distances as DECIMAL (functions/Round6Micros),
+    * so the ADC score — and the ranking — replays in DuckDB; sound
+    * because the group is bounded (M rows per pair ⇒ sums ≪ 2⁵³).
     */
-  private[operators] def residualCodeArraysWith(s: SparkSession,
-      dir: String, centsSrc: DataFrame,
-      trained: Boolean): (DataFrame, DataFrame) = {
+  private[operators] def adcScores(cands: DataFrame): DataFrame =
+    cands
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .groupBy(col("query_id"), col("neighbor_id"))
+      .agg((sum(col("d2u")).cast("double") / lit(1e6)).as("adc_d2"))
+
+  /** The residual coder's output collapsed to one M-byte code array per
+    * vector in subspace order — (vec_id, cell, codes: array<tinyint>),
+    * the row the on-disk IVF-PQ layout stores.
+    */
+  private[operators] def codeArrays(resid: DataFrame,
+      rcb: DataFrame): DataFrame = {
     // codes persist as signed bytes; past 127 the cast would wrap
     // negative and the probe's long-cast would silently miss every LUT
     // row for the wrapped codes — fail loudly if K ever drifts
     require(K <= 127,
       s"K=$K exceeds the signed-byte code range of the on-disk layout")
-    val cents = centsSrc.select(col("cent_id").as("cell"), col("cvec"))
-    val resid = Similarity.cellAssignmentsWith(s, dir, centsSrc)
-      .join(broadcast(cents), "cell")
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("cv"), col("cvec"),
-          (x, y) => x.cast("double") - y.cast("double")).as("rv"))
-      .cache()
-    val rseed = seedCodebook(resid, "vec_id", "rv")
-    val rcb =
-      if (trained) trainedCodebookFrom(s,
-        slicedFrame(resid, "vec_id", "rv", "vec_id", "sub"), rseed,
-        // trained ⇒ centsSrc is KMeans.trainedCentroids(dir), so the
-        // residual distribution — and its codebook — is a function of
-        // dir alone: the layout writer and the in-query operator share
-        // one memo entry
-        orderFree = false, memoKey = s"pqrescb|$dir")
-      else rseed
-    (codeArraysFrom(resid, rcb), rcb)
-  }
-
-  /** The encoding tail shared by the layout writers and
-    * [[encodeAgainst]]: nearest residual sub-centroid per subspace
-    * (ties to the smallest code), collapsed to one M-byte code array
-    * per vector in subspace order.
-    */
-  private def codeArraysFrom(resid: DataFrame, rcb: DataFrame): DataFrame =
-    slicedFrame(resid, "vec_id", "rv", "vec_id", "sub",
-      carry = Seq("cell"))
-      .join(broadcast(rcb), Seq("subspace"))
-      .withColumn("d2", l2sq(col("sub"), col("cvec_sub")))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(first(col("cell")).as("cell"),
-        max_by(col("code"), struct(-col("d2"), -col("code"))).as("code"))
+    encode(resid, "rv", rcb, Seq("cell"))
       .groupBy(col("vec_id"))
       .agg(first(col("cell")).as("cell"),
         transform(
           array_sort(collect_list(struct(col("subspace"), col("code")))),
           e => e.getField("code").cast("byte")).as("codes"))
+  }
 
   /** Encode an arbitrary (vec_id, embedding) frame against a FROZEN
     * quantizer pair — no seed derivation, no training: cell
@@ -400,276 +332,7 @@ object Pq {
     * layout.
     */
   private[graft] def encodeAgainst(s: SparkSession, shard: DataFrame,
-      centsSrc: DataFrame, rcb: DataFrame): DataFrame = {
-    require(K <= 127,
-      s"K=$K exceeds the signed-byte code range of the on-disk layout")
-    val cents = centsSrc.select(col("cent_id").as("cell"), col("cvec"))
-    val resid = Similarity.assignmentsOf(shard, centsSrc)
-      .join(broadcast(cents), "cell")
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("cv"), col("cvec"),
-          (x, y) => x.cast("double") - y.cast("double")).as("rv"))
-    codeArraysFrom(resid, rcb)
-  }
-
-  /** Per-(query, probed cell) residual ADC LUTs against `rcb` under
-    * the given coarse quantizer — the query-side half of the on-disk
-    * probe ([[Layout.ivfPqProbe]]): (query_id, cell, subspace, code,
-    * d2). Both `rcb` and `centsSrc` come from the layout's sidecars
-    * there, so the probe re-derives NOTHING about the quantizer.
-    */
-  private[operators] def residualLutsWith(s: SparkSession, dir: String,
-      rcb: DataFrame, centsSrc: DataFrame): DataFrame = {
-    val cents = centsSrc.select(col("cent_id").as("cell"), col("cvec"))
-    slicedFrame(
-      Similarity.queryProbesWith(s, dir, centsSrc)
-        .join(broadcast(cents), "cell")
-        .select(col("query_id"), col("cell"),
-          zip_with(col("qv"), col("cvec"),
-            (x, y) => x.cast("double") - y.cast("double")).as("qrv")),
-      "query_id", "qrv", "query_id", "qsub", carry = Seq("cell"))
-      .join(rcb, Seq("subspace"))
-      .select(col("query_id"), col("cell"), col("subspace"), col("code"),
-        // micro-unit LUT distance (r17): 6-decimal rounding happens
-        // HERE, once per (query, subspace, code) LUT entry, instead of
-        // once per candidate row after the join — see Pq.adcScores
-        graft.functions.round6Micros(
-          l2sq(col("qsub"), col("cvec_sub"))).as("d2u"))
-  }
-
-  /** The ADC aggregation shared by every ranking path: input
-    * (query_id, neighbor_id, d2) candidate rows, output one
-    * (query_id, neighbor_id, adc_d2) score per candidate pair
-    * (self-pairs dropped; DECIMAL-exact 6-decimal sum).
-    */
-  private def adcScores(cands: DataFrame): DataFrame =
-    cands
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      // exact long micro-unit sum (r17, guide §4): bit-identical to
-      // the previous sum(round(d2,6).cast(decimal(38,6))).cast(double)
-      // — see functions/Round6Micros — with the 6-decimal rounding
-      // paid once per LUT ENTRY (q·M·K rows, at the LUT projection)
-      // instead of twice per CANDIDATE row (q·N·M rows) plus a boxed
-      // decimal add each: the r17 stack samples put a third of the
-      // ADC scan in BigDecimal-from-string. Sound here because the
-      // group is bounded (M = 8 subspace rows per (query, neighbor) ⇒
-      // micro sums ≪ 2⁵³); the corpus-sized aggregations
-      // (train/frozen stats) keep the decimal form.
-      .agg((sum(col("d2u")).cast("double") / lit(1e6)).as("adc_d2"))
-
-  /** [[adcScores]] + per-query top-k — the ranked
-    * (query_id, neighbor_id, rank, adc_d2) contract.
-    */
-  private[operators] def adcRank(cands: DataFrame): DataFrame = {
-    val byQuery = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_d2"), col("neighbor_id"))
-    adcScores(cands)
-      .withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("adc_d2"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Full residual IVF-PQ top-k — the FAISS-style composition of the
-    * IVF cell-probing half ([[Similarity.ivfTopK]]) and the PQ
-    * compression half ([[adcTopK]]), with the piece neither has
-    * alone: RESIDUAL encoding. Each vector is PQ-coded not on its raw
-    * coordinates but on its residual v − centroid(cell(v)) — the
-    * displacement from its IVF cell's center — which is the
-    * distribution the codebook actually has to cover once the coarse
-    * quantizer has soaked up the between-cell variance (Jégou et al.,
-    * TPAMI 2011 §IV). One shared residual codebook serves all cells
-    * (the standard memory/accuracy trade vs per-cell codebooks);
-    * deterministically, its K entries are the seed vectors' own
-    * residuals, so the whole operator — assignment, residuals, codes,
-    * probes, ADC ranking — is exact-arithmetic and HASH-ORACLED
-    * against DuckDB (`ann_ivfpq_topk`), approximation and all.
-    *
-    * Query side: each query probes its [[Similarity.NProbe]] nearest
-    * cells and builds a LUT PER PROBED CELL from its residual against
-    * that cell's centroid (asymmetric: the query stays exact).
-    * Ranking joins codes to LUTs on (cell, subspace, code) — an
-    * equi-join against a broadcast of q·NProbe·M·K tiny LUT rows —
-    * sums 6-decimal-quantized subspace distances as exact DECIMAL,
-    * and takes top-k per query via WindowGroupLimit. At 100 TB the
-    * cell id is the partition layout ([[Layout.writeIvfPartitioned]]),
-    * the scan reads codes (nibbles), never raw vectors, and probing
-    * touches NProbe/C of the data — this query IS the shape of a
-    * billion-scale vector index on Spark.
-    */
-  def ivfpqTopK(s: SparkSession, dir: String): DataFrame =
-    ivfpqTopKWith(s, dir, Similarity.centroids(s, dir), trained = false)
-
-  /** The fully TRAINED end-to-end composition — the index a production
-    * deployment would ship: coarse cells from
-    * [[KMeans.trainedCentroids]] (Lloyd's-refined seeds) and a
-    * residual codebook trained by the same per-subspace Lloyd's loop
-    * as [[trainedCodebooks]], but over the residual distribution the
-    * codes actually quantize. Rows-only (both quantizers are
-    * data-dependent trainer output); PqSpec measures its recall
-    * against [[Similarity.bruteTopK]] next to the seed composition —
-    * training must not lose recall, and the trained residual codebook
-    * must carry lower quantization distortion than the seed one.
-    */
-  def ivfpqTrainedTopK(s: SparkSession, dir: String): DataFrame =
-    ivfpqTopKWith(s, dir, KMeans.trainedCentroids(s, dir), trained = true)
-
-  /** Graded `ann_ivfpq_frozen_topk`: the full residual IVF-PQ probe
-    * under the FROZEN trained coarse quantizer
-    * ([[FrozenAnn.ivfCentroids]]) with the deterministic seed rule
-    * for the residual codebook — every stage (assign → residual →
-    * codebook → codes → per-cell LUT → DECIMAL-exact ADC) replays in
-    * DuckDB because the one trained input is a committed literal.
-    * This hash-grades the SERVING pipeline of the trained composition
-    * (`ann_ivfpq_trained_topk` stays rows-only: its residual codebook
-    * is live Lloyd's output); it is also the exact shape
-    * [[graft.operators.Layout.writeIvfTrainedPartitioned]] serves
-    * from disk — train once, freeze, probe forever.
-    */
-  def ivfpqFrozenTopK(s: SparkSession, dir: String): DataFrame =
-    ivfpqTopKWith(s, dir, FrozenAnn.ivfCentroidFrame(s), trained = false)
-
-  private def ivfpqTopKWith(s: SparkSession, dir: String,
-      centsSrc: DataFrame, trained: Boolean): DataFrame =
-    adcRank(ivfpqCandidates(s, dir, centsSrc, trained))
-
-  /** The (query_id, neighbor_id, …, d2) candidate join behind
-    * [[ivfpqTopK]], before scoring/ranking — shared with the refined
-    * probe, which shortlists by ADC and re-ranks exactly.
-    */
-  private def ivfpqCandidates(s: SparkSession, dir: String,
-      centsSrc: DataFrame, trained: Boolean): DataFrame = {
-    val cents = centsSrc.select(col("cent_id").as("cell"), col("cvec"))
-    // residual per vector w.r.t. its assigned cell, double-exact.
-    // cache: the N×C assignment scoring runs ONCE — the codebook
-    // seeds, the residual training, the corpus codes and (through the
-    // codebook) the LUTs all read this narrow (vec_id, cell, rv)
-    // frame, and their projections differ enough to defeat
-    // ReuseExchange (the Dedup.semantic lesson). At 100 TB the
-    // materialized form is the IVF partition layout plus stored codes
-    // ([[Layout.writeIvfPqPartitioned]]); in-query, a narrow cache.
-    val resid = Similarity.cellAssignmentsWith(s, dir, centsSrc)
-      .join(broadcast(cents), "cell")
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("cv"), col("cvec"),
-          (x, y) => x.cast("double") - y.cast("double")).as("rv"))
-      .cache()
-    // eager materialization (r17): codebook seeds, corpus codes and
-    // LUTs all fan out from this cache — racing its build recomputes
-    // the whole N×C assignment per consumer stage
-    resid.count()
-    // shared residual codebook: the PQ seeds' own residuals (same
-    // seed rule as codebooks(), over the residual frame) — refined by
-    // the per-subspace Lloyd's loop when trained
-    val rseed = seedCodebook(resid, "vec_id", "rv")
-    val rcb =
-      if (trained) trainedCodebookFrom(s,
-        slicedFrame(resid, "vec_id", "rv", "vec_id", "sub"), rseed,
-        // trained ⇒ centsSrc is KMeans.trainedCentroids(dir), so the
-        // residual distribution — and its codebook — is a function of
-        // dir alone: the layout writer and the in-query operator share
-        // one memo entry
-        orderFree = false, memoKey = s"pqrescb|$dir")
-      else rseed
-    // corpus codes: nearest residual sub-centroid, ties to smallest
-    val codes = slicedFrame(resid, "vec_id", "rv", "vec_id", "sub",
-      carry = Seq("cell"))
-      .join(broadcast(rcb), Seq("subspace"))
-      .withColumn("d2", l2sq(col("sub"), col("cvec_sub")))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(first(col("cell")).as("cell"),
-        max_by(col("code"), struct(-col("d2"), -col("code"))).as("code"))
-    // per-(query, probed cell) LUT from the query's residual there
-    val luts = slicedFrame(
-      Similarity.queryProbesWith(s, dir, centsSrc)
-        .join(broadcast(cents), "cell")
-        .select(col("query_id"), col("cell"),
-          zip_with(col("qv"), col("cvec"),
-            (x, y) => x.cast("double") - y.cast("double")).as("qrv")),
-      "query_id", "qrv", "query_id", "qsub", carry = Seq("cell"))
-      .join(rcb, Seq("subspace"))
-      .select(col("query_id"), col("cell"), col("subspace"), col("code"),
-        // micro-unit LUT distance (r17): 6-decimal rounding happens
-        // HERE, once per (query, subspace, code) LUT entry, instead of
-        // once per candidate row after the join — see Pq.adcScores
-        graft.functions.round6Micros(
-          l2sq(col("qsub"), col("cvec_sub"))).as("d2u"))
-    codes.toDF("neighbor_id", "subspace", "cell", "code")
-      .join(broadcast(luts), Seq("cell", "subspace", "code"))
-  }
-
-  /** Shortlist size for the exact re-rank: how many ADC candidates per
-    * query get their true cosine computed (4× the delivered top-k —
-    * the standard refinement head-room).
-    */
-  val ShortR = 20
-
-  /** Two-stage refined IVF-PQ search — the production serving shape
-    * (Jégou et al., TPAMI 2011 §V-C): stage 1 scores candidates from
-    * CODES ONLY (the cheap ADC scan over probed cells) and keeps a
-    * [[ShortR]]-deep shortlist per query; stage 2 fetches the RAW
-    * vectors for just those q×[[ShortR]] rows and re-ranks by exact
-    * cosine. ADC's quantization error decides only what enters the
-    * shortlist; the delivered ordering is exact — recall can only
-    * improve over [[ivfpqTopK]] (PqSpec pins ≥).
-    *
-    * Scale shape: stage 1 is [[ivfpqTopK]]'s equi-join unchanged
-    * (codes, never raw vectors); the shortlist is queries × ShortR —
-    * a planning-time constant like the probe set — so stage 2
-    * BROADCASTS it against the embeddings table and the exact math
-    * touches ShortR rows per query, not the corpus. On the persisted
-    * index this is the probe that reads the codes layout for stage 1
-    * and point-reads the raw-vector layout for stage 2.
-    */
-  def ivfpqRefinedTopK(s: SparkSession, dir: String): DataFrame =
-    refineRank(s, dir, adcScores(
-      ivfpqCandidates(s, dir, Similarity.centroids(s, dir),
-        trained = false)))
-
-  /** [[adcScores]] for callers outside this object (the on-disk
-    * refined probe builds its candidate join from stored codes).
-    */
-  private[operators] def adcScoresOf(cands: DataFrame): DataFrame =
-    adcScores(cands)
-
-  /** The refinement tail shared by [[ivfpqRefinedTopK]] and
-    * [[Layout.ivfPqProbeRefined]]: ShortR-deep ADC shortlist from the
-    * given scores, exact-cosine re-rank of just those rows against
-    * the raw embeddings.
-    */
-  private[operators] def refineRank(s: SparkSession, dir: String,
-      scores: DataFrame): DataFrame =
-    refineRank(s, dir, scores, ShortR)
-
-  /** Shortlist-depth-parameterized form: depth is a serving-time
-    * recall/latency knob like nprobe — a constant per query, so any
-    * depth keeps stage 2 a broadcast of q·depth rows. The frozen
-    * IVF-OPQ search shortlists deeper ([[Opq.IvfOpqShortR]]) to clear
-    * the exhaustive scan's recall bar.
-    */
-  private[operators] def refineRank(s: SparkSession, dir: String,
-      scores: DataFrame, shortR: Int): DataFrame = {
-    val byAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_d2"), col("neighbor_id"))
-    val shortlist = scores
-      .withColumn("r", row_number().over(byAdc))
-      .filter(col("r") <= shortR)
-      .select(col("query_id"), col("neighbor_id"))
-    val emb = load(s, dir, "embeddings")
-    val byCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
-      .join(broadcast(shortlist
-        .join(emb.select(col("vec_id").as("query_id"),
-          col("embedding").as("qv")), "query_id")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        Dedup.cosine(col("qv"), col("nv")).as("cos"))
-      .withColumn("rank", row_number().over(byCos))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+      centsSrc: DataFrame, rcb: DataFrame): DataFrame =
+    codeArrays(Ann.residuals(Ann.assign(shard, centsSrc), centsSrc,
+      "vec_id", "cv", "rv"), rcb)
 }

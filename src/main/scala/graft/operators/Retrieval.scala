@@ -61,7 +61,7 @@ object Retrieval {
     * `doc_id` and `vec_id` are 1:1), fuse a LEXICAL ranking (3-gram
     * shingle Jaccard over the inverted index — only documents sharing
     * a shingle are candidates, the [[Dedup]] equi-join shape) with
-    * the SEMANTIC ranking ([[Similarity.bruteTopK]] cosine) by
+    * the SEMANTIC ranking (`ann_brute_topk` cosine) by
     * reciprocal rank fusion: rrf(d) = Σ_lists 1/([[RrfC]] + rank_d).
     * RRF is the production default for lexical+vector fusion because
     * it needs no score calibration between incomparable scales —
@@ -77,7 +77,7 @@ object Retrieval {
     * queries×top-k frames — planning-time-constant size, broadcast.
     */
   def hybridTopK(s: SparkSession, dir: String): DataFrame = {
-    val sem = Similarity.bruteTopK(s, dir)
+    val sem = Ann.search(s, dir, "ann_brute_topk")
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("sem_rank"))
     // cached: both legs of the bipartite join read this frame —

@@ -6,27 +6,23 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.load
 
-/** Approximate-nearest-neighbor search over the `embeddings` table
-  * (`Array[Float]`, 64-dim) — a training-data-pipeline capability the
-  * reference has no analog for (SURVEY.md §2.3).
+/** The `embeddings` table (`Array[Float]`, 64-dim) outside the
+  * [[AnnSpec]] pipelines — a training-data-pipeline capability the
+  * reference has no analog for (SURVEY.md §2.3): the table-hygiene
+  * and IVF index-health reports, and the two searches that are not a
+  * (probe, code, score) pipeline, sharing [[Ann]]'s query set and rank
+  * stage:
   *
-  * Two physical strategies for one logical op (top-k cosine neighbors
-  * of a query set):
-  *
-  *   - `bruteTopK` — the exact baseline. Queries are a tiny broadcast
-  *     side; the corpus is scanned once. Top-k is TWO-stage: a per-
-  *     partition window keeps k rows per (query, partition), then a
-  *     global window ranks the survivors — the shuffle carries
-  *     O(queries × k × partitions) rows instead of the full corpus,
-  *     which is what survives a 1000-executor scale-up.
-  *   - `lshTopK` — the scale path: random-hyperplane LSH (sign-bit
-  *     buckets, T tables × b bits), equi-join on (table, bucket), exact
-  *     cosine + top-k over candidates only. Honest caveat, visible in
-  *     this very dataset (near-orthogonal vectors, max cos ≈ 0.5): LSH
-  *     prunes hard only when neighbors are angularly close; parameters
-  *     here (b=4, T=16) are tuned so the planted cos ≥ 0.45 structure
-  *     is recalled with p ≈ 0.96 while random pairs collide at
-  *     0.65⁴·T ≪ 1 per table pair.
+  *   - LSH (`ann_lsh*`) — random-hyperplane buckets (T tables × b
+  *     bits), equi-join on (table, bucket), exact cosine + top-k over
+  *     candidates only. Honest caveat, visible in this very dataset
+  *     (near-orthogonal vectors, max cos ≈ 0.5): LSH prunes hard only
+  *     when neighbors are angularly close; parameters here (b=4, T=16)
+  *     are tuned so the planted cos ≥ 0.45 structure is recalled with
+  *     p ≈ 0.96 while random pairs collide at 0.65⁴·T ≪ 1 per table
+  *     pair.
+  *   - MMR (`ann_mmr_topk`) — a greedy diversity rerank of the cosine
+  *     top-[[MmrPool]], inherently sequential in k.
   */
 object Similarity {
 
@@ -97,10 +93,6 @@ object Similarity {
       .orderBy(col("label"))
   }
 
-  val K = 5
-  /** Every 100th vector is a query — scale-proportional query set. */
-  private val queryPred: Column = col("vec_id") % 100 === 0
-
   val Dim: Int = graft.functions.LshBuckets.Dim
   val NumTables: Int = graft.functions.LshBuckets.NumTables
   val BitsPerTable: Int = graft.functions.LshBuckets.BitsPerTable
@@ -116,325 +108,6 @@ object Similarity {
   private def corpus(s: SparkSession, dir: String): DataFrame =
     load(s, dir, "embeddings")
 
-  /** Exact top-k: broadcast the query set against the corpus, two-stage
-    * window ranking. Output: (query_id, neighbor_id, rank, cos).
-    */
-  def bruteTopK(s: SparkSession, dir: String): DataFrame = {
-    val e = corpus(s, dir)
-    val nrm = sqrt(call_function("vec_dot", col("embedding"), col("embedding")))
-    val q = e.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        nrm.as("q_nrm"))
-    val c = e.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("cv"), nrm.as("c_nrm"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", call_function("vec_dot", col("qv"), col("cv"))
-        / col("q_nrm") / col("c_nrm"))
-    // stage 1: local top-k inside each scan partition
-    val local = Window.partitionBy(col("query_id"), spark_partition_id())
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    // stage 2: global rank over the tiny survivor set
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("lr", row_number().over(local)).filter(col("lr") <= K)
-      .withColumn("rank", row_number().over(global)).filter(col("rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Cosine radius for [[rangeSearch]] — the corpus' raw-cosine
-    * ceiling is ≈ 0.45 (64-dim cluster structure spreads mass), so
-    * 0.4 selects the genuinely-close ≈0.1% tail without emptying
-    * the result. */
-  val RangeTau = 0.4
-
-  /** Graded `ann_range_search`: the RADIUS twin of the top-k family —
-    * every corpus vector within cosine ≥ [[RangeTau]] of each query
-    * (fixed-radius near-neighbor: the shape dedup sweeps and
-    * recall-oriented retrieval use when "how many are close" matters
-    * more than "the best k"). The threshold compares the ROUNDED
-    * cosine, so the reported SET is deterministic in both engines —
-    * filtering the raw float would make membership a last-ulp bet.
-    *
-    * Scale shape: ONE corpus scan against the broadcast query set
-    * (queries are 1% of the corpus here; for a query set too big to
-    * broadcast, the [[bruteTopKBlocked]] block-id equi-join is the
-    * drop-in shuffle form, and the LSH/IVF bucket prefilters bound
-    * the candidate stream when even one scan is too much — at the
-    * usual recall cost). Output is data-dependent by design; there
-    * is no window, no global sort barrier before the final orderBy.
-    */
-  def rangeSearch(s: SparkSession, dir: String): DataFrame = {
-    val e = corpus(s, dir)
-    val nrm = sqrt(call_function("vec_dot", col("embedding"),
-      col("embedding")))
-    val q = e.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        nrm.as("q_nrm"))
-    val c = e.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("cv"), nrm.as("c_nrm"))
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(call_function("vec_dot", col("qv"), col("cv"))
-          / col("q_nrm") / col("c_nrm"), 6))
-      .filter(col("cos") >= RangeTau)
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
-      .orderBy(col("query_id"), col("neighbor_id"))
-  }
-
-  /** Corpus blocks for the blocked exact top-k. Locally 16 tasks feed
-    * 32 cores at two waves; at cluster scale set ≈ 2× total cores —
-    * per-task memory is q + n/B vectors and the stage-2 shuffle volume
-    * is B·q·K rows, both tunable independent of corpus size.
-    */
-  val CorpusBlocks = 16
-
-  /** The SAME exact top-k contract as [[bruteTopK]] without its
-    * broadcast: the corpus hash-partitions into [[CorpusBlocks]]
-    * blocks, queries replicate to every block, and the scoring join is
-    * a block-id EQUI-join — so the query side rides an ordinary
-    * shuffle and nothing needs to fit in a driver broadcast no matter
-    * how large the query set grows (the scale ceiling VERDICT r3
-    * flagged on `bruteTopK`). Ranking is one window over (query_id):
-    * Spark's WindowGroupLimit splits the rank-≤-K filter into a
-    * partial per-partition top-K before the exchange, so the final
-    * shuffle carries ≤ B·q·K survivor rows, never the n·q scored
-    * pairs. Identical scoring expression and tie-break as `bruteTopK`
-    * → bit-identical output, shared brute-force oracle.
-    */
-  def bruteTopKBlocked(s: SparkSession, dir: String): DataFrame = {
-    val B = CorpusBlocks
-    val e = corpus(s, dir)
-    val nrm = sqrt(call_function("vec_dot", col("embedding"), col("embedding")))
-    val q = e.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        nrm.as("q_nrm"))
-      .withColumn("cb", explode(sequence(lit(0), lit(B - 1))))
-    val c = e.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("cv"), nrm.as("c_nrm"),
-      pmod(xxhash64(col("vec_id")), lit(B)).cast("int").as("cb"))
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    c.join(q, Seq("cb"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", call_function("vec_dot", col("qv"), col("cv"))
-        / col("q_nrm") / col("c_nrm"))
-      .withColumn("rank", row_number().over(global)).filter(col("rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Graded `ann_range_search_blocked`: [[rangeSearch]] without the
-    * broadcast — the query set rides [[bruteTopKBlocked]]'s block-id
-    * equi-join (corpus hash-partitioned into [[CorpusBlocks]],
-    * queries replicated once per block), so radius queries keep
-    * running when the query side outgrows a driver broadcast (1% of
-    * a billion-vector corpus is gigabytes of floats — past any
-    * broadcast ceiling; this is the r3 `bruteTopK` lesson applied
-    * before it is re-learned). Identical scoring chain and rounded-
-    * cosine membership → bit-identical output, shared oracle.
-    */
-  def rangeSearchBlocked(s: SparkSession, dir: String): DataFrame = {
-    val B = CorpusBlocks
-    val e = corpus(s, dir)
-    val nrm = sqrt(call_function("vec_dot", col("embedding"),
-      col("embedding")))
-    val q = e.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        nrm.as("q_nrm"))
-      .withColumn("cb", explode(sequence(lit(0), lit(B - 1))))
-    val c = e.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("cv"), nrm.as("c_nrm"),
-      pmod(xxhash64(col("vec_id")), lit(B)).cast("int").as("cb"))
-    c.join(q, Seq("cb"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(call_function("vec_dot", col("qv"), col("cv"))
-          / col("q_nrm") / col("c_nrm"), 6))
-      .filter(col("cos") >= RangeTau)
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
-      .orderBy(col("query_id"), col("neighbor_id"))
-  }
-
-  /** IVF (inverted-file) top-k — the cell-probing scale path that
-    * complements LSH: a deterministic coarse quantizer (centroids =
-    * the vectors at stride max(37, ⌊√N⌋), offset 5) partitions the
-    * corpus into cells; each query probes its NProbe nearest cells
-    * and ranks exactly within them.
-    *
-    * Scale shape: assignment is a broadcast join + per-vector argmax
-    * folded by `max_by` at the groupBy grain — map-side combine means
-    * the shuffle carries one (vec_id, cell) row per vector, never the
-    * N×C scored pairs; the probe is an equi-join on cell id. At 100 TB
-    * the assignment becomes the partition layout itself (write
-    * bucketed by cell) and probing touches NProbe/C of the data.
-    * Tie-breaks rank on (cos desc, id asc) over bit-identical double
-    * folds, so the DuckDB oracle reproduces the output exactly.
-    */
-  val NProbe = 2
-
-  /** The deterministic coarse quantizer's centroid set: vectors whose
-    * id lies on stride p = max(37, ⌊√N⌋) at offset 5. C = N/p ≈ √N is
-    * SUBLINEAR in the corpus (the broadcast of the centroid table —
-    * and the per-vector argmax fan-out — must not scale with N; the
-    * r10 rule C = N/37 died at 100× because the broadcast grew
-    * linearly), while the 37 floor keeps toy scale factors on the
-    * historical quantizer. C ≈ √N is also the classical IVF balance
-    * point: probe cost C + N·nprobe/C minimizes at C = √(N·nprobe).
-    * The stride is a 1-row aggregate cross-joined in (no driver
-    * action), and the SAME rule is a scalar subquery in every DuckDB
-    * oracle — sqrt/floor/greatest are correctly-rounded IEEE on both
-    * engines, so the centroid SET replays exactly. The trained
-    * quantizer ([[KMeans.trainedCentroids]], O(1)-state
-    * `trainedCentroidsScale`) remains the serving path.
-    */
-  def centroids(s: SparkSession, dir: String): DataFrame = {
-    val n = corpus(s, dir).agg(count(lit(1)).as("n_corpus"))
-    corpus(s, dir).crossJoin(broadcast(n))
-      .filter(col("vec_id") %
-        greatest(lit(37L),
-          floor(sqrt(col("n_corpus").cast("double"))).cast("long")) === 5)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
-  }
-
-  private def scoredCells(s: SparkSession, dir: String,
-      cents: DataFrame): DataFrame =
-    corpus(s, dir)
-      // hash the corpus across the scale-adaptive shuffle-partition
-      // count BEFORE the N×C scoring (r17, guide §2): the argmax
-      // groupBy downstream needs hashpartitioning(vec_id) anyway, so
-      // this relocates that one exchange BELOW the expensive scoring
-      // join instead of adding one — same shuffle count, and the
-      // scoring no longer inherits the source's split count (ONE task
-      // at the toy SFs; the r17 stage traces show the whole IVF/PQ
-      // serving family serialized behind it).
-      .repartition(col("vec_id"))
-      .join(broadcast(cents))
-      .withColumn("cs", Dedup.cosine(col("embedding"), col("cvec")))
-
-  /** Every vector's cell: argmax cosine, smallest cent_id on ties —
-    * (vec_id, cell, cv). Shared by the in-query probe (`ivfTopK`) and
-    * the on-disk form (`Layout.writeIvfPartitioned`).
-    */
-  def cellAssignments(s: SparkSession, dir: String): DataFrame =
-    cellAssignmentsWith(s, dir, centroids(s, dir))
-
-  private[operators] def cellAssignmentsWith(s: SparkSession, dir: String,
-      cents: DataFrame): DataFrame =
-    scoredCells(s, dir, cents)
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cent_id"), struct(col("cs"), -col("cent_id")))
-        .as("cell"), first(col("embedding")).as("cv"))
-
-  /** The same argmax-cosine assignment over an ARBITRARY
-    * (vec_id, embedding) frame — the routing half
-    * [[graft.operators.Pq.encodeAgainst]] runs for a new shard
-    * against a frozen (possibly sidecar-loaded) quantizer.
-    */
-  private[operators] def assignmentsOf(vecs: DataFrame,
-      cents: DataFrame): DataFrame =
-    vecs.join(broadcast(cents))
-      .withColumn("cs", Dedup.cosine(col("embedding"), col("cvec")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cent_id"), struct(col("cs"), -col("cent_id")))
-        .as("cell"), first(col("embedding")).as("cv"))
-
-  def ivfTopK(s: SparkSession, dir: String): DataFrame =
-    ivfTopKWith(s, dir, centroids(s, dir))
-
-  /** The same probe over TRAINED centroids ([[KMeans.trainedCentroids]]
-    * — Lloyd's-refined seeds): the quantizer the index would ship
-    * after training. Rows-only (the centroid set is the trainer's
-    * data-dependent output); SimilaritySpec measures its recall
-    * against `bruteTopK` alongside the seed-centroid probe — on this
-    * near-orthogonal synthetic corpus training holds rather than
-    * lifts recall (means shrink toward the grand mean; clustered
-    * real embeddings are where training pays), and the spec pins
-    * non-degradation.
-    */
-  def ivfTrainedTopK(s: SparkSession, dir: String): DataFrame =
-    ivfTopKWith(s, dir, KMeans.trainedCentroids(s, dir))
-
-  /** Graded `ann_ivf_frozen_topk`: the SAME probe over the FROZEN
-    * trained quantizer ([[FrozenAnn.ivfCentroids]] — the committed
-    * literal output of `KMeans.trainedCentroids` at sf0.01, the
-    * `bpe_tokenize_frozen` recipe applied to vector quantizers). This
-    * is exactly how a production IVF index serves: the quantizer is
-    * trained once, shipped as an artifact, and outlives corpus growth
-    * — so the query is meaningful at every sf while the model stays
-    * fixed. Because the frozen centroids are plain literals, the
-    * whole trained-serving path (assign → route → probe → exact rank)
-    * HASH-ORACLES in DuckDB, which the live trained form (a trainer
-    * output with no SQL twin) never could; SimilaritySpec pins frozen
-    * ≡ live-trained bit-identically on the training corpus itself.
-    */
-  def ivfFrozenTopK(s: SparkSession, dir: String): DataFrame =
-    ivfTopKWith(s, dir, FrozenAnn.ivfCentroidFrame(s))
-
-  /** Cell assignment under the TRAINED quantizer — what
-    * [[graft.operators.Layout.writeIvfTrainedPartitioned]] turns into
-    * the on-disk directory structure, making training → layout →
-    * pruned probe one story.
-    */
-  def cellAssignmentsTrained(s: SparkSession, dir: String): DataFrame =
-    cellAssignmentsWith(s, dir, KMeans.trainedCentroids(s, dir))
-
-  /** Each query's [[NProbe]] nearest cells under the seed quantizer:
-    * (query_id, cell, qv) — shared by the in-query IVF probe and the
-    * residual IVF-PQ LUT builder ([[Pq.ivfpqTopK]]). The query set is
-    * tiny; consumers broadcast it.
-    */
-  def queryProbes(s: SparkSession, dir: String): DataFrame =
-    queryProbesWith(s, dir, centroids(s, dir))
-
-  private[operators] def queryProbesWith(s: SparkSession, dir: String,
-      cents: DataFrame): DataFrame =
-    queryProbesWith(s, dir, cents, NProbe)
-
-  /** Probe-depth-parameterized form: nprobe is a serving-time
-    * recall/latency knob (FAISS's `nprobe`), constant w.r.t. corpus
-    * size — any constant keeps the probe sublinear (touches
-    * nprobe/C ≈ nprobe/√N of the data); deeper probes buy recall at
-    * a proportional constant factor. The frozen IVF-OPQ family probes
-    * deeper than [[NProbe]] to clear the exhaustive-scan recall bar
-    * it replaces.
-    */
-  private[operators] def queryProbesWith(s: SparkSession, dir: String,
-      cents: DataFrame, nprobe: Int): DataFrame = {
-    val pw = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cs").desc, col("cent_id"))
-    scoredCells(s, dir, cents).filter(queryPred)
-      .withColumn("pr", row_number().over(pw)).filter(col("pr") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("cent_id").as("cell"),
-        col("embedding").as("qv"))
-  }
-
-  private def ivfTopKWith(s: SparkSession, dir: String,
-      cents: DataFrame): DataFrame =
-    ivfRankOf(cellAssignmentsWith(s, dir, cents),
-      queryProbesWith(s, dir, cents))
-
-  /** The probe join + exact rank over ANY assigned candidate set —
-    * shared by the plain, trained and FILTERED IVF searches.
-    */
-  private[operators] def ivfRankOf(assigned: DataFrame,
-      probes: DataFrame): DataFrame = {
-    // exact rank within probed cells only
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    assigned.join(broadcast(probes), "cell")
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        Dedup.cosine(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(global)).filter(col("rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
   /** Index-health report — the numbers an operator watches on a
     * production IVF index (and the trigger for a retrain-rebuild):
     * cell count, corpus size, population min/max/mean and the
@@ -446,7 +119,7 @@ object Similarity {
     * hash-oracled (`ivf_index_stats`).
     */
   def ivfIndexStats(s: SparkSession, dir: String): DataFrame = {
-    val pops = cellAssignments(s, dir)
+    val pops = Ann.cellAssignments(s, dir)
       .groupBy(col("cell")).agg(count(lit(1)).as("pop"))
     val avg = col("n_vectors").cast("double") / col("n_cells")
     pops.agg(
@@ -459,36 +132,6 @@ object Similarity {
         round(col("max_pop") / avg, 6).as("imbalance"))
   }
 
-  /** FILTERED ANN — predicate-constrained vector search ("nearest
-    * neighbors among vectors with label ≥ 6"), the standard
-    * production requirement a plain index can't serve well. This is
-    * PRE-filtering: the predicate lands on the candidate scan before
-    * assignment joins anything, so ranking happens among QUALIFYING
-    * vectors only and every query gets its full k whenever the probed
-    * cells hold k matches — post-filtering (rank first, filter after)
-    * silently under-fills k by however many top-ranked rows the
-    * predicate rejects. Quantizer and probe routing stay those of the
-    * UNFILTERED corpus (the index is built once, queried under many
-    * filters). The predicate is deliberately RANGE-SHAPED so it
-    * reaches the parquet reader as a pushed filter (PlanSpec pins
-    * `GreaterThanOrEqual(label,…)` in the scan) — candidates shrink
-    * at row-group-skip time, and the probe join's build side shrinks
-    * with selectivity. An expression predicate (modulo, UDF) would
-    * still prune columns but evaluate post-read.
-    */
-  def ivfFilteredTopK(s: SparkSession, dir: String): DataFrame = {
-    val cents = centroids(s, dir)
-    val assigned = assignmentsOf(
-      corpus(s, dir).filter(col("label") >= 6)
-        .select(col("vec_id"), col("embedding")), cents)
-    ivfRankOf(assigned, queryProbesWith(s, dir, cents))
-  }
-
-  /** LSH-bucketed top-k: candidates = corpus vectors sharing any
-    * (table, bucket) with the query, then exact cosine + ranking over
-    * candidates only. Same output shape as `bruteTopK` (its recall is
-    * measured against it in SimilaritySpec).
-    */
   /** MMR candidate-pool size, output size, and relevance weight. */
   val MmrPool = 10
   val MmrK = 5
@@ -525,7 +168,7 @@ object Similarity {
   def mmrTopK(s: SparkSession, dir: String): DataFrame = {
     val e = corpus(s, dir)
     val nrm = sqrt(call_function("vec_dot", col("embedding"), col("embedding")))
-    val q = e.filter(queryPred)
+    val q = e.filter(Ann.queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         nrm.as("q_nrm"))
     val c = e.select(col("vec_id").as("nid"), col("embedding").as("cv"),
@@ -615,37 +258,14 @@ object Similarity {
     * takes over — the bucket join SHAPE (equi-join, no broadcast
     * ceiling) is already the scale-correct one.
     */
-  def lshMd5TopK(s: SparkSession, dir: String): DataFrame = {
-    val e = corpus(s, dir)
+  def lshMd5TopK(s: SparkSession, dir: String): DataFrame =
     // fused one-pass bucketing (r17, guide §4): the composed
     // vec_dot-per-bit form built a NumTables×bits expression tree of
     // literal-array dots per row — functions/Md5LshBuckets computes
     // the identical bucket ids (same planes, same fold, same strict
     // sign test) in one generated loop
-    def bucketsOf(v: Column): Column =
-      graft.functions.md5LshBuckets(v, BitsPerTable)
-    def withBuckets(df: DataFrame, idCol: String, vecCol: String) =
-      df.select(col(idCol), col(vecCol), posexplode(bucketsOf(col(vecCol))))
-        .toDF(idCol, vecCol, "table", "bucket")
-    val qb = withBuckets(
-      e.filter(queryPred).select(col("vec_id").as("query_id"),
-        col("embedding").as("qv")), "query_id", "qv")
-    val cb = withBuckets(
-      e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")),
-      "neighbor_id", "cv")
-    val cands = cb.join(broadcast(qb), Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", Dedup.cosine(col("qv"), col("cv")))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cos")).as("cos"))
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cands.withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+    lshTopKWith(s, dir,
+      graft.functions.md5LshBuckets(_, BitsPerTable), broadcastQueries = true)
 
   /** Target mean bucket population for the capacity-scaled LSH — the
     * knob the bits-per-table rule keeps constant as the corpus grows.
@@ -703,45 +323,34 @@ object Similarity {
     * grows with the corpus.
     */
   def lshScaledTopK(s: SparkSession, dir: String): DataFrame = {
+    val bits = scaledLshBits(corpus(s, dir).count())
+    // no broadcast hint: the query-bucket side grows ∝ N/100, so a
+    // forced broadcast would put a corpus-linear table on the driver
+    // at scale — AQE picks broadcast while it fits, shuffle join after
+    lshTopKWith(s, dir,
+      graft.functions.md5LshBuckets(_, bits), broadcastQueries = false)
+  }
+
+  /** LSH-bucketed top-k: candidates = corpus vectors sharing any
+    * (table, bucket) with the query, then exact cosine + ranking over
+    * candidates only. Same output shape as `ann_brute_topk` (its recall
+    * is measured against it in SimilaritySpec).
+    */
+  def lshTopK(s: SparkSession, dir: String): DataFrame =
+    lshTopKWith(s, dir, buckets, broadcastQueries = true)
+
+  /** The bucketed pipeline the three LSH forms share: bucket the
+    * corpus and the queries per table with `bucketsOf`, join on
+    * (table, bucket), exact cosine over candidates, rank.
+    */
+  private def lshTopKWith(s: SparkSession, dir: String,
+      bucketsOf: Column => Column, broadcastQueries: Boolean): DataFrame = {
     val e = corpus(s, dir)
-    val bits = scaledLshBits(e.count())
-    // fused one-pass bucketing — see lshMd5TopK (same expression, the
-    // capacity rule only changes its `bits` literal)
-    def bucketsOf(v: Column): Column =
-      graft.functions.md5LshBuckets(v, bits)
     def withBuckets(df: DataFrame, idCol: String, vecCol: String) =
       df.select(col(idCol), col(vecCol), posexplode(bucketsOf(col(vecCol))))
         .toDF(idCol, vecCol, "table", "bucket")
     val qb = withBuckets(
-      e.filter(queryPred).select(col("vec_id").as("query_id"),
-        col("embedding").as("qv")), "query_id", "qv")
-    val cb = withBuckets(
-      e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")),
-      "neighbor_id", "cv")
-    // no broadcast hint: the query-bucket side grows ∝ N/100, so a
-    // forced broadcast would put a corpus-linear table on the driver
-    // at scale — AQE picks broadcast while it fits, shuffle join after
-    val cands = cb.join(qb, Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", Dedup.cosine(col("qv"), col("cv")))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cos")).as("cos"))
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cands.withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  def lshTopK(s: SparkSession, dir: String): DataFrame = {
-    val e = corpus(s, dir)
-    def withBuckets(df: DataFrame, idCol: String, vecCol: String) =
-      df.select(col(idCol), col(vecCol), posexplode(buckets(col(vecCol))))
-        .toDF(idCol, vecCol, "table", "bucket")
-    val qb = withBuckets(
-      e.filter(queryPred).select(col("vec_id").as("query_id"),
+      e.filter(Ann.queryPred).select(col("vec_id").as("query_id"),
         col("embedding").as("qv")), "query_id", "qv")
     val cb = withBuckets(
       e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")),
@@ -752,16 +361,12 @@ object Similarity {
     // arrays (distinct() on array columns shuffled ~70 bytes/row of
     // vector payload per duplicate and dominated this query's time).
     // max(cos) is exact: every duplicate row scores identically.
-    val cands = cb.join(broadcast(qb), Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", Dedup.cosine(col("qv"), col("cv")))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cos")).as("cos"))
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cands.withColumn("rank", row_number().over(global)).filter(col("rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    Ann.rank(Ann.byCos(
+      cb.join(if (broadcastQueries) broadcast(qb) else qb,
+          Seq("table", "bucket"))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("cos", Dedup.cosine(col("qv"), col("cv")))
+        .groupBy(col("query_id"), col("neighbor_id"))
+        .agg(max(col("cos")).as("cos"))))
   }
 }

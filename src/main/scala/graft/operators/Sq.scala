@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
@@ -27,9 +26,9 @@ import graft.Tables.load
   * dimension — two-phase agg, O(1) state); encoding is one
   * corpus × broadcast(grid) narrow pass, shuffling M nothing (codes
   * collapse per vector with a sorted collect bounded by dim count);
-  * search reads the 64-byte codes, reconstructs midpoints inline and
-  * ranks with the same two-stage window as [[Similarity.bruteTopK]]
-  * — the scan is 4× lighter than raw, the plan identical.
+  * search ([[AnnSpec]] coder `Sq8`) reads the 64-byte codes,
+  * reconstructs midpoints inline and ranks exactly like the raw
+  * scan — the scan is 4× lighter than raw, the plan identical.
   */
 object Sq {
 
@@ -70,7 +69,7 @@ object Sq {
               * lit(256.0)).cast("long"))).as("code"))
 
   /** The compressed corpus: (vec_id, codes: array<bigint> in dimension
-    * order) — the API form consumers (storage, [[ivfSqTopK]]) want.
+    * order) — the API form consumers (the IVF-SQ8 layout) want.
     */
   def codes(s: SparkSession, dir: String): DataFrame =
     dimCodes(s, dir)
@@ -90,33 +89,32 @@ object Sq {
     dimCodes(s, dir).orderBy(col("vec_id"), col("d"))
 
   /** Midpoint-reconstructed corpus: (vec_id, dv: array<float> in
-    * dimension order) — deq_d = dmin + (code + 0.5)·(dmax − dmin)/256,
-    * cast to float so both engines land the identical IEEE value and
-    * the codegen'd `vec_dot` fast path applies.
+    * dimension order) — the SQ8 coder of [[AnnSpec]] (`ann_sq8_topk`,
+    * `ann_ivfsq_topk`).
     */
-  private def dequantized(s: SparkSession, dir: String): DataFrame =
-    dimCodes(s, dir)
-      .join(broadcast(dimStats(s, dir)), Seq("d"))
-      .select(col("vec_id"), col("d"),
-        (col("dmin") + (col("code") + lit(0.5))
-          * (col("dmax") - col("dmin")) / lit(256.0))
-          .cast("float").as("xq"))
-      .groupBy(col("vec_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("d"), col("xq")))),
-        e => e.getField("xq")).as("dv"))
+  private[operators] def dequantized(s: SparkSession,
+      dir: String): DataFrame =
+    reconstruct(dimCodes(s, dir), dimStats(s, dir))
 
   /** Midpoint reconstruction of STORED code arrays against a grid
     * frame — the sidecar-driven decode the on-disk probe runs
-    * ([[Layout.ivfSqProbe]]). Identical arithmetic to [[dequantized]]
-    * (same float cast), so results over persisted codes are
-    * row-identical to the in-query search.
+    * ([[Layout.ivfSqProbe]]); the same arithmetic as [[dequantized]],
+    * so results over persisted codes are row-identical to the in-query
+    * search.
     */
   private[operators] def dequantizeAgainst(codes: DataFrame,
       grid: DataFrame): DataFrame =
-    codes
+    reconstruct(codes
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("d", "code")))
-      .select(col("vec_id"), col("d").cast("long").as("d"), col("code"))
+      .select(col("vec_id"), col("d").cast("long").as("d"), col("code")),
+      grid)
+
+  /** (vec_id, d, code) codes → (vec_id, dv): deq_d = dmin + (code +
+    * 0.5)·(dmax − dmin)/256, cast to float so both engines land the
+    * identical IEEE value and the codegen'd `vec_dot` fast path applies.
+    */
+  private def reconstruct(codes: DataFrame, grid: DataFrame): DataFrame =
+    codes
       .join(broadcast(grid), Seq("d"))
       .select(col("vec_id"), col("d"),
         (col("dmin") + (col("code") + lit(0.5))
@@ -126,67 +124,4 @@ object Sq {
       .agg(transform(
         array_sort(collect_list(struct(col("d"), col("xq")))),
         e => e.getField("xq")).as("dv"))
-
-  /** IVF-SQ8 — the FAISS `IVFSQ` composition, completing the
-    * compression × probing matrix this engine now spans (IVF-Flat,
-    * IVF-PQ, flat-ADC, flat-SQ8, IVF-SQ8): coarse cells prune the
-    * candidate set to the query's NProbe cells ([[Similarity]]'s seed
-    * quantizer and probe routing, unchanged), and ranking runs on the
-    * midpoint-reconstructed SQ8 corpus instead of raw vectors — the
-    * scan cost drops 4× next to IVF-Flat while recall stays at the
-    * cell-probing bound (grid error is far below neighbor
-    * separation; `ann_sq8_topk` measures 0.96 recall for the
-    * compression alone). Deterministic end to end, hash-oracled
-    * (`ann_ivfsq_topk`).
-    */
-  def ivfSqTopK(s: SparkSession, dir: String): DataFrame = {
-    val cents = Similarity.centroids(s, dir)
-    // assignments ⋈ reconstructions is corpus × corpus on vec_id:
-    // neither leg may broadcast at scale, and leaving the build side
-    // to equal-stats AQE was this query's one nondeterministic plan
-    // bit (observed flipping run-to-run at sf0.1). shuffle_hash on
-    // the narrow (vec_id, cell) leg pins the scale-honest choice.
-    val assigned = Similarity.cellAssignmentsWith(s, dir, cents)
-      .select(col("vec_id"), col("cell"))
-      .hint("shuffle_hash")
-      .join(dequantized(s, dir), "vec_id")
-      .select(col("vec_id"), col("cell"), col("dv").as("cv"))
-    Similarity.ivfRankOf(assigned,
-      Similarity.queryProbesWith(s, dir, cents))
-  }
-
-  /** Compressed-domain search: exact queries against the midpoint-
-    * reconstructed corpus, ranked by cosine with the same two-stage
-    * window as [[Similarity.bruteTopK]]. Asymmetric like ADC — the
-    * query never quantizes — and hash-oracled end to end
-    * (`ann_sq8_topk`): SQ8's whole value is that compressed-domain
-    * distances stay near-exact, and the oracle proves the pipeline,
-    * while SqSpec measures the recall the grid error actually costs.
-    */
-  def sqTopK(s: SparkSession, dir: String): DataFrame = {
-    val q = load(s, dir, "embeddings")
-      .filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        sqrt(call_function("vec_dot", col("embedding"), col("embedding")))
-          .as("q_nrm"))
-    val c = dequantized(s, dir)
-      .select(col("vec_id").as("neighbor_id"), col("dv"),
-        sqrt(call_function("vec_dot", col("dv"), col("dv"))).as("c_nrm"))
-    val scored = c
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", call_function("vec_dot", col("qv"), col("dv"))
-        / col("q_nrm") / col("c_nrm"))
-    val local = Window.partitionBy(col("query_id"), spark_partition_id())
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("lr", row_number().over(local))
-      .filter(col("lr") <= Similarity.K)
-      .withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= Similarity.K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
 }

@@ -140,6 +140,16 @@ object Cid {
     Array.fill[Byte](s.takeWhile(_ == Alphabet(0)).length)(0) ++ body
   }
 
+  /** Whether `s` is a CIDv0 string — base58btc of the sha2-256
+    * multihash 0x12 0x20 plus 32 digest bytes, the only form this
+    * module issues (46 characters, "Qm…").
+    */
+  def isV0(s: String): Boolean =
+    s.length == 46 && s.startsWith("Qm") && s.forall(AlphabetIndex.contains) && {
+      val b = base58Decode(s)
+      b.length == 34 && b(0) == 0x12 && b(1) == 0x20
+    }
+
   /** The 34 multihash bytes a CIDv0 string addresses (for PBLink.Hash). */
   private def multihash(cid: String): Array[Byte] = base58Decode(cid)
 

@@ -112,11 +112,9 @@ final class ContentStore(val root: Path) extends FileStore {
   }
 
   /** Stream content by CID (reference `FileSystem.fetch`). */
-  def fetch(cid: String): InputStream = {
-    val p = pathOf(cid)
-    if (!Files.exists(p)) throw new FileNotFoundException(cid)
-    Files.newInputStream(p)
-  }
+  def fetch(cid: String): InputStream =
+    stored(blobs, cid).map(Files.newInputStream(_))
+      .getOrElse(throw new FileNotFoundException(cid))
 
   /** Filesystem path of a blob — what `spark.read` is pointed at. */
   def pathOf(cid: String): Path = blobs.resolve(cid)
@@ -155,7 +153,16 @@ final class ContentStore(val root: Path) extends FileStore {
   }
 
   def exists(cid: String): Boolean =
-    Files.exists(blobs.resolve(cid)) || Files.exists(dirs.resolve(cid))
+    stored(blobs, cid).isDefined || isDir(cid)
+
+  /** `cid`'s file under `base` if it is stored there. A string that is
+    * not a CIDv0 ([[Cid.isV0]], the only form this store issues) reads
+    * as absent, so `.`, `..` or a path never resolves to a store
+    * directory itself.
+    */
+  private def stored(base: Path, cid: String): Option[Path] =
+    Some(cid).filter(Cid.isV0).map(base.resolve(_: String))
+      .filter(Files.exists(_))
 
   // --- directory ops (reference `mkdir`/`cp`/`ls`,
   //     fs/InterPlanetaryFileSystem.java:42-44,81-110) -----------------
@@ -169,21 +176,22 @@ final class ContentStore(val root: Path) extends FileStore {
     */
   def cp(src: String, dir: String, name: String): String = {
     require(exists(src), s"no such content: $src")
+    require(ContentStore.isEntryName(name),
+      s"entry name holds a tab or a line break: $name")
     writeManifest(ls(dir) + (name -> src))
   }
 
   /** List a directory: name → cid. */
   def ls(cid: String): Map[String, String] = {
-    val p = dirs.resolve(cid)
-    if (!Files.exists(p))
-      throw new FileNotFoundException(s"not a directory: $cid")
+    val p = stored(dirs, cid).getOrElse(
+      throw new FileNotFoundException(s"not a directory: $cid"))
     Files.readAllLines(p).asScala.filter(_.nonEmpty).map { line =>
       val Array(name, child) = line.split('\t')
       name -> child
     }.toMap
   }
 
-  def isDir(cid: String): Boolean = Files.exists(dirs.resolve(cid))
+  def isDir(cid: String): Boolean = stored(dirs, cid).isDefined
 
   private def writeManifest(entries: Map[String, String]): String = {
     // the directory's ADDRESS is its UnixFS node CID (golden dir CIDs
@@ -207,6 +215,12 @@ final class ContentStore(val root: Path) extends FileStore {
 }
 
 object ContentStore {
+  /** Whether `name` can be a directory entry: the manifest stores one
+    * "name\tcid" per line, so a tab or a line break would corrupt it.
+    */
+  def isEntryName(name: String): Boolean =
+    !name.exists(c => c == '\t' || c == '\n' || c == '\r')
+
   /** JVM-wide tiebreaker so same-millisecond manifests still order. */
   private val ingestSeq = new java.util.concurrent.atomic.AtomicLong(0)
 }

@@ -84,6 +84,81 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
       json(nocid).get("error").asText == "not a directory")
   }
 
+  /** A fresh directory holding one file: (file cid, dir cid). */
+  private def dirWithFile(): (String, String) = {
+    val cid = addFile(interjection, "text/plain")
+    val dir = json(post("/dir", Array.emptyByteArray)).get("cid").asText
+    val r = post("/cp", s"""{"src":"$cid","dest":"$dir","path":"a"}""".getBytes)
+    assert(r.statusCode == 200)
+    (cid, json(r).get("cid").asText)
+  }
+
+  private def assertError(r: HttpResponse[String], status: Int,
+      msg: String): Unit =
+    assert(r.statusCode == status && json(r).get("error").asText == msg,
+      s"${r.statusCode} ${r.body}")
+
+  /** The directory still lists and still accepts a copy. */
+  private def assertDirIntact(cid: String, dir: String): Unit = {
+    assert(get(s"/dir/$dir").statusCode == 200)
+    assert(post("/cp", s"""{"src":"$cid","dest":"$dir","path":"b"}"""
+      .getBytes).statusCode == 200)
+  }
+
+  test("POST /cp: a path holding a tab -> 400 invalid path, dir intact") {
+    val (cid, dir) = dirWithFile()
+    assertError(post("/cp",
+      s"""{"src":"$cid","dest":"$dir","path":"x\\ty"}""".getBytes),
+      400, "invalid path")
+    assertDirIntact(cid, dir)
+  }
+
+  test("POST /cp: a path holding a newline -> 400 invalid path, dir " +
+      "intact") {
+    val (cid, dir) = dirWithFile()
+    Seq("x\\ny", "x\\ry").foreach { p =>
+      assertError(post("/cp",
+        s"""{"src":"$cid","dest":"$dir","path":"$p"}""".getBytes),
+        400, "invalid path")
+    }
+    assertDirIntact(cid, dir)
+  }
+
+  test("POST /cp: an unknown src -> 400 src not found") {
+    val (_, dir) = dirWithFile()
+    val absent = "QmYwAPJzv5CZsnA625s3Xf2nemtYgPpHdWEz79ojWnPbdG"
+    assertError(post("/cp",
+      s"""{"src":"$absent","dest":"$dir","path":"x"}""".getBytes),
+      400, "src not found")
+    assertError(post("/cp",
+      s"""{"src":".","dest":"$dir","path":"x"}""".getBytes),
+      400, "src not found")
+  }
+
+  test("POST /cp: a missing src, dest or path -> 400 malformed query") {
+    val (cid, dir) = dirWithFile()
+    Seq(s"""{"dest":"$dir","path":"x"}""",
+        s"""{"src":"$cid","path":"x"}""",
+        s"""{"src":"$cid","dest":"$dir"}""",
+        s"""{"src":"$cid","dest":"$dir","path":7}""",
+        "not json").foreach { body =>
+      assertError(post("/cp", body.getBytes), 400, "malformed query")
+    }
+  }
+
+  test("GET /dir and POST /cp: `..`, `.` and a non-base58 cid read as " +
+      "absent") {
+    val (cid, dir) = dirWithFile()
+    Seq("..", ".", "0OIl-not-base58").foreach { c =>
+      assertError(get(s"/dir/$c"), 400, "not a directory")
+      assertError(get(s"/file/$c"), 404, "content not found")
+      assertError(post("/cp",
+        s"""{"src":"$cid","dest":"$c","path":"x"}""".getBytes),
+        400, "dest is not a directory")
+    }
+    assertDirIntact(cid, dir)
+  }
+
   test("GET /file streams bytes; unknown cid -> 404 content not found") {
     val cid = addFile(interjection, "text/plain")
     val r = get(s"/file/$cid")
@@ -119,6 +194,32 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
     val orphanless = post("/update", """{"source":"x"}""".getBytes)
     assert(orphanless.statusCode == 400 &&
       json(orphanless).get("error").asText == "missing parent")
+  }
+
+  test("POST /dataset: topics that is a string or null -> 400") {
+    val cid = addFile(interjection, "text/plain")
+    Seq("\"t\"", "null", "3").foreach { t =>
+      assertError(post("/dataset",
+        s"""{"file":"$cid","description":"d","source":"s","topics":$t}"""
+          .getBytes), 400, "topics must be an array")
+    }
+  }
+
+  test("POST /update: a non-integer parent or non-array topics -> 400") {
+    val cid = addFile(interjection, "text/plain")
+    val id = json(post("/dataset",
+      s"""{"file":"$cid","description":"d","source":"s","topics":["t"]}"""
+        .getBytes)).get("id").asText
+    assertError(post("/update", """{"parent":"abc"}""".getBytes),
+      400, "malformed parent")
+    assertError(post("/update", """{"parent":1.5}""".getBytes),
+      400, "malformed parent")
+    Seq("\"t\"", "null").foreach { t =>
+      assertError(post("/update", s"""{"parent":$id,"topics":$t}""".getBytes),
+        400, "topics must be an array")
+    }
+    assert(post("/update", s"""{"parent":$id,"topics":["u"]}""".getBytes)
+      .statusCode == 200)
   }
 
   test("POST /find: flat merged objects; malformed query (api_test post-find)") {

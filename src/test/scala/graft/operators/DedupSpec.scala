@@ -219,7 +219,7 @@ class DedupSpec extends SparkSpec {
     // near-dup pairs from a driver-side exhaustive cosine sweep at
     // SemCos — a vector's shadow count is its smaller-id SAME-cell
     // partners, nothing else
-    val cells = Similarity.cellAssignments(spark, sf).collect()
+    val cells = Ann.cellAssignments(spark, sf).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell")).toMap
     val vecs = graft.Tables.load(spark, sf, "embeddings").collect()
       .map(r => r.getAs[Long]("vec_id") ->

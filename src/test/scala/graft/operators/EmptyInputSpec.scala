@@ -80,10 +80,10 @@ class EmptyInputSpec extends SparkSpec {
         TextAnalysis.cooccurWindow(spark, emptyDir).count()),
       "hybrid" -> (() => Retrieval.hybridTopK(spark, emptyDir).count()),
       "sq_codes" -> (() => Sq.codes(spark, emptyDir).count()),
-      "sq_topk" -> (() => Sq.sqTopK(spark, emptyDir).count()),
-      "ivfsq_topk" -> (() => Sq.ivfSqTopK(spark, emptyDir).count()),
+      "sq_topk" -> (() => Ann.search(spark, emptyDir, "ann_sq8_topk").count()),
+      "ivfsq_topk" -> (() => Ann.search(spark, emptyDir, "ann_ivfsq_topk").count()),
       "ivf_filtered" -> (() =>
-        Similarity.ivfFilteredTopK(spark, emptyDir).count()),
+        Ann.search(spark, emptyDir, "ann_ivf_filtered_topk").count()),
       "drift_jsd" -> (() => Drift.sourceTokenJsd(spark, emptyDir).count()),
       "drift_entropy" -> (() => Drift.sourceEntropy(spark, emptyDir).count()),
       "weighted_sample" -> (() =>
@@ -151,13 +151,13 @@ class EmptyInputSpec extends SparkSpec {
       "text_bigram_lift" -> (() =>
         TextAnalysis.bigramLift(spark, emptyDir).count()),
       "ann_range_search" -> (() =>
-        Similarity.rangeSearch(spark, emptyDir).count()),
+        Ann.search(spark, emptyDir, "ann_range_search").count()),
       // r14 pack: frozen IVF-OPQ serving, frozen PQ readout, MJPEG
       // video decode, QAST frame verbs
       "ann_ivfopq_frozen_topk" -> (() =>
-        Opq.ivfOpqFrozenTopK(spark, emptyDir).count()),
+        Ann.search(spark, emptyDir, "ann_ivfopq_frozen_topk").count()),
       "ann_ivfopq_frozen_refined_topk" -> (() =>
-        Opq.ivfOpqFrozenRefinedTopK(spark, emptyDir).count()),
+        Ann.search(spark, emptyDir, "ann_ivfopq_frozen_refined_topk").count()),
       "pq_frozen_stats" -> (() =>
         Opq.pqFrozenStats(spark, emptyDir).count()),
       "media_video_decode" -> (() =>
@@ -175,7 +175,7 @@ class EmptyInputSpec extends SparkSpec {
       "pq_converged_cert" -> (() =>
         Opq.pqConvergedCert(spark, emptyDir).count()),
       "ann_pca_frozen_refined_topk" -> (() =>
-        Pca.annPcaFrozenRefinedTopK(spark, emptyDir).count()),
+        Ann.search(spark, emptyDir, "ann_pca_frozen_refined_topk").count()),
       "pca_frozen_variance" -> (() =>
         Pca.frozenVariance(spark, emptyDir).count()),
       "qast_project" -> (() =>

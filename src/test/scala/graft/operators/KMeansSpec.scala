@@ -79,7 +79,7 @@ class KMeansSpec extends SparkSpec {
 
   test("training moves the centroids off their seeds") {
     val trained = KMeans.train(spark, sf).collect()
-    val seeds = Similarity.centroids(spark, sf).collect()
+    val seeds = Ann.centroids(spark, sf).collect()
     assert(trained.length == seeds.length)
     // a seed vector has norm == its own embedding's norm; after three
     // mean-updates at least one centroid norm must differ (means of

@@ -43,7 +43,7 @@ class LayoutSpec extends SparkSpec {
     val out = Files.createTempDirectory("ivf_layout").toString
     Layout.writeIvfPartitioned(spark, sf, out)
 
-    val assigned = Similarity.cellAssignments(spark, sf)
+    val assigned = Ann.cellAssignments(spark, sf)
       .select("vec_id", "cell").collect()
     val back = spark.read.parquet(out)
     assert(back.count() == assigned.length) // lossless reshape
@@ -63,7 +63,7 @@ class LayoutSpec extends SparkSpec {
     val out = Files.createTempDirectory("ivf_trained").toString
     Layout.writeIvfTrainedPartitioned(spark, sf, out)
 
-    val assigned = Similarity.cellAssignmentsTrained(spark, sf)
+    val assigned = Ann.cellAssignmentsTrained(spark, sf)
       .select("vec_id", "cell").collect()
     val back = spark.read.parquet(out)
     assert(back.count() == assigned.length) // lossless reshape
@@ -73,7 +73,7 @@ class LayoutSpec extends SparkSpec {
 
     // an NProbe-cell probe, as ivfTrainedTopK would issue it
     val cells = assigned.map(_.getLong(1)).distinct.sorted
-      .take(Similarity.NProbe)
+      .take(Ann.NProbe)
     val probe = back.filter(col("part_cell").isin(cells: _*))
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.linesIterator.find(_.contains("PartitionFilters")).get
@@ -85,7 +85,7 @@ class LayoutSpec extends SparkSpec {
     // files (1.5x slack for uneven per-cell file counts)
     val touched = probe.select(input_file_name()).distinct().count()
     assert(touched.toDouble / totalFiles <=
-      1.5 * Similarity.NProbe.toDouble / cellCount,
+      1.5 * Ann.NProbe.toDouble / cellCount,
       s"probe read $touched of $totalFiles files across $cellCount cells")
   }
 
@@ -101,7 +101,7 @@ class LayoutSpec extends SparkSpec {
     // composition: same seeds, residuals, tie-breaks, DECIMAL ADC
     val probe = Layout.ivfPqProbe(spark, sf, out)
     val got = probe.collect().map(_.toSeq).toSeq
-    val expect = Pq.ivfpqTopK(spark, sf).collect().map(_.toSeq).toSeq
+    val expect = Ann.search(spark, sf, "ann_ivfpq_topk").collect().map(_.toSeq).toSeq
     assert(got == expect)
 
     // files skipped: the scan carries a literal partition filter and
@@ -121,7 +121,7 @@ class LayoutSpec extends SparkSpec {
     // directories are a fraction of the raw-vector directories (M
     // bytes vs 64 floats per row; compression narrows but cannot
     // close a 32x raw gap even at toy scale)
-    val probed = Similarity.queryProbes(spark, sf)
+    val probed = Ann.queryProbes(spark, sf)
       .select("cell").distinct().collect().map(_.getLong(0)).sorted
     def cellBytes(base: String): Long = probed.map { c =>
       val d = new java.io.File(base, s"part_cell=$c")
@@ -144,7 +144,7 @@ class LayoutSpec extends SparkSpec {
 
     val probe = Layout.ivfPqProbe(spark, sf, out)
     val got = probe.collect().map(_.toSeq).toSeq
-    val expect = Pq.ivfpqTrainedTopK(spark, sf).collect().map(_.toSeq).toSeq
+    val expect = Ann.search(spark, sf, "ann_ivfpq_trained_topk").collect().map(_.toSeq).toSeq
     assert(got == expect)
 
     // the artifact claim: the probe derives NOTHING quantizer-shaped —
@@ -156,7 +156,7 @@ class LayoutSpec extends SparkSpec {
       .collect { case l: LocalRelation => l }
     assert(locals.isEmpty,
       s"probe plan embeds collected (trained) relations: $locals")
-    val trainedLocals = Pq.ivfpqTrainedTopK(spark, sf)
+    val trainedLocals = Ann.search(spark, sf, "ann_ivfpq_trained_topk")
       .queryExecution.optimizedPlan
       .collect { case l: LocalRelation => l }
     assert(trainedLocals.nonEmpty,
@@ -231,7 +231,7 @@ class LayoutSpec extends SparkSpec {
     // same grid, same midpoint floats, same tie-breaks
     val probe = Layout.ivfSqProbe(spark, sf, out)
     val got = probe.collect().map(_.toSeq).toSeq
-    val expect = Sq.ivfSqTopK(spark, sf).collect().map(_.toSeq).toSeq
+    val expect = Ann.search(spark, sf, "ann_ivfsq_topk").collect().map(_.toSeq).toSeq
     assert(got == expect)
 
     // planning-time pruning: partition filter present, files skipped
@@ -247,7 +247,7 @@ class LayoutSpec extends SparkSpec {
 
     // the compression claim: over the same probed cells the 64-byte
     // code rows undercut the 64-float raw rows decisively
-    val probed = Similarity.queryProbes(spark, sf)
+    val probed = Ann.queryProbes(spark, sf)
       .select("cell").distinct().collect().map(_.getLong(0)).sorted
     def cellBytes(base: String): Long = probed.map { c =>
       val d = new java.io.File(base, s"part_cell=$c")
@@ -318,7 +318,7 @@ class LayoutSpec extends SparkSpec {
     Layout.writeIvfPqPartitioned(spark, sf, out)
 
     val refined = Layout.ivfPqProbeRefined(spark, sf, out).collect()
-    val expect = Pq.ivfpqRefinedTopK(spark, sf).collect()
+    val expect = Ann.search(spark, sf, "ann_ivfpq_refined_topk").collect()
     assert(refined.map(_.toSeq).toSeq == expect.map(_.toSeq).toSeq)
 
     // the shortlist comes from stored codes, so a deleted vector can't

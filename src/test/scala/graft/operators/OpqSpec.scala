@@ -75,26 +75,26 @@ class OpqSpec extends SparkSpec {
 
   test("rotated-space ADC: contract shape and recall vs exact search " +
       "measured next to the unrotated ADC forms") {
-    val rows = Opq.adcOpqTopK(spark, sf).collect()
+    val rows = Ann.search(spark, sf, "ann_opq_topk").collect()
     val byQ = rows.groupBy(_.getAs[Long]("query_id"))
     byQ.values.foreach { g =>
       assert(g.map(_.getAs[Int]("rank")).sorted.toSeq ==
-        (1 to Pq.TopK).toSeq)
+        (1 to Ann.K).toSeq)
       // ranks follow ascending ADC distance
       val sorted = g.sortBy(_.getAs[Int]("rank"))
         .map(_.getAs[Double]("adc_d2"))
       assert(sorted.zip(sorted.tail).forall { case (a, b) => a <= b })
     }
-    val brute = Similarity.bruteTopK(spark, sf).collect()
+    val brute = Ann.search(spark, sf, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     def recallOf(rs: Array[org.apache.spark.sql.Row]) = rs
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet match { case p => (brute & p).size.toDouble / brute.size }
     val opq = recallOf(rows)
-    val pqSeed = recallOf(Pq.adcTopK(spark, sf).collect())
-    val pqTrained = recallOf(Pq.adcTrainedTopK(spark, sf).collect())
-    info(f"recall@${Pq.TopK}: OPQ $opq%.3f vs trained-PQ " +
+    val pqSeed = recallOf(Ann.search(spark, sf, "ann_pq_adc_topk").collect())
+    val pqTrained = recallOf(Ann.search(spark, sf, "ann_pq_trained_topk").collect())
+    info(f"recall@${Ann.K}: OPQ $opq%.3f vs trained-PQ " +
       f"$pqTrained%.3f vs seed-PQ $pqSeed%.3f")
     // distortion, not recall, is OPQ's guaranteed axis — recall is
     // measured and pinned only against chance (≈ K/N) here and
@@ -104,7 +104,7 @@ class OpqSpec extends SparkSpec {
 
   test("refined OPQ: cosine order holds; recall dominates the " +
       "unrefined rotated-space ADC ranking") {
-    val refined = Opq.adcOpqRefinedTopK(spark, sf).collect()
+    val refined = Ann.search(spark, sf, "ann_opq_refined_topk").collect()
     refined.groupBy(_.getAs[Long]("query_id")).foreach { case (_, rs) =>
       val sorted = rs.sortBy(_.getAs[Int]("rank"))
       assert(sorted.map(_.getAs[Int]("rank")).toSeq ==
@@ -112,15 +112,15 @@ class OpqSpec extends SparkSpec {
       val cs = sorted.map(_.getAs[Double]("cos"))
       assert(cs.zip(cs.tail).forall { case (a, b) => a >= b })
     }
-    val brute = Similarity.bruteTopK(spark, sf).collect()
+    val brute = Ann.search(spark, sf, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     def recallOf(rs: Array[org.apache.spark.sql.Row]) = rs
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet match { case p => (brute & p).size.toDouble / brute.size }
     val r = recallOf(refined)
-    val base = recallOf(Opq.adcOpqTopK(spark, sf).collect())
-    info(f"refined OPQ recall@${Pq.TopK} = $r%.3f vs unrefined $base%.3f")
+    val base = recallOf(Ann.search(spark, sf, "ann_opq_topk").collect())
+    info(f"refined OPQ recall@${Ann.K} = $r%.3f vs unrefined $base%.3f")
     // the unrefined top-k is a subset of the ShortR shortlist and the
     // re-rank is exact cosine — deterministic dominance
     assert(r >= base,
@@ -163,8 +163,8 @@ class OpqSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(x => (x.getAs[Long]("query_id"), x.getAs[Long]("neighbor_id")))
       .toSet
-    val live = pairs(Opq.adcOpqTopK(spark, dir))
-    val frozen = pairs(Opq.adcOpqFrozenTopK(spark, dir))
+    val live = pairs(Ann.search(spark, dir, "ann_opq_topk"))
+    val frozen = pairs(Ann.search(spark, dir, "ann_opq_frozen_topk"))
     val overlap = (live & frozen).size.toDouble / live.size
     info(f"frozen-vs-live OPQ overlap = $overlap%.3f")
     assert(overlap >= 0.8,
@@ -185,17 +185,17 @@ class OpqSpec extends SparkSpec {
     // over residuals, not the cell pruning: IvfOpqNProbe=8 probes
     // hold 0.88 of the brute pairs, measured below).
     val dir = "/root/testdata/sf0.01"
-    val brute = Similarity.bruteTopK(spark, dir).collect()
+    val brute = Ann.search(spark, dir, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     def recallOf(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet match { case p => (brute & p).size.toDouble / brute.size }
-    val ivfopq = recallOf(Opq.ivfOpqFrozenTopK(spark, dir))
-    val refined = recallOf(Opq.ivfOpqFrozenRefinedTopK(spark, dir))
-    val opqExh = recallOf(Opq.adcOpqFrozenTopK(spark, dir))
-    val opqExhRef = recallOf(Opq.adcOpqFrozenRefinedTopK(spark, dir))
-    info(f"recall@${Pq.TopK}: frozen IVF-OPQ refined $refined%.3f " +
+    val ivfopq = recallOf(Ann.search(spark, dir, "ann_ivfopq_frozen_topk"))
+    val refined = recallOf(Ann.search(spark, dir, "ann_ivfopq_frozen_refined_topk"))
+    val opqExh = recallOf(Ann.search(spark, dir, "ann_opq_frozen_topk"))
+    val opqExhRef = recallOf(Ann.search(spark, dir, "ann_opq_frozen_refined_topk"))
+    info(f"recall@${Ann.K}: frozen IVF-OPQ refined $refined%.3f " +
       f"(unrefined $ivfopq%.3f) vs exhaustive frozen OPQ " +
       f"$opqExh%.3f (refined $opqExhRef%.3f)")
     assert(refined >= opqExh,
@@ -210,17 +210,17 @@ class OpqSpec extends SparkSpec {
       f"refined IVF-OPQ recall $refined%.3f below unrefined $ivfopq%.3f")
     // and the cell ceiling itself: the probed cells must hold most of
     // the true pairs, or the probe depth is mis-sized for the corpus
-    val probed = Similarity.queryProbesWith(spark, dir,
-      FrozenAnn.ivfCentroidFrame(spark), Opq.IvfOpqNProbe)
+    val probed = Ann.probes(spark, dir,
+      FrozenAnn.ivfCentroidFrame(spark), Ann.IvfOpqNProbe)
       .select("query_id", "cell").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cell"))).toSet
-    val cells = Similarity.cellAssignmentsWith(spark, dir,
+    val cells = Ann.assign(graft.Tables.load(spark, dir, "embeddings"),
       FrozenAnn.ivfCentroidFrame(spark))
       .select("vec_id", "cell").collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell")).toMap
     val ceiling = brute.count { case (q, nb) =>
       probed.contains((q, cells(nb))) }.toDouble / brute.size
-    info(f"cell-membership ceiling at nprobe=${Opq.IvfOpqNProbe} = " +
+    info(f"cell-membership ceiling at nprobe=${Ann.IvfOpqNProbe} = " +
       f"$ceiling%.3f")
     assert(ceiling >= 0.8,
       f"probed cells hold only $ceiling%.3f of true pairs")

@@ -122,13 +122,13 @@ class PcaSpec extends SparkSpec {
       df.select("query_id", "neighbor_id").collect()
         .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet)
         .toMap
-    val exact = pairs(Similarity.bruteTopK(spark, dir))
+    val exact = pairs(Ann.search(spark, dir, "ann_brute_topk"))
     val denom = exact.valuesIterator.map(_.size).sum.toDouble
     def recallOf(m: Map[Long, Set[Long]]): Double =
       m.iterator.map { case (q, ns) =>
         exact.get(q).fold(0)(e => ns.count(e)) }.sum / denom
-    val live = recallOf(pairs(Pca.annPcaRefinedTopK(spark, dir)))
-    val frozen = recallOf(pairs(Pca.annPcaFrozenRefinedTopK(spark, dir)))
+    val live = recallOf(pairs(Ann.search(spark, dir, AnnSpec.pcaLiveRefined)))
+    val frozen = recallOf(pairs(Ann.search(spark, dir, "ann_pca_frozen_refined_topk")))
     assert(frozen >= live,
       f"frozen basis recall $frozen%.3f fell below live $live%.3f")
     assert(frozen > 0.0, "frozen refined recall at chance level")

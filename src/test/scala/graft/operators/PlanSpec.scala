@@ -87,7 +87,7 @@ class PlanSpec extends SparkSpec {
 
   test("filtered ANN: the label predicate reaches the parquet reader " +
       "(range-shaped, so candidates shrink at row-group-skip time)") {
-    val p = physical(Similarity.ivfFilteredTopK(spark, sf))
+    val p = physical(Ann.search(spark, sf, "ann_ivf_filtered_topk"))
     assert(p.contains("GreaterThanOrEqual(label,6)"),
       p.linesIterator.filter(_.contains("PushedFilters")).mkString("\n"))
   }
@@ -145,7 +145,7 @@ class PlanSpec extends SparkSpec {
     // shuffled equi-join, never nested-loop (bruteTopK by contrast
     // HINTS broadcast, which no threshold can override).
     val p = withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-      physical(Similarity.bruteTopKBlocked(spark, sf))
+      physical(Ann.search(spark, sf, "ann_blocked_topk"))
     }
     assert(!p.contains("BroadcastNestedLoopJoin"))
     assert(!p.contains("CartesianProduct"))
@@ -251,7 +251,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ivf: centroid assignment folds via aggregation, probes broadcast") {
-    val p = physical(Similarity.ivfTopK(spark, sf))
+    val p = physical(Ann.search(spark, sf, "ann_ivf_topk"))
     // the probe is an equi-join on cell id with the tiny probe set built
     // (broadcast); the corpus never nested-loops against itself
     assert(p.contains("BroadcastHashJoin"))
@@ -411,7 +411,7 @@ class PlanSpec extends SparkSpec {
     // re-prints the cached relation under every table scan; each
     // printout carries exactly TWO benign BNLJs (the N×C scoring
     // crossJoin and the 1-row sublinear-stride count broadcast inside
-    // Similarity.centroids), so the pin is count equality: every BNLJ
+    // Ann.centroids), so the pin is count equality: every BNLJ
     // occurrence belongs to a cached-plan printout, none free-standing.
     val imr = "InMemoryRelation".r.findAllIn(p).length
     val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).length
@@ -426,7 +426,7 @@ class PlanSpec extends SparkSpec {
   test("residual IVF-PQ: ranking joins codes to broadcast LUTs on " +
       "(cell, subspace, code) — no cartesian; partial top-k via " +
       "WindowGroupLimit; aggregations two-phase") {
-    val p = physical(Pq.ivfpqTopK(spark, sf))
+    val p = physical(Ann.search(spark, sf, "ann_ivfpq_topk"))
     assert(!p.contains("CartesianProduct"), p)
     // the corpus-sized ranking join is a HASH join on the composite
     // (cell, subspace, code) key — the scan side never pairs with

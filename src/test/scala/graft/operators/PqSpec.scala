@@ -61,7 +61,7 @@ class PqSpec extends SparkSpec {
 
   test("ADC top-k: k rows per query, ranks contiguous, scores " +
       "ascending; recall vs exact search measured") {
-    val adc = Pq.adcTopK(spark, sf).collect()
+    val adc = Ann.search(spark, sf, "ann_pq_adc_topk").collect()
     val byQuery = adc.groupBy(_.getAs[Long]("query_id"))
     assert(byQuery.nonEmpty)
     byQuery.foreach { case (_, rs) =>
@@ -70,14 +70,14 @@ class PqSpec extends SparkSpec {
       val ds = sorted.map(_.getAs[Double]("adc_d2"))
       assert(ds.zip(ds.tail).forall { case (a, b) => a <= b })
     }
-    val exact = Similarity.bruteTopK(spark, sf).collect()
+    val exact = Ann.search(spark, sf, "ann_brute_topk").collect()
       .groupBy(_.getAs[Long]("query_id"))
       .view.mapValues(_.map(_.getAs[Long]("neighbor_id")).toSet).toMap
     val hits = byQuery.toSeq.map { case (q, rs) =>
       rs.map(_.getAs[Long]("neighbor_id")).count(exact(q).contains)
     }.sum
-    val recall = hits.toDouble / (exact.size * Similarity.K)
-    info(f"PQ-ADC recall@${Pq.TopK} = $recall%.3f")
+    val recall = hits.toDouble / (exact.size * Ann.K)
+    info(f"PQ-ADC recall@${Ann.K} = $recall%.3f")
     // Honest pin: 4-bit seed codebooks on a near-orthogonal corpus are
     // a coarse approximation — the contract is "clearly better than
     // random" (random recall@5 over n~550 candidates is ~0.009), with
@@ -209,17 +209,17 @@ class PqSpec extends SparkSpec {
         val ds = sorted.map(_.getAs[Double]("adc_d2"))
         assert(ds.zip(ds.tail).forall { case (a, b) => a <= b })
       }
-      val exact = Similarity.bruteTopK(spark, sf).collect()
+      val exact = Ann.search(spark, sf, "ann_brute_topk").collect()
         .groupBy(_.getAs[Long]("query_id"))
         .view.mapValues(_.map(_.getAs[Long]("neighbor_id")).toSet).toMap
       byQuery.toSeq.map { case (q, rs) =>
         rs.map(_.getAs[Long]("neighbor_id")).count(exact(q).contains)
-      }.sum.toDouble / (exact.size * Similarity.K)
+      }.sum.toDouble / (exact.size * Ann.K)
     }
-    val trained = recallOf(Pq.adcTrainedTopK(spark, sf).collect())
-    val ivfpq = recallOf(Pq.ivfpqTopK(spark, sf).collect())
-    info(f"trained-ADC recall@${Pq.TopK} = $trained%.3f, " +
-      f"IVF-PQ recall@${Pq.TopK} = $ivfpq%.3f")
+    val trained = recallOf(Ann.search(spark, sf, "ann_pq_trained_topk").collect())
+    val ivfpq = recallOf(Ann.search(spark, sf, "ann_ivfpq_topk").collect())
+    info(f"trained-ADC recall@${Ann.K} = $trained%.3f, " +
+      f"IVF-PQ recall@${Ann.K} = $ivfpq%.3f")
     assert(trained > 0.1, f"trained ADC recall $trained%.3f below noise")
     // IVF-PQ recall is bounded by the probe's cell recall (~0.4 on
     // this near-orthogonal corpus) times PQ ranking fidelity — the
@@ -229,7 +229,7 @@ class PqSpec extends SparkSpec {
 
   test("refined IVF-PQ: exact re-rank of the ADC shortlist delivers " +
       "cosine order and at-least-unrefined recall") {
-    val refined = Pq.ivfpqRefinedTopK(spark, sf).collect()
+    val refined = Ann.search(spark, sf, "ann_ivfpq_refined_topk").collect()
     refined.groupBy(_.getAs[Long]("query_id")).foreach { case (_, rs) =>
       val sorted = rs.sortBy(_.getAs[Int]("rank"))
       assert(sorted.map(_.getAs[Int]("rank")).toSeq ==
@@ -237,16 +237,16 @@ class PqSpec extends SparkSpec {
       val cs = sorted.map(_.getAs[Double]("cos"))
       assert(cs.zip(cs.tail).forall { case (a, b) => a >= b })
     }
-    val exact = Similarity.bruteTopK(spark, sf).collect()
+    val exact = Ann.search(spark, sf, "ann_brute_topk").collect()
       .groupBy(_.getAs[Long]("query_id"))
       .view.mapValues(_.map(_.getAs[Long]("neighbor_id")).toSet).toMap
     def recallOf(rows: Array[org.apache.spark.sql.Row]): Double =
       rows.groupBy(_.getAs[Long]("query_id")).toSeq.map { case (q, rs) =>
         rs.map(_.getAs[Long]("neighbor_id")).count(exact(q).contains)
-      }.sum.toDouble / (exact.size * Similarity.K)
+      }.sum.toDouble / (exact.size * Ann.K)
     val r = recallOf(refined)
-    val base = recallOf(Pq.ivfpqTopK(spark, sf).collect())
-    info(f"refined recall@${Pq.TopK} = $r%.3f vs unrefined $base%.3f")
+    val base = recallOf(Ann.search(spark, sf, "ann_ivfpq_topk").collect())
+    info(f"refined recall@${Ann.K} = $r%.3f vs unrefined $base%.3f")
     // deterministic dominance, not a tendency: any true top-k member
     // that reached the ShortR shortlist is top-k by exact cosine
     // within it, and the unrefined top-k is a shortlist subset
@@ -256,7 +256,7 @@ class PqSpec extends SparkSpec {
 
   test("refined plain PQ: cosine order holds and recall dominates the " +
       "unrefined ADC ranking (the worst refinement case)") {
-    val refined = Pq.pqRefinedTopK(spark, sf).collect()
+    val refined = Ann.search(spark, sf, "ann_pq_refined_topk").collect()
     refined.groupBy(_.getAs[Long]("query_id")).foreach { case (_, rs) =>
       val sorted = rs.sortBy(_.getAs[Int]("rank"))
       assert(sorted.map(_.getAs[Int]("rank")).toSeq ==
@@ -264,16 +264,16 @@ class PqSpec extends SparkSpec {
       val cs = sorted.map(_.getAs[Double]("cos"))
       assert(cs.zip(cs.tail).forall { case (a, b) => a >= b })
     }
-    val exact = Similarity.bruteTopK(spark, sf).collect()
+    val exact = Ann.search(spark, sf, "ann_brute_topk").collect()
       .groupBy(_.getAs[Long]("query_id"))
       .view.mapValues(_.map(_.getAs[Long]("neighbor_id")).toSet).toMap
     def recallOf(rows: Array[org.apache.spark.sql.Row]): Double =
       rows.groupBy(_.getAs[Long]("query_id")).toSeq.map { case (q, rs) =>
         rs.map(_.getAs[Long]("neighbor_id")).count(exact(q).contains)
-      }.sum.toDouble / (exact.size * Similarity.K)
+      }.sum.toDouble / (exact.size * Ann.K)
     val r = recallOf(refined)
-    val base = recallOf(Pq.adcTopK(spark, sf).collect())
-    info(f"refined plain-PQ recall@${Pq.TopK} = $r%.3f " +
+    val base = recallOf(Ann.search(spark, sf, "ann_pq_adc_topk").collect())
+    info(f"refined plain-PQ recall@${Ann.K} = $r%.3f " +
       f"vs unrefined ADC $base%.3f")
     // same dominance argument as the IVF-PQ sibling: the unrefined
     // top-k is a subset of the ShortR shortlist, and exact cosine
@@ -284,7 +284,7 @@ class PqSpec extends SparkSpec {
 
   test("trained end-to-end residual IVF-PQ: shape holds; recall does " +
       "not fall below the seed composition") {
-    val rows = Pq.ivfpqTrainedTopK(spark, sf).collect()
+    val rows = Ann.search(spark, sf, "ann_ivfpq_trained_topk").collect()
     rows.groupBy(_.getAs[Long]("query_id")).foreach { case (_, rs) =>
       val sorted = rs.sortBy(_.getAs[Int]("rank"))
       assert(sorted.map(_.getAs[Int]("rank")).toSeq ==
@@ -292,16 +292,16 @@ class PqSpec extends SparkSpec {
       val ds = sorted.map(_.getAs[Double]("adc_d2"))
       assert(ds.zip(ds.tail).forall { case (a, b) => a <= b })
     }
-    val exact = Similarity.bruteTopK(spark, sf).collect()
+    val exact = Ann.search(spark, sf, "ann_brute_topk").collect()
       .groupBy(_.getAs[Long]("query_id"))
       .view.mapValues(_.map(_.getAs[Long]("neighbor_id")).toSet).toMap
     def recallOf(rs: Array[org.apache.spark.sql.Row]): Double =
       rs.groupBy(_.getAs[Long]("query_id")).toSeq.map { case (q, g) =>
         g.map(_.getAs[Long]("neighbor_id")).count(exact(q).contains)
-      }.sum.toDouble / (exact.size * Similarity.K)
+      }.sum.toDouble / (exact.size * Ann.K)
     val trainedR = recallOf(rows)
-    val seedR = recallOf(Pq.ivfpqTopK(spark, sf).collect())
-    info(f"trained IVF-PQ recall@${Pq.TopK} = $trainedR%.3f " +
+    val seedR = recallOf(Ann.search(spark, sf, "ann_ivfpq_topk").collect())
+    info(f"trained IVF-PQ recall@${Ann.K} = $trainedR%.3f " +
       f"(seed composition $seedR%.3f)")
     // training both quantizers must not LOSE retrieval quality vs the
     // seed composition (on this corpus Lloyd's refines in place; a
@@ -314,7 +314,7 @@ class PqSpec extends SparkSpec {
 
   test("frozen-coarse ivfpq: contract shape holds; recall measured " +
       "next to the seed composition") {
-    val rows = Pq.ivfpqFrozenTopK(spark, sf).collect()
+    val rows = Ann.search(spark, sf, "ann_ivfpq_frozen_topk").collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getAs[Long]("query_id")).foreach { case (_, rs) =>
       val sorted = rs.sortBy(_.getAs[Int]("rank"))
@@ -322,14 +322,14 @@ class PqSpec extends SparkSpec {
       val ds = sorted.map(_.getAs[Double]("adc_d2"))
       assert(ds.zip(ds.tail).forall { case (a, b) => a <= b })
     }
-    val brute = Similarity.bruteTopK(spark, sf).collect()
+    val brute = Ann.search(spark, sf, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     val frozen = rows
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     val recall = (brute & frozen).size.toDouble / brute.size
-    info(f"frozen-coarse IVF-PQ recall@${Pq.TopK} = $recall%.3f")
+    info(f"frozen-coarse IVF-PQ recall@${Ann.K} = $recall%.3f")
     // nprobe/C pruning + 32x compression on a near-orthogonal corpus:
     // same floor as the seed composition
     assert(recall > 0.02, f"recall $recall%.3f below noise")

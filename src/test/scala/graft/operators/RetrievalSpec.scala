@@ -80,7 +80,7 @@ class RetrievalSpec extends SparkSpec {
       .select("doc_id", "text").collect()
       .map(r => r.getAs[Long]("doc_id") ->
         shinglesOf(r.getAs[String]("text"))).toMap
-    val semRanks = Similarity.bruteTopK(spark, sf).collect()
+    val semRanks = Ann.search(spark, sf, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")) ->
         r.getAs[Int]("rank")).toMap
     val queries = docs.keys.filter(_ % 100 == 0).toSeq.sorted

@@ -59,12 +59,12 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("brute top-k: k rows per query, ranks contiguous, cos descending") {
-    val rows = Similarity.bruteTopK(spark, sf).collect()
+    val rows = Ann.search(spark, sf, "ann_brute_topk").collect()
     val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
     assert(byQuery.nonEmpty)
     byQuery.foreach { case (_, rs) =>
       assert(rs.map(_.getAs[Int]("rank")).sorted.toSeq ==
-        (1 to Similarity.K))
+        (1 to Ann.K))
       val cs = rs.sortBy(_.getAs[Int]("rank")).map(_.getAs[Double]("cos"))
       assert(cs.zip(cs.tail).forall { case (a, b) => a >= b })
     }
@@ -115,13 +115,13 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("blocked exact top-k equals the broadcast baseline row-for-row") {
-    val brute = Similarity.bruteTopK(spark, sf).collect().toSeq
-    val blocked = Similarity.bruteTopKBlocked(spark, sf).collect().toSeq
+    val brute = Ann.search(spark, sf, "ann_brute_topk").collect().toSeq
+    val blocked = Ann.search(spark, sf, "ann_blocked_topk").collect().toSeq
     assert(blocked == brute)
   }
 
   test("LSH top-k recalls most true neighbors on planted structure") {
-    val brute = Similarity.bruteTopK(spark, sf).collect()
+    val brute = Ann.search(spark, sf, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     val lsh = Similarity.lshTopK(spark, sf).collect()
@@ -132,7 +132,7 @@ class SimilaritySpec extends SparkSpec {
     // recall floor: near-orthogonal corpus is LSH's worst case, but the
     // multi-table union must still find a solid fraction of true top-k.
     val recall = (brute & lsh).size.toDouble / brute.size
-    info(f"LSH recall@${Similarity.K} = $recall%.3f")
+    info(f"LSH recall@${Ann.K} = $recall%.3f")
     assert(recall >= 0.3, f"recall $recall%.3f below floor")
   }
 
@@ -148,9 +148,9 @@ class SimilaritySpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = pairs(Similarity.bruteTopK(spark, dir))
-    val seed = pairs(Similarity.ivfTopK(spark, dir))
-    val trained = pairs(Similarity.ivfTrainedTopK(spark, dir))
+    val brute = pairs(Ann.search(spark, dir, "ann_brute_topk"))
+    val seed = pairs(Ann.search(spark, dir, "ann_ivf_topk"))
+    val trained = pairs(Ann.search(spark, dir, "ann_ivf_trained_topk"))
     val rs = (brute & seed).size.toDouble / brute.size
     val rt = (brute & trained).size.toDouble / brute.size
     info(f"planted-cluster IVF recall: seed $rs%.3f -> trained $rt%.3f")
@@ -161,10 +161,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF top-k: exact within probed cells, measured recall vs brute") {
-    val brute = Similarity.bruteTopK(spark, sf).collect()
+    val brute = Ann.search(spark, sf, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
-    val ivf = Similarity.ivfTopK(spark, sf).collect()
+    val ivf = Ann.search(spark, sf, "ann_ivf_topk").collect()
     assert(ivf.nonEmpty)
     // shape contract: ranks contiguous from 1, cos non-increasing
     ivf.groupBy(_.getAs[Long]("query_id")).foreach { case (_, rs) =>
@@ -181,7 +181,7 @@ class SimilaritySpec extends SparkSpec {
     // NProbe/C of the data bounds expected recall near NProbe/C — this
     // pins the accuracy/cost trade-off is what IVF promises, no more.
     val recall = (brute & pairs).size.toDouble / brute.size
-    info(f"IVF recall@${Similarity.K} = $recall%.3f")
+    info(f"IVF recall@${Ann.K} = $recall%.3f")
     assert(recall >= 0.05, f"recall $recall%.3f below floor")
   }
 
@@ -215,20 +215,20 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Int]("rank"), r.getAs[Double]("cos"))).toSeq
-    val frozen = rows(Similarity.ivfFrozenTopK(spark, dir))
-    val live = rows(Similarity.ivfTrainedTopK(spark, dir))
+    val frozen = rows(Ann.search(spark, dir, "ann_ivf_frozen_topk"))
+    val live = rows(Ann.search(spark, dir, "ann_ivf_trained_topk"))
     assert(frozen.nonEmpty && frozen == live,
       s"frozen != live-trained on the training corpus " +
         s"(${frozen.size} vs ${live.size} rows)")
     // and the frozen model serves OTHER corpora (the production story:
     // a shipped quantizer outlives corpus growth) — sane contract here
-    val small = Similarity.ivfFrozenTopK(spark, sf).collect()
+    val small = Ann.search(spark, sf, "ann_ivf_frozen_topk").collect()
     assert(small.nonEmpty)
   }
 
   test("filtered search: every neighbor satisfies the predicate, ranks " +
       "stay dense, and ranking is PRE-filter (deep candidates promote)") {
-    val rows = Similarity.ivfFilteredTopK(spark, sf).collect()
+    val rows = Ann.search(spark, sf, "ann_ivf_filtered_topk").collect()
     assert(rows.nonEmpty)
     val labels = graft.Tables.load(spark, sf, "embeddings")
       .select("vec_id", "label").collect()
@@ -244,7 +244,7 @@ class SimilaritySpec extends SparkSpec {
     // pre-filter, not post-filter: post-filtering the unfiltered top-k
     // could only ever SHRINK it — some filtered result must come from
     // beyond the unfiltered top-k (promoted from deeper in the cells)
-    val unfiltered = Similarity.ivfTopK(spark, sf).collect()
+    val unfiltered = Ann.search(spark, sf, "ann_ivf_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     assert(rows.exists(r => !unfiltered(
@@ -255,7 +255,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("trained-centroid IVF keeps the probe contract and does not " +
       "degrade recall vs the seed quantizer") {
-    val brute = Similarity.bruteTopK(spark, sf).collect()
+    val brute = Ann.search(spark, sf, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     def recall(rows: Array[org.apache.spark.sql.Row]) = {
@@ -264,7 +264,7 @@ class SimilaritySpec extends SparkSpec {
         .toSet
       (brute & got).size.toDouble / brute.size
     }
-    val trained = Similarity.ivfTrainedTopK(spark, sf).collect()
+    val trained = Ann.search(spark, sf, "ann_ivf_trained_topk").collect()
     assert(trained.nonEmpty)
     // same shape contract as the seed probe
     trained.groupBy(_.getAs[Long]("query_id")).foreach { case (_, rs) =>
@@ -273,9 +273,9 @@ class SimilaritySpec extends SparkSpec {
       val cs = sorted.map(_.getAs[Double]("cos"))
       assert(cs.zip(cs.tail).forall { case (a, b) => a >= b })
     }
-    val seedR = recall(Similarity.ivfTopK(spark, sf).collect())
+    val seedR = recall(Ann.search(spark, sf, "ann_ivf_topk").collect())
     val trainedR = recall(trained)
-    info(f"IVF recall@${Similarity.K}: seeds=$seedR%.3f trained=$trainedR%.3f")
+    info(f"IVF recall@${Ann.K}: seeds=$seedR%.3f trained=$trainedR%.3f")
     // Honest pin: on this NEAR-ORTHOGONAL synthetic corpus Lloyd's
     // means shrink toward the grand mean, so training shifts cell
     // boundaries without a recall win (measured 0.44 -> 0.40 at

@@ -44,15 +44,15 @@ class SqSpec extends SparkSpec {
 
   test("IVF-SQ8: compression does not meaningfully move the " +
       "cell-probing recall bound") {
-    val brute = Similarity.bruteTopK(spark, sf).collect()
+    val brute = Ann.search(spark, sf, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     def recallOf(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet match { case p => (brute & p).size.toDouble / brute.size }
-    val ivfsq = recallOf(Sq.ivfSqTopK(spark, sf).collect())
-    val ivf = recallOf(Similarity.ivfTopK(spark, sf).collect())
-    info(f"IVF-SQ8 recall@${Similarity.K} = $ivfsq%.3f vs IVF-Flat $ivf%.3f")
+    val ivfsq = recallOf(Ann.search(spark, sf, "ann_ivfsq_topk").collect())
+    val ivf = recallOf(Ann.search(spark, sf, "ann_ivf_topk").collect())
+    info(f"IVF-SQ8 recall@${Ann.K} = $ivfsq%.3f vs IVF-Flat $ivf%.3f")
     // the bound is the probe's (NProbe/C); grid error may flip only
     // borderline pairs
     assert(ivfsq >= ivf - 0.05,
@@ -61,10 +61,10 @@ class SqSpec extends SparkSpec {
 
   test("compressed-domain search: recall vs exact search is high " +
       "(grid error is tiny next to neighbor separation)") {
-    val brute = Similarity.bruteTopK(spark, sf).collect()
+    val brute = Ann.search(spark, sf, "ann_brute_topk").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
-    val sq = Sq.sqTopK(spark, sf).collect()
+    val sq = Ann.search(spark, sf, "ann_sq8_topk").collect()
     sq.groupBy(_.getAs[Long]("query_id")).foreach { case (_, rs) =>
       val sorted = rs.sortBy(_.getAs[Int]("rank"))
       assert(sorted.map(_.getAs[Int]("rank")).toSeq == (1 to sorted.length))
@@ -75,7 +75,7 @@ class SqSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
       .toSet
     val recall = (brute & pairs).size.toDouble / brute.size
-    info(f"SQ8 recall@${Similarity.K} = $recall%.3f")
+    info(f"SQ8 recall@${Ann.K} = $recall%.3f")
     // SQ8's pitch is near-exact compressed distances: the floor is far
     // above any cell-probing method's (compare IVF ≈ NProbe/C)
     assert(recall >= 0.6, f"SQ8 recall $recall%.3f below floor")
