@@ -286,32 +286,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE's empty-relation propagation (eliding a join whose side
-      // materialized empty) fires only if its replan cycle beats the
-      // result-stage launch — a scheduler RACE, observed bistable on
-      // dedup_paragraph_overlap (boilerplate set empty by design), and
-      // the ONE AQE rewrite whose plan-text outcome is timing- rather
-      // than data-determined. Excluded for the bench session so
-      // plan_sha is deterministic; the rewrite only fires on empty
-      // sides, where its runtime effect is microseconds
-      .config("spark.sql.adaptive.optimizer.excludedRules",
-        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
-      // render plan node metadata (DataFilters/Location) untruncated:
-      // the default 100-char cut lands at a point that shifts with
-      // exprId digit width, which would make `planSha` differ between
-      // identical plans (render-only conf; no execution effect)
-      .config("spark.sql.maxMetadataStringLength", "100000")
-    Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
     // min of repeated runs per query: first-run timings carry JIT/
     // classload/page-cache noise that at these data sizes dwarfs the
     // actual plan cost (observed 2-3x swings between runs), and the
@@ -588,5 +563,43 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] sidecar write failed: $e") }
     spark.stop()
+  }
+
+  /** Local cores for the bench session: `SPARK_GRAFT_CPUS`, else all. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** The bench's session: `local[cpus]` with `cpus` shuffle partitions,
+    * AQE on, and the two confs that make [[planSha]] deterministic.
+    * Every tool that prints plans or plan shas (`ScaleReplay`,
+    * `PlanDump`, `Explain`, `JobProf`) builds this same session, so
+    * their plans are the plans the bench runs.
+    */
+  def session(cpus: String): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      // AQE's empty-relation propagation (eliding a join whose side
+      // materialized empty) fires only if its replan cycle beats the
+      // result-stage launch — a scheduler RACE, observed bistable on
+      // dedup_paragraph_overlap (boilerplate set empty by design), and
+      // the ONE AQE rewrite whose plan-text outcome is timing- rather
+      // than data-determined. Excluded for the bench session so
+      // plan_sha is deterministic; the rewrite only fires on empty
+      // sides, where its runtime effect is microseconds
+      .config("spark.sql.adaptive.optimizer.excludedRules",
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
+      // render plan node metadata (DataFilters/Location) untruncated:
+      // the default 100-char cut lands at a point that shifts with
+      // exprId digit width, which would make `planSha` differ between
+      // identical plans (render-only conf; no execution effect)
+      .config("spark.sql.maxMetadataStringLength", "100000")
+    Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -1,25 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `runMain graft.Explain <query> [sfDir]` prints the
   * formatted physical plan of one SparkEntry query and times its
-  * execution (twice, to separate plan/JIT warmup from steady state).
+  * execution (twice, to separate plan/JIT warmup from steady state),
+  * in the bench's session ([[Bench.session]]).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.cpus)
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     (1 to 2).foreach { i =>

@@ -1,29 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** Throwaway measurement harness: per-job wall time + task totals for
-  * one SparkEntry query. `runMain graft.JobProf <query> [runs]`.
+  * one SparkEntry query, in the bench's session ([[Bench.session]]).
+  * `runMain graft.JobProf <query> [runs]`.
   */
 object JobProf {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("dedup_clusters")
     val runs = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SCRATCH_OPENCOST", "4194304"))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.cpus)
 
     case class Job(id: Int, start: Long, var end: Long = 0,
       var nTasks: Int = 0, var taskMs: Long = 0, var desc: String = "")

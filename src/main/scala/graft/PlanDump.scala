@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for a list of SparkEntry queries —
   * the r16 optimization round's plan-evidence tool:
   * `runMain graft.PlanDump <outDir> <suffix> <q1,q2,...>` writes
-  * `<outDir>/<query>_<suffix>.txt` per query. Same session shape as
-  * the bench (local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus,
-  * AQE on) so the dumped plans are the plans the bench runs.
+  * `<outDir>/<query>_<suffix>.txt` per query. The session is
+  * [[Bench.session]], so the dumped plans are the plans the bench runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -15,16 +12,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Measured scaling curve — the empirical half of every "100 TB
   * shape" claim in the operator scaladocs: run the same queries on a
   * base corpus and on a K-times replica of it
@@ -20,7 +18,9 @@ import org.apache.spark.sql.SparkSession
   * the record; the judge (and the next round) read it.
   *
   * Usage: `runMain graft.ScaleReplay <baseDir> <bigDir> <out.json>
-  * <q1,q2,...>` — queries by SparkEntry name.
+  * <q1,q2,...>` — queries by SparkEntry name, run in the bench's
+  * session ([[Bench.session]]), so `plan_sha_base` at the base scale
+  * equals the bench's `plan_sha` at equal `SPARK_GRAFT_CPUS`.
   */
 object ScaleReplay {
 
@@ -59,16 +59,7 @@ object ScaleReplay {
   def main(args: Array[String]): Unit = {
     val (baseDir, bigDir, out) = (args(0), args(1), args(2))
     val names = args(3).split(',').map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.cpus)
 
     def run(name: String, dir: String): Either[String, (Double, String)] = {
       val t0 = System.nanoTime()

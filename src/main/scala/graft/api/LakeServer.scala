@@ -37,8 +37,11 @@ import graft.store.{ContentStore, DatasetMeta}
   *     "name\tcid" per line).
   *   - `/dataset`, `/update`: "malformed query" for a body that is not
   *     JSON; "topics must be an array" when `topics` is a string, a
-  *     number or null; `/update`: "malformed parent" when `parent` is
-  *     not an integer (a number or a numeric string).
+  *     number or null; `/dataset`: "file not found" when the store
+  *     does not hold `file` (an absent CID or a string that is not
+  *     one); `/update`: "malformed parent" when `parent` is not an
+  *     integer (a number or a numeric string), "parent not found" when
+  *     no dataset has that id.
   *   - A `{cid}` that is not a CIDv0 (`..`, `.`, non-base58) reads as
   *     absent: "not a directory" on `/dir`, "content not found" on
   *     `/file`.
@@ -167,6 +170,8 @@ final class LakeServer(lake: Lake, port: Int,
         missing.foreach(arr.add)
         send(ex, 400, "application/json", mapper.writeValueAsBytes(err))
       } else if (topics.isEmpty) sendError(ex, "topics must be an array")
+      else if (!lake.store.exists(body.get("file").asText))
+        sendError(ex, "file not found")
       else {
         val extras = body.properties.asScala
           .filterNot(e => requiredMeta.contains(e.getKey))
@@ -202,7 +207,7 @@ final class LakeServer(lake: Lake, port: Int,
             extra = extras)
           lake.updateDataset(parent, overrides) match {
             case Some(id) => sendJson(ex, s"""{"id":"$id"}""")
-            case None => sendError(ex, "internal server error", 500)
+            case None => sendError(ex, "parent not found")
           }
       }
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
+import graft.store.Artifact
 
 /** Data-layout operators — how 100 TB tables make their own scans
   * cheap. Two orthogonal techniques:
@@ -18,6 +19,12 @@ import graft.Tables.load
   * Together: a (month, sorted-by-day) layout answers a time-range
   * query touching 1/Nth of the partitions and a fraction of each.
   * The write pays one range shuffle, amortized over every later scan.
+  *
+  * The maintained artifacts here (the IVF-PQ layout, the z-bucket
+  * layout and its `.blooms` sidecar) change only through
+  * [[graft.store.Artifact]]: appends, deletes, compactions and sidecar
+  * merges stage and publish, and every reader and writer recovers an
+  * interrupted one first, so no crash point loses or doubles rows.
   */
 object Layout {
 
@@ -102,6 +109,7 @@ object Layout {
 
   private def writeIvfPqWith(s: SparkSession, path: String,
       centsSrc: DataFrame, trained: Boolean, dir: String): Unit = {
+    Artifact.recover(s, path)
     // the same quantizer, residuals and tie-breaks as the in-query
     // search, so a probe over the persisted codes reproduces it
     val resid = Ann.residuals(Ann.assign(load(s, dir, "embeddings"),
@@ -131,7 +139,9 @@ object Layout {
     * parquet append. [[ivfPqProbe]] picks the additions up unchanged:
     * probes after an append rank old and new vectors together, as if
     * the index had been written whole (LayoutSpec pins exactly that,
-    * plus correct cell placement and untouched sidecars).
+    * plus correct cell placement and untouched sidecars). The codes
+    * stage first and publish as a whole ([[graft.store.Artifact]]), so
+    * a crash never leaves half a shard visible.
     *
     * The standard caveat travels with the operation: appended vectors
     * are coded by a quantizer trained before they arrived, so heavy
@@ -140,13 +150,19 @@ object Layout {
     * rebuild.
     */
   def appendToIvfPq(s: SparkSession, path: String,
+      shard: DataFrame): Unit =
+    Artifact.update(s, path)(ivfPqAppend(_, shard))
+
+  /** Stage the coded `shard` as files to merge into the cell dirs. */
+  private[graft] def ivfPqAppend(st: Artifact.Stage,
       shard: DataFrame): Unit = {
-    val rcb = s.read.parquet(s"$path.codebook")
-    val cents = s.read.parquet(s"$path.centroids")
+    val s = st.spark
+    val rcb = s.read.parquet(s"${st.path}.codebook")
+    val cents = s.read.parquet(s"${st.path}.centroids")
     Pq.encodeAgainst(s, shard, cents, rcb)
       .select(col("vec_id"), col("codes"), col("cell").as("part_cell"))
       .repartition(col("part_cell"))
-      .write.partitionBy("part_cell").mode("append").parquet(path)
+      .write.partitionBy("part_cell").parquet(st.merge(""))
   }
 
   /** Probe the persisted IVF-PQ layout: route each query against the
@@ -181,26 +197,18 @@ object Layout {
 
   private def probeCandidates(s: SparkSession, dir: String,
       path: String): DataFrame = {
+    Artifact.recover(s, path)
     val rcb = s.read.parquet(s"$path.codebook")
     val cents = s.read.parquet(s"$path.centroids")
     val luts = Pq.luts(Ann.residuals(Ann.probes(s, dir, cents), cents,
       "query_id", "qv", "qrv"), "query_id", "qrv", rcb, Seq("cell"))
     val probedCells = luts.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val stored = s.read.parquet(path)
-      .filter(col("part_cell").isin(probedCells: _*))
     // tombstoned vectors leave results immediately (the anti-join runs
     // BEFORE the M-row code explode, and only over the probed cells'
-    // rows); physical removal waits for [[compactIvfPq]]. Unhinted:
-    // the tombstone set starts tiny (AQE broadcasts it) but is
-    // unbounded until a compaction, so a forced broadcast would be
-    // the same driver-OOM trap as the curation anti-join.
-    val live =
-      if (exists(s, s"$path.tombstones"))
-        stored.join(s.read.parquet(s"$path.tombstones")
-          .select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti")
-      else stored
-    val scan = live
+    // rows); physical removal waits for [[compactIvfPq]]
+    val scan = Artifact.live(s, path, s.read.parquet(path)
+        .filter(col("part_cell").isin(probedCells: _*)), "vec_id")
       .select(col("vec_id").as("neighbor_id"),
         col("part_cell").cast("long").as("cell"),
         posexplode(col("codes")))
@@ -268,44 +276,25 @@ object Layout {
     */
   def deleteFromIvfPq(s: SparkSession, path: String,
       ids: DataFrame): Unit =
-    ids.select(col("vec_id")).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path.tombstones")
+    Artifact.update(s, path)(_.tombstone(ids, "vec_id"))
 
   /** Fold the tombstones in and squash the small files appends leave:
     * rewrite each cell's directory from its live rows (one file per
-    * cell — `repartition` on the partition key), swap the rewritten
-    * tree in, drop the tombstone sidecar. Probes before and after a
-    * compaction are identical (LayoutSpec pins it) — compaction is
-    * pure physical hygiene, run when the tombstone set or the
-    * per-cell file count has grown past taste.
+    * cell — `repartition` on the partition key) into the stage, then
+    * publish it over the live tree and drop the tombstone sidecar.
+    * Probes before and after a compaction are identical (LayoutSpec
+    * pins it) — compaction is pure physical hygiene, run when the
+    * tombstone set or the per-cell file count has grown past taste.
     */
-  def compactIvfPq(s: SparkSession, path: String): Unit = {
-    val stored = s.read.parquet(path)
-      .select(col("vec_id"), col("codes"),
-        col("part_cell").cast("long").as("part_cell"))
-    val live =
-      if (exists(s, s"$path.tombstones"))
-        stored.join(s.read.parquet(s"$path.tombstones")
-          .select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti")
-      else stored
-    // materialize into a sibling tree, then swap — overwriting the
-    // directory a lazy plan is still reading from would race the scan
-    val tmp = s"$path.compacting"
-    live.repartition(col("part_cell"))
-      .write.partitionBy("part_cell").mode("overwrite").parquet(tmp)
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    fs.delete(p, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path.tombstones"), true)
-  }
-
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
+  def compactIvfPq(s: SparkSession, path: String): Unit =
+    Artifact.update(s, path) { st =>
+      Artifact.live(s, path, s.read.parquet(path)
+          .select(col("vec_id"), col("codes"),
+            col("part_cell").cast("long").as("part_cell")), "vec_id")
+        .repartition(col("part_cell"))
+        .write.partitionBy("part_cell").parquet(st.replace(""))
+      st.drop(Artifact.Tombstones)
+    }
 
   /** The classic five-stage parallel-prefix bit spread: after stage k
     * the input's low bits sit in groups separated by gaps twice as
@@ -402,7 +391,7 @@ object Layout {
     * daily ([[appendToZOrdered]]: new files land only in the buckets
     * the batch touches, nothing existing read or rewritten), compact
     * when buckets fragment ([[compactZBuckets]]: rewrites ONLY
-    * multi-file buckets via dynamic partition overwrite), and serve
+    * multi-file buckets, each replacing its live dir), and serve
     * 2-D boxes under a LITERAL partition filter ([[zOrderedProbe]])
     * instead of relying on footer stats alone.
     */
@@ -412,7 +401,6 @@ object Layout {
       curve: String = "morton"): Unit = {
     require(bucketBits % 2 == 0, "bucketBits must split evenly over 2 dims")
     require(curve == "morton" || curve == "hilbert", s"unknown curve $curve")
-    import s.implicits._
     // explicit bounds serve the BOOTSTRAP flow — create an empty
     // layout with the expected key ranges, then stream appends into
     // it — and the empty-rebuild edge (a min/max over zero rows is
@@ -425,13 +413,8 @@ object Layout {
         coalesce(max(col(keyB)).cast("long"), lit(0L))).head
       (st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3))
     }
-    Seq((keyA, keyB, amin, amax, bmin, bmax, bits, bucketBits,
-        null.asInstanceOf[Array[Double]], null.asInstanceOf[Array[Double]],
-        curve))
-      .toDF("key_a", "key_b", "amin", "amax", "bmin", "bmax",
-        "bits", "bucket_bits", "a_bounds", "b_bounds", "curve")
-      .write.mode("overwrite").parquet(s"$path.bounds")
-    zWrite(df, readZBounds(s, path), path, mode = "overwrite")
+    writeZBounds(s, df, path, ZBounds(keyA, keyB, amin, amax, bmin, bmax,
+      bits, bucketBits, None, None, curve))
   }
 
   /** Equi-DEPTH variant of [[writeZBucketed]] — the skew-proof form.
@@ -453,23 +436,31 @@ object Layout {
       keyA: String, keyB: String, path: String, bits: Int = 10,
       bucketBits: Int = 4): Unit = {
     require(bucketBits % 2 == 0, "bucketBits must split evenly over 2 dims")
-    import s.implicits._
     val probs = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
     val Array(aBs, bBs) = Array(keyA, keyB).map(k =>
       df.select(col(k).cast("double").as(k))
         .stat.approxQuantile(k, probs, 1e-4))
-    Seq((keyA, keyB, 0L, 0L, 0L, 0L, bits, bucketBits, aBs, bBs,
-        "morton"))
-      .toDF("key_a", "key_b", "amin", "amax", "bmin", "bmax",
-        "bits", "bucket_bits", "a_bounds", "b_bounds", "curve")
-      .write.mode("overwrite").parquet(s"$path.bounds")
-    zWrite(df, readZBounds(s, path), path, mode = "overwrite")
+    writeZBounds(s, df, path, ZBounds(keyA, keyB, 0L, 0L, 0L, 0L, bits,
+      bucketBits, Some(aBs), Some(bBs), "morton"))
   }
 
   private case class ZBounds(keyA: String, keyB: String, amin: Long,
       amax: Long, bmin: Long, bmax: Long, bits: Int, bucketBits: Int,
       aBounds: Option[Array[Double]], bBounds: Option[Array[Double]],
       curve: String)
+
+  /** Persist `zb` as the `.bounds` sidecar, then write `df` under it. */
+  private def writeZBounds(s: SparkSession, df: DataFrame, path: String,
+      zb: ZBounds): Unit = {
+    import s.implicits._
+    Artifact.recover(s, path)
+    Seq((zb.keyA, zb.keyB, zb.amin, zb.amax, zb.bmin, zb.bmax, zb.bits,
+        zb.bucketBits, zb.aBounds.orNull, zb.bBounds.orNull, zb.curve))
+      .toDF("key_a", "key_b", "amin", "amax", "bmin", "bmax",
+        "bits", "bucket_bits", "a_bounds", "b_bounds", "curve")
+      .write.mode("overwrite").parquet(s"$path.bounds")
+    zWrite(df, readZBounds(s, path), path, mode = "overwrite")
+  }
 
   private def readZBounds(s: SparkSession, path: String): ZBounds = {
     val r = s.read.parquet(s"$path.bounds").head
@@ -529,23 +520,25 @@ object Layout {
 
   /** Append a batch under the layout's frozen bounds: new files land
     * ONLY in the buckets the batch touches; nothing existing is read
-    * or rewritten.
+    * or rewritten. The batch stages and publishes as a whole.
     */
   def appendToZOrdered(s: SparkSession, path: String,
       batch: DataFrame): Unit =
-    zWrite(batch, readZBounds(s, path), path, mode = "append")
+    Artifact.update(s, path)(st =>
+      zWrite(batch, readZBounds(s, path), st.merge(""), mode = "overwrite"))
 
   /** Idempotent micro-batch append — the streaming ingest primitive:
     * writes the batch's rows under `zbucket=β/zbatch=batchId` with
     * DYNAMIC partition overwrite, so a crashed half-append heals on
     * replay (the recompute replaces exactly its own (bucket, batch)
     * partitions) and a full replay is a byte-level no-op rewrite.
-    * Holds at every crash point without a side ledger — the
+    * Holds at every crash point without a stage or a ledger — the
     * AdmissionStream store discipline applied to the layout.
     */
   def appendZBatch(s: SparkSession, path: String, batch: DataFrame,
       batchId: Long): Unit = {
     require(batchId >= 0, "batch ids are non-negative; -1 marks one-shot writes")
+    Artifact.recover(s, path)
     val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try zWrite(batch, readZBounds(s, path), path, mode = "overwrite",
@@ -562,42 +555,24 @@ object Layout {
     * file, re-sort and rewrite THOSE alone; single-file buckets keep
     * their files byte-identical. Returns the rewritten bucket ids
     * (empty = already compact and the call did no work — a second run
-    * is a no-op). The rewrite stages into a `.compacting` sibling and
-    * swaps per bucket dir (never reads and overwrites the same live
-    * files — the BM25 sidecar-merge discipline); single-writer
-    * assumed, as for every layout verb here.
+    * is a no-op). The rewritten buckets stage and each replaces its
+    * live bucket dir at publish ([[graft.store.Artifact]]), so a crash
+    * never drops a bucket's rows.
     */
-  def compactZBuckets(s: SparkSession, path: String): Seq[Long] = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def parquetCount(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).map { st =>
-        if (st.isDirectory) parquetCount(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) 1 else 0
-      }.sum
-    val dirty = fs.listStatus(hp).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("zbucket="))
-      .filter(st => parquetCount(st.getPath) > 1)
-      .map(_.getPath.getName.stripPrefix("zbucket=").toLong)
-      .sorted
-    if (dirty.nonEmpty) {
-      val zb = readZBounds(s, path)
-      val tmp = s"$path.compacting"
-      zWrite(s.read.parquet(path)
-          .filter(col("zbucket").isin(dirty: _*))
-          .drop("zbucket", "zbatch"),
-        zb, tmp, mode = "overwrite")
-      dirty.foreach { beta =>
-        val live = new org.apache.hadoop.fs.Path(path, s"zbucket=$beta")
-        val fresh = new org.apache.hadoop.fs.Path(tmp, s"zbucket=$beta")
-        fs.delete(live, true)
-        fs.rename(fresh, live)
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
-    dirty
-  }
+  def compactZBuckets(s: SparkSession, path: String): Seq[Long] =
+    Artifact.update(s, path) { st =>
+      val dirty = Artifact.files(s, path)
+        .filter(f => f.startsWith("zbucket=") && f.endsWith(".parquet"))
+        .groupBy(_.takeWhile(_ != '/').stripPrefix("zbucket=").toLong)
+        .collect { case (beta, files) if files.size > 1 => beta }.toSeq.sorted
+      if (dirty.nonEmpty)
+        zWrite(s.read.parquet(path)
+            .filter(col("zbucket").isin(dirty: _*))
+            .drop("zbucket", "zbatch"),
+          readZBounds(s, path), st.at(""), mode = "overwrite")
+      dirty.foreach(beta => st.replace(s"/zbucket=$beta"))
+      dirty
+    }.getOrElse(Nil)
 
   /** Graded query `zorder_probe` — the lifecycle end to end under the
     * driver's oracle: (re)write the sf's lineitem as a z-bucketed
@@ -672,6 +647,7 @@ object Layout {
   def writeBloomSidecar(s: SparkSession, path: String,
       column: String, fpp: Double = 0.01,
       rowCount: Option[Long] = None): Unit = {
+    Artifact.recover(s, path)
     val layout = s.read.parquet(path)
     // rowCount: a caller that already counted the rows it just wrote
     // (bloomPointProbeQuery's one-pass stats) skips this count's
@@ -709,26 +685,21 @@ object Layout {
     * touched keep their rows as-is; cost is one pass over the BATCH
     * plus 2^bucketBits KB-sized merges on the driver. Pair with
     * [[appendToZOrdered]]/[[appendZBatch]] and point lookups stay
-    * fresh one trigger behind the stream.
+    * fresh one trigger behind the stream. The merged sidecar stages
+    * and replaces the live one at publish.
     */
   def mergeBloomSidecar(s: SparkSession, path: String,
-      batch: DataFrame): Unit = {
+      batch: DataFrame): Unit = Artifact.update(s, path) { st =>
     import s.implicits._
     val sidecar = s"$path.blooms"
-    resolveBloomSidecar(s, sidecar)
     val old = s.read.parquet(sidecar).collect()
     require(old.nonEmpty, s"$sidecar is empty — build it with " +
       "writeBloomSidecar over a non-empty layout before merging")
     val column = old.head.getAs[String]("key_col")
     val items = old.head.getAs[Long]("est_items")
-    val bits = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(
-        old.head.getAs[Array[Byte]]("bloom"))).bitSize()
+    val bits = bloom(old.head.getAs[Array[Byte]]("bloom")).bitSize()
     val fresh = bloomsOf(zCols(batch, readZBounds(s, path)), column,
       items, bits).collect()
-    def bf(bytes: Array[Byte]) =
-      org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(bytes))
     def bytes(b: org.apache.spark.util.sketch.BloomFilter) = {
       val bos = new java.io.ByteArrayOutputStream()
       b.writeTo(bos)
@@ -740,38 +711,19 @@ object Layout {
       val beta = r.getAs[Long]("zbucket")
       val blm = freshBy.get(beta) match {
         case Some(add) =>
-          bytes(bf(r.getAs[Array[Byte]]("bloom"))
-            .mergeInPlace(bf(add)))
+          bytes(bloom(r.getAs[Array[Byte]]("bloom")).mergeInPlace(bloom(add)))
         case None => r.getAs[Array[Byte]]("bloom")
       }
       (beta, blm, column, items)
     } ++ freshBy.keySet.diff(old.map(_.getAs[Long]("zbucket")).toSet)
       .toSeq.map(beta => (beta, freshBy(beta), column, items))
-    val tmp = s"$sidecar.merging"
     merged.toSeq.toDF("zbucket", "bloom", "key_col", "est_items")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val hp = new org.apache.hadoop.fs.Path(sidecar)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(hp, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), hp)
+      .coalesce(1).write.parquet(st.replace(".blooms"))
   }
 
-  /** Complete a swap interrupted between delete and rename: if the
-    * sidecar is missing but a fully-written `.merging` sibling
-    * exists, rename it into place. Every sidecar READER calls this,
-    * so a crash inside [[mergeBloomSidecar]]'s swap heals on the next
-    * probe or merge — recovery-on-read, the same discipline as the
-    * layout's batch partitions (no state is ever only-in-flight: the
-    * delete runs strictly after the `.merging` write commits, so one
-    * complete copy exists at every crash point).
-    */
-  private def resolveBloomSidecar(s: SparkSession,
-      sidecar: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(sidecar)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$sidecar.merging")
-    if (!fs.exists(hp) && fs.exists(tmp)) fs.rename(tmp, hp)
-  }
+  private def bloom(bytes: Array[Byte]) =
+    org.apache.spark.util.sketch.BloomFilter.readFrom(
+      new java.io.ByteArrayInputStream(bytes))
 
   /** Graded query `bloom_point_probe` — the bloom sidecar under the
     * driver's oracle: z-layout on (l_partkey, l_suppkey), filters
@@ -811,14 +763,12 @@ object Layout {
     */
   def bloomPointProbe(s: SparkSession, path: String,
       key: Long): DataFrame = {
-    resolveBloomSidecar(s, s"$path.blooms")
+    Artifact.recover(s, path)
     val rows = s.read.parquet(s"$path.blooms").collect()
     val column = rows.head.getAs[String]("key_col")
-    val cand = rows.filter { r =>
-      org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
-        .mightContainLong(key)
-    }.map(_.getAs[Long]("zbucket")).toSeq
+    val cand = rows
+      .filter(r => bloom(r.getAs[Array[Byte]]("bloom")).mightContainLong(key))
+      .map(_.getAs[Long]("zbucket")).toSeq
     s.read.parquet(path)
       .filter(col("zbucket").isin(cand: _*))
       .filter(col(column) === key)
@@ -947,6 +897,7 @@ object Layout {
     */
   def zOrderedProbe(s: SparkSession, path: String, aLo: Long, aHi: Long,
       bLo: Long, bHi: Long): DataFrame = {
+    Artifact.recover(s, path)
     val zb = readZBounds(s, path)
     val width = (1L << zb.bits) - 1
     def normV(v: Long, lo: Long, hi: Long,

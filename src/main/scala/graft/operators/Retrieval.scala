@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
+import graft.store.Artifact
 
 /** Ranked lexical retrieval over the document corpus — the search
   * half a RAG pipeline pairs with the ANN index ([[Similarity]]/
@@ -125,16 +126,23 @@ object Retrieval {
     */
   private def corpusIndex(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val tf = load(s, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .cache()
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    val (tf, dl) = termFreqs(load(s, dir, "documents"))
     val stats = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl"))
     val dfreq = tf.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
     (tf, dl, stats, dfreq)
+  }
+
+  /** Per-(doc, term) frequencies of `docs` (cached: every index frame
+    * derives from them) and per-doc lengths.
+    */
+  private def termFreqs(docs: DataFrame): (DataFrame, DataFrame) = {
+    val tf = docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("tf"))
+      .cache()
+    (tf, tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
   }
 
   def bm25Top(s: SparkSession, dir: String): DataFrame = {
@@ -348,23 +356,54 @@ object Retrieval {
     * terms' buckets at PLANNING time — ≤ |terms|/[[IndexBuckets]] of
     * the postings are ever read — and scores from stored rows +
     * sidecars with ZERO corpus access.
+    *
+    * Lifecycle: appends, deletes, repairs and compactions change the
+    * index only through [[graft.store.Artifact]] — each stages its
+    * postings and sidecars and publishes them together — and every
+    * probe recovers an interrupted one first, so df/N/Σdl never
+    * disagree with the live postings after a crash.
     */
   def writeBm25Index(s: SparkSession, dir: String, path: String): Unit = {
-    val tf = load(s, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .cache()
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    tf.join(dl, "doc_id")
-      .withColumn("part_bucket",
-        pmod(xxhash64(col("term")), lit(IndexBuckets.toLong)))
-      .repartition(col("part_bucket"))
-      .write.partitionBy("part_bucket").mode("overwrite").parquet(path)
+    Artifact.recover(s, path)
+    val (tf, dl) = termFreqs(load(s, dir, "documents"))
+    writePostings(tf, dl, path)
     tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$path.lexicon")
     dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl"))
       .write.mode("overwrite").parquet(s"$path.stats")
+  }
+
+  /** The term-hash bucket a posting row of `term` lives in. */
+  private def bucketOf(term: org.apache.spark.sql.Column) =
+    pmod(xxhash64(term), lit(IndexBuckets.toLong))
+
+  /** Write `tf` ⋈ `dl` as posting rows partitioned by term bucket. */
+  private def writePostings(tf: DataFrame, dl: DataFrame,
+      to: String): Unit =
+    tf.join(dl, "doc_id")
+      .withColumn("part_bucket", bucketOf(col("term")))
+      .repartition(col("part_bucket"))
+      .write.partitionBy("part_bucket").mode("overwrite").parquet(to)
+
+  /** The lexicon of the index at `path`, once an interrupted
+    * maintenance write is recovered: every probe starts here.
+    */
+  private def lexiconOf(s: SparkSession, path: String): DataFrame = {
+    Artifact.recover(s, path)
+    s.read.parquet(s"$path.lexicon")
+  }
+
+  /** Live posting rows of `qterms`' terms joined to them, scanned
+    * from those terms' buckets only (a literal filter over the bounded
+    * bucket set, like the IVF probe's cell pruning).
+    */
+  private def probed(s: SparkSession, path: String,
+      qterms: DataFrame): DataFrame = {
+    val buckets = qterms.select(bucketOf(col("term")).as("b")).distinct()
+      .collect().map(_.getLong(0)).sorted
+    Artifact.live(s, path, s.read.parquet(path)
+        .filter(col("part_bucket").isin(buckets: _*)), "doc_id")
+      .join(broadcast(qterms), "term")
   }
 
   /** Append a batch of NEW documents to an existing index — the
@@ -376,70 +415,37 @@ object Retrieval {
     * (df adds per term, N and Σdl add), so the append is: one batch
     * pass writes its posting rows into the bucket directories, the
     * lexicon merges by full-outer term join (df_old + df_batch), and
-    * the 1-row stats add — each sidecar rewritten via a sibling-swap
-    * (materialize first, never overwrite what a lazy plan still
-    * reads). Probes after any append sequence are row-identical to an
-    * index written whole over the union (RetrievalSpec pins it);
-    * batch doc_ids are assumed new, as with the vector shards.
+    * the 1-row stats add — postings and both sidecars stage and publish
+    * together ([[graft.store.Artifact]]). Probes after any append
+    * sequence are row-identical to an index written whole over the
+    * union (RetrievalSpec pins it); batch doc_ids are assumed new, as
+    * with the vector shards.
     */
   def appendBm25Batch(s: SparkSession, path: String,
+      docs: DataFrame): Unit =
+    Artifact.update(s, path)(bm25Append(_, docs))
+
+  /** Stage `docs`' postings to merge and the grown lexicon and stats. */
+  private[graft] def bm25Append(st: Artifact.Stage,
       docs: DataFrame): Unit = {
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .cache()
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    tf.join(dl, "doc_id")
-      .withColumn("part_bucket",
-        pmod(xxhash64(col("term")), lit(IndexBuckets.toLong)))
-      .repartition(col("part_bucket"))
-      .write.partitionBy("part_bucket").mode("append").parquet(path)
-    swapIn(s, s"$path.lexicon",
-      s.read.parquet(s"$path.lexicon").withColumnRenamed("df", "df_old")
-        .join(tf.groupBy(col("term")).agg(count(lit(1)).as("df_new")),
-          Seq("term"), "full_outer")
-        .select(col("term"),
-          (coalesce(col("df_old"), lit(0L)) +
-            coalesce(col("df_new"), lit(0L))).as("df")))
-    swapIn(s, s"$path.stats",
-      s.read.parquet(s"$path.stats")
-        .crossJoin(dl.agg(count(lit(1)).as("n_new"),
-          coalesce(sum(col("dl")), lit(0L)).as("sumdl_new")))
-        .select((col("n") + col("n_new")).as("n"),
-          (col("sumdl") + col("sumdl_new")).as("sumdl")))
+    val (s, path) = (st.spark, st.path)
+    val (tf, dl) = termFreqs(docs)
+    writePostings(tf, dl, st.merge(""))
+    s.read.parquet(s"$path.lexicon").withColumnRenamed("df", "df_old")
+      .join(tf.groupBy(col("term")).agg(count(lit(1)).as("df_new")),
+        Seq("term"), "full_outer")
+      .select(col("term"),
+        (coalesce(col("df_old"), lit(0L)) +
+          coalesce(col("df_new"), lit(0L))).as("df"))
+      .write.parquet(st.replace(".lexicon"))
+    s.read.parquet(s"$path.stats")
+      .crossJoin(dl.agg(count(lit(1)).as("n_new"),
+        coalesce(sum(col("dl")), lit(0L)).as("sumdl_new")))
+      .select((col("n") + col("n_new")).as("n"),
+        (col("sumdl") + col("sumdl_new")).as("sumdl"))
+      .write.parquet(st.replace(".stats"))
     tf.unpersist()
   }
-
-  /** Sibling-swap a sidecar: materialize the merged frame into a
-    * sibling first — overwriting the directory a lazy plan still
-    * reads would race the scan — then rename into place.
-    */
-  private def swapIn(s: SparkSession, sidecar: String,
-      merged: DataFrame): Unit = {
-    val tmp = s"$sidecar.merging"
-    merged.write.mode("overwrite").parquet(tmp)
-    val p = new org.apache.hadoop.fs.Path(sidecar)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-  }
-
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** Anti-join a posting frame against the tombstone sidecar (when
-    * present) — every probe's delete visibility. Unhinted: the
-    * tombstone set starts tiny but is unbounded until a compaction.
-    */
-  private def liveRows(s: SparkSession, path: String,
-      rows: DataFrame): DataFrame =
-    if (exists(s, s"$path.tombstones"))
-      rows.join(s.read.parquet(s"$path.tombstones")
-        .select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-    else rows
 
   /** Delete documents from the persisted index — the harder sibling
     * of [[Layout.deleteFromIvfPq]], because BM25's statistics are
@@ -457,103 +463,75 @@ object Retrieval {
     * the decremented lexicon IS the remainder's lexicon). Replaying
     * a delete is a no-op: only ids not already tombstoned subtract,
     * so the at-least-once caller can't double-decrement; deleting an
-    * absent id subtracts nothing by construction.
-    *
-    * Atomicity caveat (shared with [[appendBm25Batch]]): the two
-    * sidecar swaps and the tombstone append are separate filesystem
-    * operations, and the replay guard keys on the tombstones (written
-    * LAST) — so a crash mid-delete can leave sidecars decremented
-    * without the tombstones, where a naive retry double-decrements.
-    * The recovery is [[repairBm25Sidecars]]: both sidecars are pure
-    * functions of the live posting rows, so one scan rebuilds them
-    * exactly. Single-writer maintenance is assumed, as everywhere in
-    * the layout family.
+    * absent id subtracts nothing by construction. Both sidecars and
+    * the tombstones stage and publish together
+    * ([[graft.store.Artifact]]), so no crash point leaves the
+    * statistics decremented without the tombstones.
     */
   def deleteFromBm25(s: SparkSession, path: String,
-      ids: DataFrame): Unit = {
-    val prior =
-      if (exists(s, s"$path.tombstones"))
-        s.read.parquet(s"$path.tombstones")
-          .select(col("doc_id")).distinct()
-      else ids.select(col("doc_id")).limit(0)
-    val del = ids.select(col("doc_id")).distinct()
-      .join(prior, Seq("doc_id"), "left_anti").cache()
+      ids: DataFrame): Unit = Artifact.update(s, path) { st =>
+    val del = Artifact.live(s, path, ids.select(col("doc_id")).distinct(),
+      "doc_id").cache()
     val delPost = s.read.parquet(path).join(del, "doc_id").cache()
-    swapIn(s, s"$path.lexicon",
-      s.read.parquet(s"$path.lexicon")
-        .join(delPost.groupBy(col("term")).agg(count(lit(1)).as("df_del")),
-          Seq("term"), "left")
-        .select(col("term"),
-          (col("df") - coalesce(col("df_del"), lit(0L))).as("df"))
-        .filter(col("df") > 0))
-    swapIn(s, s"$path.stats",
-      s.read.parquet(s"$path.stats")
-        .crossJoin(delPost.select(col("doc_id"), col("dl")).distinct()
-          .agg(count(lit(1)).as("n_del"),
-            coalesce(sum(col("dl")), lit(0L)).as("dl_del")))
-        .select((col("n") - col("n_del")).as("n"),
-          (col("sumdl") - col("dl_del")).as("sumdl")))
-    // partitioned append — a coalesce(1) here would serialize every
-    // delete batch through one task, which at a 100 TB index (where a
-    // policy purge can tombstone millions of ids) is a single-writer
-    // bottleneck. Small-file buildup is the existing compaction
-    // verb's job: compactBm25 drops the whole tombstone sidecar.
-    del.write.mode("append").parquet(s"$path.tombstones")
+    s.read.parquet(s"$path.lexicon")
+      .join(delPost.groupBy(col("term")).agg(count(lit(1)).as("df_del")),
+        Seq("term"), "left")
+      .select(col("term"),
+        (col("df") - coalesce(col("df_del"), lit(0L))).as("df"))
+      .filter(col("df") > 0)
+      .write.parquet(st.replace(".lexicon"))
+    s.read.parquet(s"$path.stats")
+      .crossJoin(delPost.select(col("doc_id"), col("dl")).distinct()
+        .agg(count(lit(1)).as("n_del"),
+          coalesce(sum(col("dl")), lit(0L)).as("dl_del")))
+      .select((col("n") - col("n_del")).as("n"),
+        (col("sumdl") - col("dl_del")).as("sumdl"))
+      .write.parquet(st.replace(".stats"))
+    st.tombstone(del, "doc_id")
     delPost.unpersist()
     del.unpersist()
   }
 
   /** Rebuild BOTH statistics sidecars from the live posting rows —
-    * the recovery verb for any suspected sidecar inconsistency (a
-    * crash mid-[[deleteFromBm25]], a hand-edited lexicon): df, N and
-    * Σdl are pure functions of the index contents, so one scan over
-    * live rows reproduces them exactly. On a healthy index this is a
-    * no-op (RetrievalSpec pins probes identical before/after; and
-    * that a deliberately corrupted sidecar is healed).
+    * the recovery verb for a sidecar that disagrees with the postings
+    * (a hand-edited or clobbered lexicon): df, N and Σdl are pure
+    * functions of the index contents, so one scan over live rows
+    * reproduces them exactly. On a healthy index this is a no-op
+    * (RetrievalSpec pins probes identical before/after; and that a
+    * deliberately corrupted sidecar is healed).
     */
-  def repairBm25Sidecars(s: SparkSession, path: String): Unit = {
-    val live = liveRows(s, path, s.read.parquet(path)
-      .select(col("doc_id"), col("term"), col("tf"), col("dl"))).cache()
-    swapIn(s, s"$path.lexicon",
-      live.groupBy(col("term")).agg(count(lit(1)).as("df")))
-    swapIn(s, s"$path.stats",
+  def repairBm25Sidecars(s: SparkSession, path: String): Unit =
+    Artifact.update(s, path) { st =>
+      val live = Artifact.live(s, path, s.read.parquet(path)
+        .select(col("doc_id"), col("term"), col("tf"), col("dl")),
+        "doc_id").cache()
+      live.groupBy(col("term")).agg(count(lit(1)).as("df"))
+        .write.parquet(st.replace(".lexicon"))
       live.select(col("doc_id"), col("dl")).distinct()
         .agg(count(lit(1)).as("n"),
-          coalesce(sum(col("dl")), lit(0L)).as("sumdl")))
-    live.unpersist()
-  }
+          coalesce(sum(col("dl")), lit(0L)).as("sumdl"))
+        .write.parquet(st.replace(".stats"))
+      live.unpersist()
+    }
 
   /** Fold the tombstones in and squash the small files appends leave —
     * same physical-hygiene contract as [[Layout.compactIvfPq]]:
-    * rewrite each bucket from its live rows into a sibling tree, swap
-    * it in, drop the tombstone sidecar. The statistics sidecars are
-    * already exact (the delete maintained them), so probes before and
-    * after a compaction are identical (RetrievalSpec pins it).
+    * rewrite each bucket from its live rows into the stage, publish it
+    * over the live tree, drop the tombstone sidecar. The statistics
+    * sidecars are already exact (the delete maintained them), so
+    * probes before and after a compaction are identical (RetrievalSpec
+    * pins it).
     */
-  def compactBm25(s: SparkSession, path: String): Unit = {
-    val live = liveRows(s, path, s.read.parquet(path)
-      .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-        col("part_bucket").cast("long").as("part_bucket")))
-    val tmp = s"$path.compacting"
-    live.repartition(col("part_bucket"))
-      .write.partitionBy("part_bucket").mode("overwrite").parquet(tmp)
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    fs.delete(p, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path.tombstones"), true)
-  }
+  def compactBm25(s: SparkSession, path: String): Unit =
+    Artifact.update(s, path) { st =>
+      Artifact.live(s, path, s.read.parquet(path)
+          .select(col("doc_id"), col("term"), col("tf"), col("dl"),
+            col("part_bucket").cast("long").as("part_bucket")), "doc_id")
+        .repartition(col("part_bucket"))
+        .write.partitionBy("part_bucket").parquet(st.replace(""))
+      st.drop(Artifact.Tombstones)
+    }
 
-  /** Probe the persisted index for `terms` (or, when empty, the same
-    * derived rarest-[[NumQueryTerms]] workload as [[bm25Top]], read
-    * from the lexicon sidecar — no corpus access either way). The
-    * scan partition-prunes to the query terms' buckets (a literal
-    * filter over the bounded bucket set, like the IVF probe's cell
-    * pruning) and the scoring tail is shared with the in-query
-    * operator, so results are row-identical to [[bm25Top]]
-    * (RetrievalSpec pins it).
-    */
   /** Multi-term disjunctive probe over the persisted index — the
     * serving form of [[bm25MultiTop]]: the same 12-rarest-terms
     * workload derives from the LEXICON sidecar (no corpus access),
@@ -566,7 +544,7 @@ object Retrieval {
     * the postings.
     */
   def bm25MultiProbe(s: SparkSession, path: String): DataFrame = {
-    val lexicon = s.read.parquet(s"$path.lexicon")
+    val lexicon = lexiconOf(s, path)
     val qrank = Window.orderBy(col("df"), col("term"))
     val qterms = lexicon
       .orderBy(col("df"), col("term"))
@@ -575,31 +553,26 @@ object Retrieval {
       .withColumn("query_id",
         ((col("qrank") - 1) / MultiTermLen).cast("long") + 1)
       .select(col("query_id"), col("term"), col("df"))
-    val buckets = qterms
-      .select(pmod(xxhash64(col("term")), lit(IndexBuckets.toLong))
-        .as("b")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val scored = liveRows(s, path, s.read.parquet(path)
-        .filter(col("part_bucket").isin(buckets: _*)))
-      .join(broadcast(qterms), "term")
+    val scored = probed(s, path, qterms)
       .crossJoin(broadcast(s.read.parquet(s"$path.stats")))
       .withColumn("tscore", bm25Score)
     rankMulti(scored, requireAll = false)
   }
 
+  /** Probe the persisted index for `terms` (or, when empty, the same
+    * derived rarest-[[NumQueryTerms]] workload as [[bm25Top]], read
+    * from the lexicon sidecar — no corpus access either way). The
+    * scan partition-prunes to the query terms' buckets and the
+    * scoring tail is shared with the in-query operator, so results
+    * are row-identical to [[bm25Top]] (RetrievalSpec pins it).
+    */
   def bm25Probe(s: SparkSession, path: String,
       terms: Seq[String] = Nil): DataFrame = {
-    val lexicon = s.read.parquet(s"$path.lexicon")
+    val lexicon = lexiconOf(s, path)
     val qterms = (if (terms.nonEmpty) lexicon.filter(col("term").isin(terms: _*))
       else lexicon.orderBy(col("df"), col("term")).limit(NumQueryTerms))
       .select(col("term"), col("df"))
-    val buckets = qterms
-      .select(pmod(xxhash64(col("term")), lit(IndexBuckets.toLong))
-        .as("b")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val postings = liveRows(s, path, s.read.parquet(path)
-        .filter(col("part_bucket").isin(buckets: _*)))
-      .join(broadcast(qterms), "term")
+    val postings = probed(s, path, qterms)
       .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("df"))
     scoreAndRank(postings, s.read.parquet(s"$path.stats"))
   }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
-import graft.operators.Layout
+import graft.operators.{Layout, Retrieval}
+import graft.store.Artifact
 
 /** Continuous vector-index ingest — the streaming face of the IVF-PQ
   * maintenance verbs: micro-batches of (vec_id, embedding) rows are
@@ -16,14 +17,15 @@ import graft.operators.Layout
   * retrain-rebuild deliberately.
   *
   * Delivery: `foreachBatch` is at-least-once on retry, so a replayed
-  * micro-batch would double-append its rows into the index. Ingest is
-  * made idempotent AT BATCH GRANULARITY with commit markers: each
-  * applied batch writes an empty `path.ingested/<batchId>` marker
-  * first thing on the next-retry path — a batch whose marker exists
-  * is skipped whole. Markers are tiny, monotone, and live next to the
-  * index (same filesystem atomicity domain); a compaction may clear
-  * them along with tombstones once the stream's checkpoint has moved
-  * past.
+  * micro-batch would double-append its rows into the index (and, for
+  * BM25, add its df/N/Σdl twice). Ingest is exactly-once per batch id
+  * through [[graft.store.Artifact.update]]: the batch's codes or
+  * postings, its grown sidecars and its `path.ingested/<batchId>`
+  * ledger mark stage together and publish as one commit. A replay
+  * after any crash point first finishes or throws away the
+  * interrupted stage, then either finds the mark and skips, or finds
+  * the index untouched and applies the batch once. Marks are empty
+  * files next to the index (same filesystem atomicity domain).
   *
   * State: none (the stateless shard-coding pass), so the only
   * streaming state is the source offset checkpoint — the operator
@@ -31,69 +33,47 @@ import graft.operators.Layout
   */
 object IndexStream {
 
-  /** Apply one micro-batch to the index, exactly once per `batchId`:
-    * skip if this batch's marker exists, else append then mark.
-    */
+  /** Apply one micro-batch to the index, exactly once per `batchId`. */
   private[streaming] def ingestBatch(path: String, batch: DataFrame,
-      batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(s"$path.ingested/$batchId")
-    val fs = marker.getFileSystem(conf)
-    if (!fs.exists(marker)) {
-      Layout.appendToIvfPq(s, path, batch)
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, true).close()
-    }
-  }
+      batchId: Long): Unit =
+    Artifact.update(batch.sparkSession, path,
+      Some(Artifact.Ingested -> batchId))(Layout.ivfPqAppend(_, batch))
 
   /** Start ingesting a streaming (vec_id, embedding) frame into the
     * IVF-PQ layout at `path`. The caller owns the returned query's
     * lifecycle (and its checkpoint location, via the usual writeStream
     * options on a wrapping builder if desired).
     */
-  def ingest(vecs: DataFrame, path: String): StreamingQuery = {
-    require(vecs.isStreaming, "ingest expects a streaming frame")
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(path, batch, batchId)
-      }
-      .start()
-  }
+  def ingest(vecs: DataFrame, path: String): StreamingQuery =
+    start(vecs, "ingest")(ingestBatch(path, _, _))
 
   /** The text-index sibling of [[ingestBatch]]: apply one micro-batch
     * of (doc_id, text) rows to a persisted BM25 index
     * ([[graft.operators.Retrieval.appendBm25Batch]] — postings append
     * plus the EXACT df/N/Σdl statistics merge), exactly once per
-    * `batchId` via the same commit markers.
+    * `batchId` through the same ledger.
     */
   private[streaming] def ingestBm25Batch(path: String, batch: DataFrame,
-      batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(s"$path.ingested/$batchId")
-    val fs = marker.getFileSystem(conf)
-    if (!fs.exists(marker)) {
-      graft.operators.Retrieval.appendBm25Batch(s, path, batch)
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, true).close()
-    }
-  }
+      batchId: Long): Unit =
+    Artifact.update(batch.sparkSession, path,
+      Some(Artifact.Ingested -> batchId))(Retrieval.bm25Append(_, batch))
 
   /** Start ingesting a streaming (doc_id, text) frame into the BM25
     * index at `path`. Same contract as [[ingest]]: probes see new
     * documents — scored against EXACTLY updated corpus statistics —
     * one trigger after arrival.
     */
-  def ingestBm25(docs: DataFrame, path: String): StreamingQuery = {
-    require(docs.isStreaming, "ingestBm25 expects a streaming frame")
-    docs.writeStream
+  def ingestBm25(docs: DataFrame, path: String): StreamingQuery =
+    start(docs, "ingestBm25")(ingestBm25Batch(path, _, _))
+
+  private def start(rows: DataFrame, verb: String)(
+      apply: (DataFrame, Long) => Unit): StreamingQuery = {
+    require(rows.isStreaming, s"$verb expects a streaming frame")
+    rows.writeStream
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBm25Batch(path, batch, batchId)
+        apply(batch, batchId)
       }
       .start()
   }

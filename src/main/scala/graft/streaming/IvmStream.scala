@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.operators.Ivm
+import graft.store.Artifact
+import graft.store.Artifact.Applied
 
 /** Continuously-maintained materialized aggregate view — the streaming
   * face of [[Ivm.maintain]], mirroring [[Scd2Stream]] for the
@@ -15,7 +16,8 @@ import graft.operators.Ivm
   *
   * On-disk state is one parquet family under `path`:
   * `cur/tick=<t>/` (the full maintained view as of tick t), visibility
-  * gated by a `<path>.applied/<t>` marker — readers resolve the
+  * gated by a `<path>.applied/<t>` mark in the
+  * [[graft.store.Artifact]] ledger — readers resolve the
   * highest marked tick, a crash mid-write leaves the previous tick
   * authoritative, and the replay's whole-directory overwrite heals any
   * half-written state (the [[Scd2Stream]]/[[ZorderStream]]
@@ -30,31 +32,12 @@ object IvmStream {
 
   case class TickStats(batchId: Long, nGroups: Long)
 
-  private def fsOf(s: SparkSession, p: String) =
-    new Path(p).getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private def markerDir(path: String) = s"$path.applied"
-
-  private[streaming] def lastApplied(s: SparkSession, path: String): Long = {
-    val md = new Path(markerDir(path))
-    val f = fsOf(s, markerDir(path))
-    if (!f.exists(md)) -1L
-    else f.listStatus(md).map(_.getPath.getName.toLong)
-      .foldLeft(-1L)(math.max)
-  }
-
-  private def mark(s: SparkSession, path: String, tick: Long): Unit = {
-    val f = fsOf(s, path)
-    f.mkdirs(new Path(markerDir(path)))
-    f.create(new Path(markerDir(path), tick.toString), true).close()
-  }
-
   /** Write the initial view (keys ++ n ++ sums shape) as the bootstrap
     * snapshot.
     */
   def bootstrap(view0: DataFrame, path: String): Unit = {
     view0.write.mode("overwrite").parquet(s"$path/cur/tick=-1")
-    mark(view0.sparkSession, path, -1L)
+    Artifact.mark(view0.sparkSession, path, Applied, -1L)
   }
 
   /** Fold one micro-batch at tick `batchId`. Idempotent at every crash
@@ -66,29 +49,23 @@ object IvmStream {
   private[graft] def applyTick(path: String, keys: Seq[String],
       sums: Seq[String], batch: DataFrame, batchId: Long): TickStats = {
     val s = batch.sparkSession
-    if (lastApplied(s, path) >= batchId) {
-      // already-committed replay: report stats only if the snapshot
-      // still exists — vacuum(keep=1) may have deleted an older tick,
-      // and an idempotent skip must not throw on a multi-batch
-      // restart window (nGroups = -1 flags "committed, vacuumed")
-      val snap = new Path(s"$path/cur/tick=$batchId")
-      val n = if (fsOf(s, path).exists(snap))
-        s.read.parquet(snap.toString).count()
-      else -1L
-      return TickStats(batchId, n)
+    val ticks = Artifact.marks(s, path, Applied)
+    val snap = s"$path/cur/tick=$batchId"
+    // already-committed replay: report stats only if the snapshot
+    // still exists — vacuum(keep=1) may have deleted an older tick,
+    // and an idempotent skip must not throw on a multi-batch restart
+    // window (nGroups = -1 flags "committed, vacuumed")
+    if (ticks.lastOption.exists(_ >= batchId))
+      TickStats(batchId,
+        if (Artifact.exists(s, snap)) s.read.parquet(snap).count() else -1L)
+    else {
+      val cur = s.read.parquet(
+        s"$path/cur/tick=${ticks.filter(_ < batchId).max}")
+      Ivm.maintain(cur, batch, keys, sums).write.mode("overwrite").parquet(snap)
+      val n = s.read.parquet(snap).count()
+      Artifact.mark(s, path, Applied, batchId)
+      TickStats(batchId, n)
     }
-    val prev = {
-      val md = new Path(markerDir(path))
-      fsOf(s, markerDir(path)).listStatus(md)
-        .map(_.getPath.getName.toLong).filter(_ < batchId)
-        .foldLeft(Long.MinValue)(math.max)
-    }
-    val cur = s.read.parquet(s"$path/cur/tick=$prev")
-    Ivm.maintain(cur, batch, keys, sums)
-      .write.mode("overwrite").parquet(s"$path/cur/tick=$batchId")
-    val n = s.read.parquet(s"$path/cur/tick=$batchId").count()
-    mark(s, path, batchId)
-    TickStats(batchId, n)
   }
 
   /** Start maintaining the view at `path` (bootstrapped beforehand)
@@ -117,7 +94,7 @@ object IvmStream {
 
   /** The current view: the highest marked tick's snapshot. */
   def currentOf(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"$path/cur/tick=${lastApplied(s, path)}")
+    s.read.parquet(s"$path/cur/tick=${Artifact.lastMark(s, path, Applied)}")
 
   /** Time travel: the view AS OF a committed tick — per-tick
     * snapshots double as a retained history (the Iceberg/Delta
@@ -129,13 +106,12 @@ object IvmStream {
     * horizon.
     */
   def asOf(s: SparkSession, path: String, tick: Long): DataFrame = {
-    val f = fsOf(s, markerDir(path))
-    require(f.exists(new Path(markerDir(path), tick.toString)),
+    require(Artifact.marks(s, path, Applied).contains(tick),
       s"ivm asOf: tick $tick was never committed at $path")
-    val snap = new Path(s"$path/cur/tick=$tick")
-    require(fsOf(s, path).exists(snap),
+    val snap = s"$path/cur/tick=$tick"
+    require(Artifact.exists(s, snap),
       s"ivm asOf: tick $tick is committed but vacuumed — raise " +
         s"vacuum(keep) to retain a longer time-travel horizon")
-    s.read.parquet(snap.toString)
+    s.read.parquet(snap)
   }
 }

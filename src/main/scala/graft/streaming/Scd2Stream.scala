@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.operators.Merge
+import graft.store.Artifact
+import graft.store.Artifact.Applied
 
 /** Continuously-maintained SCD2 dimension — the streaming face of
   * [[Merge.scd2Apply]], mirroring [[ZorderStream]] for the layout:
@@ -18,7 +19,8 @@ import graft.operators.Merge
   * `hist/tick=<t>/` (closed rows, append-only across ticks, each tick
   * dir written ONCE by overwrite) and `cur/tick=<t>/` (the full
   * current snapshot as of tick t). A tick is visible only once its
-  * marker exists (`<path>.applied/<t>`): readers resolve the highest
+  * mark exists in the [[graft.store.Artifact]] ledger
+  * (`<path>.applied/<t>`): readers resolve the highest
   * marked tick, so a crash mid-write leaves the previous tick
   * authoritative and the replay's overwrite of BOTH dirs heals any
   * half-written state — the [[ZorderStream]] discipline (markers gate
@@ -39,34 +41,12 @@ object Scd2Stream {
   case class TickStats(batchId: Long, nClosed: Long, nInserted: Long,
       nCurrent: Long)
 
-  private def fsOf(s: SparkSession, p: String) =
-    new Path(p).getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private def markerDir(path: String) = s"$path.applied"
-
-  /** Highest tick whose completion marker exists; -1 after bootstrap
-    * only.
-    */
-  private[streaming] def lastApplied(s: SparkSession, path: String): Long = {
-    val md = new Path(markerDir(path))
-    val f = fsOf(s, markerDir(path))
-    if (!f.exists(md)) -1L
-    else f.listStatus(md).map(_.getPath.getName.toLong)
-      .foldLeft(-1L)(math.max)
-  }
-
-  private def mark(s: SparkSession, path: String, tick: Long): Unit = {
-    val f = fsOf(s, path)
-    f.mkdirs(new Path(markerDir(path)))
-    f.create(new Path(markerDir(path), tick.toString), true).close()
-  }
-
   /** Write the initial dimension (already in (key, val, valid_from,
     * valid_to) shape, all rows current) as the bootstrap snapshot.
     */
   def bootstrap(dim0: DataFrame, path: String): Unit = {
     dim0.write.mode("overwrite").parquet(s"$path/cur/tick=-1")
-    mark(dim0.sparkSession, path, -1L)
+    Artifact.mark(dim0.sparkSession, path, Applied, -1L)
   }
 
   /** Apply one micro-batch at tick `batchId` (valid_from/valid_to
@@ -77,43 +57,36 @@ object Scd2Stream {
   private[graft] def applyTick(path: String, key: String, valCol: String,
       batch: DataFrame, batchId: Long): TickStats = {
     val s = batch.sparkSession
-    val f = fsOf(s, path)
     val ts = batchId + 1
-    if (lastApplied(s, path) >= batchId) {
+    val ticks = Artifact.marks(s, path, Applied)
+    val (curP, histP) = (s"$path/cur/tick=$batchId", s"$path/hist/tick=$batchId")
+    if (ticks.lastOption.exists(_ >= batchId)) {
       // replay after full success: state is durable — re-read the
       // accounting rather than re-deriving it against LATER state.
       // vacuum(keep=1) may have deleted this committed tick's
       // snapshot (multi-batch restart window): the idempotent skip
       // must not throw, so report -1 counts for "committed, vacuumed"
-      val curP = new Path(s"$path/cur/tick=$batchId")
-      if (!f.exists(curP))
+      if (!Artifact.exists(s, curP))
         return TickStats(batchId, -1L, -1L, -1L)
-      val cur = s.read.parquet(curP.toString)
-      val histP = new Path(s"$path/hist/tick=$batchId")
+      val cur = s.read.parquet(curP)
       val nClosed =
-        if (f.exists(histP)) s.read.parquet(histP.toString).count() else 0L
+        if (Artifact.exists(s, histP)) s.read.parquet(histP).count() else 0L
       val opened = cur.filter(col("valid_from") === ts).count()
       return TickStats(batchId, nClosed, opened - nClosed, cur.count())
     }
-    val prev = {
-      val md = new Path(markerDir(path))
-      fsOf(s, markerDir(path)).listStatus(md)
-        .map(_.getPath.getName.toLong).filter(_ < batchId)
-        .foldLeft(Long.MinValue)(math.max)
-    }
-    val cur = s.read.parquet(s"$path/cur/tick=$prev")
+    val cur = s.read.parquet(
+      s"$path/cur/tick=${ticks.filter(_ < batchId).max}")
     val out = Merge.scd2Apply(cur, batch, key, valCol, ts)
       .localCheckpoint(eager = true) // two consumers + two writes
     val closed = out.filter(col("valid_to").isNotNull)
     val newCur = out.filter(col("valid_to").isNull)
     val nClosed = closed.count()
     if (nClosed > 0) // an empty tick dir would pollute discovery
-      closed.write.mode("overwrite").parquet(s"$path/hist/tick=$batchId")
-    newCur.write.mode("overwrite").parquet(s"$path/cur/tick=$batchId")
-    val nCurrent = s.read.parquet(s"$path/cur/tick=$batchId").count()
-    val opened = s.read.parquet(s"$path/cur/tick=$batchId")
-      .filter(col("valid_from") === ts).count()
-    mark(s, path, batchId)
+      closed.write.mode("overwrite").parquet(histP)
+    newCur.write.mode("overwrite").parquet(curP)
+    val nCurrent = s.read.parquet(curP).count()
+    val opened = s.read.parquet(curP).filter(col("valid_from") === ts).count()
+    Artifact.mark(s, path, Applied, batchId)
     TickStats(batchId, nClosed, opened - nClosed, nCurrent)
   }
 
@@ -141,41 +114,20 @@ object Scd2Stream {
     * stay as the committed-tick ledger. Idempotent: a second vacuum
     * finds nothing below the cutoff.
     */
-  def vacuum(s: SparkSession, path: String, keep: Int = 1): Unit = {
-    require(keep >= 1, "the replay frontier must be retained")
-    val f = fsOf(s, path)
-    val curRoot = new Path(s"$path/cur")
-    val md = new Path(markerDir(path))
-    if (!f.exists(curRoot) || !f.exists(md)) return
-    val committed = f.listStatus(md).map(_.getPath.getName.toLong).sorted
-    if (committed.length <= keep) return
-    val cutoff = committed.takeRight(keep).min
-    f.listStatus(curRoot).foreach { st =>
-      val t = st.getPath.getName.split("=").last.toLong
-      if (t < cutoff && committed.contains(t))
-        f.delete(st.getPath, true)
-    }
-  }
+  def vacuum(s: SparkSession, path: String, keep: Int = 1): Unit =
+    Artifact.vacuum(s, path, keep)
 
   /** The current snapshot: the highest marked tick's `cur` dir. */
   def currentOf(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"$path/cur/tick=${lastApplied(s, path)}")
+    s.read.parquet(s"$path/cur/tick=${Artifact.lastMark(s, path, Applied)}")
 
   /** The full version table: closed segments of every COMMITTED tick
     * plus the latest snapshot — equals the batch-chained
     * [[Merge.scd2Apply]] result over the same ticks.
     */
-  def historyOf(s: SparkSession, path: String): DataFrame = {
-    val last = lastApplied(s, path)
-    val f = fsOf(s, path)
-    val histRoot = new Path(s"$path/hist")
-    val ticks =
-      if (f.exists(histRoot))
-        f.listStatus(histRoot).map(_.getPath)
-          .filter(_.getName.split("=").last.toLong <= last)
-          .map(_.toString).toSeq
-      else Seq.empty[String]
-    ticks.foldLeft(currentOf(s, path))((acc, p) =>
-      acc.unionByName(s.read.parquet(p)))
-  }
+  def historyOf(s: SparkSession, path: String): DataFrame =
+    Artifact.marks(s, path, Applied).map(t => s"$path/hist/tick=$t")
+      .filter(Artifact.exists(s, _))
+      .foldLeft(currentOf(s, path))((acc, p) =>
+        acc.unionByName(s.read.parquet(p)))
 }

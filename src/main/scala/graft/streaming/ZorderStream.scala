@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.operators.Layout
+import graft.store.Artifact
 
 /** Continuous ingest into a z-bucketed relational layout — the
   * streaming face of [[Layout]]'s z-order lifecycle, mirroring
@@ -19,8 +20,9 @@ import graft.operators.Layout
   * writes its rows under `zbucket=β/zbatch=batchId` with dynamic
   * partition overwrite ([[Layout.appendZBatch]]), so a crashed
   * half-append is healed by the replay overwriting exactly its own
-  * (bucket, batch) partitions. The commit marker on top only saves
-  * the replay's write work; correctness never depends on it.
+  * (bucket, batch) partitions. The `path.ingested/<batchId>` ledger
+  * mark on top ([[graft.store.Artifact.once]]) only saves the replay's
+  * write work; correctness never depends on it.
   * Compaction ([[Layout.compactZBuckets]]) folds accumulated batch
   * partitions into one file per bucket — run it while the stream is
   * quiesced, the single-writer discipline every layout verb here
@@ -40,25 +42,20 @@ object ZorderStream {
     * delivery: inserting the same keys sets the same bits, so a
     * replayed merge is a bit-level no-op and the sidecar stays BYTE
     * equal to a from-scratch rebuild at every crash point (a crash
-    * inside the sidecar swap itself heals on the next read —
-    * [[Layout.mergeBloomSidecar]]'s recovery-on-read).
+    * inside the sidecar's publish is finished by the next reader —
+    * [[graft.store.Artifact]]'s recovery on read).
     */
   private[streaming] def ingestBatch(path: String, batch: DataFrame,
       batchId: Long, maintainBlooms: Boolean = false,
       maintainZones: Seq[String] = Nil): Unit = {
     val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(s"$path.ingested/$batchId")
-    val fs = marker.getFileSystem(conf)
-    if (!fs.exists(marker)) {
+    Artifact.once(s, path, Artifact.Ingested, batchId) {
       Layout.appendZBatch(s, path, batch, batchId)
       if (maintainBlooms) Layout.mergeBloomSidecar(s, path, batch)
       // zone rows are per-file and append-only; a crash-and-replay can
       // duplicate a file's row, which zoneProbe's distinct absorbs —
       // so the fold is idempotent in effect, like the bloom bit-OR
       if (maintainZones.nonEmpty) Layout.mergeZoneMap(s, path, maintainZones)
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, true).close()
     }
   }
 

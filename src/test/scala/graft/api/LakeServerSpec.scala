@@ -222,6 +222,25 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
       .statusCode == 200)
   }
 
+  test("POST /update: an unknown parent -> 400 parent not found") {
+    assertError(post("/update",
+      """{"parent":"987654321","source":"x"}""".getBytes),
+      400, "parent not found")
+  }
+
+  test("POST /dataset: an absent CIDv0 file -> 400 file not found") {
+    val absent = "QmYwAPJzv5CZsnA625s3Xf2nemtYgPpHdWEz79ojWnPbdG"
+    assertError(post("/dataset",
+      s"""{"file":"$absent","description":"d","source":"s","topics":[]}"""
+        .getBytes), 400, "file not found")
+  }
+
+  test("POST /dataset: a file that is not a CID -> 400 file not found") {
+    assertError(post("/dataset",
+      """{"file":"not-a-cid","description":"d","source":"s","topics":[]}"""
+        .getBytes), 400, "file not found")
+  }
+
   test("POST /find: flat merged objects; malformed query (api_test post-find)") {
     val cid = addFile(csv, "text/csv")
     json(post("/dataset",

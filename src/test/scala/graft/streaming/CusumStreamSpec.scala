@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.store.Artifact
 import graft.operators.Temporal
 
 /** Streamed CUSUM maintenance must agree with the batch operator at
@@ -89,7 +90,7 @@ class CusumStreamSpec extends SparkSpec {
     // landed but BEFORE its marker — the frontier stays authoritative
     IvmStream.currentOf(spark, root).limit(1)
       .write.mode("overwrite").parquet(s"$root/cur/tick=3")
-    assert(IvmStream.lastApplied(spark, root) == 2L)
+    assert(Artifact.lastMark(spark, root, Artifact.Applied) == 2L)
     assert(change() == (("2024-01-10", 20L)),
       "a half-written snapshot leaked into the readout")
 

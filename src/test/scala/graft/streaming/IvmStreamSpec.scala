@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.store.Artifact
 
 /** Streaming IVM: streamed delta folds equal a from-scratch recompute,
   * a replayed delta folds exactly once, a crash between the snapshot
@@ -100,7 +101,7 @@ class IvmStreamSpec extends SparkSpec {
     // NO marker — the previous tick stays authoritative
     IvmStream.currentOf(spark, path).limit(1)
       .write.mode("overwrite").parquet(s"$path/cur/tick=1")
-    assert(IvmStream.lastApplied(spark, path) == 0L)
+    assert(Artifact.lastMark(spark, path, Artifact.Applied) == 0L)
 
     // the replay overwrites its own tick dir and commits
     IvmStream.applyTick(path, Seq("cust"), Seq("s"),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.store.Artifact
 import graft.operators.Merge
 
 /** Streaming SCD2 maintenance: streamed ticks equal batch chaining,
@@ -85,7 +86,7 @@ class Scd2StreamSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$path/hist/tick=1")
 
     // readers never see the wreck: tick 0 is still authoritative
-    assert(Scd2Stream.lastApplied(spark, path) == 0L)
+    assert(Artifact.lastMark(spark, path, Artifact.Applied) == 0L)
 
     // the replay overwrites both dirs and completes the tick
     Scd2Stream.applyTick(path, "id", "bal", b2, 1L)
@@ -106,7 +107,7 @@ class Scd2StreamSpec extends SparkSpec {
     assert(fs.list().sorted.toSeq == Seq("tick=1"),
       s"expected only the frontier, got ${fs.list().toSeq}")
     assert(sortedRows(Scd2Stream.historyOf(spark, path)) == before)
-    assert(Scd2Stream.lastApplied(spark, path) == 1L)
+    assert(Artifact.lastMark(spark, path, Artifact.Applied) == 1L)
 
     // idempotent; and the frontier replay still short-circuits
     Scd2Stream.vacuum(spark, path, keep = 1)

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 import graft.operators.Layout
+import graft.store.Artifact
 
 /** Streaming z-layout ingest: a bootstrap layout fills from a
   * micro-batched stream, equals the one-shot batch reshape, replays
@@ -114,13 +115,18 @@ class ZorderStreamSpec extends SparkSpec {
     assert(sidecarBytes() == before,
       "re-merging the same batch changed the sidecar")
 
-    // crash between delete and rename: only `.merging` exists.
-    // The next reader completes the swap and serves exact results.
+    // crash between delete and rename: only the committed stage holds
+    // the sidecar. The next reader completes the swap and serves exact
+    // results.
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sc = new org.apache.hadoop.fs.Path(s"$path.blooms")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.blooms.merging")
-    assert(fs.rename(sc, tmp))
+    Artifact.onStep = st =>
+      if (st == "replace\t.blooms deleted") throw new IllegalStateException
+    try intercept[IllegalStateException](
+      Layout.mergeBloomSidecar(spark, path, late))
+    finally Artifact.onStep = _ => ()
+    assert(!fs.exists(sc))
     assert(Layout.bloomPointProbe(spark, path, 7777777L).count() == 5)
     assert(sidecarBytes() == before, "recovered sidecar differs")
   }

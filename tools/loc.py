@@ -7,7 +7,7 @@ count, a line holding code before or after a comment does. So deleting
 comments never shows as a code reduction.
 
 Usage:
-    python3 tools/loc.py                      # src/main + the ANN group
+    python3 tools/loc.py                      # src/main + every group
     python3 tools/loc.py --group ann          # one named group, per file
     python3 tools/loc.py FILE...              # any files
     python3 tools/loc.py --root DIR ...       # count another checkout
@@ -21,6 +21,7 @@ import os
 import sys
 
 OPS = "src/main/scala/graft/operators"
+STREAMING = "src/main/scala/graft/streaming"
 
 GROUPS = {
     # the nearest-neighbor family: the AnnSpec pipeline, its coder,
@@ -28,6 +29,14 @@ GROUPS = {
     "ann": [f"{OPS}/{n}.scala" for n in (
         "Ann", "Similarity", "Pq", "Opq", "Sq", "KMeans", "Pca",
         "FrozenAnn")],
+    # the maintained on-disk index artifacts: the layouts and the BM25
+    # index, the streams that ingest into them or keep tick views, and
+    # the one stage-and-publish commit they share
+    "artifacts": [f"{OPS}/{n}.scala" for n in ("Layout", "Retrieval")] +
+                 [f"{STREAMING}/{n}.scala" for n in (
+                     "IndexStream", "ZorderStream", "IvmStream",
+                     "Scd2Stream")] +
+                 ["src/main/scala/graft/store/Artifact.scala"],
 }
 
 
