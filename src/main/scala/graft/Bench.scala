@@ -305,7 +305,9 @@ object Bench {
     // from run 2 on — cold_sec is the only number that includes the
     // actual training (plus ordinary first-run JIT/classload noise;
     // for non-trainer queries that noise is all it adds). The min
-    // stays the official metric — methodology unchanged.
+    // stays the official metric — methodology unchanged. Serve replays
+    // the same way across requests: the memo and the cached frames
+    // outlive each /query until the data dir's listing changes.
     val coldSec = scala.collection.mutable.Map[String, Double]()
     // per query: Right(best seconds, runs taken) or Left(error class).
     // Failures surface by NAME in the final line — a broken query must

@@ -61,7 +61,7 @@ object FreezeAnn {
     val iocb = graft.operators.Opq
       .ivfOpqResidualCodebookFrom(spark, dir,
         cents.toSeq.toDF("cent_id", "cvec"), rot,
-        memoKey = s"ivfopqcb-freeze|$dir")
+        memoKey = dir -> "ivfopqcb-freeze")
       .as[(Long, Long, Array[Float])].collect().sortBy(e => (e._1, e._2))
 
     val centText = cents.map { case (id, v) =>

@@ -59,9 +59,11 @@ import graft.store.{ContentStore, DatasetMeta}
   *   POST /query/{name}   → [row objects]; body = optional
   *                          {"sf_dir": "..."} overriding the server's
   *                          default scale-factor directory. Unknown
-  *                          name → 404; non-JSON body → "malformed
-  *                          query"; a query that throws → "failed
-  *                          query" (same contract as /extract).
+  *                          name → 404; a body that is not a JSON
+  *                          object, or an `sf_dir` that is not a
+  *                          string → "malformed query"; a missing or
+  *                          unreadable dir, or a query that throws →
+  *                          "failed query" (same contract as /extract).
   *
   * Query results stream through `toJSON.toLocalIterator` — rows travel
   * driver→client in chunks without materializing the result set,
@@ -284,74 +286,53 @@ final class LakeServer(lake: Lake, port: Int,
   /** The analytic surface over HTTP: run a named `SparkEntry` query and
     * stream its rows. Results travel through the same lazy
     * `toJSON.toLocalIterator` path as `/extract` — a long result set
-    * never materializes on the driver. Operator-internal caches (plus
-    * memoized trainer outputs) are released when the LAST in-flight
-    * query finishes — a refcount, not per-request: the server runs a
-    * fixed thread pool, and a per-request release would let one
-    * request's cleanup clear the trained memo mid-flight of a
-    * concurrent one, degenerating a burst of trained-index queries to
-    * one retraining per request. Idle means released, so a long-lived
-    * `Serve` process still pins no executor memory between bursts;
-    * within a burst multi-consumer frames share one materialization.
+    * never materializes on the driver.
     *
-    * Enter/exit both run under ONE monitor so the zero-check and the
-    * release are atomic with respect to increments: with a bare
-    * atomic counter, request B's increment could land between A's
-    * `decrementAndGet() == 0` and A's `release()`, clearing caches
-    * mid-flight of B — the exact degeneration the refcount exists to
-    * prevent, just narrowed to a window. Under the lock that
-    * interleaving is impossible: B either enters before A's check
-    * (count stays > 0, nothing released) or blocks until the release
-    * completes and then retrains against a consistently-empty cache.
-    * The release itself is cheap (cache unpins + a map clear), so
-    * holding the monitor across it never stalls the pool meaningfully.
+    * Work is kept across requests. [[OperatorCaches.admit]] runs
+    * first: it lists the request's `sf_dir` and, when the listing
+    * changed since it was last seen, drops the dir's trained models
+    * and the cached frames. So a frame or a model is only replayed
+    * while its dir's listing is unchanged: a client whose `sf_dir` is
+    * untouched replays them, one whose files were rewritten gets
+    * fresh answers. After the request,
+    * [[OperatorCaches.settle]] clears the frames (not the models) only
+    * if they hold more than Spark's storage memory. Every Spark job of
+    * the request runs in one job group, named by a request id and
+    * described by the query name.
     */
-  private val queriesInFlight =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-  private val inFlightLock = new Object
-
-  /** Test seam: runs INSIDE the lock between the zero-check and the
-    * release. A spec parks here to prove a concurrent [[enterQuery]]
-    * blocks rather than interleaving. Never set in production.
-    */
-  @volatile private[api] var beforeRelease: () => Unit = () => ()
-
-  private[api] def enterQuery(): Unit =
-    inFlightLock.synchronized { queriesInFlight.incrementAndGet() }
-
-  private[api] def exitQuery(): Unit = inFlightLock.synchronized {
-    if (queriesInFlight.decrementAndGet() == 0) {
-      beforeRelease()
-      OperatorCaches.release(lake.spark)
-    }
-  }
-
   private def postQuery(ex: HttpExchange, name: String): Unit =
     SparkEntry.queries.get(name) match {
       case None => sendError(ex, "unknown query", 404)
       case Some(fn) =>
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8).trim
-        val dir: Either[String, String] =
-          if (body.isEmpty) Right(sfDir)
-          else Try(mapper.readTree(body)).toOption match {
-            case Some(node) if node.isObject =>
-              Right(Option(node.get("sf_dir")).map(_.asText).getOrElse(sfDir))
-            case _ => Left("malformed query")
-          }
+        val dir: Option[String] =
+          if (body.isEmpty) Some(sfDir)
+          else Try(mapper.readTree(body)).toOption.filter(_.isObject)
+            .flatMap(node => Option(node.get("sf_dir")) match {
+              case None => Some(sfDir)
+              case Some(d) => Option.when(d.isTextual)(d.asText)
+            })
         dir match {
-          case Left(err) => sendError(ex, err)
-          case Right(d) =>
-            enterQuery()
+          case None => sendError(ex, "malformed query")
+          case Some(d) =>
+            val sc = lake.spark.sparkContext
+            sc.setJobGroup(s"query-${requestSeq.incrementAndGet()}", name)
             try {
+              OperatorCaches.admit(lake.spark, d)
               val df = fn(lake.spark, d)
               streamJsonArray(ex, df.toJSON.toLocalIterator().asScala)
             } catch {
               case scala.util.control.NonFatal(t) =>
                 System.err.println(s"[lake-server] query $name: $t")
                 sendError(ex, "failed query")
-            } finally exitQuery()
+            } finally {
+              sc.clearJobGroup()
+              OperatorCaches.settle(lake.spark)
+            }
         }
     }
+
+  private val requestSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
   private def getDir(ex: HttpExchange, cid: String): Unit =
     if (!lake.store.isDir(cid)) sendError(ex, "not a directory")

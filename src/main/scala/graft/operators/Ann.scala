@@ -495,14 +495,14 @@ object Ann {
 
   /** The shared residual codebook: the PQ seed rule over the residual
     * frame, refined by the per-subspace Lloyd's loop when trained
-    * (memoized under `pqrescb|dir`, shared with the layout writer),
+    * (memoized under `dir -> pqrescb`, shared with the layout writer),
     * or the frozen IVF-OPQ literal.
     */
   private def residualCodebook(s: SparkSession, dir: String, spec: AnnSpec,
       resid: DataFrame): DataFrame = (spec.transform, spec.model) match {
     case (Rotation, Frozen) => FrozenAnn.ivfOpqCodebookFrame(s)
     case (NoTransform, Trained) =>
-      trainedResidualCodebook(s, resid, memoKey = s"pqrescb|$dir")
+      trainedResidualCodebook(s, resid, memoKey = dir -> "pqrescb")
     case (NoTransform, _) => Pq.seedCodebook(resid, "vec_id", "rv")
     case _ => unsupported(spec)
   }
@@ -510,11 +510,11 @@ object Ann {
   /** Lloyd's over a (vec_id, cell, rv) residual frame, seeded by the PQ
     * seed rule over the same residuals. `memoKey` names what the
     * residuals are a function of: under the trained coarse quantizer
-    * that is `dir` alone (`pqrescb|dir`), so the in-query search and
+    * that is `dir` alone (`dir -> pqrescb`), so the in-query search and
     * the layout writer share one memo entry.
     */
   private[operators] def trainedResidualCodebook(s: SparkSession,
-      resid: DataFrame, memoKey: String): DataFrame =
+      resid: DataFrame, memoKey: (String, String)): DataFrame =
     Pq.trainedCodebookFrom(s,
       Pq.slicedFrame(resid, "vec_id", "rv", "vec_id", "sub"),
       Pq.seedCodebook(resid, "vec_id", "rv"), orderFree = false,

@@ -106,10 +106,10 @@ object Bpe {
   private[operators] def trainedMerges(s: SparkSession, dir: String)
       : Seq[(Int, String, String, Long)] =
     // session-memoized like the k-means/PQ trainers: the merge list is
-    // deterministic per immutable dir (ties break on (count, l, r)),
-    // so the round loop runs once per process and tokenize/train
+    // deterministic per dir listing (ties break on (count, l, r)),
+    // so the round loop runs once per listing and tokenize/train
     // consumers replay the collected rows
-    OperatorCaches.trainedMemo(s"bpe|$dir|$TrainRounds") {
+    OperatorCaches.trainedMemo(dir -> s"bpe|$TrainRounds") {
       trainedMergesLoop(s, dir)
     }
 
@@ -158,7 +158,7 @@ object Bpe {
 
   private[operators] def trainedMergesConverged(s: SparkSession,
       dir: String): Seq[(Int, String, String, Long)] =
-    OperatorCaches.trainedMemo(s"bpeconv|$dir|$StopFrac|$MaxRounds") {
+    OperatorCaches.trainedMemo(dir -> s"bpeconv|$StopFrac|$MaxRounds") {
       trainedMergesConvergedLoop(s, dir)
     }
 

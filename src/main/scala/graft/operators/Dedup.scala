@@ -103,8 +103,8 @@ object Dedup {
     * self-joins it (ngramJaccard both legs, incremental's shard and
     * corpus sides) — uncached, each leg re-scans the corpus and
     * re-explodes the shingles; Spark's plan-keyed CacheManager keeps
-    * one entry across all of them. Long-lived sessions release via
-    * [[OperatorCaches.release]].
+    * one entry across all of them, replayed across requests while
+    * the dir's listing is unchanged ([[OperatorCaches]]).
     */
   private def shingleIndex(s: SparkSession, dir: String): DataFrame =
     docShingles(s, dir)
@@ -228,7 +228,7 @@ object Dedup {
     // projections defeat ReuseExchange — uncached, each one re-scans
     // the corpus and re-explodes the shingles. 24 B/posting, the
     // narrow-frame cache discipline (DistributedPrefix / semantic);
-    // long-lived sessions release via OperatorCaches.
+    // kept across requests under the OperatorCaches lifecycle.
     val inv = base
       .select(col("doc_id"), size(col("sh")).as("n"),
         explode(col("sh")).as("shingle"))

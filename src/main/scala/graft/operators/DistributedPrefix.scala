@@ -37,8 +37,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *     at 100 TB the cache is the narrow (keys + weights) frame, not
   *     the corpus text. Spark's `CacheManager` keys on the
   *     canonicalized plan, so repeated runs of the same query reuse
-  *     one entry instead of accumulating; long-lived sessions release
-  *     via [[OperatorCaches.release]]. Pinned in PackSpec /
+  *     one entry instead of accumulating; a serving session keeps it
+  *     while the dir's listing is unchanged ([[OperatorCaches]]).
+  *     Pinned in PackSpec /
   *     PipelineSpec (reuse evidence = executed-plan nodes: no
   *     FileScan outside the cache, one outer range exchange).
   *   - The broadcast pid join must stay map-side: a shuffle here

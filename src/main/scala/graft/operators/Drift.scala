@@ -30,8 +30,8 @@ object Drift {
     // CACHED: both JSD join legs and the entropy/total consumers read
     // this vocab-sized frame; uncached each would re-scan and
     // re-explode the corpus. Plan-keyed CacheManager shares one entry
-    // across calls; long-lived sessions release via
-    // [[OperatorCaches.release]].
+    // across calls, kept across requests under the [[OperatorCaches]]
+    // lifecycle.
     val counts = load(s, dir, "documents")
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) > 0)

@@ -93,10 +93,10 @@ object KMeans {
       orderFree: Boolean): DataFrame = {
     import s.implicits._
     // session-memoized: the collected quantizer (~corpus/37 rows) is
-    // deterministic per (immutable dir, mode), so the 3-round corpus
-    // training runs once per process however many trained consumers
+    // deterministic per (dir listing, mode), so the 3-round corpus
+    // training runs once per listing however many trained consumers
     // (IVF probe, residual coder, layout writer) ask for it
-    val rows = OperatorCaches.trainedMemo(s"kmeans|$dir|$orderFree") {
+    val rows = OperatorCaches.trainedMemo(dir -> s"kmeans|$orderFree") {
       val corpus = load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       var cents = Ann.centroids(s, dir) // (cent_id, cvec) seeds

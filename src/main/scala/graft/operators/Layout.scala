@@ -115,7 +115,7 @@ object Layout {
     val resid = Ann.residuals(Ann.assign(load(s, dir, "embeddings"),
       centsSrc), centsSrc, "vec_id", "cv", "rv").cache()
     val rcb =
-      if (trained) Ann.trainedResidualCodebook(s, resid, s"pqrescb|$dir")
+      if (trained) Ann.trainedResidualCodebook(s, resid, dir -> "pqrescb")
       else Pq.seedCodebook(resid, "vec_id", "rv")
     Pq.codeArrays(resid, rcb)
       .select(col("vec_id"), col("codes"), col("cell").as("part_cell"))

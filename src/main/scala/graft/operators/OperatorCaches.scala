@@ -1,18 +1,33 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Lifecycle for the narrow mid-plan caches several operators pin
-  * (`DistributedPrefix`'s ranged frame, `Dedup.semantic`'s cell
-  * assignments, `Pq`'s residual frames, `Dedup.ngramJaccardPrefix`'s
-  * sorted shingle hashes): Spark's `CacheManager` keys entries on the
-  * canonicalized plan, so REPEATED runs of the same query reuse one
-  * entry rather than accumulating — but each DISTINCT consumer plan
-  * pins its own entry until the session ends. Batch drivers
-  * (`Bench`, `Verify`) already clear between queries; a long-lived
-  * session (`Serve`) should call [[release]] at its own quiet points
-  * (e.g. after an analytics burst), accepting that the next query
-  * per shape re-materializes its cache once.
+/** What a session keeps between queries, and when it stops keeping it.
+  *
+  * Two kinds of state outlive a query:
+  *   - cached frames: the narrow mid-plan caches operators pin
+  *     (`Graph.tradeEdges`, `Dedup`'s shingle index, `Pq`'s residual
+  *     frames, `DistributedPrefix`'s ranged frame). Spark's
+  *     `CacheManager` keys them on the canonicalized plan, so a repeat
+  *     of the same query replays the same entry;
+  *   - the trainer memo ([[trainedMemo]]): collected trainer outputs
+  *     (k-means centroids, PQ codebooks, BPE merge lists), keyed by
+  *     (data dir, trainer).
+  *
+  * Invariant: a frame or a model is only replayed while its data dir's
+  * file listing is unchanged. A serving session enforces it with one
+  * [[admit]] per request before the query runs: when the dir's
+  * listing fingerprint (names, sizes, modification times) differs
+  * from the last one seen, the dir's memo entries are dropped and the
+  * cached frames are cleared, so they re-materialise lazily over the
+  * new files. A rewrite that lands while a query on the same dir is
+  * in flight is seen by the next request, not by that one.
+  *
+  * Frames cost executor memory, so [[settle]] after each request
+  * clears them (never the KB-scale memo) once the persisted bytes
+  * pass Spark's own storage memory. Batch drivers (`Bench`,
+  * `Verify`) and specs call [[release]] for an explicit clean slate.
   */
 object OperatorCaches {
 
@@ -27,34 +42,81 @@ object OperatorCaches {
     trained.synchronized(trained.clear())
   }
 
-  private val trained =
-    scala.collection.mutable.LinkedHashMap.empty[String, AnyRef]
+  /** Last listing fingerprint [[admit]] saw, per data dir. */
+  private val seen = scala.collection.mutable.Map.empty[String, String]
 
-  /** Process-wide memo for COLLECTED trainer outputs (k-means
-    * centroids, PQ codebooks, BPE merge lists) keyed by
-    * (data dir, trainer, mode): training is deterministic over an
-    * immutable lake path, so its driver-side result — always a
-    * KB-scale local table (~C centroid rows, M·K codebook rows, the
-    * merge list), never corpus data — is computed once per process
-    * and replayed from memory by every later consumer. This is the
-    * in-session half of the train-once story whose durable half is
-    * the layout sidecars ([[graft.operators.Layout]]): a serving
-    * session trains on first touch and every subsequent query — the
-    * trained IVF probe, the residual coder, tokenization — reuses
-    * the artifact instead of re-running Lloyd's/BPE rounds. Values
-    * are plain Scala rows (session-independent); callers rebuild the
-    * tiny DataFrame per use. Synchronized + reentrant (a trainer may
-    * memo-read its own coarse quantizer); [[release]] clears it.
+  /** Make `dir` safe to replay from: list it once and, when its
+    * fingerprint differs from the last one seen (or it was never
+    * seen), drop the dir's memo entries and every cached frame. Throws
+    * when the dir cannot be listed. A concurrent admit of the same
+    * listing waits until the drop is done, so it can neither replay
+    * the old entries nor lose the ones it trains.
+    *
+    * Frames are cleared, not refreshed with `catalog.refreshByPath`:
+    * Spark's `CacheManager.recacheByPath` refreshes only the FIRST
+    * file index under the path in each cached plan (`plan.exists`), so
+    * a frame joining several tables of the dir (`Graph.tradeEdges`)
+    * would be rebuilt over stale listings and fail to read them.
     */
-  /** Count of memo MISSES (actual trainer runs) since process start —
-    * observability for the serve-path release policy: a spec (or an
-    * operator dashboard) asserts a concurrent query burst trained
-    * once, not once per request.
+  def admit(s: SparkSession, dir: String): Unit = {
+    val fp = fingerprint(s, dir)
+    seen.synchronized {
+      if (!seen.get(dir).contains(fp)) {
+        trained.synchronized(trained.filterInPlace((k, _) => k._1 != dir))
+        s.catalog.clearCache()
+        seen(dir) = fp
+      }
+    }
+  }
+
+  /** Names, sizes and modification times of every file under `dir`,
+    * from one recursive listing.
+    */
+  private def fingerprint(s: SparkSession, dir: String): String = {
+    val root = new Path(dir)
+    val it = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listFiles(root, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}")
+      .toSeq.sorted.mkString("\n")
+  }
+
+  /** Clear the cached frames (the memo stays) when the persisted RDD
+    * bytes, memory plus disk, exceed Spark's storage memory.
+    */
+  def settle(s: SparkSession): Unit =
+    settle(s, s.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum)
+
+  private[graft] def settle(s: SparkSession, budget: Long): Unit = {
+    val held = s.sparkContext.getRDDStorageInfo
+      .map(r => r.memSize + r.diskSize).sum
+    if (held > budget) s.catalog.clearCache()
+  }
+
+  private val trained =
+    scala.collection.mutable.LinkedHashMap.empty[(String, String), AnyRef]
+
+  /** Count of memo MISSES (actual trainer runs) since process start:
+    * a spec (or an operator dashboard) asserts that a serial client or
+    * a concurrent burst trained once, not once per request.
     */
   private[graft] val trainerRuns =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  private[operators] def trainedMemo[T <: AnyRef](key: String)(
+  /** Process-wide memo for COLLECTED trainer outputs, keyed by
+    * (data dir, trainer and mode): training is deterministic over the
+    * dir's files, so its driver-side result — always a KB-scale local
+    * table (~C centroid rows, M·K codebook rows, the merge list),
+    * never corpus data — is computed once and replayed from memory by
+    * every later consumer until [[admit]] sees the dir's listing
+    * change. This is the in-session half of the train-once story
+    * whose durable half is the layout sidecars
+    * ([[graft.operators.Layout]]). Values are plain Scala rows
+    * (session-independent); callers rebuild the tiny DataFrame per
+    * use. Synchronized + reentrant (a trainer may memo-read its own
+    * coarse quantizer).
+    */
+  private[operators] def trainedMemo[T <: AnyRef](key: (String, String))(
       compute: => T): T = trained.synchronized {
     trained.getOrElseUpdate(key, {
       trainerRuns.incrementAndGet(); compute

@@ -94,7 +94,7 @@ object Opq {
 
   /** Train (or fetch the memoized) OPQ model for a corpus dir. */
   def model(s: SparkSession, dir: String): Model =
-    OperatorCaches.trainedMemo(s"opq|$dir") {
+    OperatorCaches.trainedMemo(dir -> "opq") {
       import s.implicits._
       // training reads emb once per iteration (rotate) plus the gram
       // join — partitioned by vec_id so every pass runs wide and the
@@ -117,7 +117,7 @@ object Opq {
           if (t == 1) Pq.seedCodebook(rv, "vec_id", "rv")
           else cb.toDF("subspace", "code", "cvec_sub")
         val cbDf = Pq.trainedCodebookFrom(s, subs, seed,
-          orderFree = false, memoKey = s"opqcb|$dir|$t")
+          orderFree = false, memoKey = dir -> s"opqcb|$t")
         cb = cbDf.as[(Long, Long, Array[Float])].collect().toSeq
         // encode under the fresh codebook, keeping each subvector's
         // distortion and its reconstructing sub-centroid
@@ -180,7 +180,7 @@ object Opq {
     */
   def ivfOpqResidualCodebookFrom(s: SparkSession, dir: String,
       centsSrc: DataFrame, rot: Seq[Seq[Double]],
-      memoKey: String): DataFrame =
+      memoKey: (String, String)): DataFrame =
     Ann.trainedResidualCodebook(s,
       Ann.residuals(Ann.assign(load(s, dir, "embeddings"), centsSrc),
         centsSrc, "vec_id", "cv", "rv", Some(rotate(_, rot))).cache(),

@@ -169,7 +169,7 @@ object Pca {
     */
   private[graft] def trained(s: SparkSession,
       dir: String): (Array[Double], Array[Array[Double]]) =
-    OperatorCaches.trainedMemo(s"pca:$dir") {
+    OperatorCaches.trainedMemo(dir -> "pca") {
       principalComponentsFor(
         load(s, dir, "embeddings")
           .filter(substring(md5(col("vec_id").cast("string")), 1, 1) < "4"),

@@ -153,7 +153,7 @@ object Pq {
   private def trainedCodebooksMode(s: SparkSession, dir: String,
       orderFree: Boolean): DataFrame =
     trainedCodebookFrom(s, subvectors(s, dir), codebooks(s, dir),
-      orderFree, memoKey = s"pqcb|$dir|$orderFree")
+      orderFree, memoKey = dir -> s"pqcb|$orderFree")
 
   /** The Lloyd's loop over ANY subvector frame (`vec_id`, `subspace`,
     * `sub`) and seed codebook — shared by the raw-embedding training
@@ -162,16 +162,17 @@ object Pq {
     * `memoKey` names the (dir, distribution, mode) this codebook is a
     * deterministic function of: the collected M·K-row result is
     * session-memoized under it ([[OperatorCaches.trainedMemo]]), so
-    * training runs once per process per distribution.
+    * training runs once per dir listing per distribution.
     */
   private[operators] def trainedCodebookFrom(s: SparkSession, subs0: DataFrame,
-      seed: DataFrame, orderFree: Boolean, memoKey: String): DataFrame = {
+      seed: DataFrame, orderFree: Boolean, memoKey: (String, String))
+      : DataFrame = {
     import s.implicits._
     val rows = OperatorCaches.trainedMemo(memoKey) {
       // every Lloyd's round re-reads the subvector frame — cached, the
       // corpus is scanned and sliced once instead of once per round
       // (and the plan-keyed entry is shared with any consumer deriving
-      // the same frame). Long-lived sessions: OperatorCaches.release.
+      // the same frame). Kept under the OperatorCaches lifecycle.
       val subs = subs0.cache()
       var cb = seed
       for (_ <- 1 to Rounds) {

@@ -83,8 +83,8 @@ object Retrieval {
         col("rank").as("sem_rank"))
     // cached: both legs of the bipartite join read this frame —
     // uncached, each leg re-scans and re-explodes the corpus (the
-    // Dedup.shingleIndex lesson; plan-keyed, shared, cleared via
-    // OperatorCaches.release)
+    // Dedup.shingleIndex lesson; plan-keyed, shared, kept under the
+    // OperatorCaches lifecycle)
     val inv = load(s, dir, "documents")
       .select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
       .select(col("doc_id"), size(col("sh")).as("n"),

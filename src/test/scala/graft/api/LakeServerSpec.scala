@@ -4,16 +4,21 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpRequest.BodyPublishers
 import java.net.http.HttpResponse.BodyHandlers
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
 import graft.engine.Lake
+import graft.operators.OperatorCaches
 
 /** End-to-end HTTP contract, mirroring the reference's api_test.clj
   * assertions (status codes + exact error strings) over a live server.
@@ -464,12 +469,40 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
       json(fail).get("error").asText == "failed query")
   }
 
-  test("concurrent trained-index queries train ONCE: cache release is " +
-      "refcounted to idle, not per-request") {
-    import graft.operators.OperatorCaches
-    // clean slate: no memoized trainers, counter at a known base
+  test("POST /query: an sf_dir that is not a string -> 400 malformed query") {
+    Seq("""{"sf_dir":{}}""", """{"sf_dir":5}""", """{"sf_dir":null}""",
+        """{"sf_dir":["a"]}""").foreach { body =>
+      val r = post("/query/q1_agg", body.getBytes("UTF-8"))
+      assert(r.statusCode == 400 &&
+        json(r).get("error").asText == "malformed query", body)
+    }
+  }
+
+  test("POST /query: an sf_dir that cannot be listed -> 400 failed query") {
+    Seq("", "nosuchscheme://nowhere/sf").foreach { d =>
+      val r = post("/query/q1_agg", s"""{"sf_dir":"$d"}""".getBytes("UTF-8"))
+      assert(r.statusCode == 400 &&
+        json(r).get("error").asText == "failed query", d)
+    }
+  }
+
+  private def queryRows(name: String, dir: String = sf): Seq[String] = {
+    val r = post(s"/query/$name", s"""{"sf_dir":"$dir"}""".getBytes("UTF-8"))
+    assert(r.statusCode == 200, s"$name: ${r.body.take(200)}")
+    json(r).elements.asScala.map(_.toString).toSeq.sorted
+  }
+
+  test("a serial client trains once: the memo outlives idle") {
     OperatorCaches.release(spark)
-    val base0 = OperatorCaches.trainerRuns.get()
+    val base = OperatorCaches.trainerRuns.get()
+    val first = queryRows("ann_ivf_trained_topk")
+    (1 to 3).foreach(_ => assert(queryRows("ann_ivf_trained_topk") == first))
+    assert(OperatorCaches.trainerRuns.get() - base == 1)
+  }
+
+  test("a concurrent burst of 2 trained-index queries trains once") {
+    OperatorCaches.release(spark)
+    val base = OperatorCaches.trainerRuns.get()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     try {
@@ -483,63 +516,99 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
         })
       }
       assert(futures.map(_.get()).forall(_ == 200))
-      // the barrier aligns the POSTs but not server-side execution:
-      // if request 1 fully completes (idle → released) before request
-      // 2's enter, 2 legitimately retrains — so over HTTP the hard
-      // bound is ≤ one training per request, never per-finisher
-      // clearing mid-flight. The exactly-once-while-overlapping
-      // guarantee is pinned DETERMINISTICALLY by the seam tests below.
-      val delta = OperatorCaches.trainerRuns.get() - base0
-      assert(delta >= 1 && delta <= 2,
-        s"burst of 2 trained ${delta}x")
+      assert(OperatorCaches.trainerRuns.get() - base == 1)
     } finally pool.shutdown()
   }
 
-  test("overlapping requests share the trained memo: trainerRuns stays " +
-      "1 (deterministic via the enter/exit seams)") {
-    import graft.operators.OperatorCaches
-    OperatorCaches.release(spark)
-    val base = OperatorCaches.trainerRuns.get()
-    server.enterQuery() // request A starts
-    graft.SparkEntry.queries("ann_ivf_trained_topk")(spark, sf).count()
-    assert(OperatorCaches.trainerRuns.get() - base == 1, "A trains once")
-    server.enterQuery() // request B starts BEFORE A finishes
-    server.exitQuery()  // A finishes: count 2→1, nothing released
-    graft.SparkEntry.queries("ann_ivf_trained_topk")(spark, sf).count()
-    assert(OperatorCaches.trainerRuns.get() - base == 1,
-      "B rides A's memo — the exit of A must not release while B is in flight")
-    server.exitQuery()  // B finishes: idle → released
+  /** Replace `table` under `dir` with `f` of its rows, written anew. */
+  private def rewrite(dir: Path, table: String)(
+      f: DataFrame => DataFrame): Unit = {
+    val target = dir.resolve(s"$table.parquet")
+    val staged = dir.resolveSibling(s"${dir.getFileName}-$table")
+    f(spark.read.parquet(target.toString)).write.parquet(staged.toString)
+    FileUtils.forceDelete(target.toFile)
+    Files.move(staged, target)
   }
 
-  test("zero-check and release are atomic: enterQuery blocks while a " +
-      "release is in flight (no mid-flight cache clear)") {
-    val inWindow = new java.util.concurrent.CountDownLatch(1)
-    val proceed = new java.util.concurrent.CountDownLatch(1)
-    // park the finisher INSIDE the lock, between decrement-to-zero and
-    // the release — exactly the window the r9 refcount left open
-    server.beforeRelease = () => {
-      inWindow.countDown()
-      proceed.await(5, java.util.concurrent.TimeUnit.SECONDS); ()
+  test("a rewritten table under sf_dir retrains the model and " +
+      "re-materialises the cached frame") {
+    val dir = Files.createTempDirectory("sf-rewrite")
+    FileUtils.copyDirectory(new java.io.File(sf), dir.toFile)
+    val base = OperatorCaches.trainerRuns.get()
+    queryRows("ann_ivf_trained_topk", dir.toString)
+    val kcore0 = queryRows("graph_kcore", dir.toString) // caches tradeEdges
+    queryRows("ann_ivf_trained_topk", dir.toString)
+    assert(OperatorCaches.trainerRuns.get() - base == 1,
+      "an unchanged dir replays the model")
+
+    rewrite(dir, "embeddings")(identity)
+    rewrite(dir, "customer")(_.withColumn("c_nationkey",
+      ((col("c_nationkey") + 7) % 25).cast("int")))
+    queryRows("ann_ivf_trained_topk", dir.toString)
+    assert(OperatorCaches.trainerRuns.get() - base == 2,
+      "a rewritten dir retrains")
+    val kcore1 = queryRows("graph_kcore", dir.toString)
+
+    OperatorCaches.release(spark) // no frame, no model: a fresh session
+    val fresh = graft.SparkEntry.queries("graph_kcore")(spark, dir.toString)
+      .toJSON.collect().map(mapper.readTree(_).toString).toSeq.sorted
+    assert(kcore1 == fresh)
+    assert(kcore1 != kcore0, "the rewrite changes the trade graph")
+  }
+
+  test("over the frame budget: settle clears the cached frames and " +
+      "keeps the memo") {
+    OperatorCaches.release(spark)
+    val base = OperatorCaches.trainerRuns.get()
+    queryRows("ann_ivf_trained_topk")
+    queryRows("graph_kcore")
+    val frames = spark.sharedState.cacheManager
+    assert(!frames.isEmpty, "graph_kcore keeps its tradeEdges frame")
+    OperatorCaches.settle(spark, budget = Long.MaxValue)
+    assert(!frames.isEmpty, "under the budget nothing is cleared")
+    OperatorCaches.settle(spark, budget = 0L)
+    assert(frames.isEmpty, "over the budget the frames are cleared")
+    queryRows("ann_ivf_trained_topk")
+    assert(OperatorCaches.trainerRuns.get() - base == 1,
+      "the memo survives the clear")
+  }
+
+  test("every Spark job of one /query runs in the request's job group") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        jobs.add((p.getProperty("spark.jobGroup.id"),
+          p.getProperty("spark.job.description"),
+          e.stageInfos.map(_.name).mkString(";")))
+      }
     }
+    // a job in its own group whose start the listener has seen: the bus
+    // is in order, so every job started before it has been seen too
+    def fence(tag: String): Unit = {
+      sc.setJobGroup(tag, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!jobs.asScala.exists(_._1 == tag) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.asScala.exists(_._1 == tag), s"fence $tag seen")
+    }
+    sc.addSparkListener(listener)
     try {
-      server.enterQuery()
-      val exiter = new Thread(() => server.exitQuery())
-      exiter.start()
-      assert(inWindow.await(5, java.util.concurrent.TimeUnit.SECONDS),
-        "finisher reached the release window")
-      @volatile var entered = false
-      val enterer = new Thread(() => { server.enterQuery(); entered = true })
-      enterer.start()
-      enterer.join(300)
-      // with the bare-atomic r9 code this enter succeeded immediately
-      // and the release then cleared caches mid-flight of it
-      assert(!entered, "enterQuery must block until the release completes")
-      proceed.countDown()
-      enterer.join(5000); exiter.join(5000)
-      assert(entered, "blocked enter proceeds once the release is done")
-    } finally {
-      server.beforeRelease = () => ()
-      server.exitQuery() // balance the blocked enter: idle → released
-    }
+      fence("before")
+      jobs.clear()
+      queryRows("q1_agg")
+      fence("after")
+      val during = jobs.asScala.toSeq.takeWhile(_._1 != "after")
+      assert(during.map(_._1).distinct.size == 1 &&
+        during.head._1.startsWith("query-"), during)
+      assert(during.forall(_._2 == "q1_agg"), during)
+      // AQE submits its stage jobs from its own thread pool
+      assert(during.exists(_._3.contains("withThreadLocalCaptured")), during)
+      // the toLocalIterator jobs start as the response streams
+      assert(during.exists(_._3.contains("LakeServer.scala")), during)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -37,6 +37,9 @@ GROUPS = {
                      "IndexStream", "ZorderStream", "IvmStream",
                      "Scd2Stream")] +
                  ["src/main/scala/graft/store/Artifact.scala"],
+    # the /query serving path and the cache lifecycle it drives
+    "serving": ["src/main/scala/graft/api/LakeServer.scala",
+                f"{OPS}/OperatorCaches.scala"],
 }
 
 
