@@ -285,7 +285,8 @@ object SparkEntry {
     // directed edge list's endpoint degrees
     "graph_assortativity" ->
       (graft.operators.Graph.graphAssortativity _),
-    // fixed-round distributed peeling to the 3-core backbone
+    // distributed peeling to the 3-core backbone, at most six rounds,
+    // stopping at the fixpoint; the oracle unrolls all six
     "graph_kcore" -> (graft.operators.Graph.graphKcore _),
     // connected components by min-label propagation (Pregel CC),
     // localCheckpoint per round; oracle unrolls the same six rounds

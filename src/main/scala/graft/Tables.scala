@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
 
+import graft.operators.OperatorCaches
+
 /** A table column arrived with a physical type the conformance layer has
   * no safe coercion for. Named (table, column, actual, canonical) so a
   * regenerated corpus fails LOUDLY at load with the exact drift in the
@@ -34,6 +36,10 @@ final case class MissingColumnError(table: String, column: String)
   * the only failure class that has recurred across rounds, and this is
   * the insurance against it. When nothing drifts (the common case) the
   * DataFrame is returned untouched: no projection enters the plan.
+  *
+  * A served dir resolves each table once per file listing
+  * ([[OperatorCaches.resolved]]); every other load reads its files
+  * afresh.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -98,7 +104,8 @@ object Tables {
     // even in sessions not built from `sessionConfs` (idempotent)
     GraftExtensions.ensure(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    conform(name, spark.read.parquet(s"$sfDir/$name.parquet"))
+    conform(name, OperatorCaches.resolved(spark, sfDir, name)(
+      spark.read.parquet(s"$sfDir/$name.parquet")))
   }
 
   /** Coerce every drifted column of `df` to its pinned canonical type.

@@ -290,11 +290,12 @@ final class LakeServer(lake: Lake, port: Int,
     *
     * Work is kept across requests. [[OperatorCaches.admit]] runs
     * first: it lists the request's `sf_dir` and, when the listing
-    * changed since it was last seen, drops the dir's trained models
-    * and the cached frames. So a frame or a model is only replayed
-    * while its dir's listing is unchanged: a client whose `sf_dir` is
-    * untouched replays them, one whose files were rewritten gets
-    * fresh answers. After the request,
+    * changed since it was last seen, drops the dir's trained models,
+    * its resolved tables and the cached frames. So a frame, a model
+    * or a table's listing and schema is only replayed while its dir's
+    * listing is unchanged: a client whose `sf_dir` is untouched
+    * replays them, one whose files were rewritten gets fresh answers.
+    * After the request,
     * [[OperatorCaches.settle]] clears the frames (not the models) only
     * if they hold more than Spark's storage memory. Every Spark job of
     * the request runs in one job group, named by a request id and

@@ -12,8 +12,7 @@ import graft.Tables.load
   * with it (greedy left-to-right, the standard BPE application).
   * Deliverable: the ranked merge table a tokenizer ships.
   *
-  * Orchestration shape (same pattern as [[Dedup.clusters]]' iterative
-  * connected components): a bounded driver loop where each round is
+  * Orchestration shape: a bounded driver loop where each round is
   * one distributed aggregation plus ONE collected row (the argmax
   * pair — O(1) driver traffic per round, never the corpus). The
   * re-segmentation is a codegen'd `aggregate` fold over each word's
@@ -73,12 +72,11 @@ object Bpe {
         .otherwise(concat(acc, array(x))))
 
   /** (merge_rank, left, right, pair_count) for [[TrainRounds]] rounds.
-    * Each round's segmentation is cached and the previous round's
-    * released (the [[Dedup.clusters]] discipline) — without it, round
-    * N's count action would replay every earlier round's fold from
-    * the scan. All caches are dropped before returning: the result is
-    * the tiny collected merge table, so nothing pins storage past the
-    * call.
+    * Each round's segmentation is cached, materialized, and only then
+    * is the previous round's released — without it, round N's count
+    * action would replay every earlier round's fold from the scan.
+    * All caches are dropped before returning: the result is the tiny
+    * collected merge table, so nothing pins storage past the call.
     */
   def train(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -565,6 +565,18 @@ object Dedup {
     * standard large-graph CC shape (Hash-to-Min); no driver-side graph.
     * The driver only checks the convergence metric (sum of labels,
     * strictly decreasing until fixpoint).
+    *
+    * Each round's label frame is `localCheckpoint`ed, the per-round
+    * cut [[Graph.kcoreFor]] makes, so the plan every round plans and
+    * explains is one round deep, and the checkpoint's blocks are
+    * reference-tracked (cleaned once the returned frame is dropped).
+    * The round's label sum is the one RDD job that materializes its
+    * checkpoint, so a round runs no job beyond its own stages; there
+    * is no sum before the first round, so it always runs, and the
+    * loop stops at the first round that changes no label. The
+    * pair-graph `edges` frame is cached like [[shingleIndex]] and kept
+    * under the [[OperatorCaches]] lifecycle, so a repeat request
+    * replays it.
     */
   def clusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = ngramJaccardPairs(s, dir).select(col("id_a"), col("id_b"))
@@ -573,38 +585,25 @@ object Dedup {
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .cache()
     var labels = edges.select(col("src").as("id"))
-      .distinct().withColumn("lbl", col("id")).cache()
-    // convergence metric (sum of labels) is carried between rounds so
-    // each round costs exactly ONE action; it is strictly decreasing
-    // until the fixpoint because labels only ever shrink to the min
-    // coalesce: sum over an EMPTY label frame is NULL (zero near-dup
-    // pairs — the empty-shard case), and the loop must converge
-    // immediately instead of throwing on the null row
-    var prevSum = labels.agg(coalesce(sum(col("lbl")), lit(0L)))
-      .head.getLong(0)
+      .distinct().withColumn("lbl", col("id"))
+    var prevSum = Option.empty[Long]
     var converged = false
     while (!converged) {
-      val next = labels
+      labels = labels
         .join(edges, col("id") === col("src"))
         .select(col("dst").as("id"), col("lbl"))
         .union(labels.select(col("id"), col("lbl")))
         .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-        .cache()
-      val curSum = next.agg(coalesce(sum(col("lbl")), lit(0L)))
-        .head.getLong(0)
-      labels.unpersist()
-      labels = next
-      converged = curSum == prevSum
-      prevSum = curSum
+        .localCheckpoint(eager = false)
+      // one RDD job: materializes the checkpoint while it sums `lbl`;
+      // an EMPTY label frame (zero near-dup pairs — the empty-shard
+      // case) sums to 0 and converges on round two
+      val curSum = labels.queryExecution.toRdd
+        .map(_.getLong(1)).fold(0L)(_ + _)
+      converged = prevSum.contains(curSum)
+      prevSum = Some(curSum)
     }
-    // truncate lineage and release the loop's explicit caches: the
-    // checkpoint's blocks are reference-tracked (cleaned when the
-    // returned frame is dropped), unlike CacheManager entries which
-    // would pin a copy of the labels per invocation forever
-    val result = labels.localCheckpoint(true)
-    labels.unpersist()
-    edges.unpersist()
-    result.select(col("id").as("doc_id"), col("lbl").as("cluster"))
+    labels.select(col("id").as("doc_id"), col("lbl").as("cluster"))
       .orderBy(col("doc_id"))
   }
 

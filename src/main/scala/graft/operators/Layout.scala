@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -791,8 +792,9 @@ object Layout {
     * disjoint zones; a column uncorrelated with layout gives
     * full-range zones and the probe degrades to a full scan — but
     * never a wrong one (the residual predicate is always applied).
-    * Staleness contract matches `.blooms`: appends require a manifest
-    * refresh; LayoutSpec-style pins live in ZorderSpec.
+    * Staleness: files written after the manifest are scanned unpruned
+    * until [[mergeZoneMap]] covers them (see [[zoneProbe]]); pins live
+    * in ZorderSpec.
     */
   def writeZoneMap(s: SparkSession, path: String,
       cols: Seq[String]): Unit = {
@@ -814,8 +816,8 @@ object Layout {
     * bit-OR): new files add rows, untouched files' rows stay valid
     * forever. A crash mid-append can leave duplicate rows for a file
     * on replay — harmless by construction because [[zoneProbe]]
-    * reads the survivor list through `distinct`, so re-running this
-    * verb is idempotent in effect. Cost: one pass over the NEW files
+    * reads the survivor list as a set, so re-running this verb is
+    * idempotent in effect. Cost: one pass over the NEW files
     * only.
     */
   def mergeZoneMap(s: SparkSession, path: String,
@@ -838,22 +840,38 @@ object Layout {
     }
   }
 
-  /** Range probe through the `.zones` manifest: keep files whose
-    * [min, max] interval intersects [lo, hi], read exactly those, and
-    * apply the exact residual predicate. The manifest filter is a
-    * dataframe (at million-file scale it's a distributed filter); the
-    * collected survivor list is planning state, the same budget as
-    * any file listing. An all-null column in a file yields null
-    * min/max → the file is dropped, which is correct: null never
-    * satisfies BETWEEN.
+  /** Range probe through the `.zones` manifest: keep the live files
+    * whose [min, max] interval intersects [lo, hi], read exactly
+    * those, and apply the exact residual predicate. The manifest is
+    * matched against the layout's current listing, so it can never
+    * fail or miss rows when it is stale: a manifest row whose file is
+    * gone (replaced by `compactZBuckets`) is ignored, and a live file
+    * the manifest does not cover (an append or a compaction since the
+    * last refresh) is a candidate, scanned unpruned — correct, only
+    * slower. The collected (file, hit) rows are planning state, the
+    * same budget as any file listing. An all-null column in a file
+    * yields null min/max → the file is dropped, which is correct:
+    * null never satisfies BETWEEN.
     */
   def zoneProbe(s: SparkSession, path: String, column: String,
       lo: Long, hi: Long): DataFrame = {
-    // distinct: a crashed-and-replayed mergeZoneMap can leave a
-    // file's row duplicated, and a doubled path would read it twice
-    val files = s.read.parquet(s"$path.zones")
-      .filter(col(s"min_$column") <= hi && col(s"max_$column") >= lo)
-      .select(col("file")).distinct().collect().map(_.getString(0))
+    Artifact.recover(s, path)
+    val root = new Path(path)
+    val dir = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .makeQualified(root)
+    // the `_metadata.file_path` form the manifest rows carry
+    val live = Artifact.files(s, path)
+      .map(f => new Path(dir, f).toUri.toString)
+    // sets: a crashed-and-replayed mergeZoneMap can leave a file's row
+    // duplicated, and a doubled path would read it twice
+    val zones = s.read.parquet(s"$path.zones")
+      .select(col("file"),
+        col(s"min_$column") <= hi && col(s"max_$column") >= lo)
+      .collect()
+    val covered = zones.map(_.getString(0)).toSet
+    val hits = zones.filter(r => !r.isNullAt(1) && r.getBoolean(1))
+      .map(_.getString(0)).toSet
+    val files = live.filter(f => hits(f) || !covered(f))
     val base =
       if (files.isEmpty) s.read.parquet(path).limit(0)
       else s.read.parquet(files.toIndexedSeq: _*)

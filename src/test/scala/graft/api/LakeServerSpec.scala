@@ -11,12 +11,12 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.BeforeAndAfterAll
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 import graft.engine.Lake
 import graft.operators.OperatorCaches
 
@@ -31,7 +31,11 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
   private val client = HttpClient.newHttpClient()
   private val mapper = new ObjectMapper()
 
-  override def afterAll(): Unit = { server.stop(); super.afterAll() }
+  // the server admitted the shared test dirs: release its state so
+  // later suites in this JVM load their tables afresh
+  override def afterAll(): Unit = {
+    server.stop(); OperatorCaches.release(spark); super.afterAll()
+  }
 
   private def get(path: String): HttpResponse[String] =
     client.send(HttpRequest.newBuilder(URI.create(base + path)).GET.build(),
@@ -574,41 +578,62 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("every Spark job of one /query runs in the request's job group") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        jobs.add((p.getProperty("spark.jobGroup.id"),
-          p.getProperty("spark.job.description"),
-          e.stageInfos.map(_.name).mkString(";")))
-      }
-    }
-    // a job in its own group whose start the listener has seen: the bus
-    // is in order, so every job started before it has been seen too
-    def fence(tag: String): Unit = {
-      sc.setJobGroup(tag, tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (!jobs.asScala.exists(_._1 == tag) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(jobs.asScala.exists(_._1 == tag), s"fence $tag seen")
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence("before")
-      jobs.clear()
-      queryRows("q1_agg")
-      fence("after")
-      val during = jobs.asScala.toSeq.takeWhile(_._1 != "after")
-      assert(during.map(_._1).distinct.size == 1 &&
-        during.head._1.startsWith("query-"), during)
-      assert(during.forall(_._2 == "q1_agg"), during)
-      // AQE submits its stage jobs from its own thread pool
-      assert(during.exists(_._3.contains("withThreadLocalCaptured")), during)
-      // the toLocalIterator jobs start as the response streams
-      assert(during.exists(_._3.contains("LakeServer.scala")), during)
-    } finally sc.removeSparkListener(listener)
+    val during = jobsDuring(queryRows("q1_agg"))
+    assert(during.map(_.group).distinct.size == 1 &&
+      during.head.group.startsWith("query-"), during)
+    assert(during.forall(_.description == "q1_agg"), during)
+    // AQE submits its stage jobs from its own thread pool
+    assert(during.exists(_.stages.exists(
+      _.contains("withThreadLocalCaptured"))), during)
+    // the toLocalIterator jobs start as the response streams
+    assert(during.exists(_.stages.exists(_.contains("LakeServer.scala"))),
+      during)
+  }
+
+  /** A copy of the test dir that no request has admitted yet. */
+  private def freshDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    FileUtils.copyDirectory(new java.io.File(sf), dir.toFile)
+    dir
+  }
+
+  test("a served dir resolves each table once per listing") {
+    val dir = freshDir("sf-resolve")
+    def resolving() = jobsDuring(queryRows("q1_agg", dir.toString))
+      .filter(_.at("parquet at Tables.scala"))
+    assert(resolving().nonEmpty, "the first request resolves lineitem")
+    assert(resolving().isEmpty, "an unchanged dir is not resolved again")
+  }
+
+  test("a table rewritten with a drifted physical type is read anew " +
+      "and conformed") {
+    val dir = freshDir("sf-drift")
+    val before = queryRows("q3_topk", dir.toString)
+    rewrite(dir, "orders")(_.filter(col("o_orderkey") % 2 === 0)
+      .withColumn("o_custkey", col("o_custkey").cast("int")))
+    assert(spark.read.parquet(s"$dir/orders.parquet")
+      .schema("o_custkey").dataType == IntegerType)
+    val after = queryRows("q3_topk", dir.toString)
+    assert(Tables.load(spark, dir.toString, "orders")
+      .schema("o_custkey").dataType == LongType)
+    OperatorCaches.release(spark) // nothing resolved: a fresh session
+    val fresh = graft.SparkEntry.queries("q3_topk")(spark, dir.toString)
+      .toJSON.collect().map(mapper.readTree(_).toString).toSeq.sorted
+    assert(after == fresh)
+    assert(after != before, "the rewrite changes the answer")
+  }
+
+  test("job budget: on a warm, unchanged dir graph_kcore and " +
+      "dedup_clusters run at most their per-request job counts") {
+    // the exact counts at sf0.001 with each table resolved once per
+    // listing, the peel stopped at its fixpoint and one job beyond its
+    // stages per round (28 and 21 without them); re-resolving the
+    // tables per request adds a schema-inference job per table
+    val budget = Map("graph_kcore" -> 12, "dedup_clusters" -> 11)
+    val ran = budget.keys.map { name =>
+      queryRows(name) // warm: the dir admitted, frames cached
+      name -> jobsDuring(queryRows(name)).size
+    }.toMap
+    assert(ran.forall { case (name, n) => n <= budget(name) }, ran)
   }
 }

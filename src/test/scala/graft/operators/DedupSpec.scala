@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -193,6 +195,25 @@ class DedupSpec extends SparkSpec {
     assert(got == expected)
     // transitivity really exercised: labels are component minima
     assert(got.values.toSet.subsetOf(got.keySet))
+  }
+
+  test("clusters: per-round checkpoints keep the analyzed plan flat") {
+    // every plan the label loop runs, as Catalyst saw it after cache
+    // substitution: a cached (id, lbl) label frame in one of them
+    // would nest the previous round's plan inside this round's
+    var out: DataFrame = null
+    val plans = actionsDuring { out = Dedup.clusters(spark, sf) }
+      .map(_._2.withCachedData)
+    assert(plans.nonEmpty)
+    val labelFrames = plans.flatMap(_.collect {
+      case r: InMemoryRelation if r.output.map(_.name) == Seq("id", "lbl") =>
+        r
+    })
+    assert(labelFrames.isEmpty, s"${labelFrames.size} cached label frames")
+    val returned = out.queryExecution.withCachedData
+    val nodes = returned.collect { case _ => 1 }.sum
+    assert(nodes < 50, s"clusters plan has $nodes nodes")
+    assert(returned.collect { case r: InMemoryRelation => r }.isEmpty)
   }
 
   test("cluster-size histogram accounts for every clustered doc; " +

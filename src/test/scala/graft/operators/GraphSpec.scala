@@ -86,9 +86,15 @@ class GraphSpec extends SparkSpec {
     // KcoreRounds convergence contract).
     val e = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L),
       (2L, 3L), (3L, 10L), (10L, 11L), (11L, 12L)).toDF("a", "b")
-    val core = Graph.kcoreFor(e).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    var core = Map.empty[Long, Long]
+    val jobs = jobsDuring {
+      core = Graph.kcoreFor(e).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(core == Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L), core)
+    // round 1 peels the chain, round 2 removes nothing: the fixpoint
+    // stop, one count job per round
+    assert(jobs.count(_.at("count at Graph.scala")) == 2, jobs)
     val extra = Graph.kcoreFor(e, rounds = Graph.KcoreRounds + 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(extra == core, "an extra peel round moved a converged core")
@@ -105,6 +111,28 @@ class GraphSpec extends SparkSpec {
     val core = Graph.kcoreFor(cycle, k = 2).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core == (0L to 4L).map(_ -> 2L).toMap, core)
+  }
+
+  test("kcore: a path longer than KcoreRounds gets the bounded answer") {
+    // path 0—…—20 at k=2: each round peels one edge off each end, so
+    // the fixpoint (the empty 2-core) is 10 rounds away; the peel
+    // stops at the bound with the answer the oracle's unrolled rounds
+    // give
+    val n = 20L
+    val path = (0L until n).map(i => (i, i + 1)).toDF("a", "b")
+    val peeled = (1 to Graph.KcoreRounds).foldLeft(
+        (0L until n).map(i => (i, i + 1))) { (es, _) =>
+      val deg = es.flatMap { case (a, b) => Seq(a, b) }
+        .groupBy(identity).map { case (v, vs) => v -> vs.size }
+      es.filter { case (a, b) => deg(a) >= 2 && deg(b) >= 2 }
+    }
+    val expected = peeled.flatMap { case (a, b) => Seq(a, b) }
+      .groupBy(identity).map { case (v, vs) => v -> vs.size.toLong }
+      .filter(_._2 >= 2)
+    val got = Graph.kcoreFor(path, k = 2).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(expected.nonEmpty, "the bound stops short of the fixpoint")
+    assert(got == expected, got)
   }
 
   test("kcore/khop: per-round checkpoints keep the analyzed plan flat") {

@@ -356,8 +356,9 @@ class ZorderSpec extends SparkSpec {
     val planted = src.limit(4).select(lit(5555555L).as("l_orderkey"),
       col("l_partkey"), col("l_suppkey"), col("l_quantity"))
     planted.coalesce(1).write.mode("append").parquet(path)
+    // a live file the manifest does not cover yet is scanned unpruned
     assert(Layout.zoneProbe(spark, path, "l_orderkey",
-      5555555L, 5555555L).count() == 0, "manifest unexpectedly fresh")
+      5555555L, 5555555L).count() == 4, "an uncovered file was skipped")
     Layout.mergeZoneMap(spark, path, Seq("l_orderkey", "l_partkey"))
     val freshProbe = Layout.zoneProbe(spark, path, "l_orderkey",
       5555555L, 5555555L)
@@ -367,6 +368,23 @@ class ZorderSpec extends SparkSpec {
     Layout.mergeZoneMap(spark, path, Seq("l_orderkey", "l_partkey"))
     assert(Layout.zoneProbe(spark, path, "l_orderkey",
       5555555L, 5555555L).count() == 4, "replayed merge broke the probe")
+  }
+
+  test("zone map after an append and a compaction: the probe skips " +
+      "the replaced files, scans the uncovered ones, equals the filter") {
+    val path = Files.createTempDirectory("zcompact").toString + "/zl"
+    Layout.writeZBucketed(spark, src.filter(col("l_orderkey") % 2 === 0),
+      "l_partkey", "l_orderkey", path)
+    Layout.appendToZOrdered(spark, path,
+      src.filter(col("l_orderkey") % 2 === 1))
+    Layout.writeZoneMap(spark, path, Seq("l_suppkey"))
+    val plain = sortedRows(src.filter(col("l_suppkey").between(1L, 5L)))
+    def probe() = sortedRows(Layout.zoneProbe(spark, path, "l_suppkey",
+      1L, 5L).drop("zbucket", "zbatch"))
+    assert(plain.nonEmpty)
+    assert(probe() == plain)
+    assert(Layout.compactZBuckets(spark, path).nonEmpty)
+    assert(probe() == plain, "probe after compaction")
   }
 
   test("incremental bloom merge: appended keys visible without a " +
