@@ -68,7 +68,9 @@ import graft.store.{ContentStore, DatasetMeta}
   * Query results stream through `toJSON.toLocalIterator` — rows travel
   * driver→client in chunks without materializing the result set,
   * preserving the reference's lazy-streaming property over
-  * arbitrarily large extractions.
+  * arbitrarily large extractions. The exception is an extraction from
+  * a blob below one file split: it runs on the driver and its body is
+  * written whole before the status goes out.
   *
   * Built on the JDK's HttpServer: no dependencies beyond Spark's
   * jackson. The reference used Netty via Aleph; at 1000-req/s scale a
@@ -219,12 +221,29 @@ final class LakeServer(lake: Lake, port: Int,
     // driver-local closure backend: the metadata snapshot is cached on
     // the driver, so /find costs microseconds per row instead of a
     // Spark job (the distributed backend `lake.find` computes the same
-    // rows — cross-checked in QastBackendsSpec)
-    lake.findLocal(body) match {
-      case Left(e) => sendError(ex, e.message)
-      case Right(rows) => streamJsonArray(ex, rows.iterator.map(findRowJson))
+    // rows — cross-checked in QastBackendsSpec). A value that fails at
+    // run time (a string that does not cast) is "failed query" on
+    // either backend.
+    failedQuery(ex, "find")(lake.findLocal(body)) match {
+      case Some(Left(e)) => sendError(ex, e.message)
+      case Some(Right(rows)) =>
+        streamJsonArray(ex, rows.iterator.map(findRowJson))
+      case None =>
     }
   }
+
+  /** `body`, or None once a run-time failure of it was answered 400
+    * "failed query" (the reference's string for a query that throws,
+    * HttpHandler:227). */
+  private def failedQuery[A](ex: HttpExchange, what: String)(body: => A)
+      : Option[A] =
+    try Some(body)
+    catch {
+      case scala.util.control.NonFatal(t) =>
+        System.err.println(s"[lake-server] $what: $t")
+        sendError(ex, "failed query")
+        None
+    }
 
   /** One flat object per row: open-map extras re-inflated to typed
     * JSON, fixed columns injected after so they win key clashes (the
@@ -268,12 +287,17 @@ final class LakeServer(lake: Lake, port: Int,
     mapper.writeValueAsString(node)
   }
 
+  /** A blob below one file split is extracted on the driver and sent
+    * whole; anything else streams from Spark (see Extractor.serve). */
   private def postExtract(ex: HttpExchange, cid: String): Unit = {
     val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-    lake.extract(cid, body) match {
+    lake.serveExtract(cid, body) match {
       case Left(e: ExtractError.Malformed) => sendError(ex, e.message)
       case Left(_) => sendError(ex, "failed query") // ref: HttpHandler:227
-      case Right(df) => streamJsonArray(ex, df.toJSON.toLocalIterator().asScala)
+      case Right(Left(json)) => send(ex, 200, "application/json", json)
+      case Right(Right(df)) => failedQuery(ex, s"extract $cid") {
+        streamJsonArray(ex, df.toJSON.toLocalIterator().asScala)
+      }
     }
   }
 
@@ -318,14 +342,10 @@ final class LakeServer(lake: Lake, port: Int,
           case Some(d) =>
             val sc = lake.spark.sparkContext
             sc.setJobGroup(s"query-${requestSeq.incrementAndGet()}", name)
-            try {
+            try failedQuery(ex, s"query $name") {
               OperatorCaches.admit(lake.spark, d)
               val df = fn(lake.spark, d)
               streamJsonArray(ex, df.toJSON.toLocalIterator().asScala)
-            } catch {
-              case scala.util.control.NonFatal(t) =>
-                System.err.println(s"[lake-server] query $name: $t")
-                sendError(ex, "failed query")
             } finally {
               sc.clearJobGroup()
               OperatorCaches.settle(lake.spark)
@@ -384,10 +404,14 @@ final class LakeServer(lake: Lake, port: Int,
 
   /** Chunked `[obj,obj,...]` without materializing the iterator.
     * Buffered so small rows coalesce into full-size chunks instead of
-    * one HTTP chunk per write.
+    * one HTTP chunk per write. The first row is pulled before the
+    * status goes out: a query that fails in its first Spark job throws
+    * here, while its caller can still answer 400 "failed query"
+    * instead of a 200 with a cut body.
     */
   private def streamJsonArray(ex: HttpExchange, rows: Iterator[String])
       : Unit = {
+    rows.hasNext
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(200, 0)
     val out = new java.io.BufferedOutputStream(ex.getResponseBody, 64 * 1024)

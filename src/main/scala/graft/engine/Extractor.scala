@@ -1,8 +1,9 @@
 package graft.engine
 
-import java.nio.file.Path
+import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame,
+  GraftFileScan, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.qast.{Ast, Compiler}
@@ -16,11 +17,16 @@ import graft.store.{Catalog, ContentStore}
   *
   * MIME dispatch is the reference's: `text/csv` and `application/json`
   * are row collections, anything else is "unsupported data type"
-  * (`extract/data.clj:29-37`). Where the reference lazily streams one
-  * row at a time through a closure predicate, we hand Spark the file and
-  * the compiled QAST `Column`: the scan is partition-parallel and the
-  * predicate reaches the reader (pushdown), which is the whole point of
-  * going Spark-native — same semantics, cluster-scale execution.
+  * (`extract/data.clj:29-37`). The reference streams one row at a time
+  * through a closure predicate. Here a request takes one of two paths
+  * ([[serve]]):
+  *   - a blob no larger than one file split whose reader schema is in
+  *     the memo below is read on the driver by Spark's own per-file
+  *     reader and filtered by the QAST closure backend: no Spark job;
+  *   - anything else, and every [[extract]] call, hands Spark the file
+  *     and the compiled QAST `Column`: the scan is partition-parallel
+  *     and the predicate reaches the reader (pushdown).
+  * Both answer the same bytes (`ServedExtractPropertySpec`).
   *
   * CSV extraction keeps every value a string (reference `csv->json`
   * zipmaps raw strings, `extract/data.clj:23-27`; its api test matches
@@ -29,10 +35,12 @@ import graft.store.{Catalog, ContentStore}
   * number/string lattice applied on top of Spark's inference.
   *
   * Reader schemas are memoized per `(cid, base MIME)` and handed to the
-  * reader (`spark.read.schema`), so a warm extract is one Spark job:
-  * the scan itself, with no header `take(1)` (CSV) or `multiLine`
-  * inference pass (JSON) in front of it. Upload-time inference fills
-  * the memo (JSON: the inferred `StructType` as is, the same read
+  * reader (`spark.read.schema`), so a warm Spark-path extract is one
+  * Spark job: the scan itself, with no header `take(1)` (CSV) or
+  * `multiLine` inference pass (JSON) in front of it. The driver path
+  * needs the memoized schema (it has no inference of its own).
+  * Upload-time inference fills the memo (JSON: the inferred
+  * `StructType` as is, the same read
   * extraction does; CSV: the inferred header names typed `StringType`,
   * which is what the string-only extraction read derives — Spark's
   * `makeSafeHeader` names columns the same with or without
@@ -66,16 +74,20 @@ final class Extractor(spark: SparkSession, store: ContentStore,
   private def reader(mime: String, path: Path, known: Option[StructType])
       : Either[ExtractError, DataFrame] = {
     val read = known.fold(spark.read)(spark.read.schema)
+      .options(readerOptions(baseMime(mime)))
     baseMime(mime) match {
-      case "text/csv" =>
-        // stringly rows, first record = header (extract/data.clj:23-27)
-        Right(read.option("header", true).csv(path.toString))
-      case "application/json" =>
-        // reference parses ONE top-level JSON array (extract/data.clj:33);
-        // Spark's default is JSON-lines => multiLine for the array form.
-        Right(read.option("multiLine", true).json(path.toString))
+      case "text/csv" => Right(read.csv(path.toString))
+      case "application/json" => Right(read.json(path.toString))
       case _ => Left(ExtractError.UnsupportedType(mime))
     }
+  }
+
+  private def readerOptions(base: String): Map[String, String] = base match {
+    // stringly rows, first record = header (extract/data.clj:23-27)
+    case "text/csv" => Map("header" -> "true")
+    // reference parses ONE top-level JSON array (extract/data.clj:33);
+    // Spark's default is JSON-lines => multiLine for the array form.
+    case _ => Map("multiLine" -> "true")
   }
 
   private def baseMime(mime: String): String =
@@ -88,25 +100,97 @@ final class Extractor(spark: SparkSession, store: ContentStore,
     * query is parsed/compiled BEFORE the cid resolves, matching the
     * reference's error precedence (`HttpHandler.java:219-229` calls
     * `parseAstFn` first): a malformed query against an unknown or
-    * unsupported cid is "malformed query", not "failed query".
+    * unsupported cid is "malformed query", not "failed query". A query
+    * the analyzer rejects for this frame (a missing column, a type
+    * mismatch) is "malformed query" too.
     */
   def extract(cid: String, qastJson: String)
       : Either[ExtractError, DataFrame] =
     for {
-      ast <- Ast.parse(qastJson).left.map(e => ExtractError.Malformed(e))
-      plan <- (ast match {
-        case a if Compiler.isFrameVerb(a) =>
-          Compiler.compileFrame(a).map(Right(_))
-        case _ => Compiler.compile(ast).map(Left(_))
-      }).left.map(e => ExtractError.Malformed(e))
+      planned <- compiled(qastJson)
       df <- rows(cid)
-      out <- plan.fold(
-        pred => Right(df.filter(pred)),
-        // frame-dependent type errors (group key unorderable for THIS
-        // schema, sum over an array column...) keep the 400 precedent
-        frame => frame.checked(df)
-          .left.map(e => ExtractError.Malformed(e): ExtractError))
+      out <- applied(planned._2, df)
     } yield out
+
+  /** The served `/extract`: the JSON array body, written on the driver,
+    * or, where that path does not apply, [[extract]]'s DataFrame.
+    *
+    * The driver path takes a blob that is at most
+    * `spark.sql.files.openCostInBytes` and whose reader schema is in
+    * the memo. Spark never splits such a file, so its scan would be one
+    * task on one core anyway; here the request thread does that task's
+    * work with no job:
+    *   1. analyze and optimize the Spark path's own `df.filter(pred)` /
+    *      `frame.checked(df)` without running it: the analyzer's
+    *      rejections stay "malformed query", its output schema fixes
+    *      the columns' order and types, and a constant the optimizer
+    *      cannot fold sends the request to the Spark path;
+    *   2. read the blob with the code Spark's scan runs per file
+    *      (`GraftFileScan`), with the memoized schema;
+    *   3. evaluate with the closure backend ([[graft.qast.Evaluator]]);
+    *   4. write every row with `toJSON`'s generator before any header
+    *      goes out.
+    * Anything the closure backend does not evaluate exactly as
+    * Catalyst (see [[ClosureScan]]), and any run-time failure of the
+    * closures, goes to the Spark path, which then gives the answer or
+    * the failure. So does a larger blob, and a memo miss: its Spark
+    * read fills the memo, and the next request takes the driver path.
+    */
+  def serve(cid: String, qastJson: String)
+      : Either[ExtractError, Either[Array[Byte], DataFrame]] =
+    for {
+      planned <- compiled(qastJson)
+      df <- rows(cid)
+      out <- applied(planned._2, df)
+    } yield onDriver(cid, planned._1, out).toLeft(out)
+
+  /** The driver path's body for `out` (the Spark path's own frame,
+    * analyzed but not run), or None where it does not apply. */
+  private def onDriver(cid: String, ast: Ast, out: DataFrame)
+      : Option[Array[Byte]] =
+    for {
+      mime <- catalog.getType(cid)
+      base = baseMime(mime)
+      schema <- readerSchemas.get((cid, base))
+      path = store.pathOf(cid)
+      if Files.size(path) <= GraftFileScan.openCostInBytes(spark) &&
+        ClosureScan.modeled(schema) && ClosureScan.plainPaths(ast) &&
+        ClosureScan.exact(out.queryExecution.analyzed)
+      body <- try {
+        // the optimizer folds constants and propagates them into
+        // predicates: an expression that fails there fails the Spark
+        // path whatever the rows, so it goes there
+        out.queryExecution.optimizedPlan
+        val read = if (base == "text/csv") GraftFileScan.readCsv _
+          else GraftFileScan.readJson _
+        val in = read(spark, path, schema, readerOptions(base))
+        ClosureScan.run(ast, schema, in, out.schema).map(rows =>
+          GraftFileScan.jsonArray(spark, out.schema, rows.iterator))
+      } catch {
+        case scala.util.control.NonFatal(_) => None
+      }
+    } yield body
+
+  private def compiled(qastJson: String)
+      : Either[ExtractError, (Ast, Either[Column, Compiler.FrameQuery])] =
+    (for {
+      ast <- Ast.parse(qastJson)
+      plan <-
+        if (Compiler.isFrameVerb(ast)) Compiler.compileFrame(ast).map(Right(_))
+        else Compiler.compile(ast).map(Left(_))
+    } yield (ast, plan)).left.map(ExtractError.Malformed(_))
+
+  /** The plan over `df`. Frame-dependent type errors (a missing
+    * column, a group key unorderable for THIS schema, a sum over an
+    * array column...) keep the 400 precedent. */
+  private def applied(plan: Either[Column, Compiler.FrameQuery],
+      df: DataFrame): Either[ExtractError, DataFrame] =
+    plan.fold(
+      pred => try Right(df.filter(pred)) catch {
+        case _: AnalysisException =>
+          Left(ExtractError.Malformed(Ast.malformed))
+      },
+      frame => frame.checked(df).left.map(ExtractError.Malformed(_)))
 
   /** Memoized in-flight inferences — the reference's `memoize` of a
     * Clojure future (`extract/metadata.clj:67-76`), done with an atomic

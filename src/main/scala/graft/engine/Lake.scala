@@ -99,9 +99,17 @@ final class Lake(val spark: SparkSession, root: Path) {
       : Either[graft.qast.Ast.QastError, Seq[graft.qast.Evaluator.Row]] =
     catalog.searchLocal(qastJson)
 
-  /** `POST /extract/{cid}` — QAST row extraction from content. */
+  /** `POST /extract/{cid}` — QAST row extraction from content, as a
+    * Spark DataFrame. */
   def extract(cid: String, qastJson: String): Either[ExtractError, DataFrame] =
     extractor.extract(cid, qastJson)
+
+  /** `POST /extract/{cid}` as served: the JSON array body when a blob
+    * below one file split is extracted on the driver (Left), else
+    * [[extract]]'s DataFrame (Right) — see Extractor.serve. */
+  def serveExtract(cid: String, qastJson: String)
+      : Either[ExtractError, Either[Array[Byte], DataFrame]] =
+    extractor.serve(cid, qastJson)
 
   /** `GET /schema/{cid}` — inferred draft-07 JSON Schema (cached). */
   def schema(cid: String): Either[ExtractError, String] =

@@ -2,7 +2,8 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one place graft crosses into Spark's package-private API:
+/** One of the two places graft crosses into Spark's package-private
+  * API (the other is [[GraftFileScan]], the driver-side file reader):
   * `classic.Dataset.ofRows` is `private[sql]`, and it is the ONLY
   * supported way to wrap a custom [[LogicalPlan]] (graft's
   * [[graft.plans.AsOfJoin]]) back into a DataFrame. Every session

@@ -636,4 +636,65 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
     }.toMap
     assert(ran.forall { case (name, n) => n <= budget(name) }, ran)
   }
+
+  /** A CSV blob whose reader schema is memoized: the schema request
+    * waits for the upload's inference, which fills the memo. */
+  private def warmCsv(): String = {
+    val cid = addFile(csv, "text/csv")
+    assert(get(s"/schema/$cid").statusCode == 200)
+    cid
+  }
+
+  test("POST /extract: a value that fails a cast is 400 failed query, " +
+      "not a 200 with a cut body, on the driver and the Spark path") {
+    val cid = warmCsv()
+    val body = """["==", [".", ["$"], "country_name"], 5]""".getBytes
+    assertError(post(s"/extract/$cid", body), 400, "failed query")
+    withConf("spark.sql.files.openCostInBytes", "16") {
+      assertError(post(s"/extract/$cid", body), 400, "failed query")
+    }
+  }
+
+  test("POST /find: a string next to a number casts as in Spark; one " +
+      "that does not cast is 400 failed query") {
+    val cid = addFile(interjection, "text/plain")
+    json(post("/dataset",
+      s"""{"file":"$cid","description":"cast","source":"cast-src",
+          "topics":["c"],"vintage":2019}""".getBytes))
+    val found = post("/find",
+      """["&", ["==", [".", ["$"], "source"], "cast-src"],
+          ["==", [".", ["$"], "extra", "vintage"], 2019]]""".getBytes)
+    assert(found.statusCode == 200 && json(found).size == 1, found.body)
+    assertError(post("/find",
+      """["==", [".", ["$"], "description"], 5]""".getBytes),
+      400, "failed query")
+  }
+
+  test("a warm served extract below one file split runs no Spark job; " +
+      "above spark.sql.files.openCostInBytes it is the Spark path's") {
+    val cid = warmCsv()
+    val code = """[".", ["$"], "country_code"]"""
+    val filter = """["~", [".", ["$"], "country_name"], "Vi.tnam"]"""
+    val bodies = Seq(filter,
+      s"""["group", true, [$code], ["count"]]""",
+      s"""["having", ["group", true, [$code], ["count"]],
+          [">", [".", ["$$"], "n"], 0]]""",
+      s"""["top", 1, [["desc", $code]], true]""",
+      s"""["project", [["code", $code]], true]""").map { q =>
+      var r: HttpResponse[String] = null
+      val jobs = jobsDuring { r = post(s"/extract/$cid", q.getBytes) }
+      assert(r.statusCode == 200 && json(r).size > 0, r.body)
+      assert(jobs.isEmpty, s"$q ran $jobs")
+      q -> r.body
+    }.toMap
+    withConf("spark.sql.files.openCostInBytes", "64") {
+      // the blob is now split; the Spark path streams it with one job
+      // per split
+      val splits = lake.extract(cid, filter).toOption.get.rdd.getNumPartitions
+      var r: HttpResponse[String] = null
+      val jobs = jobsDuring { r = post(s"/extract/$cid", filter.getBytes) }
+      assert(r.statusCode == 200 && r.body == bodies(filter))
+      assert(jobs.size == splits && splits > 1, jobs)
+    }
+  }
 }

@@ -37,7 +37,10 @@ class QastBackendsSpec extends SparkSpec {
     """["|", ["==", [".", ["$"], "parent"], 0], true]""",
     """[">", [".", ["$"], "parent"], 0]""", // null parents rejected, 3VL
     """["==", ["%", [".", ["$"], "id"], 2], 0]""",
-    """["==", [".", ["$"], "extra", "year"], "2019"]""")
+    """["==", [".", ["$"], "extra", "year"], "2019"]""",
+    // a string next to an integral casts to BIGINT in both backends
+    """["==", [".", ["$"], "extra", "year"], 2019]""",
+    """[">=", [".", ["$"], "extra", "year"], 2020]""")
 
   test("Column backend and closure backend keep identical rows") {
     predicates.foreach { p =>
@@ -50,6 +53,14 @@ class QastBackendsSpec extends SparkSpec {
     // and at least some predicates are non-trivially selective
     val sel = lake.findLocal(predicates.head).toOption.get
     assert(sel.nonEmpty && sel.size < 4)
+  }
+
+  test("a string that does not cast next to a number fails in both " +
+      "backends (ANSI CAST_INVALID_INPUT), never drops rows silently") {
+    val p = """["==", [".", ["$"], "description"], 5]"""
+    val e = intercept[Exception](lake.find(p).toOption.get.collect())
+    assert(e.getMessage.contains("CAST_INVALID_INPUT"))
+    intercept[Evaluator.Failed](lake.findLocal(p))
   }
 
   test("group verb: both backends produce the same rollup rows") {

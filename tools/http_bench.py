@@ -9,8 +9,10 @@ Measures the same three surfaces BASELINE.md quotes for the reference
   get  : GET /file/{cid} (content download)      ref: 6238 req/s
 
 and, with no reference number, extract (POST /extract/{cid}, an
-equality predicate over the uploaded CSV), /find frame verbs and
-POST /query/q1_agg.
+equality predicate over the uploaded CSV), extract_group (a `group`
+rollup over the same CSV), /find frame verbs and POST /query/q1_agg.
+Set-up waits for the CSV's schema, so the extracts find its reader
+schema memoized and run on the driver.
 
 Usage: python3 tools/http_bench.py [port] [seconds] [threads] [procs]
 
@@ -36,12 +38,16 @@ CSV = b"name,age\nalice,30\nbob,41\ncarol,29\n"
 FIND_Q = b'["&&", [".", ["$"], "topics"], ["bench"]]'
 EXTRACT_Q = b'["==", [".", ["$"], "name"], "bob"]'
 EXTRACT_ROWS = [{"name": "bob", "age": "41"}]  # CSV values stay strings
+EXTRACT_GROUP_Q = b'["group", true, [[".", ["$"], "name"]], ["count"]]'
+EXTRACT_GROUP_ROWS = [{"name": n, "n": 1} for n in ("alice", "bob", "carol")]
 
 
 def setup():
     c = http.client.HTTPConnection("127.0.0.1", PORT)
     c.request("POST", "/file", CSV, {"Content-Type": "text/csv"})
     cid = json.loads(c.getresponse().read())["cid"]
+    c.request("GET", "/schema/" + cid)  # waits for the upload's inference
+    assert c.getresponse().read().startswith(b"{")
     for i in range(20):
         meta = json.dumps({
             "file": cid, "description": f"bench dataset {i}",
@@ -144,6 +150,12 @@ def main():
         body = r.read()
         return r.status == 200 and json.loads(body) == EXTRACT_ROWS
 
+    def do_extract_group(c):
+        c.request("POST", "/extract/" + cid, EXTRACT_GROUP_Q)
+        r = c.getresponse()
+        body = r.read()
+        return r.status == 200 and json.loads(body) == EXTRACT_GROUP_ROWS
+
     def do_query(c):
         # named analytic query over the server's default sf dir; each
         # request plans + executes a Spark job and streams the JSON
@@ -190,6 +202,7 @@ def main():
 
     results = [run("add", do_add), run("find", do_find), run("get", do_get),
                run("extract", do_extract),
+               run("extract_group", do_extract_group),
                run("find_group", do_find_group),
                run("find_top", do_find_top),
                run("find_project", do_find_project), run("query", do_query)]
