@@ -223,8 +223,10 @@ final class LakeServer(lake: Lake, port: Int,
     // Spark job (the distributed backend `lake.find` computes the same
     // rows — cross-checked in QastBackendsSpec). A value that fails at
     // run time (a string that does not cast) is "failed query" on
-    // either backend.
-    failedQuery(ex, "find")(lake.findLocal(body)) match {
+    // either backend. A snapshot rebuild, or the search above the
+    // snapshot's cap, runs its Spark jobs in the job group `find-<n>`.
+    failedQuery(ex, "find")(inJobGroup("find", "find")(
+      lake.findLocal(body))) match {
       case Some(Left(e)) => sendError(ex, e.message)
       case Some(Right(rows)) =>
         streamJsonArray(ex, rows.iterator.map(findRowJson))
@@ -288,17 +290,18 @@ final class LakeServer(lake: Lake, port: Int,
   }
 
   /** A blob below one file split is extracted on the driver and sent
-    * whole; anything else streams from Spark (see Extractor.serve). */
+    * whole; anything else streams from Spark (see Extractor.serve), in
+    * the job group `extract-<n>` described by the cid. */
   private def postExtract(ex: HttpExchange, cid: String): Unit = {
     val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-    lake.serveExtract(cid, body) match {
+    inJobGroup("extract", cid)(lake.serveExtract(cid, body) match {
       case Left(e: ExtractError.Malformed) => sendError(ex, e.message)
       case Left(_) => sendError(ex, "failed query") // ref: HttpHandler:227
       case Right(Left(json)) => send(ex, 200, "application/json", json)
       case Right(Right(df)) => failedQuery(ex, s"extract $cid") {
         streamJsonArray(ex, df.toJSON.toLocalIterator().asScala)
       }
-    }
+    })
   }
 
   private def getQueryNames(ex: HttpExchange): Unit = {
@@ -340,20 +343,25 @@ final class LakeServer(lake: Lake, port: Int,
         dir match {
           case None => sendError(ex, "malformed query")
           case Some(d) =>
-            val sc = lake.spark.sparkContext
-            sc.setJobGroup(s"query-${requestSeq.incrementAndGet()}", name)
-            try failedQuery(ex, s"query $name") {
+            try inJobGroup("query", name)(failedQuery(ex, s"query $name") {
               OperatorCaches.admit(lake.spark, d)
               val df = fn(lake.spark, d)
               streamJsonArray(ex, df.toJSON.toLocalIterator().asScala)
-            } finally {
-              sc.clearJobGroup()
-              OperatorCaches.settle(lake.spark)
-            }
+            }) finally OperatorCaches.settle(lake.spark)
         }
     }
 
   private val requestSeq = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** `body` with every Spark job it starts in the job group
+    * `<kind>-<n>` (`n` numbers the server's requests), described by
+    * `description`. */
+  private def inJobGroup[A](kind: String, description: String)(body: => A)
+      : A = {
+    val sc = lake.spark.sparkContext
+    sc.setJobGroup(s"$kind-${requestSeq.incrementAndGet()}", description)
+    try body finally sc.clearJobGroup()
+  }
 
   private def getDir(ex: HttpExchange, cid: String): Unit =
     if (!lake.store.isDir(cid)) sendError(ex, "not a directory")

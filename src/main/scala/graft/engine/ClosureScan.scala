@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.sql.GraftFileScan
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
@@ -130,9 +131,8 @@ private[engine] object ClosureScan {
   final class RowView(schema: StructType, val row: InternalRow)
       extends scala.collection.immutable.AbstractMap[String, Any] {
     def get(key: String): Option[Any] = {
-      val i = scala.util.Try(schema.fieldIndex(key))
-        .getOrElse(schema.fields.indexWhere(_.name.equalsIgnoreCase(key)))
-      if (i < 0) None else Some(value(row, i, schema(i).dataType))
+      GraftFileScan.fieldIndex(schema, key)
+        .map(i => value(row, i, schema(i).dataType))
     }
     def iterator: Iterator[(String, Any)] = schema.fields.indices.iterator
       .map(i => schema(i).name -> value(row, i, schema(i).dataType))

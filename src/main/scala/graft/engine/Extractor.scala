@@ -4,6 +4,10 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame,
   GraftFileScan, SparkSession}
+import org.apache.spark.sql.execution.datasources.FileFormat
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.qast.{Ast, Compiler}
@@ -34,23 +38,29 @@ import graft.store.{Catalog, ContentStore}
   * Schema *inference* is the separate A1/A2 path below, with the
   * number/string lattice applied on top of Spark's inference.
   *
-  * Reader schemas are memoized per `(cid, base MIME)` and handed to the
-  * reader (`spark.read.schema`), so a warm Spark-path extract is one
-  * Spark job: the scan itself, with no header `take(1)` (CSV) or
-  * `multiLine` inference pass (JSON) in front of it. The driver path
-  * needs the memoized schema (it has no inference of its own).
-  * Upload-time inference fills the memo (JSON: the inferred
-  * `StructType` as is, the same read
-  * extraction does; CSV: the inferred header names typed `StringType`,
-  * which is what the string-only extraction read derives — Spark's
-  * `makeSafeHeader` names columns the same with or without
-  * `inferSchema`); a miss (e.g. after a restart, when the catalog
-  * already holds the schema and inference is skipped) reads without a
+  * Reader schemas are memoized per `(cid, base MIME)`. With the schema
+  * known, [[rows]] builds the blob's frame directly: the relation
+  * `spark.read.schema(s).options(o).csv(path)` (or `.json`) resolves
+  * to, over an index that lists only the cid's one file
+  * ([[GraftFileScan.oneFile]]). So a warm extract resolves no data
+  * source, globs and lists no path and copies no Hadoop conf, and it
+  * infers nothing: no header `take(1)` (CSV) or `multiLine` inference
+  * pass (JSON) runs in front of the scan. A warm Spark-path extract is
+  * then one Spark job per file split, the scan itself; the driver path
+  * runs none (and needs the memoized schema: it has no inference of
+  * its own). Upload-time inference fills the memo (JSON: the inferred
+  * `StructType` as is, the same read extraction does; CSV: the
+  * inferred header names typed `StringType`, which is what the
+  * string-only extraction read derives — Spark's `makeSafeHeader`
+  * names columns the same with or without `inferSchema`); a miss
+  * (e.g. after a restart, when the catalog already holds the schema
+  * and inference is skipped) reads through `spark.read` without a
   * schema and keeps `df.schema`. The MIME is in the key because the
   * same bytes may be registered again under another type. An entry
   * never goes stale — a cid's bytes never change — so there is no
   * eviction; each entry is smaller than the JSON Schema the catalog
-  * keeps per cid anyway.
+  * keeps per cid anyway. The schema is the only state kept per cid:
+  * the relation is rebuilt per request from one `stat` of the file.
   */
 final class Extractor(spark: SparkSession, store: ContentStore,
     catalog: Catalog) {
@@ -71,15 +81,28 @@ final class Extractor(spark: SparkSession, store: ContentStore,
         }
     }
 
+  /** The reader schema known: the relation over the blob's one file
+    * ([[GraftFileScan.oneFile]]); else `spark.read`, which infers it. */
   private def reader(mime: String, path: Path, known: Option[StructType])
       : Either[ExtractError, DataFrame] = {
-    val read = known.fold(spark.read)(spark.read.schema)
-      .options(readerOptions(baseMime(mime)))
-    baseMime(mime) match {
-      case "text/csv" => Right(read.csv(path.toString))
-      case "application/json" => Right(read.json(path.toString))
-      case _ => Left(ExtractError.UnsupportedType(mime))
+    val base = baseMime(mime)
+    formatOf(base).toRight(ExtractError.UnsupportedType(mime)).map {
+      format =>
+        val options = readerOptions(base)
+        known match {
+          case Some(schema) =>
+            GraftFileScan.oneFile(spark, path, format, schema, options)
+          case None => spark.read.format(format.shortName).options(options)
+            .load(path.toString)
+        }
     }
+  }
+
+  private def formatOf(base: String)
+      : Option[FileFormat with DataSourceRegister] = base match {
+    case "text/csv" => Some(new CSVFileFormat)
+    case "application/json" => Some(new JsonFileFormat)
+    case _ => None
   }
 
   private def readerOptions(base: String): Map[String, String] = base match {

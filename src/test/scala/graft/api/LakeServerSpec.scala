@@ -12,6 +12,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.BeforeAndAfterAll
@@ -696,5 +700,93 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
       assert(r.statusCode == 200 && r.body == bodies(filter))
       assert(jobs.size == splits && splits > 1, jobs)
     }
+  }
+
+  /** The file relation `df` reads. */
+  private def fileRelation(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    } match {
+      case Some(rel: HadoopFsRelation) => rel
+      case other => fail(s"not a file relation: $other")
+    }
+
+  test("a warm served frame and a Lake.extract frame read the cid's one " +
+      "file through the relation spark.read resolves, with no listing") {
+    val jsonBody = """[{"name":"graft","stars":9},{"name":"lake","stars":2}]"""
+    Seq(warmCsv() -> classOf[CSVFileFormat],
+      addFile(jsonBody, "application/json") -> classOf[JsonFileFormat]
+    ).foreach { case (cid, format) =>
+      assert(get(s"/schema/$cid").statusCode == 200)
+      val path = lake.store.pathOf(cid)
+      val served = lake.extractor.rows(cid).toOption.get
+      val read = spark.read.schema(served.schema)
+        .options(fileRelation(served).options - "path").format(
+          if (format == classOf[CSVFileFormat]) "csv" else "json")
+        .load(path.toString)
+      val want = fileRelation(read)
+      Seq(served, lake.extract(cid, "true").toOption.get).foreach { df =>
+        val rel = fileRelation(df)
+        assert(!rel.location.isInstanceOf[InMemoryFileIndex], rel.location)
+        assert(df.inputFiles.toSeq == read.inputFiles.toSeq &&
+          df.inputFiles.toSeq == Seq(path.toUri.toString),
+          df.inputFiles.toSeq)
+        assert(format.isInstance(rel.fileFormat), rel.fileFormat)
+        assert(rel.dataSchema == want.dataSchema &&
+          rel.partitionSchema == want.partitionSchema &&
+          rel.options == want.options - "path", rel)
+        assert(df.toJSON.collect().toSeq == read.toJSON.collect().toSeq)
+      }
+    }
+  }
+
+  test("a reopened lake: the first /extract reads with inference, the " +
+      "second over the known schema, and both answer the same bytes") {
+    val root = Files.createTempDirectory("srv-reopen")
+    val before = new Lake(spark, root)
+    val cids = Seq(before.addFile(csv.getBytes("UTF-8"), "text/csv"),
+      before.addFile("""[{"a":1,"b":[2]},{"a":2.5}]""".getBytes("UTF-8"),
+        "application/json"))
+    cids.foreach(cid => assert(before.schema(cid).isRight))
+    val reopened = new Lake(spark, root)
+    val again = LakeServer.start(reopened, sfDir = sf)
+    try cids.foreach { cid =>
+      assert(reopened.catalog.getSchema(cid).nonEmpty) // no inference
+      def extract() = {
+        var r: HttpResponse[String] = null
+        val jobs = jobsDuring {
+          r = client.send(HttpRequest.newBuilder(URI.create(
+            s"http://localhost:${again.boundPort}/extract/$cid"))
+            .POST(BodyPublishers.ofString("true")).build(),
+            BodyHandlers.ofString())
+        }
+        assert(r.statusCode == 200, r.body)
+        (r.body, jobs.size)
+      }
+      val (first, inferred) = extract()
+      val (second, direct) = extract()
+      assert(inferred > 0 && direct == 0, (inferred, direct))
+      assert(first == second && mapper.readTree(first).size == 2, first)
+    } finally again.stop()
+  }
+
+  test("the split-blob extract's jobs and a /find snapshot rebuild run " +
+      "in the request's job group") {
+    val cid = warmCsv()
+    withConf("spark.sql.files.openCostInBytes", "64") {
+      val jobs = jobsDuring(assert(post(s"/extract/$cid",
+        """["==", [".", ["$"], "country_code"], "TCD"]""".getBytes)
+        .statusCode == 200))
+      assert(jobs.nonEmpty && jobs.map(_.group).distinct.size == 1 &&
+        jobs.head.group.startsWith("extract-"), jobs)
+      assert(jobs.forall(_.description == cid), jobs)
+    }
+    json(post("/dataset", s"""{"file":"$cid","description":"group",
+      "source":"group-src","topics":["g"]}""".getBytes)) // drops the snapshot
+    val jobs = jobsDuring(assert(post("/find",
+      """["==", [".", ["$"], "source"], "group-src"]""".getBytes)
+      .statusCode == 200))
+    assert(jobs.nonEmpty && jobs.map(_.group).distinct.size == 1 &&
+      jobs.head.group.startsWith("find-"), jobs)
   }
 }

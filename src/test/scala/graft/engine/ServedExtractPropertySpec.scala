@@ -305,6 +305,22 @@ class ServedExtractPropertySpec extends SparkSpec {
     }
   }
 
+  test("a column named in another case than its header: the driver " +
+      "answers the Spark path's body") {
+    val cid = lake.addFile("id,Cat\n1,a\n2,b\n3,a\n".getBytes("UTF-8"),
+      "text/csv")
+    assert(lake.schema(cid).isRight)
+    val cat = """[".", ["$"], "cat"]"""
+    Seq(s"""["==", $cat, "a"]""" ->
+        """[{"id":"1","Cat":"a"},{"id":"3","Cat":"a"}]""",
+      s"""["group", true, [$cat], ["count"]]""" ->
+        """[{"cat":"a","n":2},{"cat":"b","n":1}]""").foreach {
+      case (q, want) =>
+        assert(spark(cid, q) == Success(Right(want)), q)
+        assert(served(cid, q) == ((Success(Right(want)), true)), q)
+    }
+  }
+
   test("the driver path answers most generated queries") {
     // both properties above ran: the comparison exercised the driver
     // path, not only the fallback
