@@ -2,6 +2,10 @@ package graft.engine
 
 import java.nio.file.{Files, Path}
 
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame,
   GraftFileScan, SparkSession}
 import org.apache.spark.sql.execution.datasources.FileFormat
@@ -24,9 +28,10 @@ import graft.store.{Catalog, ContentStore}
   * (`extract/data.clj:29-37`). The reference streams one row at a time
   * through a closure predicate. Here a request takes one of two paths
   * ([[serve]]):
-  *   - a blob no larger than one file split whose reader schema is in
-  *     the memo below is read on the driver by Spark's own per-file
-  *     reader and filtered by the QAST closure backend: no Spark job;
+  *   - a blob no larger than one file split whose reader schema is
+  *     memoized or inferred on the driver (below) is read on the
+  *     driver by Spark's own per-file reader and filtered by the QAST
+  *     closure backend: no Spark job;
   *   - anything else, and every [[extract]] call, hands Spark the file
   *     and the compiled QAST `Column`: the scan is partition-parallel
   *     and the predicate reaches the reader (pushdown).
@@ -36,7 +41,15 @@ import graft.store.{Catalog, ContentStore}
   * zipmaps raw strings, `extract/data.clj:23-27`; its api test matches
   * `"VNM"` as a string) — so extraction reads with `inferSchema=false`.
   * Schema *inference* is the separate A1/A2 path below, with the
-  * number/string lattice applied on top of Spark's inference.
+  * number/string lattice applied on top of Spark's inference. It runs
+  * in the background right after an upload and `GET /schema` waits for
+  * it ([[inferSchemaAsync]]). A blob no larger than one file split is
+  * inferred on that thread by Spark's own inference code
+  * ([[GraftFileScan.inferCsv]], [[GraftFileScan.inferJson]]): no data
+  * source is resolved and no Spark job runs, where `spark.read` runs
+  * two (CSV: the header `take(1)` and the type fold) or one (JSON).
+  * A larger blob, an empty one, and any failure on the driver read
+  * through `spark.read`, which then gives the answer or the failure.
   *
   * Reader schemas are memoized per `(cid, base MIME)`. With the schema
   * known, [[rows]] builds the blob's frame directly: the relation
@@ -44,23 +57,24 @@ import graft.store.{Catalog, ContentStore}
   * to, over an index that lists only the cid's one file
   * ([[GraftFileScan.oneFile]]). So a warm extract resolves no data
   * source, globs and lists no path and copies no Hadoop conf, and it
-  * infers nothing: no header `take(1)` (CSV) or `multiLine` inference
-  * pass (JSON) runs in front of the scan. A warm Spark-path extract is
-  * then one Spark job per file split, the scan itself; the driver path
-  * runs none (and needs the memoized schema: it has no inference of
-  * its own). Upload-time inference fills the memo (JSON: the inferred
-  * `StructType` as is, the same read extraction does; CSV: the
-  * inferred header names typed `StringType`, which is what the
-  * string-only extraction read derives — Spark's `makeSafeHeader`
-  * names columns the same with or without `inferSchema`); a miss
-  * (e.g. after a restart, when the catalog already holds the schema
-  * and inference is skipped) reads through `spark.read` without a
-  * schema and keeps `df.schema`. The MIME is in the key because the
-  * same bytes may be registered again under another type. An entry
-  * never goes stale — a cid's bytes never change — so there is no
-  * eviction; each entry is smaller than the JSON Schema the catalog
-  * keeps per cid anyway. The schema is the only state kept per cid:
-  * the relation is rebuilt per request from one `stat` of the file.
+  * infers nothing. A warm Spark-path extract is then one Spark job per
+  * file split, the scan itself; the driver path runs none. Upload-time
+  * inference fills the memo (JSON: the inferred `StructType` as is,
+  * the same read extraction does; CSV: the inferred header names typed
+  * `StringType`, which is what the string-only extraction read
+  * derives — Spark's `makeSafeHeader` names columns the same with or
+  * without `inferSchema`). A miss (e.g. after a restart, when the
+  * catalog already holds the schema and inference is skipped) infers
+  * the reader schema the same way: on the driver below one file split
+  * (CSV: the header line alone; JSON: the inference above), so a
+  * reopened lake's first extract of such a blob runs no Spark job;
+  * else through `spark.read` without a schema, keeping `df.schema`.
+  * The MIME is in the key because the same bytes may be registered
+  * again under another type. An entry never goes stale — a cid's bytes
+  * never change — so there is no eviction; each entry is smaller than
+  * the JSON Schema the catalog keeps per cid anyway. The schema is the
+  * only state kept per cid: the relation is rebuilt per request from
+  * one `stat` of the file.
   */
 final class Extractor(spark: SparkSession, store: ContentStore,
     catalog: Catalog) {
@@ -69,34 +83,52 @@ final class Extractor(spark: SparkSession, store: ContentStore,
   private val readerSchemas = scala.collection.concurrent.TrieMap
     .empty[(String, String), StructType]
 
-  /** Load a cid's rows as a DataFrame, per its registered MIME type. */
+  /** Spark's line reader, with its task context built once, on the
+    * first CSV read: building it loads Hadoop's MapReduce defaults into
+    * every Hadoop conf, which a session that reads no CSV never pays. */
+  private lazy val lines =
+    new GraftFileScan.Lines(spark.sparkContext.hadoopConfiguration)
+
+  /** Load a cid's rows as a DataFrame, per its registered MIME type:
+    * the relation over the blob's one file ([[GraftFileScan.oneFile]])
+    * with the reader schema memoized or inferred on the driver, else
+    * `spark.read`, which infers it. */
   def rows(cid: String): Either[ExtractError, DataFrame] =
     catalog.getType(cid) match {
       case None => Left(ExtractError.UnknownCid(cid))
       case Some(mime) =>
-        val key = (cid, baseMime(mime))
-        reader(mime, store.pathOf(cid), readerSchemas.get(key)).map { df =>
-          readerSchemas.putIfAbsent(key, df.schema)
-          df
+        val base = baseMime(mime)
+        formatOf(base).toRight(ExtractError.UnsupportedType(mime)).map {
+          format =>
+            val (key, path) = ((cid, base), store.pathOf(cid))
+            val options = readerOptions(base)
+            readerSchemas.get(key).orElse(inferredOnDriver(base, path,
+              options).map(readerSchemas.getOrElseUpdate(key, _))) match {
+              case Some(schema) =>
+                GraftFileScan.oneFile(spark, path, format, schema, options)
+              case None =>
+                val df = spark.read.format(format.shortName()).options(options)
+                  .load(path.toString)
+                readerSchemas.putIfAbsent(key, df.schema)
+                df
+            }
         }
     }
 
-  /** The reader schema known: the relation over the blob's one file
-    * ([[GraftFileScan.oneFile]]); else `spark.read`, which infers it. */
-  private def reader(mime: String, path: Path, known: Option[StructType])
-      : Either[ExtractError, DataFrame] = {
-    val base = baseMime(mime)
-    formatOf(base).toRight(ExtractError.UnsupportedType(mime)).map {
-      format =>
-        val options = readerOptions(base)
-        known match {
-          case Some(schema) =>
-            GraftFileScan.oneFile(spark, path, format, schema, options)
-          case None => spark.read.format(format.shortName).options(options)
-            .load(path.toString)
-        }
-    }
-  }
+  /** The schema `spark.read.options(options)` infers for a CSV or JSON
+    * blob, inferred on this thread when the blob is not empty and no
+    * larger than one file split; None where that does not apply or
+    * fails, so that `spark.read` gives the answer or the failure. */
+  private def inferredOnDriver(base: String, path: Path,
+      options: Map[String, String]): Option[StructType] =
+    try {
+      val size = Files.size(path)
+      if (size == 0 || size > GraftFileScan.openCostInBytes(spark)) None
+      else Some(
+        if (base == "text/csv")
+          GraftFileScan.inferCsv(spark, lines, path, options)
+        else GraftFileScan.inferJson(spark, path, options))
+    } catch { case NonFatal(_) => None }
 
   private def formatOf(base: String)
       : Option[FileFormat with DataSourceRegister] = base match {
@@ -156,8 +188,9 @@ final class Extractor(spark: SparkSession, store: ContentStore,
     * Anything the closure backend does not evaluate exactly as
     * Catalyst (see [[ClosureScan]]), and any run-time failure of the
     * closures, goes to the Spark path, which then gives the answer or
-    * the failure. So does a larger blob, and a memo miss: its Spark
-    * read fills the memo, and the next request takes the driver path.
+    * the failure. So does a larger blob, and a memo miss whose reader
+    * schema only `spark.read` infers: that read fills the memo, and the
+    * next request takes the driver path.
     */
   def serve(cid: String, qastJson: String)
       : Either[ExtractError, Either[Array[Byte], DataFrame]] =
@@ -184,13 +217,15 @@ final class Extractor(spark: SparkSession, store: ContentStore,
         // predicates: an expression that fails there fails the Spark
         // path whatever the rows, so it goes there
         out.queryExecution.optimizedPlan
-        val read = if (base == "text/csv") GraftFileScan.readCsv _
-          else GraftFileScan.readJson _
-        val in = read(spark, path, schema, readerOptions(base))
+        val options = readerOptions(base)
+        val in =
+          if (base == "text/csv")
+            GraftFileScan.readCsv(spark, lines, path, schema, options)
+          else GraftFileScan.readJson(spark, path, schema, options)
         ClosureScan.run(ast, schema, in, out.schema).map(rows =>
           GraftFileScan.jsonArray(spark, out.schema, rows.iterator))
       } catch {
-        case scala.util.control.NonFatal(_) => None
+        case NonFatal(_) => None
       }
     } yield body
 
@@ -215,36 +250,46 @@ final class Extractor(spark: SparkSession, store: ContentStore,
       },
       frame => frame.checked(df).left.map(ExtractError.Malformed(_)))
 
-  /** Memoized in-flight inferences — the reference's `memoize` of a
-    * Clojure future (`extract/metadata.clj:67-76`), done with an atomic
-    * `getOrElseUpdate` so the memoize race its thesis admits
-    * (`eval.tex:192-197`) cannot double-infer.
+  /** In-flight inferences — the reference's `memoize` of a Clojure
+    * future (`extract/metadata.clj:67-76`), joined race-free: only the
+    * caller whose promise `putIfAbsent` inserts starts the inference,
+    * so two first calls cannot both infer (the race its thesis admits,
+    * `eval.tex:192-197`). An entry leaves the map before its future
+    * completes: a later call finds the schema the inference persisted
+    * in the catalog, and a failed inference is tried again rather than
+    * replayed.
     */
   private val inferences = scala.collection.concurrent.TrieMap
-    .empty[String, scala.concurrent.Future[Either[ExtractError, String]]]
-  private implicit val ec: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.global
+    .empty[String, Future[Either[ExtractError, String]]]
+  private implicit val ec: ExecutionContext = ExecutionContext.global
+
+  /** The number of inferences in flight. */
+  private[engine] def inferencesInFlight: Int = inferences.size
 
   /** Kick off (or join) background inference for a cid — called right
     * after upload, like the reference's async fork
     * (`HttpHandler.java:115`).
     */
-  def inferSchemaAsync(cid: String)
-      : scala.concurrent.Future[Either[ExtractError, String]] =
-    inferences.getOrElseUpdate(cid,
-      scala.concurrent.Future(inferNow(cid)))
+  def inferSchemaAsync(cid: String): Future[Either[ExtractError, String]] = {
+    val mine = Promise[Either[ExtractError, String]]()
+    inferences.putIfAbsent(cid, mine.future).getOrElse {
+      mine.completeWith(Future {
+        try inferNow(cid) finally inferences.remove(cid, mine.future)
+      })
+      mine.future
+    }
+  }
 
   /** Infer a cid's row schema, persist it in the catalog, return the
     * draft-07 JSON Schema document (reference `GET /schema/{cid}` —
-    * the synchronization point: blocks on the memoized future if
-    * inference is in flight, like its `future.get()`,
+    * the synchronization point: blocks on the in-flight future if
+    * inference is running, like its `future.get()`,
     * `HttpHandler.java:203-216`).
     */
   def inferSchema(cid: String): Either[ExtractError, String] =
     catalog.getSchema(cid) match {
       case Some(json) => Right(json)
-      case None => scala.concurrent.Await.result(
-        inferSchemaAsync(cid), scala.concurrent.duration.Duration.Inf)
+      case None => Await.result(inferSchemaAsync(cid), Duration.Inf)
     }
 
   private def inferNow(cid: String): Either[ExtractError, String] =
@@ -261,15 +306,18 @@ final class Extractor(spark: SparkSession, store: ContentStore,
         }
     }
 
-  /** Infer a cid's schema, remembering its reader schema on the way. */
+  /** Infer a cid's schema, remembering its reader schema on the way:
+    * on the driver below one file split, else through `spark.read`. */
   private def infer(cid: String, mime: String)
       : Either[ExtractError, StructType] = baseMime(mime) match {
     case base @ "text/csv" =>
       // Spark's CSV inference samples types; the reference folds its
       // two-element lattice over ALL rows (metadata.clj:36-53). The
       // JsonSchema serializer collapses both to number|string.
-      val st = spark.read.option("header", true).option("inferSchema", true)
-        .csv(store.pathOf(cid).toString).schema
+      val (path, options) =
+        (store.pathOf(cid), readerOptions(base) + ("inferSchema" -> "true"))
+      val st = inferredOnDriver(base, path, options).getOrElse(
+        spark.read.options(options).csv(path.toString).schema)
       readerSchemas.putIfAbsent((cid, base),
         StructType(st.map(_.copy(dataType = StringType))))
       Right(st)

@@ -21,8 +21,10 @@ final class Lake(val spark: SparkSession, root: Path) {
   /** `POST /file`: ingest bytes, register type, return CID, then fork
     * schema inference for row content in the background — the
     * reference's async-after-upload behavior (`HttpHandler.java:115`),
-    * memoized race-free in the Extractor; `GET /schema` is the
-    * synchronization point.
+    * joined race-free in the Extractor; `GET /schema` is the
+    * synchronization point. A CSV or JSON blob no larger than one file
+    * split is inferred on the driver with no Spark job (see
+    * Extractor).
     */
   def addFile(in: InputStream, mime: String): String = {
     val cid = store.add(in)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** One of the two places graft crosses into Spark's package-private
   * API (the other is [[GraftFileScan]], one file's relation and its
-  * driver-side reader):
+  * driver-side reader and schema inference):
   * `classic.Dataset.ofRows` is `private[sql]`, and it is the ONLY
   * supported way to wrap a custom [[LogicalPlan]] (graft's
   * [[graft.plans.AsOfJoin]]) back into a DataFrame. Every session

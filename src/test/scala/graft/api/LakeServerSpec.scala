@@ -765,7 +765,7 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
       }
       val (first, inferred) = extract()
       val (second, direct) = extract()
-      assert(inferred > 0 && direct == 0, (inferred, direct))
+      assert(inferred == 0 && direct == 0, (inferred, direct))
       assert(first == second && mapper.readTree(first).size == 2, first)
     } finally again.stop()
   }
@@ -788,5 +788,43 @@ class LakeServerSpec extends SparkSpec with BeforeAndAfterAll {
       .statusCode == 200))
     assert(jobs.nonEmpty && jobs.map(_.group).distinct.size == 1 &&
       jobs.head.group.startsWith("find-"), jobs)
+  }
+
+  test("a fresh below-split upload's /schema runs no Spark job; split, " +
+      "it infers through Spark and answers the same document") {
+    // both longer than 64 bytes
+    val uploads = Seq(
+      ("id,name,score,seen\n1,alpha,2.5,true\n2,beta,,false\n" +
+        "3,gamma,-1,\n4,delta,0.5,true\n") -> "text/csv",
+      ("""[{"id":1,"tags":["x","y"]},{"id":2.5,"o":{"k":null,"w":"z"}},""" +
+        """{"name":"lake"}]""") -> "application/json")
+    def schemaOf(body: String, mime: String) = {
+      val root = Files.createTempDirectory("srv-schema")
+      val fresh = LakeServer.start(new Lake(spark, root), sfDir = sf)
+      val at = s"http://localhost:${fresh.boundPort}"
+      def upload(body: String, mime: String) = mapper.readTree(client.send(
+        HttpRequest.newBuilder(URI.create(s"$at/file"))
+          .header("Content-Type", mime).POST(BodyPublishers.ofString(body))
+          .build(), BodyHandlers.ofString()).body).get("cid").asText
+      try {
+        upload(interjection, "text/plain") // the fresh catalog's own jobs
+        var r: HttpResponse[String] = null
+        val jobs = jobsDuring {
+          val cid = upload(body, mime)
+          r = client.send(HttpRequest.newBuilder(URI.create(
+            s"$at/schema/$cid")).GET.build(), BodyHandlers.ofString())
+        }
+        assert(r.statusCode == 200, r.body)
+        (r.body, jobs.size)
+      } finally fresh.stop()
+    }
+    uploads.foreach { case (body, mime) =>
+      val (onDriver, none) = schemaOf(body, mime)
+      assert(none == 0, (mime, none))
+      withConf("spark.sql.files.openCostInBytes", "64") {
+        val (throughSpark, jobs) = schemaOf(body, mime)
+        assert(jobs > 0 && throughSpark == onDriver, (mime, jobs))
+      }
+    }
   }
 }

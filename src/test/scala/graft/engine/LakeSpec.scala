@@ -254,7 +254,7 @@ class LakeSpec extends SparkSpec {
     assert(want.size == 2)
     val l2 = new Lake(spark, root)
     assert(l2.catalog.getSchema(cid).nonEmpty) // so no upload inference
-    assert(jobsRun(extractedJson(l2, cid, q)) == ((want, 2))) // header + scan
+    assert(jobsRun(extractedJson(l2, cid, q)) == ((want, 1))) // scan only
     assert(jobsRun(extractedJson(l2, cid, q)) == ((want, 1))) // memo hit
   }
 
@@ -283,5 +283,43 @@ class LakeSpec extends SparkSpec {
       assert(extractedJson(cold, cid, """["&"]""") == once, cid)
     }
     assert(extractedJson(warm, cids.head, """["&"]""").size == 3)
+  }
+
+  test("schema inference: the in-flight memo is empty once schema returns") {
+    val l = new Lake(spark, Files.createTempDirectory("infer-memo"))
+    val cids = Seq(l.addFile(csv, "text/csv"), l.addFile(json,
+      "application/json"), l.addFile("x".getBytes("UTF-8"), "text/plain"))
+    cids.foreach(l.schema)
+    assert(l.extractor.inferencesInFlight == 0)
+    // a failed inference is not replayed: a later call infers again
+    assert(l.schema(cids(2)).isLeft && l.extractor.inferencesInFlight == 0)
+  }
+
+  test("schema inference: two concurrent first calls infer once") {
+    val l = new Lake(spark, Files.createTempDirectory("infer-once"))
+    // registered without the upload's own fork, inferred through Spark
+    def register(body: String) = {
+      val cid = l.store.add(body.getBytes("UTF-8"))
+      l.catalog.insertFile(cid, "text/csv")
+      cid
+    }
+    withConf("spark.sql.files.openCostInBytes", "4") {
+      assert(l.schema(register("a,b\n0,w\n")).isRight) // the catalog's own
+      val one = jobsDuring(assert(l.schema(register("a,b\n1,x\n")).isRight))
+      assert(one.nonEmpty)
+      val cid = register("a,b\n2,y\n")
+      val start = new CountDownLatch(1)
+      val docs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val jobs = jobsDuring {
+        val ts = Seq.fill(2)(new Thread(() => {
+          start.await()
+          docs.add(l.extractor.inferSchema(cid).toOption.get)
+        }))
+        ts.foreach(_.start()); start.countDown(); ts.foreach(_.join())
+      }
+      assert(jobs.size == one.size, jobs)
+      assert(docs.size == 2 && docs.peek == l.catalog.getSchema(cid).get)
+      assert(l.extractor.inferencesInFlight == 0)
+    }
   }
 }

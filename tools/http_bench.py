@@ -8,7 +8,9 @@ Measures the same three surfaces BASELINE.md quotes for the reference
   find : POST /find (metadata predicate search)  ref: 5576 req/s
   get  : GET /file/{cid} (content download)      ref: 6238 req/s
 
-and, with no reference number, extract (POST /extract/{cid}, an
+and, with no reference number, add_schema (POST /file of a CSV made
+unique by one per-request row, then GET /schema/{cid}: one upload's
+schema inference, waited for), extract (POST /extract/{cid}, an
 equality predicate over the uploaded CSV), extract_group (a `group`
 rollup over the same CSV), /find frame verbs and POST /query/q1_agg.
 Set-up waits for the CSV's schema, so the extracts find its reader
@@ -23,8 +25,10 @@ plus p50_ms/p99_ms over every request's round-trip time, failed ones
 included) and a summary line.
 """
 import http.client
+import itertools
 import json
 import multiprocessing as mp
+import os
 import sys
 import threading
 import time
@@ -40,6 +44,8 @@ EXTRACT_Q = b'["==", [".", ["$"], "name"], "bob"]'
 EXTRACT_ROWS = [{"name": "bob", "age": "41"}]  # CSV values stay strings
 EXTRACT_GROUP_Q = b'["group", true, [[".", ["$"], "name"]], ["count"]]'
 EXTRACT_GROUP_ROWS = [{"name": n, "n": 1} for n in ("alice", "bob", "carol")]
+# the fields of CSV's inferred schema document: age infers as a number
+SCHEMA_FIELDS = {"name": {"type": "string"}, "age": {"type": "number"}}
 
 
 def setup():
@@ -132,6 +138,21 @@ def main():
         body = r.read()
         return r.status == 200 and b"cid" in body
 
+    uniq = itertools.count()  # next() is atomic under the GIL
+
+    def do_add_schema(c):
+        row = f"u{os.getpid()}_{next(uniq)},{next(uniq)}\n".encode()
+        c.request("POST", "/file", CSV + row, {"Content-Type": "text/csv"})
+        r = c.getresponse()
+        body = r.read()
+        if r.status != 200:
+            return False
+        c.request("GET", "/schema/" + json.loads(body)["cid"])
+        r = c.getresponse()
+        body = r.read()
+        return (r.status == 200 and
+                json.loads(body)["items"]["properties"] == SCHEMA_FIELDS)
+
     def do_find(c):
         c.request("POST", "/find", FIND_Q)
         r = c.getresponse()
@@ -200,7 +221,8 @@ def main():
         body = r.read()
         return r.status == 200 and body.startswith(b"[")
 
-    results = [run("add", do_add), run("find", do_find), run("get", do_get),
+    results = [run("add", do_add), run("add_schema", do_add_schema),
+               run("find", do_find), run("get", do_get),
                run("extract", do_extract),
                run("extract_group", do_extract_group),
                run("find_group", do_find_group),
